@@ -93,6 +93,19 @@ private[operators] object CpuSpread {
   private[operators] def scanPartitionEstimate(df: DataFrame): Option[Int] =
     scanInfo(df).map(_._1)
 
+  /** A session conf value parsed by `parse`; a malformed value fails
+    * naming the key and the value.
+    */
+  private def conf[A](df: DataFrame, key: String, default: String, what: String)(
+      parse: String => A): A = {
+    val v = df.sparkSession.conf.get(key, default)
+    try parse(v)
+    catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$key must be a $what, got '$v'", e)
+    }
+  }
+
   /** One round-robin exchange when the scan cannot feed the cores;
     * no-op otherwise. See object doc. `spark.graft.cpuSpread.enabled`
     * (session conf, default true) is the measurement/deployment escape
@@ -102,7 +115,7 @@ private[operators] object CpuSpread {
     */
   private[operators] def spread(
       df: DataFrame, plannedFallback: Boolean = false): DataFrame = {
-    if (!df.sparkSession.conf.get("spark.graft.cpuSpread.enabled", "true").toBoolean)
+    if (!conf(df, "spark.graft.cpuSpread.enabled", "true", "boolean")(_.toBoolean))
       return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     // Default: FILE-BACKED frames only (r19 A/B): a frame with no
@@ -126,8 +139,8 @@ private[operators] object CpuSpread {
       // branch (Multimodal, in-memory frames) has no cheap byte
       // estimate and keeps its r8 semantics unchanged.
       case Some((e, bytes)) =>
-        val minBytes = df.sparkSession.conf
-          .get("spark.graft.cpuSpread.minBytes", MinSpreadBytesDefault.toString).toLong
+        val minBytes = conf(df, "spark.graft.cpuSpread.minBytes",
+          MinSpreadBytesDefault.toString, "whole number of bytes")(_.toLong)
         if (e < par && bytes >= minBytes) df.repartition(par) else df
       case None if plannedFallback && df.rdd.getNumPartitions < par =>
         df.repartition(par)

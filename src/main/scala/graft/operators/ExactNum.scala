@@ -44,4 +44,60 @@ private[graft] object ExactNum {
   /** Exact, order-independent, engine-agnostic sum of a double column. */
   def sumExact(c: Column, scale: Double): Column =
     toDouble(sum(units(c, scale)), scale)
+
+  /** [[units]] for code that walks rows itself (the MTM engine's
+    * per-symbol pass): the same IEEE expression, the same Long-valued
+    * floor (NaN → 0, as Spark's `floor`) and the same named overflow
+    * error.
+    */
+  def unitsOf(x: Double, scale: Double): Long = {
+    val scaled = x * scale + 0.5
+    if (math.abs(scaled) >= 9.223372036854776e18)
+      throw new ArithmeticException(s"ExactNum.units overflow at scale $scale: $scaled")
+    math.floor(scaled).toLong
+  }
+
+  /** A mutable exact unit count, the in-JVM twin of the DECIMAL
+    * accumulator behind [[sumExact]]: 128-bit two's complement
+    * (hi·2^64 + unsigned lo), so a sum past Long range carries where a
+    * `Long` would wrap. Sums of fewer than 2^64 per-row units never
+    * overflow it.
+    */
+  final class UnitSum {
+    private var hi = 0L
+    private var lo = 0L
+
+    def add(u: Long): Unit = {
+      val s = lo + u
+      // carry out of the unsigned low word, plus u's sign extension
+      hi += (if (java.lang.Long.compareUnsigned(s, lo) < 0) 1L else 0L) + (u >> 63)
+      lo = s
+    }
+
+    def set(o: UnitSum): Unit = { hi = o.hi; lo = o.lo }
+
+    /** this := a − b */
+    def setDiff(a: UnitSum, b: UnitSum): Unit = {
+      val borrow = if (java.lang.Long.compareUnsigned(a.lo, b.lo) < 0) 1L else 0L
+      lo = a.lo - b.lo
+      hi = a.hi - b.hi - borrow
+    }
+
+    def compare(o: UnitSum): Int =
+      if (hi != o.hi) java.lang.Long.compare(hi, o.hi)
+      else java.lang.Long.compareUnsigned(lo, o.lo)
+
+    /** [[toDouble]]'s arithmetic: the count correctly rounded to double
+      * (as Spark's DECIMAL → DOUBLE cast), then one division.
+      */
+    def toDouble(scale: Double): Double = {
+      val units =
+        if (hi == (lo >> 63)) lo.toDouble // fits a signed Long
+        else java.math.BigInteger.valueOf(hi).shiftLeft(64)
+          .add(java.math.BigInteger.valueOf(lo >>> 32).shiftLeft(32))
+          .add(java.math.BigInteger.valueOf(lo & 0xFFFFFFFFL))
+          .doubleValue
+      units / scale
+    }
+  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.core.{BookTrade, OpenPos, PnlConfig, TradeBook}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed mark-to-market engine — the Spark-native re-expression of
@@ -17,13 +16,25 @@ import org.apache.spark.sql.functions._
   * mega-symbol is wall-clock-bound but never OOMs. At 100 TB the symbol
   * count vastly exceeds core count, so the hash spread stays even.
   *
+  * Derived outputs come from the same walk, as in the reference's own
+  * loop (runner_mtm.py:144-176): each symbol run keeps a [[RunStats]]
+  * accumulator that writes the cumulative `pnl_ratio` on every timeline
+  * row and ends the run with one summary row (pnl, max drawdown, the
+  * Sharpe inputs, closed-trade stats). The summary surfaces are
+  * projections of those rows — no window or aggregate pass over the
+  * timeline.
+  *
   * Numeric discipline: per-bar mtm is pure double arithmetic (replicated
   * bit-for-bit by the DuckDB oracle); every cumulative/aggregated series
-  * (pnl_ratio, drawdown, pnl, sharpe's sum) quantizes to exact 1e-9
-  * units and sums in an overflow-safe decimal accumulator (see
-  * [[ExactNum]]), so results are exact, independent of partitioning/
-  * aggregation order, AND engine-agnostic — the properties that keep
-  * 100 TB runs reproducible.
+  * (pnl_ratio, drawdown, pnl, sharpe's sum) quantizes each row to exact
+  * 1e-9 units with [[ExactNum.unitsOf]] (floor(x·1e9 + 0.5), the named
+  * overflow error at 2^63) and sums them in an [[ExactNum.UnitSum]], a
+  * 128-bit count that carries past Long range instead of wrapping; each
+  * value converts to double once, at the end. Results are
+  * exact, independent of partitioning, AND engine-agnostic — the oracle
+  * replays them with DECIMAL sums — the properties that keep 100 TB runs
+  * reproducible. Sharpe's σ is Spark's `stddev_pop` update (Welford,
+  * `CentralMomentAgg`) applied in bar order.
   */
 object MtmEngine {
 
@@ -33,7 +44,7 @@ object MtmEngine {
 
   private[graft] final case class TimelinePoint(
       symbol: Long, ts_us: Long, event_id: Long, close: Double,
-      buy: Int, sell: Int, mtm_ratio: Double)
+      buy: Int, sell: Int, mtm_ratio: Double, pnl_ratio: Double)
 
   private[graft] final case class BlotterRec(
       symbol: Long, direction: String, entry_ts_us: Long, entry_price: Double,
@@ -84,44 +95,130 @@ object MtmEngine {
       .as[EngineBar]
   }
 
-  /** Per-partition driver: a fresh TradeBook per symbol-run, price_diff
-    * derived from the previous bar in-stream (no window needed — the
-    * partition is already symbol-ordered).
+  /** One symbol run's summary row — see [[RunStats]]. */
+  private[graft] final case class SymbolSummary(
+      pnl: Double, max_drawdown: Double, sum_x: Double, span_ms: Double, sigma: Double,
+      n_trades: Long, n_wins: Long, hold_us: Long)
+
+  /** The derived outputs of one symbol run, accumulated in bar order:
+    *  - the cumulative pnl in exact 1e-9 units (`pnl_ratio` per bar,
+    *    `pnl` at the end; trade_reward.py:413-421);
+    *  - the running peak floored at 0 and the max drawdown
+    *    max(peak − cum) (runner_mtm.py:144,168-172);
+    *  - Sharpe's inputs (trade_reward.py:423-450): Σ(mtm − 1e-6) in
+    *    units, Welford n/mean/M2 of the same values with Spark's
+    *    `CentralMomentAgg` update (so σ is `stddev_pop` over the bars in
+    *    order), and the first and last floor-ms;
+    *  - the closed-trade count, wins and holding µs.
+    */
+  private final class RunStats(feeRate: Double) {
+    private val cum = new ExactNum.UnitSum
+    private val peak = new ExactNum.UnitSum
+    private val gap = new ExactNum.UnitSum
+    private val maxDd = new ExactNum.UnitSum
+    private val sumX = new ExactNum.UnitSum
+    private var n = 0.0
+    private var mean = 0.0
+    private var m2 = 0.0
+    private var firstMs = 0L
+    private var lastMs = 0L
+    private var nTrades = 0L
+    private var nWins = 0L
+    private var holdUs = 0L
+
+    def bar(tsUs: Long, mtm: Double): Unit = {
+      cum.add(ExactNum.unitsOf(mtm, 1e9))
+      if (cum.compare(peak) > 0) peak.set(cum)
+      gap.setDiff(peak, cum)
+      if (gap.compare(maxDd) > 0) maxDd.set(gap)
+      val x = mtm - 0.000001
+      sumX.add(ExactNum.unitsOf(x, 1e9))
+      val newN = n + 1.0
+      val delta = x - mean
+      val deltaN = delta / newN
+      mean = mean + deltaN
+      m2 = m2 + delta * (delta - deltaN)
+      // FLOOR division to ms (not truncation): the DuckDB oracle's
+      // epoch_ms floors, so a pre-1970 bar off a ms boundary would
+      // otherwise land 1 ms apart — same hazard Tables.events corrects
+      val ms = Math.floorDiv(tsUs, 1000L)
+      if (n == 0.0) firstMs = ms
+      lastMs = ms
+      n = newN
+    }
+
+    /** A closed trade of this run. */
+    def trade(t: BookTrade): Unit = {
+      nTrades += 1
+      // SQL's `pnl_norm > 0.0` orders NaN above every number
+      val p = BookTrade.closedPnlNorm(t, feeRate)
+      if (p > 0.0 || p.isNaN) nWins += 1
+      holdUs += t.exitUs - t.entryUs
+    }
+
+    def pnlRatio: Double = cum.toDouble(1e9)
+
+    def summary: SymbolSummary = SymbolSummary(
+      pnl = cum.toDouble(1e9), max_drawdown = maxDd.toDouble(1e9),
+      sum_x = sumX.toDouble(1e9), span_ms = (lastMs - firstMs).toDouble,
+      sigma = math.sqrt(m2 / n), n_trades = nTrades, n_wins = nWins, hold_us = holdUs)
+  }
+
+  /** A finished symbol run: its open positions flushed as OPEN trades,
+    * and its summary.
+    */
+  private final case class RunEnd(symbol: Long, open: Seq[BookTrade], summary: SymbolSummary)
+
+  /** Per-partition runner: a fresh TradeBook and [[RunStats]] per
+    * symbol-run, price_diff derived from the previous bar in-stream (no
+    * window needed — the partition is already symbol-ordered).
     */
   private final class SymbolRunner(cfg: PnlConfig, trackTrades: Boolean = true)
       extends Serializable {
-    var book: TradeBook = null
-    var symbol: Long = 0L
+    private var book: TradeBook = null
+    private var stats: RunStats = null
+    private var symbol: Long = 0L
     private var prevClose: Double = Double.NaN
 
-    /** Open positions of the PREVIOUS symbol, flushed when `b` starts a
-      * new run (empty otherwise). Must be consumed before stepping `b`.
+    /** The run that `b` ends, when `b` starts a new symbol after another
+      * (None otherwise). Must be called before stepping `b`.
       */
-    def beginBar(b: EngineBar): Seq[(Long, BookTrade)] = {
-      if (book == null) {
-        book = new TradeBook(cfg, trackTrades); symbol = b.symbol; prevClose = Double.NaN
-        Nil
-      } else if (b.symbol != symbol) {
-        val flushed = book.flushOpen().map(t => (symbol, t))
-        book = new TradeBook(cfg, trackTrades); symbol = b.symbol; prevClose = Double.NaN
-        flushed
-      } else Nil
-    }
+    def beginBar(b: EngineBar): Option[RunEnd] =
+      if (book != null && b.symbol == symbol) None
+      else {
+        val ended = endOfPartition()
+        book = new TradeBook(cfg, trackTrades); stats = new RunStats(cfg.feeRate)
+        symbol = b.symbol; prevClose = Double.NaN
+        ended
+      }
 
     /** Run one bar; returns its final mtm (accrual − fees). */
     def stepBar(b: EngineBar): Double = {
       val diff = if (prevClose.isNaN) Double.NaN else b.close - prevClose
       prevClose = b.close
-      book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
+      val mtm = book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
+      stats.bar(b.ts_us, mtm)
+      mtm
     }
 
-    def endOfPartition(): Seq[(Long, BookTrade)] =
-      if (book == null) Nil else book.flushOpen().map(t => (symbol, t))
+    /** Cumulative pnl of the run through the last stepped bar. */
+    def pnlRatio: Double = stats.pnlRatio
+
+    /** Trades closed by the last step, counted into the run's summary. */
+    def drainClosed(): IndexedSeq[BookTrade] = {
+      val closed = book.drainTrades()
+      closed.foreach(stats.trade)
+      closed
+    }
+
+    def endOfPartition(): Option[RunEnd] =
+      if (book == null) None else Some(RunEnd(symbol, book.flushOpen(), stats.summary))
   }
 
   /** Per-bar mtm timeline: (symbol, ts_us, event_id, close, buy, sell,
-    * mtm_ratio) — the reference's `mtm_history` (trade_reward.py:109,166),
-    * one row per input bar.
+    * mtm_ratio, pnl_ratio) — the reference's `mtm_history`
+    * (trade_reward.py:109,166) with its cumulative pnl, one row per
+    * input bar.
     */
   def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame = {
     val spark = bars.sparkSession
@@ -132,8 +229,9 @@ object MtmEngine {
       // symbol's trade count instead of O(open positions)
       val r = new SymbolRunner(cfg, trackTrades = false)
       it.map { b =>
-        r.beginBar(b) // timeline ignores blotter flushes; resets state
-        TimelinePoint(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, r.stepBar(b))
+        r.beginBar(b) // timeline ignores run ends; resets state
+        val mtm = r.stepBar(b)
+        TimelinePoint(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, mtm, r.pnlRatio)
       }
     }.toDF()
   }
@@ -159,79 +257,100 @@ object MtmEngine {
           BlotterRec(sym, if (t.isLong) "LONG" else "SHORT", t.entryUs, t.entryPrice,
             None, None, None, None, is_closed = false)
         }
+      def flushed(e: RunEnd) = e.open.iterator.map(toRec(e.symbol, _))
       val perBar = it.flatMap { b =>
-        val flushed = r.beginBar(b)
+        val ended = r.beginBar(b)
         r.stepBar(b)
-        val closed = r.book.drainTrades().map(t => (r.symbol, t))
-        (flushed.iterator ++ closed.iterator).map { case (s, t) => toRec(s, t) }
+        val closed = r.drainClosed()
+        ended.iterator.flatMap(flushed) ++ closed.iterator.map(toRec(b.symbol, _))
       }
       // Iterator.++ takes its suffix BY NAME: the end-of-partition flush
       // is built only after perBar exhausts the partition
-      perBar ++ r.endOfPartition().iterator.map { case (s, t) => toRec(s, t) }
+      perBar ++ r.endOfPartition().iterator.flatMap(flushed)
     }.toDF()
   }
 
   /** Unified single-pass output row, discriminated by `kind`:
-    * "tl" timeline point, "bl" blotter record — see [[combinedRun]].
+    * "tl" timeline point, "bl" blotter record, "sm" symbol summary —
+    * see [[engineRows]].
     */
   private[graft] final case class EngineOut(
       kind: String,
       symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
-      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0,
+      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0, pnl_ratio: Double = 0.0,
       direction: String = "", entry_ts_us: Long = 0L, entry_price: Double = 0.0,
       exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
       pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
-      is_closed: Boolean = false)
+      is_closed: Boolean = false, summary: Option[SymbolSummary] = None)
 
-  /** BOTH output families from ONE engine pass: one shuffle, one sort,
-    * one state-machine walk, materialized once; the returned frames are
-    * kind-filtered projections over the stored blocks. Consumers that
-    * need timeline AND blotter (pnlSummary, MtmRunner.calculate) would
-    * otherwise pay the repartition+sort+walk twice — exchange reuse
-    * shares the shuffle write between the twin plans but re-runs the
-    * sort and the per-bar state machine per family.
+  /** The engine walk behind [[combinedRun]] and the summary surfaces: one
+    * "sm" row per symbol run and, with `rows`, a "tl" row per bar and a
+    * "bl" row per closed or flushed-open trade.
     */
-  private[graft] def combinedRun(
-      bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): (DataFrame, DataFrame) = {
+  private def engineRows(cfg: PnlConfig, rows: Boolean)(
+      it: Iterator[EngineBar]): Iterator[EngineOut] = {
+    val r = new SymbolRunner(cfg) // trackTrades: drained per bar below
+    def toBl(sym: Long, t: BookTrade): EngineOut =
+      if (t.isClosed) {
+        val pnl = BookTrade.closedPnlNorm(t, cfg.feeRate)
+        EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
+          entry_ts_us = t.entryUs, entry_price = t.entryPrice,
+          exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
+          pnl_norm = Some(pnl), close_reason = Some(t.reason), is_closed = true)
+      } else {
+        EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
+          entry_ts_us = t.entryUs, entry_price = t.entryPrice)
+      }
+    def ended(e: RunEnd): Iterator[EngineOut] =
+      (if (rows) e.open.iterator.map(toBl(e.symbol, _)) else Iterator.empty) ++
+        Iterator.single(EngineOut("sm", e.symbol, summary = Some(e.summary)))
+    val perBar = it.flatMap { b =>
+      val end = r.beginBar(b)
+      val mtm = r.stepBar(b)
+      val closed = r.drainClosed()
+      if (!rows) end.iterator.flatMap(ended)
+      else Iterator.single(EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close,
+          b.buy, b.sell, mtm, r.pnlRatio)) ++
+        end.iterator.flatMap(ended) ++ closed.iterator.map(toBl(b.symbol, _))
+    }
+    // by-name ++ suffix: built only after perBar drains the partition
+    perBar ++ r.endOfPartition().iterator.flatMap(ended)
+  }
+
+  /** ALL output families from ONE engine pass: one shuffle, one sort,
+    * one state-machine walk, materialized once; the returned (timeline,
+    * blotter, summary) frames are kind-filtered projections over the
+    * stored blocks (the summary's columns: see [[summaryOf]]). Consumers that need more than one family
+    * (MtmRunner.calculate) would otherwise pay the repartition+sort+walk
+    * per family — exchange reuse shares the shuffle write between the
+    * twin plans but re-runs the sort and the per-bar state machine.
+    */
+  private[graft] def combinedRun(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
     val spark = bars.sparkSession
     import spark.implicits._
-    val feeRate = cfg.feeRate
-    val out = sortedBars(bars, colocated).mapPartitions { it =>
-      val r = new SymbolRunner(cfg) // trackTrades: drained per bar below
-      def toOut(sym: Long, t: BookTrade): EngineOut =
-        if (t.isClosed) {
-          val pnl = BookTrade.closedPnlNorm(t, feeRate)
-          EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-            entry_ts_us = t.entryUs, entry_price = t.entryPrice,
-            exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
-            pnl_norm = Some(pnl), close_reason = Some(t.reason), is_closed = true)
-        } else {
-          EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-            entry_ts_us = t.entryUs, entry_price = t.entryPrice)
-        }
-      val perBar = it.flatMap { b =>
-        val flushed = r.beginBar(b)
-        val mtm = r.stepBar(b)
-        val closed = r.book.drainTrades().map(t => (r.symbol, t))
-        Iterator.single(
-          EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, mtm)) ++
-          (flushed.iterator ++ closed.iterator).map { case (s, t) => toOut(s, t) }
-      }
-      // by-name ++ suffix: built only after perBar drains the partition
-      perBar ++ r.endOfPartition().iterator.map { case (s, t) => toOut(s, t) }
-      // EAGER (r16 lazy-checkpoint audit): pnlSummary consumes BOTH
-      // returned frames in one job — the tl and bl aggregates' map
-      // stages are independent and, lazy, race the block store, each
-      // loser re-running the whole engine mapPartitions pass (the
-      // priciest kernel in the MTM family). Single-frame callers pay
-      // the same one materialization job, just at construction.
-    }.toDF().localCheckpoint(eager = true)
+    val out = sortedBars(bars, colocated).mapPartitions(engineRows(cfg, rows = true))
+      // EAGER (r16 lazy-checkpoint audit): the three frames are read by
+      // separate actions, and one job reading two of them (a join, a
+      // union) would have two independent map stages race the block
+      // store, each loser re-running the whole engine pass (the
+      // priciest kernel in the MTM family)
+      .toDF().localCheckpoint(eager = true)
     val tl = out.filter(col("kind") === "tl")
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio")
+      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio", "pnl_ratio")
     val bl = out.filter(col("kind") === "bl")
       .select("symbol", "direction", "entry_ts_us", "entry_price",
         "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed")
-    (tl, bl)
+    (tl, bl, summaryOf(out))
+  }
+
+  /** The summary block alone, lazily: the pass behind the public
+    * summary surfaces, which keep no timeline or blotter rows.
+    */
+  private def summaryRun(bars: DataFrame, cfg: PnlConfig): DataFrame = {
+    val spark = bars.sparkSession
+    import spark.implicits._
+    summaryOf(sortedBars(bars).mapPartitions(engineRows(cfg, rows = false)).toDF())
   }
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
@@ -430,24 +549,10 @@ object MtmEngine {
 
   // ---- query-surface wrappers (timestamps restored to TIMESTAMP μs) ----
 
-  /** Ordered per-symbol bar window over the engine timeline. */
-  private def seqWindow =
-    Window.partitionBy("symbol").orderBy("ts_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-  /** Cumulative exact 1e-9-unit sum — see [[ExactNum]] for why
-    * quantize-then-sum (engine-agnostic IEEE rounding, overflow-safe
-    * decimal accumulator) replaces double→DECIMAL casts.
-    */
-  private def cumUnits(c: org.apache.spark.sql.Column) =
-    sum(ExactNum.units(c, 1e9)).over(seqWindow)
-
-  // Each query surface comes in two forms: the public (bars, cfg) entry
-  // and a `*From(timeline/blotter)` form over a precomputed engine
-  // output — MtmRunner.calculate materializes the engine ONCE and feeds
-  // every summary from it instead of re-running the state machine per
-  // metric (exchange reuse shares only the shuffle write, not the
-  // sort + mapPartitions work).
+  // Each public (bars, cfg) surface runs its own lazy pass;
+  // MtmRunner.calculate materializes the engine ONCE (combinedRun) and
+  // projects every frame from the stored rows instead of re-running the
+  // state machine per metric.
 
   /** SURVEY #4/#5: per-bar mtm_ratio + cumulative pnl_ratio
     * (reference pnl_timeline: runner_mtm.py:136-183).
@@ -456,10 +561,9 @@ object MtmEngine {
     timelineQueryFrom(timeline(bars, cfg, colocated))
 
   private[graft] def timelineQueryFrom(tl: DataFrame): DataFrame =
-    tl.withColumn("pnl_ratio", ExactNum.toDouble(cumUnits(col("mtm_ratio")), 1e9))
-      .select(
-        col("symbol"), timestamp_micros(col("ts_us")).as("ts"), col("event_id"),
-        col("close"), col("buy"), col("sell"), col("mtm_ratio"), col("pnl_ratio"))
+    tl.select(
+      col("symbol"), timestamp_micros(col("ts_us")).as("ts"), col("event_id"),
+      col("close"), col("buy"), col("sell"), col("mtm_ratio"), col("pnl_ratio"))
 
   /** SURVEY #2/#3: the trade blotter as a query. */
   def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
@@ -485,102 +589,66 @@ object MtmEngine {
 
   /** SURVEY #6: per-symbol max drawdown — running peak of cum-pnl floored
     * at 0, minus current, maxed (reference runner_mtm.py:144,168-172).
-    * All-decimal arithmetic end to end, one double conversion at the end.
+    * Exact unit arithmetic in the pass ([[RunStats]]), one double
+    * conversion at the end.
     */
   def maxDrawdown(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    maxDrawdownFrom(timeline(bars, cfg))
-
-  private[graft] def maxDrawdownFrom(tl: DataFrame): DataFrame =
-    tl
-      // all-integer unit arithmetic end to end (exact in Spark's decimal
-      // and DuckDB's hugeint alike) — one double division at the very end
-      .withColumn("cum", cumUnits(col("mtm_ratio")))
-      .withColumn("runmax", max(col("cum")).over(seqWindow))
-      .groupBy("symbol")
-      .agg(
-        ExactNum.toDouble(
-          max(greatest(col("runmax"), lit(0).cast("decimal(38,0)")) - col("cum")), 1e9)
-          .as("max_drawdown"))
+    summaryRun(bars, cfg).select("symbol", "max_drawdown")
 
   /** SURVEY #7: per-symbol Sharpe, reference formula
     * (trade_reward.py:423-450): ms-resolution period, slippage 1e-6,
     * population std, √(365·24) annualization, −1e50 when σ=0. The sum
-    * quantizes to 1e-9 units (engine-agnostic, see cumUnits; error
+    * is exact in 1e-9 units (engine-agnostic, see [[RunStats]]; error
     * ≪ the 4-dp output resolution) and the final 4-dp rounding is
     * floor(x·1e4 + 0.5)/1e4 — `round()` would reintroduce the
     * engine-specific tie semantics the unit scheme exists to avoid. σ
-    * uses each engine's stddev_pop; its ~1e-13 relative noise is
-    * absorbed by the 4-dp output.
+    * is `stddev_pop`'s update applied in bar order; the DuckDB oracle's
+    * σ carries ~1e-13 relative noise, absorbed by the 4-dp output.
     */
   def sharpeRatio(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    sharpeRatioFrom(timeline(bars, cfg))
+    summaryRun(bars, cfg).select("symbol", "sharpe_ratio")
 
-  private[graft] def sharpeRatioFrom(tl: DataFrame): DataFrame = {
-    val xs = col("mtm_ratio") - lit(0.000001)
+  /** SURVEY #8: per-symbol summary — total pnl (Σ mtm,
+    * trade_reward.py:413-421), closed-trade count, win rate, average
+    * holding seconds (reference Mtm_Result surface).
+    */
+  def pnlSummary(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    summaryRun(bars, cfg).select("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs")
+
+  /** The per-symbol summary block from engine output's "sm" rows:
+    * symbol, pnl, n_trades, win_rate, avg_holding_secs, max_drawdown,
+    * sharpe_ratio. The rate and the holding time are null for a symbol
+    * with no closed trade.
+    */
+  private def summaryOf(out: DataFrame): DataFrame = {
+    val n = col("n_trades").cast("double")
     // span_ms = 0 (every bar of a symbol inside ONE millisecond, with
     // price movement so σ > 0) must yield the IEEE result DuckDB's
     // double division produces — ±inf by the sign of sum_x, NaN at
     // 0/0 — NOT evaluate the raw division: under ANSI mode (the
-    // Spark 4 default) x/0.0 ERRORS the job. count() masked this
-    // (column pruning skips the projection); materializing the column
-    // crashed — found by the degenerate-bar probe, pinned in
-    // MtmEngineSpec. σ > 0 here (the σ = 0 guard below fires first),
-    // so dividing by it never flips the sign.
+    // Spark 4 default) x/0.0 ERRORS the job. Found by the degenerate-bar
+    // probe, pinned in MtmEngineSpec. σ > 0 here (the σ = 0 guard below
+    // fires first), so dividing by it never flips the sign.
     val raw = when(col("span_ms") =!= 0.0,
         col("sum_x") / (col("span_ms") / lit(1000.0) / lit(3600.0)) /
           col("sigma") * lit(math.sqrt(8760.0)))
       .when(col("sum_x") > 0.0, lit(Double.PositiveInfinity))
       .when(col("sum_x") < 0.0, lit(Double.NegativeInfinity))
       .otherwise(lit(Double.NaN))
-    // FLOOR division to ms (not bare `div`, which truncates toward zero):
-    // the DuckDB oracle's epoch_ms floors, so a pre-1970 bar not on a ms
-    // boundary would land 1 ms apart — same hazard Tables.events corrects
-    tl.withColumn("ms", expr("ts_us div 1000 - (CASE WHEN ts_us % 1000 < 0 THEN 1 ELSE 0 END)"))
-      .groupBy("symbol")
-      .agg(
-        ExactNum.sumExact(xs, 1e9).as("sum_x"),
-        (max(col("ms")) - min(col("ms"))).cast("double").as("span_ms"),
-        stddev_pop(xs).as("sigma"))
-      .select(
-        col("symbol"),
-        when(col("sigma").isNull || col("sigma") === 0.0, lit(-1e50))
-          // finite guard: a single-ms symbol gives span 0 → raw ±inf/NaN,
-          // which Spark's floor(double)→LONG would mangle (Long.MaxValue /
-          // 0) while DuckDB's floor keeps them — pass non-finite through
-          // unrounded on both sides (abs(NaN) < k is false in both)
-          .when(abs(raw) < lit(1e14),
-            floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
-          .otherwise(raw)
-          .as("sharpe_ratio"))
-  }
-
-  /** SURVEY #8: per-symbol summary — total pnl (Σ mtm,
-    * trade_reward.py:413-421), closed-trade count, win rate, average
-    * holding seconds (reference Mtm_Result surface).
-    */
-  def pnlSummary(bars: DataFrame, cfg: PnlConfig): DataFrame = {
-    // one engine pass for both families (was: independent timeline +
-    // blotter runs — double shuffle/sort/state-machine work)
-    val (tl, bl) = combinedRun(bars, cfg)
-    pnlSummaryFrom(tl, bl)
-  }
-
-  private[graft] def pnlSummaryFrom(tl: DataFrame, bl: DataFrame): DataFrame = {
-    val pnlAgg = tl
-      .groupBy("symbol")
-      .agg(ExactNum.sumExact(col("mtm_ratio"), 1e9).as("pnl"))
-    val tradeAgg = bl
-      .filter(col("is_closed"))
-      .groupBy("symbol")
-      .agg(
-        count(lit(1)).as("n_trades"),
-        count(when(col("pnl_norm") > 0.0, 1)).as("n_wins"),
-        sum(col("exit_ts_us") - col("entry_ts_us")).as("hold_us"))
-    pnlAgg.join(tradeAgg, Seq("symbol"), "left").select(
-      col("symbol"), col("pnl"),
-      coalesce(col("n_trades"), lit(0L)).as("n_trades"),
-      (col("n_wins").cast("double") / col("n_trades").cast("double")).as("win_rate"),
-      (col("hold_us").cast("double") / col("n_trades").cast("double") / lit(1000000.0))
-        .as("avg_holding_secs"))
+    out.filter(col("kind") === "sm").select(col("symbol"), col("summary.*")).select(
+      col("symbol"), col("pnl"), col("n_trades"),
+      when(col("n_trades") > 0, col("n_wins").cast("double") / n).as("win_rate"),
+      when(col("n_trades") > 0, col("hold_us").cast("double") / n / lit(1000000.0))
+        .as("avg_holding_secs"),
+      col("max_drawdown"),
+      when(col("sigma") === 0.0, lit(-1e50))
+        // finite guard: a single-ms symbol gives span 0 → raw ±inf/NaN,
+        // which Spark's floor(double)→LONG would mangle (Long.MaxValue /
+        // 0) while DuckDB's floor keeps them — pass non-finite through
+        // unrounded on both sides (abs(NaN) < k is false in both)
+        .when(abs(raw) < lit(1e14),
+          floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
+        .otherwise(raw)
+        .as("sharpe_ratio"))
   }
 }

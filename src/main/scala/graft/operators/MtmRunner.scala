@@ -26,7 +26,7 @@ object MtmRunner {
       params: Map[String, String] = Map.empty)
 
   /** The reference's `Mtm_Result` (models.py:203-234), re-expressed as
-    * lazy DataFrames: `summary` carries the scalar block (pnl,
+    * DataFrames over one materialized engine pass: `summary` carries the scalar block (pnl,
     * max_drawdown, sharpe_ratio per symbol), `timeline` the pnl_timeline
     * dict, `trades` the archive + outstanding lists. `meta` and the run
     * epochs are the bookkeeping block; `queryDict` is the
@@ -44,8 +44,8 @@ object MtmRunner {
       * fields, scalar metrics, market/run epochs (seconds), and the four
       * archive/outstanding sizes (`to_Dict`'s derived size fields,
       * models.py:229-234). Market epochs come from the data itself;
-      * run epochs bracket the `calculate` call (plan construction — the
-      * heavy lifting is lazy, timed by the bench harness).
+      * run epochs bracket the `calculate` call, which runs the engine pass
+      * eagerly (the frames are projections of its stored rows).
       */
     def queryDict: DataFrame = {
       val mkt = timeline.groupBy("symbol").agg(
@@ -91,14 +91,11 @@ object MtmRunner {
       cfg: PnlConfig = PnlConfig.default,
       meta: RunMeta = RunMeta()): MtmResult = {
     val runStart = System.currentTimeMillis() / 1000L
-    // ONE engine pass for both families (combinedRun materializes the
-    // unified output): every summary metric is an agg/window over the
-    // stored blocks — without this, each of pnl/drawdown/sharpe would
-    // re-execute the repartition+sort+mapPartitions pipeline
-    val (tl, bl) = MtmEngine.combinedRun(bars, cfg)
-    val summary = MtmEngine.pnlSummaryFrom(tl, bl)
-      .join(MtmEngine.maxDrawdownFrom(tl), Seq("symbol"), "left")
-      .join(MtmEngine.sharpeRatioFrom(tl), Seq("symbol"), "left")
+    // ONE engine pass, materialized here, for every part: the pass emits
+    // the timeline (with its cumulative pnl_ratio), the blotter and one
+    // summary row per symbol run, so each frame below is a projection of
+    // the stored rows — no join, window or aggregate re-reads them
+    val (tl, bl, summary) = MtmEngine.combinedRun(bars, cfg)
     MtmResult(
       summary = summary,
       timeline = MtmEngine.timelineQueryFrom(tl),

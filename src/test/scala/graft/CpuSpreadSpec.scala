@@ -93,4 +93,20 @@ class CpuSpreadSpec extends AnyFunSuite {
         .rdd.getNumPartitions === 1)
     }
   }
+
+  test("a malformed cpuSpread conf value fails naming the key and the value") {
+    val dir = java.nio.file.Files.createTempDirectory("cpuspread_conf").toString
+    narrow().write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    withConf("spark.graft.cpuSpread.minBytes", "64k") {
+      val e = intercept[IllegalArgumentException](CpuSpread.spread(scan))
+      assert(e.getMessage.contains("spark.graft.cpuSpread.minBytes") &&
+        e.getMessage.contains("'64k'"), e.getMessage)
+    }
+    withConf("spark.graft.cpuSpread.enabled", "yes") {
+      val e = intercept[IllegalArgumentException](CpuSpread.spread(narrow()))
+      assert(e.getMessage.contains("spark.graft.cpuSpread.enabled") &&
+        e.getMessage.contains("'yes'"), e.getMessage)
+    }
+  }
 }

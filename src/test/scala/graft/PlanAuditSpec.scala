@@ -58,6 +58,31 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("SerializeFromObject"), "mapPartitions operator missing")
   }
 
+  test("MTM derived outputs come from the engine pass: no Window, no extra exchange") {
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    // the public surfaces: the engine's one exchange, nothing re-shuffles
+    // or windows the pass output
+    for ((name, df) <- Seq(
+        "timelineQuery" -> MtmEngine.timelineQuery(bars, PnlConfig.default),
+        "maxDrawdown" -> MtmEngine.maxDrawdown(bars, PnlConfig.default),
+        "sharpeRatio" -> MtmEngine.sharpeRatio(bars, PnlConfig.default),
+        "pnlSummary" -> MtmEngine.pnlSummary(bars, PnlConfig.default))) {
+      val p = plan(df)
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(exchanges == 1 && !p.contains("Exchange RoundRobin"),
+        s"$name should shuffle exactly once, saw:\n$p")
+      assert(!p.contains("Window"), s"$name must not window the timeline:\n$p")
+    }
+    // calculate materializes the pass; its summary and timeline only
+    // read the stored rows
+    val res = MtmRunner.calculate(bars, PnlConfig.default)
+    for ((name, df) <- Seq("summary" -> res.summary, "timeline" -> res.timeline)) {
+      val p = plan(df)
+      assert(!p.contains("Exchange") && !p.contains("Window"),
+        s"calculate(...).$name must be a projection of the checkpoint:\n$p")
+    }
+  }
+
   test("ANN brute force: query side broadcast, corpus scanned once, no shuffle of scored rows") {
     val p = plan(Similarity.annBruteForceTopK(Tables.embeddings(spark, sfDir)))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.{Sessions, Tables}
 import graft.core.{PnlConfig, RefSim}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * (RefSim) computes over that symbol's time-ordered bars — across
   * configs including ROI ladders, stop-loss, fees and max-position (the
   * SURVEY §2 #9/#10 spec-level correctness gate).
+  *
+  * The engine's in-pass derived outputs (cumulative pnl_ratio, pnl, trade
+  * stats, max drawdown, Sharpe) are checked against the window and
+  * aggregate passes over the timeline and blotter that computed them
+  * before, kept here as the reference. Equality is bit-for-bit
+  * (`Double.compare == 0`, nulls equal), including for cumulative sums
+  * past Long range, and a per-bar unit overflow fails both with the same
+  * named error.
   */
 class MtmEngineSpec extends AnyFunSuite {
 
@@ -35,6 +44,117 @@ class MtmEngineSpec extends AnyFunSuite {
             ((ts, eid, close, diff, b, s) :: acc, close)
         }._1.reverse
     }
+  }
+
+  // ---- reference definitions (window / aggregate passes) ----
+
+  private def seqWindow =
+    Window.partitionBy("symbol").orderBy("ts_us", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  private def cumUnits(c: org.apache.spark.sql.Column) =
+    sum(ExactNum.units(c, 1e9)).over(seqWindow)
+
+  private def refPnlRatio(tl: DataFrame): DataFrame =
+    tl.select(col("symbol"), col("ts_us"), col("event_id"),
+      ExactNum.toDouble(cumUnits(col("mtm_ratio")), 1e9).as("pnl_ratio"))
+
+  private def refMaxDrawdown(tl: DataFrame): DataFrame =
+    tl.withColumn("cum", cumUnits(col("mtm_ratio")))
+      .withColumn("runmax", max(col("cum")).over(seqWindow))
+      .groupBy("symbol")
+      .agg(ExactNum.toDouble(
+        max(greatest(col("runmax"), lit(0).cast("decimal(38,0)")) - col("cum")), 1e9)
+        .as("max_drawdown"))
+
+  private def refSharpe(tl: DataFrame): DataFrame = {
+    val xs = col("mtm_ratio") - lit(0.000001)
+    val raw = when(col("span_ms") =!= 0.0,
+        col("sum_x") / (col("span_ms") / lit(1000.0) / lit(3600.0)) /
+          col("sigma") * lit(math.sqrt(8760.0)))
+      .when(col("sum_x") > 0.0, lit(Double.PositiveInfinity))
+      .when(col("sum_x") < 0.0, lit(Double.NegativeInfinity))
+      .otherwise(lit(Double.NaN))
+    tl.withColumn("ms", expr("ts_us div 1000 - (CASE WHEN ts_us % 1000 < 0 THEN 1 ELSE 0 END)"))
+      .groupBy("symbol")
+      .agg(
+        ExactNum.sumExact(xs, 1e9).as("sum_x"),
+        (max(col("ms")) - min(col("ms"))).cast("double").as("span_ms"),
+        stddev_pop(xs).as("sigma"))
+      .select(
+        col("symbol"),
+        when(col("sigma").isNull || col("sigma") === 0.0, lit(-1e50))
+          .when(abs(raw) < lit(1e14),
+            floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
+          .otherwise(raw)
+          .as("sharpe_ratio"))
+  }
+
+  private def refPnlSummary(tl: DataFrame, bl: DataFrame): DataFrame = {
+    val pnlAgg = tl.groupBy("symbol").agg(ExactNum.sumExact(col("mtm_ratio"), 1e9).as("pnl"))
+    val tradeAgg = bl
+      .filter(col("is_closed"))
+      .groupBy("symbol")
+      .agg(
+        count(lit(1)).as("n_trades"),
+        count(when(col("pnl_norm") > 0.0, 1)).as("n_wins"),
+        sum(col("exit_ts_us") - col("entry_ts_us")).as("hold_us"))
+    pnlAgg.join(tradeAgg, Seq("symbol"), "left").select(
+      col("symbol"), col("pnl"),
+      coalesce(col("n_trades"), lit(0L)).as("n_trades"),
+      (col("n_wins").cast("double") / col("n_trades").cast("double")).as("win_rate"),
+      (col("hold_us").cast("double") / col("n_trades").cast("double") / lit(1000000.0))
+        .as("avg_holding_secs"))
+  }
+
+  private def refSummary(tl: DataFrame, bl: DataFrame): DataFrame =
+    refPnlSummary(tl, bl)
+      .join(refMaxDrawdown(tl), Seq("symbol"), "left")
+      .join(refSharpe(tl), Seq("symbol"), "left")
+
+  // ---- comparison ----
+
+  private val summaryCols =
+    Seq("pnl", "n_trades", "win_rate", "avg_holding_secs", "max_drawdown", "sharpe_ratio")
+
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => java.lang.Double.compare(x, y) == 0
+    case _ => a == b // null == null
+  }
+
+  /** symbol → the named columns' values. */
+  private def bySymbol(df: DataFrame, cols: Seq[String]): Map[Long, Seq[Any]] =
+    df.select(col("symbol") +: cols.map(col): _*).collect()
+      .map(r => r.getLong(0) -> cols.indices.map(i => r.get(i + 1))).toMap
+
+  private def assertSame[K](what: String, got: Map[K, Seq[Any]], want: Map[K, Seq[Any]]): Unit = {
+    assert(got.keySet == want.keySet, s"$what: key sets differ")
+    for ((k, w) <- want; g = got(k); i <- w.indices)
+      assert(same(g(i), w(i)), s"$what $k column $i: got ${g(i)}, reference ${w(i)}")
+  }
+
+  private def pnlRatios(df: DataFrame): Map[(Long, Long, Long), Seq[Any]] =
+    df.select("symbol", "ts_us", "event_id", "pnl_ratio").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> Seq(r.get(3))).toMap
+
+  /** Every in-pass surface equals the reference over `bars`. */
+  private def checkParity(bars: DataFrame, cfg: PnlConfig): Unit = {
+    val (tl, bl, _) = MtmEngine.combinedRun(bars, cfg)
+    val wantRatios = pnlRatios(refPnlRatio(tl))
+    assert(wantRatios.nonEmpty)
+    assertSame("combined pnl_ratio", pnlRatios(tl), wantRatios)
+    assertSame("timeline pnl_ratio", pnlRatios(MtmEngine.timeline(bars, cfg)), wantRatios)
+
+    val want = bySymbol(refSummary(tl, bl), summaryCols)
+    assertSame("calculate summary",
+      bySymbol(MtmRunner.calculate(bars, cfg).summary, summaryCols), want)
+    def wantOf(c: String*) = want.map { case (s, v) => s -> c.map(n => v(summaryCols.indexOf(n))) }
+    assertSame("pnlSummary", bySymbol(MtmEngine.pnlSummary(bars, cfg), summaryCols.take(4)),
+      wantOf(summaryCols.take(4): _*))
+    assertSame("maxDrawdown", bySymbol(MtmEngine.maxDrawdown(bars, cfg), Seq("max_drawdown")),
+      wantOf("max_drawdown"))
+    assertSame("sharpeRatio", bySymbol(MtmEngine.sharpeRatio(bars, cfg), Seq("sharpe_ratio")),
+      wantOf("sharpe_ratio"))
   }
 
   private val configs: Seq[(String, PnlConfig)] = Seq(
@@ -83,6 +203,10 @@ class MtmEngineSpec extends AnyFunSuite {
           r.open.map(t => (sym, if (t.long) "LONG" else "SHORT", t.entryUs, -1L, "OPEN"))
       }.toSet
       assert(got == exp)
+    }
+
+    test(s"in-pass summaries equal the window/aggregate reference bit for bit: $name") {
+      checkParity(MtmEngine.barsFromEvents(Tables.events(spark, sfDir)), cfg)
     }
   }
 
@@ -176,16 +300,9 @@ class MtmEngineSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("degenerate bars: constant price, single bar, and sub-ms symbols don't crash sharpe") {
-    // Regression for the ANSI span_ms=0 division (r13): a symbol whose
-    // bars ALL land inside one millisecond, with price movement so
-    // σ > 0, used to error the job at sharpe materialization
-    // (DIVIDE_BY_ZERO — count() masked it via column pruning). The
-    // guarded expression must yield the IEEE value DuckDB's double
-    // division produces: +inf here (rising prices ⇒ sum_x > 0).
-    // Constant-price and single-bar symbols take the σ = 0 sentinel.
+  private def degenerateBars: DataFrame = {
     import spark.implicits._
-    val bars = Seq(
+    Seq(
       (10L, 1000L * 1000, 1L, 100.0, 1, 0), (10L, 2000L * 1000, 2L, 100.0, 0, 0),
       (10L, 3000L * 1000, 3L, 100.0, 0, 0), // constant price: sigma = 0
       (20L, 5000L * 1000, 4L, 50.0, 1, 0), // single bar
@@ -194,6 +311,17 @@ class MtmEngineSpec extends AnyFunSuite {
       (30L, 6000L * 1000 + 600, 7L, 40.0, 0, 0), // span_ms = 0
       (40L, 7000L * 1000, 8L, 5.0, 0, 0), (40L, 8000L * 1000, 9L, 6.0, 0, 0) // no signals
     ).toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+  }
+
+  test("degenerate bars: constant price, single bar, and sub-ms symbols don't crash sharpe") {
+    // Regression for the ANSI span_ms=0 division (r13): a symbol whose
+    // bars ALL land inside one millisecond, with price movement so
+    // σ > 0, used to error the job at sharpe materialization
+    // (DIVIDE_BY_ZERO — count() masked it via column pruning). The
+    // guarded expression must yield the IEEE value DuckDB's double
+    // division produces: +inf here (rising prices ⇒ sum_x > 0).
+    // Constant-price and single-bar symbols take the σ = 0 sentinel.
+    val bars = degenerateBars
     val sharpe = MtmEngine.sharpeRatio(bars, PnlConfig.default)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(sharpe(10L) == -1e50, "constant price must take the sigma=0 sentinel")
@@ -212,5 +340,61 @@ class MtmEngineSpec extends AnyFunSuite {
     val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
     val n = bars.count()
     assert(MtmEngine.timeline(bars, PnlConfig.default).count() == n)
+  }
+
+  test("in-pass summaries equal the reference on degenerate bars") {
+    checkParity(degenerateBars, PnlConfig.default)
+    checkParity(degenerateBars,
+      PnlConfig(feeRate = 0.001, laidBackTax = 0.0001, enableShortPosition = true))
+  }
+
+  /** A long entered at a tiny positive price: each later bar's mtm is
+    * its price jump ÷ 1e-3.
+    */
+  private def jumpBars(symbol: Long, closes: Seq[Double]): Seq[(Long, Long, Long, Double, Int, Int)] =
+    closes.zipWithIndex.map { case (c, i) =>
+      (symbol, (i + 1) * 1000000L, symbol * 100 + i, c, if (i == 0) 1 else 0, 0)
+    }
+
+  test("cumulative units past Long range match the DECIMAL reference exactly, never wrapping") {
+    import spark.implicits._
+    val p = 1e-3
+    // per-bar mtm ≈ ±9e9 (9e18 units, just under 2^63); the cumulative
+    // reaches ≈ 1.8e19 units and the drawdown back to ≈ 0 as much
+    val bars = (jumpBars(1L, Seq(p, p + 9e6, p + 1.8e7, p + 2.7e7, p + 1.8e7, p + 9e6, p)) ++
+      jumpBars(2L, Seq(10.0, 11.0, 9.5, 12.0)))
+      .toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+    val (tl, _, sm) = MtmEngine.combinedRun(bars, PnlConfig.default)
+    val peakUnits = refPnlRatio(tl).filter(col("symbol") === 1L)
+      .agg(max(col("pnl_ratio"))).head().getDouble(0) * 1e9
+    assert(peakUnits > 2.0 * Long.MaxValue, s"test premise: peak $peakUnits units")
+    val dd = sm.filter(col("symbol") === 1L).select("max_drawdown").head().getDouble(0) * 1e9
+    assert(dd > 2.0 * Long.MaxValue, s"drawdown $dd units must not wrap")
+    checkParity(bars, PnlConfig.default)
+  }
+
+  test("a single bar's unit overflow fails with the ExactNum.units error, like the reference") {
+    import spark.implicits._
+    val p = 1e-3
+    // mtm ≈ 1e10 → |mtm·1e9 + 0.5| ≈ 1e19 ≥ 2^63
+    val bars = jumpBars(1L, Seq(p, p + 1e7)).toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val msg = "ExactNum.units overflow at scale 1.0E9"
+    // the reference over the same per-bar mtm (the pass itself can no
+    // longer produce an unquantized timeline for this input)
+    val tl = Seq((1L, 1000000L, 100L, 0.0), (1L, 2000000L, 101L, 1e10))
+      .toDF("symbol", "ts_us", "event_id", "mtm_ratio")
+    assert(failure(refPnlRatio(tl).collect()).contains(msg), "reference premise")
+    for ((name, run) <- Seq[(String, () => Any)](
+        "timelineQuery" -> (() => MtmEngine.timelineQuery(bars, PnlConfig.default).collect()),
+        "pnlSummary" -> (() => MtmEngine.pnlSummary(bars, PnlConfig.default).collect()),
+        "maxDrawdown" -> (() => MtmEngine.maxDrawdown(bars, PnlConfig.default).collect()),
+        "sharpeRatio" -> (() => MtmEngine.sharpeRatio(bars, PnlConfig.default).collect()),
+        "calculate" -> (() => MtmRunner.calculate(bars, PnlConfig.default).summary.collect())))
+      assert(failure(run()).contains(msg), s"$name must fail with the named overflow")
   }
 }
