@@ -253,7 +253,8 @@ object ConnectedComponents {
     // vertex distinct (bounded — p's blocks are already stored — but
     // a full vertex exchange per loser). One small job at
     // construction, after the eager p job above, buys it out.
-    val edges = buildEdges(p, pObs.get("n").asInstanceOf[Long])
+    val edges = buildEdges(p,
+      Observed.metrics(pObs, "ConnectedComponents.dupGroups", "n")("n").asInstanceOf[Long])
     // r20: the initial label sum (the convergence invariant's seed)
     // likewise rides the labels checkpoint job as an observed metric —
     // previously a separate labelSum job over the fresh checkpoint.
@@ -266,7 +267,8 @@ object ConnectedComponents {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
 
-    var prevSum = lObs.get("s").asInstanceOf[java.math.BigDecimal]
+    var prevSum = Observed.metrics(lObs, "ConnectedComponents.dupGroups", "s")("s")
+      .asInstanceOf[java.math.BigDecimal]
     // an empty pair set has no components: sum(empty) is SQL NULL, and
     // looping on it would NPE — return the (empty) labeling directly
     if (prevSum == null) {
@@ -447,7 +449,7 @@ object ConnectedComponents {
 
     // the eager checkpoint above materialized p and edges and delivered
     // the initial fingerprint's metrics (r20 — one aggregate job fewer)
-    var prev = fingerprintOf(eObs.get)
+    var prev = fingerprintOf(Observed.metrics(eObs, "ConnectedComponents.dupGroupsStar", "fingerprint"))
     // verts reads p's stored partitions (one tiny distinct job); after
     // that nothing references p and its blocks can be freed
     verts.count()

@@ -1,28 +1,41 @@
 package graft.operators
 
 import graft.core.{BookTrade, OpenPos, PnlConfig, TradeBook}
+import graft.plans.MtmPass
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.classic.GraftInternal
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed mark-to-market engine — the Spark-native re-expression of
   * the reference's `Trade_Mtm_Runner.calculate` → `Mtm_Result` pipeline
   * (reference: runner_mtm.py:71-205, trade_reward.py:81-170).
   *
   * Plan shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
-  * `sortWithinPartitions(symbol, ts, event_id)` → `mapPartitions` running
-  * the [[graft.core.TradeBook]] state machine per symbol-run. ONE shuffle
-  * total; parallelism = #symbols spread by hash; per-task state is
-  * O(open positions) and rows stream through an iterator, so a skewed
+  * `sortWithinPartitions(symbol, ts, event_id)` → [[graft.plans.MtmPass]],
+  * a row-level node that runs the [[graft.core.TradeBook]] state machine
+  * per symbol-run over the sorted InternalRows and writes one output
+  * family's UnsafeRows through reused writers. ONE shuffle total;
+  * parallelism = #symbols spread by hash; per-task state is O(open
+  * positions) and rows stream through an iterator, so a skewed
   * mega-symbol is wall-clock-bound but never OOMs. At 100 TB the symbol
   * count vastly exceeds core count, so the hash spread stays even.
   *
   * Derived outputs come from the same walk, as in the reference's own
   * loop (runner_mtm.py:144-176): each symbol run keeps a [[RunStats]]
   * accumulator that writes the cumulative `pnl_ratio` on every timeline
-  * row and ends the run with one summary row (pnl, max drawdown, the
-  * Sharpe inputs, closed-trade stats). The summary surfaces are
-  * projections of those rows — no window or aggregate pass over the
-  * timeline.
+  * row and ends the run with one summary row. The summary's derived
+  * columns — win rate, average holding seconds, Sharpe with its σ = 0
+  * sentinel, its span-0 IEEE branch and its 4-dp floor rounding — are
+  * computed in Scala with the same IEEE operations in the same order as
+  * the SQL expressions they replace (and the DuckDB oracle mirrors), so
+  * every value is bit-identical to them.
   *
   * Numeric discipline: per-bar mtm is pure double arithmetic (replicated
   * bit-for-bit by the DuckDB oracle); every cumulative/aggregated series
@@ -35,21 +48,23 @@ import org.apache.spark.sql.functions._
   * replays them with DECIMAL sums — the properties that keep 100 TB runs
   * reproducible. Sharpe's σ is Spark's `stddev_pop` update (Welford,
   * `CentralMomentAgg`) applied in bar order.
+  *
+  * Storage ([[combinedRun]], behind `MtmRunner.calculate`): the walk runs
+  * once and packs each family into its own pages — byte arrays of
+  * length-prefixed UnsafeRows — stored with an EAGER local checkpoint.
+  * Eager because the three frames are read by separate actions, and one
+  * job reading two of them (a join, a union) would otherwise have two
+  * unordered map stages race the block store, each loser re-running the
+  * whole engine pass (the r16 lazy-checkpoint audit). Each frame reads
+  * only its own family's pages through one reused UnsafeRow.
   */
 object MtmEngine {
 
-  /** Input bar (μs epoch; event_id tiebreaks equal timestamps). */
+  /** Input bar (μs epoch; event_id tiebreaks equal timestamps) — the
+    * slice runner's typed view of a sorted bar row.
+    */
   private[graft] final case class EngineBar(
       symbol: Long, ts_us: Long, event_id: Long, close: Double, buy: Int, sell: Int)
-
-  private[graft] final case class TimelinePoint(
-      symbol: Long, ts_us: Long, event_id: Long, close: Double,
-      buy: Int, sell: Int, mtm_ratio: Double, pnl_ratio: Double)
-
-  private[graft] final case class BlotterRec(
-      symbol: Long, direction: String, entry_ts_us: Long, entry_price: Double,
-      exit_ts_us: Option[Long], exit_price: Option[Double],
-      pnl_norm: Option[Double], close_reason: Option[String], is_closed: Boolean)
 
   /** events → canonical bar view (SURVEY §2): user_id plays the symbol,
     * value the close price, purchase/click the buy/sell signals; every
@@ -72,11 +87,11 @@ object MtmEngine {
   /** The engine's only shuffle: co-locate each symbol's bars and order
     * them totally within the partition (secondary sort). AQE partition
     * coalescing is safe: symbol runs stay contiguous because a symbol
-    * hashes to exactly one pre-coalesce partition.
+    * hashes to exactly one pre-coalesce partition. Columns, in the order
+    * the walk reads them: symbol, ts_us, event_id (long), close (double),
+    * buy, sell (int).
     */
-  private def sortedBars(bars: DataFrame, colocated: Boolean = false): Dataset[EngineBar] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
+  private def sortedBars(bars: DataFrame, colocated: Boolean): DataFrame = {
     val projected = bars
       .select(
         col("symbol").cast("long"), col("ts_us").cast("long"),
@@ -90,9 +105,47 @@ object MtmEngine {
     // book state mid-run — callers own the layout contract
     // (ColocatedEngineSpec pins bit-equality on the bucketed layout).
     val dist = if (colocated) projected else projected.repartition(col("symbol"))
-    dist
-      .sortWithinPartitions("symbol", "ts_us", "event_id")
-      .as[EngineBar]
+    dist.sortWithinPartitions("symbol", "ts_us", "event_id")
+  }
+
+  /** One output family of the pass, with its public schema. Timestamps
+    * are TIMESTAMP columns, whose row form is the µs long the walk
+    * writes.
+    */
+  private[graft] sealed abstract class Family(val id: Int, val schema: StructType)
+      extends Serializable
+
+  private[graft] object Family {
+    private def field(name: String, t: DataType, nullable: Boolean = false) =
+      StructField(name, t, nullable)
+
+    /** (symbol, ts, event_id, close, buy, sell, mtm_ratio, pnl_ratio). */
+    case object Timeline extends Family(0, StructType(Seq(
+      field("symbol", LongType), field("ts", TimestampType), field("event_id", LongType),
+      field("close", DoubleType), field("buy", IntegerType), field("sell", IntegerType),
+      field("mtm_ratio", DoubleType), field("pnl_ratio", DoubleType))))
+
+    /** (symbol, direction, entry_ts, entry_price, exit_ts, exit_price,
+      * pnl_norm, pnl, close_reason, is_closed); the exit columns are
+      * null on an OPEN row.
+      */
+    case object Blotter extends Family(1, StructType(Seq(
+      field("symbol", LongType), field("direction", StringType, nullable = true),
+      field("entry_ts", TimestampType), field("entry_price", DoubleType),
+      field("exit_ts", TimestampType, nullable = true),
+      field("exit_price", DoubleType, nullable = true),
+      field("pnl_norm", DoubleType, nullable = true), field("pnl", DoubleType, nullable = true),
+      field("close_reason", StringType, nullable = true), field("is_closed", BooleanType))))
+
+    /** (symbol, pnl, n_trades, win_rate, avg_holding_secs, max_drawdown,
+      * sharpe_ratio); the rate and the holding time are null for a
+      * symbol with no closed trade.
+      */
+    case object Summary extends Family(2, StructType(
+      field("symbol", LongType) +:
+        Seq("pnl" -> DoubleType, "n_trades" -> LongType, "win_rate" -> DoubleType,
+          "avg_holding_secs" -> DoubleType, "max_drawdown" -> DoubleType,
+          "sharpe_ratio" -> DoubleType).map { case (n, t) => field(n, t, nullable = true) }))
   }
 
   /** One symbol run's summary row — see [[RunStats]]. */
@@ -164,194 +217,275 @@ object MtmEngine {
       sigma = math.sqrt(m2 / n), n_trades = nTrades, n_wins = nWins, hold_us = holdUs)
   }
 
-  /** A finished symbol run: its open positions flushed as OPEN trades,
-    * and its summary.
+  /** SURVEY #7: per-symbol Sharpe, reference formula
+    * (trade_reward.py:423-450): ms-resolution period, slippage 1e-6,
+    * population std, √(365·24) annualization, −1e50 when σ = 0. The
+    * final 4-dp rounding is floor(x·1e4 + 0.5)/1e4 through a Long, as
+    * Spark's `floor(double)` — `round()` would reintroduce the
+    * engine-specific tie semantics the unit scheme exists to avoid.
     */
-  private final case class RunEnd(symbol: Long, open: Seq[BookTrade], summary: SymbolSummary)
+  private def sharpe(s: SymbolSummary): Double =
+    if (s.sigma == 0.0) -1e50
+    else {
+      // span_ms = 0 (every bar of a symbol inside ONE millisecond, with
+      // price movement so σ > 0) yields the IEEE result DuckDB's double
+      // division produces — ±inf by the sign of sum_x, NaN at 0/0.
+      // Found by the degenerate-bar probe, pinned in MtmEngineSpec. σ > 0
+      // here, so dividing by it never flips the sign.
+      val raw =
+        if (s.span_ms != 0.0)
+          s.sum_x / (s.span_ms / 1000.0 / 3600.0) / s.sigma * math.sqrt(8760.0)
+        else if (s.sum_x > 0.0) Double.PositiveInfinity
+        else if (s.sum_x < 0.0) Double.NegativeInfinity
+        else Double.NaN
+      // finite guard: a non-finite raw passes through unrounded, as on
+      // the DuckDB side (abs(NaN) < k is false in both)
+      if (math.abs(raw) < 1e14) math.floor(raw * 1e4 + 0.5).toLong.toDouble / 1e4
+      else raw
+    }
 
-  /** Per-partition runner: a fresh TradeBook and [[RunStats]] per
-    * symbol-run, price_diff derived from the previous bar in-stream (no
-    * window needed — the partition is already symbol-ordered).
+  /** Where the walk's rows go: `row` is reused by the walk, so a sink
+    * copies what it keeps before returning.
     */
-  private final class SymbolRunner(cfg: PnlConfig, trackTrades: Boolean = true)
-      extends Serializable {
+  private trait Sink {
+    def add(family: Family, row: UnsafeRow): Unit
+  }
+
+  private val LongDir = UTF8String.fromString("LONG")
+  private val ShortDir = UTF8String.fromString("SHORT")
+  private val Reasons = Seq("SIGNAL", "ROI", "STOP_LOSS").map(r => r -> UTF8String.fromString(r)).toMap
+
+  /** The engine walk over one partition of sorted bar rows: a fresh
+    * TradeBook and [[RunStats]] per symbol run, price_diff from the
+    * previous bar in-stream (the partition is already symbol-ordered),
+    * and each wanted family's rows written through a reused
+    * UnsafeRowWriter into `out` — a timeline row per bar, a blotter row
+    * per closed trade and, at the end of a run, per flushed-open
+    * position, and one summary row per run.
+    */
+  private final class Walk(cfg: PnlConfig, tl: Boolean, bl: Boolean, sm: Boolean, out: Sink) {
+    private val tlRow = new UnsafeRowWriter(Family.Timeline.schema.length)
+    private val blRow = new UnsafeRowWriter(Family.Blotter.schema.length, 32)
+    private val smRow = new UnsafeRowWriter(Family.Summary.schema.length)
+    // closed trades are recorded only for a consumer: a timeline-only
+    // walk keeps O(open positions) state on signal-dense mega-symbols
+    private val trades = bl || sm
     private var book: TradeBook = null
     private var stats: RunStats = null
-    private var symbol: Long = 0L
-    private var prevClose: Double = Double.NaN
+    private var symbol = 0L
+    private var prevClose = Double.NaN
 
-    /** The run that `b` ends, when `b` starts a new symbol after another
-      * (None otherwise). Must be called before stepping `b`.
-      */
-    def beginBar(b: EngineBar): Option[RunEnd] =
-      if (book != null && b.symbol == symbol) None
-      else {
-        val ended = endOfPartition()
-        book = new TradeBook(cfg, trackTrades); stats = new RunStats(cfg.feeRate)
-        symbol = b.symbol; prevClose = Double.NaN
-        ended
+    def bar(r: InternalRow): Unit = {
+      if (r.anyNull)
+        throw new NullPointerException(
+          "MtmEngine: a bar has a null symbol, ts_us, event_id, close, buy or sell")
+      val sym = r.getLong(0)
+      if (book == null || sym != symbol) {
+        endRun()
+        book = new TradeBook(cfg, trades); stats = new RunStats(cfg.feeRate)
+        symbol = sym; prevClose = Double.NaN
       }
-
-    /** Run one bar; returns its final mtm (accrual − fees). */
-    def stepBar(b: EngineBar): Double = {
-      val diff = if (prevClose.isNaN) Double.NaN else b.close - prevClose
-      prevClose = b.close
-      val mtm = book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
-      stats.bar(b.ts_us, mtm)
-      mtm
-    }
-
-    /** Cumulative pnl of the run through the last stepped bar. */
-    def pnlRatio: Double = stats.pnlRatio
-
-    /** Trades closed by the last step, counted into the run's summary. */
-    def drainClosed(): IndexedSeq[BookTrade] = {
-      val closed = book.drainTrades()
-      closed.foreach(stats.trade)
-      closed
-    }
-
-    def endOfPartition(): Option[RunEnd] =
-      if (book == null) None else Some(RunEnd(symbol, book.flushOpen(), stats.summary))
-  }
-
-  /** Per-bar mtm timeline: (symbol, ts_us, event_id, close, buy, sell,
-    * mtm_ratio, pnl_ratio) — the reference's `mtm_history`
-    * (trade_reward.py:109,166) with its cumulative pnl, one row per
-    * input bar.
-    */
-  def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    sortedBars(bars, colocated).mapPartitions { it =>
-      // trackTrades=false: timeline consumers never drain the blotter, so
-      // recording closed trades would grow per-task memory with the
-      // symbol's trade count instead of O(open positions)
-      val r = new SymbolRunner(cfg, trackTrades = false)
-      it.map { b =>
-        r.beginBar(b) // timeline ignores run ends; resets state
-        val mtm = r.stepBar(b)
-        TimelinePoint(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, mtm, r.pnlRatio)
+      val ts = r.getLong(1)
+      val close = r.getDouble(3)
+      val diff = if (prevClose.isNaN) Double.NaN else close - prevClose
+      prevClose = close
+      val mtm = book.step(ts, close, diff, r.getInt(4) == 1, r.getInt(5) == 1)
+      stats.bar(ts, mtm)
+      if (tl) {
+        tlRow.reset()
+        tlRow.write(0, sym); tlRow.write(1, ts); tlRow.write(2, r.getLong(2))
+        tlRow.write(3, close); tlRow.write(4, r.getInt(4)); tlRow.write(5, r.getInt(5))
+        tlRow.write(6, mtm); tlRow.write(7, stats.pnlRatio)
+        out.add(Family.Timeline, tlRow.getRow)
       }
-    }.toDF()
-  }
-
-  /** Trade blotter: closed trades (reference `archive_*_positions_list`)
-    * plus still-open positions flushed as OPEN rows (reference
-    * `outstanding_*` in Mtm_Result, runner_mtm.py:191-203).
-    * pnl_norm is the reference's fee-included `pnl_normalized`
-    * (models.py:60-91): ((±(exit−entry)) − fee·entry − fee·entry)/entry.
-    */
-  def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val feeRate = cfg.feeRate
-    sortedBars(bars, colocated).mapPartitions { it =>
-      val r = new SymbolRunner(cfg)
-      def toRec(sym: Long, t: BookTrade): BlotterRec =
-        if (t.isClosed) {
-          val pnl = BookTrade.closedPnlNorm(t, feeRate)
-          BlotterRec(sym, if (t.isLong) "LONG" else "SHORT", t.entryUs, t.entryPrice,
-            Some(t.exitUs), Some(t.exitPrice), Some(pnl), Some(t.reason), is_closed = true)
-        } else {
-          BlotterRec(sym, if (t.isLong) "LONG" else "SHORT", t.entryUs, t.entryPrice,
-            None, None, None, None, is_closed = false)
+      if (trades) {
+        val closed = book.drainTrades()
+        var i = 0
+        while (i < closed.length) {
+          stats.trade(closed(i))
+          if (bl) out.add(Family.Blotter, blotterRow(closed(i)))
+          i += 1
         }
-      def flushed(e: RunEnd) = e.open.iterator.map(toRec(e.symbol, _))
-      val perBar = it.flatMap { b =>
-        val ended = r.beginBar(b)
-        r.stepBar(b)
-        val closed = r.drainClosed()
-        ended.iterator.flatMap(flushed) ++ closed.iterator.map(toRec(b.symbol, _))
       }
-      // Iterator.++ takes its suffix BY NAME: the end-of-partition flush
-      // is built only after perBar exhausts the partition
-      perBar ++ r.endOfPartition().iterator.flatMap(flushed)
-    }.toDF()
-  }
+    }
 
-  /** Unified single-pass output row, discriminated by `kind`:
-    * "tl" timeline point, "bl" blotter record, "sm" symbol summary —
-    * see [[engineRows]].
-    */
-  private[graft] final case class EngineOut(
-      kind: String,
-      symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
-      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0, pnl_ratio: Double = 0.0,
-      direction: String = "", entry_ts_us: Long = 0L, entry_price: Double = 0.0,
-      exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
-      pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
-      is_closed: Boolean = false, summary: Option[SymbolSummary] = None)
+    /** Ends the partition's last run. */
+    def finish(): Unit = { endRun(); book = null }
 
-  /** The engine walk behind [[combinedRun]] and the summary surfaces: one
-    * "sm" row per symbol run and, with `rows`, a "tl" row per bar and a
-    * "bl" row per closed or flushed-open trade.
-    */
-  private def engineRows(cfg: PnlConfig, rows: Boolean)(
-      it: Iterator[EngineBar]): Iterator[EngineOut] = {
-    val r = new SymbolRunner(cfg) // trackTrades: drained per bar below
-    def toBl(sym: Long, t: BookTrade): EngineOut =
+    private def endRun(): Unit = if (book != null) {
+      if (bl) book.flushOpen().foreach(t => out.add(Family.Blotter, blotterRow(t)))
+      if (sm) out.add(Family.Summary, summaryRow(stats.summary))
+    }
+
+    /** pnl_norm is the reference's fee-included `pnl_normalized`
+      * (models.py:60-91); `pnl` the raw pnl derived from it — see
+      * [[MtmEngine.blotterQueryFrom]].
+      */
+    private def blotterRow(t: BookTrade): UnsafeRow = {
+      blRow.reset(); blRow.zeroOutNullBytes()
+      blRow.write(0, symbol)
+      blRow.write(1, if (t.isLong) LongDir else ShortDir)
+      blRow.write(2, t.entryUs); blRow.write(3, t.entryPrice)
       if (t.isClosed) {
         val pnl = BookTrade.closedPnlNorm(t, cfg.feeRate)
-        EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice,
-          exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
-          pnl_norm = Some(pnl), close_reason = Some(t.reason), is_closed = true)
-      } else {
-        EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice)
-      }
-    def ended(e: RunEnd): Iterator[EngineOut] =
-      (if (rows) e.open.iterator.map(toBl(e.symbol, _)) else Iterator.empty) ++
-        Iterator.single(EngineOut("sm", e.symbol, summary = Some(e.summary)))
-    val perBar = it.flatMap { b =>
-      val end = r.beginBar(b)
-      val mtm = r.stepBar(b)
-      val closed = r.drainClosed()
-      if (!rows) end.iterator.flatMap(ended)
-      else Iterator.single(EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close,
-          b.buy, b.sell, mtm, r.pnlRatio)) ++
-        end.iterator.flatMap(ended) ++ closed.iterator.map(toBl(b.symbol, _))
+        blRow.write(4, t.exitUs); blRow.write(5, t.exitPrice)
+        blRow.write(6, pnl); blRow.write(7, pnl * t.entryPrice)
+        blRow.write(8, Reasons.getOrElse(t.reason, UTF8String.fromString(t.reason)))
+      } else (4 to 8).foreach(blRow.setNullAt)
+      blRow.write(9, t.isClosed)
+      blRow.getRow
     }
-    // by-name ++ suffix: built only after perBar drains the partition
-    perBar ++ r.endOfPartition().iterator.flatMap(ended)
+
+    private def summaryRow(s: SymbolSummary): UnsafeRow = {
+      smRow.reset(); smRow.zeroOutNullBytes()
+      smRow.write(0, symbol); smRow.write(1, s.pnl); smRow.write(2, s.n_trades)
+      if (s.n_trades > 0) {
+        val n = s.n_trades.toDouble
+        smRow.write(3, s.n_wins.toDouble / n)
+        smRow.write(4, s.hold_us.toDouble / n / 1000000.0)
+      } else { smRow.setNullAt(3); smRow.setNullAt(4) }
+      smRow.write(5, s.max_drawdown)
+      smRow.write(6, sharpe(s))
+      smRow.getRow
+    }
   }
 
-  /** ALL output families from ONE engine pass: one shuffle, one sort,
-    * one state-machine walk, materialized once; the returned (timeline,
-    * blotter, summary) frames are kind-filtered projections over the
-    * stored blocks (the summary's columns: see [[summaryOf]]). Consumers that need more than one family
-    * (MtmRunner.calculate) would otherwise pay the repartition+sort+walk
-    * per family — exchange reuse shares the shuffle write between the
-    * twin plans but re-runs the sort and the per-bar state machine.
+  /** Length-prefixed UnsafeRows back to back in one growable byte array. */
+  private final class PageBuilder extends Sink {
+    var bytes = new Array[Byte](4096)
+    var size = 0
+
+    def add(family: Family, row: UnsafeRow): Unit = {
+      val n = row.getSizeInBytes
+      if (size + 4 + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(2 * bytes.length, size + 4 + n))
+      Platform.putInt(bytes, Platform.BYTE_ARRAY_OFFSET + size, n)
+      row.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + size + 4)
+      size += 4 + n
+    }
+
+    def clear(): Unit = size = 0
+
+    def page: Array[Byte] = java.util.Arrays.copyOf(bytes, size)
+  }
+
+  /** Rows out of pages `bytes[0, end)`, through one reused UnsafeRow. */
+  private abstract class PageReader(family: Family) extends Iterator[InternalRow] {
+    protected var bytes: Array[Byte] = Array.emptyByteArray
+    protected var pos = 0
+    protected var end = 0
+    private val row = new UnsafeRow(family.schema.length)
+
+    /** Loads the next page holding a row; false when there is none. */
+    protected def advance(): Boolean
+
+    final def hasNext: Boolean = pos < end || advance()
+
+    final def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val n = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + pos)
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 4, n)
+      pos += 4 + n
+      row
+    }
+  }
+
+  /** `family`'s rows of the pass over one partition of sorted bars, lazily
+    * ([[graft.plans.MtmPassExec]]): the walk steps bars until one yields a
+    * row, and those rows are read back before the next bar.
+    */
+  private[graft] def passRows(cfg: PnlConfig, family: Family)(
+      bars: Iterator[InternalRow]): Iterator[InternalRow] = new PageReader(family) {
+    private val buf = new PageBuilder
+    private val walk = new Walk(cfg, family == Family.Timeline, family == Family.Blotter,
+      family == Family.Summary, buf)
+    private var done = false
+
+    protected def advance(): Boolean = {
+      buf.clear()
+      while (buf.size == 0 && bars.hasNext) walk.bar(bars.next())
+      if (buf.size == 0 && !done) { walk.finish(); done = true }
+      bytes = buf.bytes; pos = 0; end = buf.size
+      end > 0
+    }
+  }
+
+  /** Size at which a stored page is cut. */
+  private val PageBytes = 4 << 20
+
+  /** Every family of the pass over one partition of sorted bars, as
+    * (family id, page) pairs — one page sequence per family.
+    */
+  private def packPages(cfg: PnlConfig)(bars: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
+    new Iterator[(Int, Array[Byte])] {
+      private val full = scala.collection.mutable.Queue.empty[(Int, Array[Byte])]
+      private val pages = Array.fill(3)(new PageBuilder)
+      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, new Sink {
+        def add(family: Family, row: UnsafeRow): Unit = {
+          val b = pages(family.id)
+          if (b.size > 0 && b.size + 4 + row.getSizeInBytes > PageBytes) {
+            full += family.id -> b.page; b.clear()
+          }
+          b.add(family, row)
+        }
+      })
+      private var done = false
+
+      def hasNext: Boolean = {
+        while (full.isEmpty && !done) {
+          if (bars.hasNext) walk.bar(bars.next())
+          else {
+            walk.finish()
+            for (id <- pages.indices if pages(id).size > 0) full += id -> pages(id).page
+            done = true
+          }
+        }
+        full.nonEmpty
+      }
+
+      def next(): (Int, Array[Byte]) = {
+        if (!hasNext) throw new NoSuchElementException
+        full.dequeue()
+      }
+    }
+
+  /** ALL output families from ONE engine pass, stored: one shuffle, one
+    * sort, one walk, materialized once as per-family pages; the returned
+    * (timeline, blotter, summary) frames each read their own family's
+    * pages, with the public schemas of [[timelineQuery]],
+    * [[blotterQuery]] and the summary surfaces. Consumers that need more
+    * than one family (MtmRunner.calculate) would otherwise pay the
+    * repartition+sort+walk per family.
     */
   private[graft] def combinedRun(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bars.sparkSession
-    import spark.implicits._
-    val out = sortedBars(bars, colocated).mapPartitions(engineRows(cfg, rows = true))
-      // EAGER (r16 lazy-checkpoint audit): the three frames are read by
-      // separate actions, and one job reading two of them (a join, a
-      // union) would have two independent map stages race the block
-      // store, each loser re-running the whole engine pass (the
-      // priciest kernel in the MTM family)
-      .toDF().localCheckpoint(eager = true)
-    val tl = out.filter(col("kind") === "tl")
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio", "pnl_ratio")
-    val bl = out.filter(col("kind") === "bl")
-      .select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed")
-    (tl, bl, summaryOf(out))
+    val sorted = sortedBars(bars, colocated)
+    // EAGER (r16 lazy-checkpoint audit — see the object doc); the
+    // execution id ties both jobs to one SQL execution, as
+    // Dataset.localCheckpoint's own would
+    val pages = SQLExecution.withNewExecutionId(sorted.queryExecution, Some("localCheckpoint")) {
+      val pages = sorted.queryExecution.toRdd.mapPartitions(packPages(cfg))
+      pages.localCheckpoint()
+      pages.count()
+      pages
+    }
+    def frame(family: Family): DataFrame = GraftInternal.internalCreateDataFrame(
+      spark, pages.mapPartitions(storedRows(family)), family.schema)
+    (frame(Family.Timeline), frame(Family.Blotter), frame(Family.Summary))
   }
 
-  /** The summary block alone, lazily: the pass behind the public
-    * summary surfaces, which keep no timeline or blotter rows.
-    */
-  private def summaryRun(bars: DataFrame, cfg: PnlConfig): DataFrame = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    summaryOf(sortedBars(bars).mapPartitions(engineRows(cfg, rows = false)).toDF())
-  }
+  /** `family`'s rows out of one partition of stored pages. */
+  private def storedRows(family: Family)(pages: Iterator[(Int, Array[Byte])]): Iterator[InternalRow] =
+    new PageReader(family) {
+      protected def advance(): Boolean = {
+        while (pages.hasNext) {
+          val (id, page) = pages.next()
+          if (id == family.id && page.length > 0) { bytes = page; pos = 0; end = page.length; return true }
+        }
+        false
+      }
+    }
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
 
@@ -547,29 +681,57 @@ object MtmEngine {
     (tl, bl)
   }
 
-  // ---- query-surface wrappers (timestamps restored to TIMESTAMP μs) ----
+  // ---- query surfaces (timestamps are TIMESTAMP μs) ----
 
-  // Each public (bars, cfg) surface runs its own lazy pass;
-  // MtmRunner.calculate materializes the engine ONCE (combinedRun) and
-  // projects every frame from the stored rows instead of re-running the
-  // state machine per metric.
+  // Each public (bars, cfg) surface is one lazy MtmPass over the sorted
+  // bars; MtmRunner.calculate runs the pass ONCE and stores it
+  // (combinedRun) instead of re-running the walk per family.
+
+  private def pass(bars: DataFrame, cfg: PnlConfig, family: Family, colocated: Boolean = false)
+      : DataFrame =
+    MtmPass(sortedBars(bars, colocated), cfg, family)
 
   /** SURVEY #4/#5: per-bar mtm_ratio + cumulative pnl_ratio
-    * (reference pnl_timeline: runner_mtm.py:136-183).
+    * (reference pnl_timeline: runner_mtm.py:136-183), one row per input
+    * bar — the reference's `mtm_history` (trade_reward.py:109,166).
     */
   def timelineQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    timelineQueryFrom(timeline(bars, cfg, colocated))
+    pass(bars, cfg, Family.Timeline, colocated)
 
-  private[graft] def timelineQueryFrom(tl: DataFrame): DataFrame =
+  /** SURVEY #2/#3: the trade blotter as a query — closed trades
+    * (reference `archive_*_positions_list`) plus still-open positions
+    * flushed as OPEN rows (reference `outstanding_*` in Mtm_Result,
+    * runner_mtm.py:191-203). pnl_norm is the reference's fee-included
+    * `pnl_normalized` (models.py:60-91): ((±(exit−entry)) − fee·entry −
+    * fee·entry)/entry; `pnl` as in [[blotterQueryFrom]].
+    */
+  def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
+    pass(bars, cfg, Family.Blotter, colocated)
+
+  /** [[timelineQuery]] with `ts` as µs longs (`ts_us`). */
+  def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
+    timelineMicros(timelineQuery(bars, cfg, colocated))
+
+  /** [[blotterQuery]] with µs-long timestamps (`entry_ts_us`,
+    * `exit_ts_us`) and without the derived `pnl`.
+    */
+  def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
+    blotterMicros(blotterQuery(bars, cfg, colocated))
+
+  private[graft] def timelineMicros(tl: DataFrame): DataFrame =
     tl.select(
-      col("symbol"), timestamp_micros(col("ts_us")).as("ts"), col("event_id"),
+      col("symbol"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
       col("close"), col("buy"), col("sell"), col("mtm_ratio"), col("pnl_ratio"))
 
-  /** SURVEY #2/#3: the trade blotter as a query. */
-  def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    blotterQueryFrom(blotter(bars, cfg, colocated))
+  private[graft] def blotterMicros(bl: DataFrame): DataFrame =
+    bl.select(
+      col("symbol"), col("direction"),
+      unix_micros(col("entry_ts")).as("entry_ts_us"), col("entry_price"),
+      unix_micros(col("exit_ts")).as("exit_ts_us"), col("exit_price"),
+      col("pnl_norm"), col("close_reason"), col("is_closed"))
 
-  /** `pnl` is the reference's raw (price-unit) pnl alongside the
+  /** A µs-long blotter (the sliced runner's) in [[blotterQuery]]'s schema.
+    * `pnl` is the reference's raw (price-unit) pnl alongside the
     * normalized one — ProxyTrade exposes both (models.py:60-83,117-131).
     * NOTE the derivation direction is deliberately INVERTED vs the
     * reference: models.py computes raw pnl directly
@@ -593,62 +755,21 @@ object MtmEngine {
     * conversion at the end.
     */
   def maxDrawdown(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    summaryRun(bars, cfg).select("symbol", "max_drawdown")
+    pass(bars, cfg, Family.Summary).select("symbol", "max_drawdown")
 
-  /** SURVEY #7: per-symbol Sharpe, reference formula
-    * (trade_reward.py:423-450): ms-resolution period, slippage 1e-6,
-    * population std, √(365·24) annualization, −1e50 when σ=0. The sum
-    * is exact in 1e-9 units (engine-agnostic, see [[RunStats]]; error
-    * ≪ the 4-dp output resolution) and the final 4-dp rounding is
-    * floor(x·1e4 + 0.5)/1e4 — `round()` would reintroduce the
-    * engine-specific tie semantics the unit scheme exists to avoid. σ
-    * is `stddev_pop`'s update applied in bar order; the DuckDB oracle's
-    * σ carries ~1e-13 relative noise, absorbed by the 4-dp output.
+  /** SURVEY #7: per-symbol Sharpe (see [[sharpe]]). The sum is exact in
+    * 1e-9 units (engine-agnostic, see [[RunStats]]; error ≪ the 4-dp
+    * output resolution). σ is `stddev_pop`'s update applied in bar
+    * order; the DuckDB oracle's σ carries ~1e-13 relative noise,
+    * absorbed by the 4-dp output.
     */
   def sharpeRatio(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    summaryRun(bars, cfg).select("symbol", "sharpe_ratio")
+    pass(bars, cfg, Family.Summary).select("symbol", "sharpe_ratio")
 
   /** SURVEY #8: per-symbol summary — total pnl (Σ mtm,
     * trade_reward.py:413-421), closed-trade count, win rate, average
     * holding seconds (reference Mtm_Result surface).
     */
   def pnlSummary(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    summaryRun(bars, cfg).select("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs")
-
-  /** The per-symbol summary block from engine output's "sm" rows:
-    * symbol, pnl, n_trades, win_rate, avg_holding_secs, max_drawdown,
-    * sharpe_ratio. The rate and the holding time are null for a symbol
-    * with no closed trade.
-    */
-  private def summaryOf(out: DataFrame): DataFrame = {
-    val n = col("n_trades").cast("double")
-    // span_ms = 0 (every bar of a symbol inside ONE millisecond, with
-    // price movement so σ > 0) must yield the IEEE result DuckDB's
-    // double division produces — ±inf by the sign of sum_x, NaN at
-    // 0/0 — NOT evaluate the raw division: under ANSI mode (the
-    // Spark 4 default) x/0.0 ERRORS the job. Found by the degenerate-bar
-    // probe, pinned in MtmEngineSpec. σ > 0 here (the σ = 0 guard below
-    // fires first), so dividing by it never flips the sign.
-    val raw = when(col("span_ms") =!= 0.0,
-        col("sum_x") / (col("span_ms") / lit(1000.0) / lit(3600.0)) /
-          col("sigma") * lit(math.sqrt(8760.0)))
-      .when(col("sum_x") > 0.0, lit(Double.PositiveInfinity))
-      .when(col("sum_x") < 0.0, lit(Double.NegativeInfinity))
-      .otherwise(lit(Double.NaN))
-    out.filter(col("kind") === "sm").select(col("symbol"), col("summary.*")).select(
-      col("symbol"), col("pnl"), col("n_trades"),
-      when(col("n_trades") > 0, col("n_wins").cast("double") / n).as("win_rate"),
-      when(col("n_trades") > 0, col("hold_us").cast("double") / n / lit(1000000.0))
-        .as("avg_holding_secs"),
-      col("max_drawdown"),
-      when(col("sigma") === 0.0, lit(-1e50))
-        // finite guard: a single-ms symbol gives span 0 → raw ±inf/NaN,
-        // which Spark's floor(double)→LONG would mangle (Long.MaxValue /
-        // 0) while DuckDB's floor keeps them — pass non-finite through
-        // unrounded on both sides (abs(NaN) < k is false in both)
-        .when(abs(raw) < lit(1e14),
-          floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
-        .otherwise(raw)
-        .as("sharpe_ratio"))
-  }
+    pass(bars, cfg, Family.Summary).select("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs")
 }

@@ -45,7 +45,7 @@ object MtmRunner {
       * archive/outstanding sizes (`to_Dict`'s derived size fields,
       * models.py:229-234). Market epochs come from the data itself;
       * run epochs bracket the `calculate` call, which runs the engine pass
-      * eagerly (the frames are projections of its stored rows).
+      * eagerly (the frames read its stored pages).
       */
     def queryDict: DataFrame = {
       val mkt = timeline.groupBy("symbol").agg(
@@ -91,15 +91,16 @@ object MtmRunner {
       cfg: PnlConfig = PnlConfig.default,
       meta: RunMeta = RunMeta()): MtmResult = {
     val runStart = System.currentTimeMillis() / 1000L
-    // ONE engine pass, materialized here, for every part: the pass emits
-    // the timeline (with its cumulative pnl_ratio), the blotter and one
-    // summary row per symbol run, so each frame below is a projection of
-    // the stored rows — no join, window or aggregate re-reads them
-    val (tl, bl, summary) = MtmEngine.combinedRun(bars, cfg)
+    // ONE engine pass, stored here, for every part: the pass writes the
+    // timeline (with its cumulative pnl_ratio), the blotter and one
+    // summary row per symbol run into per-family pages, and each frame
+    // below reads its own family's pages — no join, window or aggregate
+    // re-reads them
+    val (timeline, trades, summary) = MtmEngine.combinedRun(bars, cfg)
     MtmResult(
       summary = summary,
-      timeline = MtmEngine.timelineQueryFrom(tl),
-      trades = MtmEngine.blotterQueryFrom(bl),
+      timeline = timeline,
+      trades = trades,
       meta = meta,
       runStartEpoch = runStart,
       runEndEpoch = System.currentTimeMillis() / 1000L)
@@ -111,16 +112,15 @@ object MtmRunner {
     * search never selects a do-nothing parameterization.
     */
   def hyperOptAdapter(summary: DataFrame): DataFrame = {
-    // flag first: rewriting pnl in place would un-flag the row before
-    // the drawdown rewrite sees it
-    val flagged = summary
-      .withColumn("_degen", abs(col("pnl")) < 1e-12)
-      .withColumn("pnl", when(col("_degen"), lit(-1e50)).otherwise(col("pnl")))
-    val clamped =
-      if (summary.columns.contains("max_drawdown"))
-        flagged.withColumn(
-          "max_drawdown", when(col("_degen"), lit(1e50)).otherwise(col("max_drawdown")))
-      else flagged
-    clamped.drop("_degen")
+    // ONE projection (each withColumn would re-analyse the whole plan);
+    // every rewrite reads the INPUT pnl, so the flag is taken before pnl
+    // is rewritten
+    val degen = abs(col("pnl")) < 1e-12
+    summary.select(summary.columns.toIndexedSeq.map {
+      case "pnl" => when(degen, lit(-1e50)).otherwise(col("pnl")).as("pnl")
+      case "max_drawdown" =>
+        when(degen, lit(1e50)).otherwise(col("max_drawdown")).as("max_drawdown")
+      case c => col(s"`${c.replace("`", "``")}`")
+    }: _*)
   }
 }

@@ -642,7 +642,8 @@ object Similarity {
       .localCheckpoint(eager = true)
     val centroids = ivfCentroids(
       embeddings, nCentroids, lloydIters,
-      nRows = nObs.get("n").asInstanceOf[Long], normed = Some(e))
+      nRows = Observed.metrics(nObs, "Similarity.annIvfTopK", "n")("n").asInstanceOf[Long],
+      normed = Some(e))
     val corpus = e.withColumn("cluster", nearestCentroid(col("v"), centroids))
     // nProbe nearest cells per query: sort (−score, idx) structs, slice
     val probes = {

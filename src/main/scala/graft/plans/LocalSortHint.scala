@@ -17,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   * This node carries the same semantics under a name the checker does
   * not blacklist, and [[LocalSortStrategy]] plans it to the stock
   * `SortExec(global = false)` — identical physical behavior, spill-safe
-  * via Tungsten's external sorter. Registered through
-  * `SparkSessionExtensions.injectPlannerStrategy` (see `graft.Sessions`).
+  * via Tungsten's external sorter. The strategy registers itself on the
+  * dataframe's session (see `apply`).
   */
 final case class LocalSortHint(order: Seq[SortOrder], child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
@@ -31,16 +31,11 @@ object LocalSortHint {
   /** `df` sorted within partitions by `cols` (ascending) — the streaming-
     * legal twin of `df.sortWithinPartitions(cols: _*)`. Column names are
     * resolved against the analyzed child so the node is born resolved.
-    * The planner strategy is self-registered on the dataframe's session
-    * (idempotently, via `experimental.extraStrategies`), so the node
-    * plans on ANY SparkSession — a plain `SparkSession.builder()` or a
-    * spark-submit session included; nothing needs
-    * `SparkSessionExtensions` wiring.
+    * The planner strategy self-registers on the dataframe's session
+    * ([[Strategies.register]]).
     */
   def apply(df: DataFrame, cols: String*): DataFrame = {
-    val em = df.sparkSession.experimental
-    if (!em.extraStrategies.contains(LocalSortStrategy))
-      em.extraStrategies = em.extraStrategies :+ LocalSortStrategy
+    Strategies.register(df.sparkSession, LocalSortStrategy)
     val analyzed = df.queryExecution.analyzed
     val order = cols.map { c =>
       val attr = analyzed.output.find(a => df.sparkSession.sessionState.analyzer.resolver(a.name, c))

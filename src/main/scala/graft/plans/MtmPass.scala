@@ -1,0 +1,61 @@
+package graft.plans
+
+import graft.core.PnlConfig
+import graft.operators.MtmEngine
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.GraftInternal
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+
+/** The MTM engine's per-symbol walk as a logical node: the child is the
+  * engine's sorted bar view (symbol, ts_us, event_id, close, buy, sell —
+  * see `MtmEngine.sortedBars`), the output is one family of the pass
+  * (timeline, blotter or summary) in its public schema. [[MtmPassStrategy]]
+  * plans it to [[MtmPassExec]], which walks the child's InternalRows and
+  * writes the family's UnsafeRows directly — no encoder round trip on
+  * either side.
+  */
+final case class MtmPass(
+    cfg: PnlConfig, family: MtmEngine.Family, output: Seq[Attribute], child: LogicalPlan)
+    extends UnaryNode {
+  // every bar column feeds the walk (ColumnPruning must not narrow the
+  // child), and the output columns are made here, not taken from it
+  override def references: AttributeSet = child.outputSet
+  override def producedAttributes: AttributeSet = outputSet
+  override protected def withNewChildInternal(newChild: LogicalPlan): MtmPass =
+    copy(child = newChild)
+}
+
+object MtmPass {
+  /** `family` of the engine pass over `sorted`, lazily. */
+  private[graft] def apply(sorted: DataFrame, cfg: PnlConfig, family: MtmEngine.Family): DataFrame = {
+    Strategies.register(sorted.sparkSession, MtmPassStrategy)
+    GraftInternal.ofRows(sorted.sparkSession, MtmPass(
+      cfg, family, DataTypeUtils.toAttributes(family.schema), sorted.queryExecution.analyzed))
+  }
+}
+
+/** Physical [[MtmPass]]: one walk per partition of the sorted bars. */
+final case class MtmPassExec(
+    cfg: PnlConfig, family: MtmEngine.Family, output: Seq[Attribute], child: SparkPlan)
+    extends UnaryExecNode {
+  override def producedAttributes: AttributeSet = outputSet
+  override protected def doExecute(): RDD[InternalRow] = {
+    val (c, f) = (cfg, family) // the closure must not capture the plan
+    child.execute().mapPartitions(bars => MtmEngine.passRows(c, f)(bars))
+  }
+  override protected def withNewChildInternal(newChild: SparkPlan): MtmPassExec =
+    copy(child = newChild)
+}
+
+/** Plans [[MtmPass]] to [[MtmPassExec]]. */
+object MtmPassStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case MtmPass(cfg, family, output, child) => MtmPassExec(cfg, family, output, planLater(child)) :: Nil
+    case _ => Nil
+  }
+}

@@ -38,7 +38,7 @@ class ColocatedEngineSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges == 0, s"bucketed bars should feed the engine with no exchange, saw:\n$p")
-    assert(p.contains("SerializeFromObject"), "mapPartitions engine stage missing")
+    assert(p.contains("MtmPass"), "engine pass stage missing")
     assert(p.contains("Bucketed: true"), "scan must report the bucketed layout")
   }
 

@@ -55,7 +55,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan(MtmEngine.timeline(bars, PnlConfig.default))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 1, s"timeline should shuffle exactly once, saw $exchanges:\n$p")
-    assert(p.contains("SerializeFromObject"), "mapPartitions operator missing")
+    assert(p.contains("MtmPass"), "engine pass operator missing")
   }
 
   test("MTM derived outputs come from the engine pass: no Window, no extra exchange") {

@@ -139,7 +139,8 @@ class MtmEngineSpec extends AnyFunSuite {
 
   /** Every in-pass surface equals the reference over `bars`. */
   private def checkParity(bars: DataFrame, cfg: PnlConfig): Unit = {
-    val (tl, bl, _) = MtmEngine.combinedRun(bars, cfg)
+    val (tlPub, blPub, _) = MtmEngine.combinedRun(bars, cfg)
+    val (tl, bl) = (MtmEngine.timelineMicros(tlPub), MtmEngine.blotterMicros(blPub))
     val wantRatios = pnlRatios(refPnlRatio(tl))
     assert(wantRatios.nonEmpty)
     assertSame("combined pnl_ratio", pnlRatios(tl), wantRatios)
@@ -364,8 +365,8 @@ class MtmEngineSpec extends AnyFunSuite {
     val bars = (jumpBars(1L, Seq(p, p + 9e6, p + 1.8e7, p + 2.7e7, p + 1.8e7, p + 9e6, p)) ++
       jumpBars(2L, Seq(10.0, 11.0, 9.5, 12.0)))
       .toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
-    val (tl, _, sm) = MtmEngine.combinedRun(bars, PnlConfig.default)
-    val peakUnits = refPnlRatio(tl).filter(col("symbol") === 1L)
+    val (tlPub, _, sm) = MtmEngine.combinedRun(bars, PnlConfig.default)
+    val peakUnits = refPnlRatio(MtmEngine.timelineMicros(tlPub)).filter(col("symbol") === 1L)
       .agg(max(col("pnl_ratio"))).head().getDouble(0) * 1e9
     assert(peakUnits > 2.0 * Long.MaxValue, s"test premise: peak $peakUnits units")
     val dd = sm.filter(col("symbol") === 1L).select("max_drawdown").head().getDouble(0) * 1e9

@@ -83,6 +83,53 @@ class MtmRunnerSpec extends AnyFunSuite {
     assert(noDd.collect().head.getDouble(1) == -1e50)
   }
 
+  /** The adapter as the chain of `withColumn`s it replaced. */
+  private def adapterChain(summary: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val flagged = summary
+      .withColumn("_degen", abs(col("pnl")) < 1e-12)
+      .withColumn("pnl", when(col("_degen"), lit(-1e50)).otherwise(col("pnl")))
+    val clamped =
+      if (summary.columns.contains("max_drawdown"))
+        flagged.withColumn(
+          "max_drawdown", when(col("_degen"), lit(1e50)).otherwise(col("max_drawdown")))
+      else flagged
+    clamped.drop("_degen")
+  }
+
+  test("hyperopt adapter's one projection equals the withColumn chain on both summary shapes") {
+    import spark.implicits._
+    val full = Seq[(Long, java.lang.Double, Long, java.lang.Double, java.lang.Double, java.lang.Double, java.lang.Double)](
+      (1L, 0.0, 0L, null, null, 0.5, -1e50),
+      (2L, 1e-13, 2L, 0.5, 60.0, 0.2, 1.25),
+      (3L, -1e-13, 1L, 0.0, 30.0, 0.1, -0.5),
+      (4L, -0.0, 0L, null, null, 0.0, -1e50),
+      (5L, 0.25, 3L, 1.0, 10.0, 0.1, 2.0),
+      (6L, 1e-12, 1L, 1.0, 5.0, 0.3, 0.7),
+      (7L, null, 0L, null, null, null, null)
+    ).toDF("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs", "max_drawdown", "sharpe_ratio")
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    for ((name, summary) <- Seq(
+        "with max_drawdown" -> full,
+        "without max_drawdown" -> full.drop("max_drawdown"),
+        "calculate's summary" -> MtmRunner.calculate(bars, PnlConfig.default).summary,
+        "pnlSummary" -> MtmEngine.pnlSummary(bars, PnlConfig.default))) {
+      val got = MtmRunner.hyperOptAdapter(summary)
+      val want = adapterChain(summary)
+      assert(got.schema == want.schema, s"$name schema")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      val (g, w) = (rows(got), rows(want))
+      assert(g.length == w.length && g.nonEmpty, s"$name row count")
+      for ((gr, wr) <- g.zip(w); (a, b) <- gr.zip(wr)) {
+        val same = (a, b) match {
+          case (x: Double, y: Double) => java.lang.Double.compare(x, y) == 0
+          case _ => a == b
+        }
+        assert(same, s"$name: got $gr, chain $wr")
+      }
+    }
+  }
+
   test("approx tumbling agg stays within rsd of the exact distinct counts") {
     val exact = Analytics.tumblingAgg(Tables.events(spark, sfDir))
       .select("wstart", "event_type", "n_users")
