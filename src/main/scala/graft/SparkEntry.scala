@@ -98,16 +98,17 @@ object SparkEntry {
     // the time-sliced engine (mega-symbol / straggler mitigation), wired
     // the production way: 4 slices on explicit natural boundaries
     // (calendar weeks of the 2024-01 event window — no quantile
-    // pre-scan); output is spec'd AND oracle'd bit-identical to
-    // q_trades_long_only. At sf0.1 the 4 sequential shuffle rounds cost
-    // a fixed ~0.2 s each, so the wall-clock ratio vs unsliced is pure
-    // overhead floor; it converges toward 1× as per-slice data dominates.
+    // pre-scan), each the stored engine pass started from the previous
+    // slice's carries; its blotter is spec'd AND oracle'd bit-identical
+    // to q_trades_long_only. At sf0.1 the 4 sequential shuffle rounds
+    // cost a fixed ~0.2 s each, so the wall-clock ratio vs unsliced is
+    // pure overhead floor; it converges toward 1× as per-slice data
+    // dominates.
     "q_trades_sliced" -> ((s, dir) =>
-      MtmEngine.blotterQueryFrom(
-        MtmEngine.runSliced(bars(s, dir), PnlConfig.default,
-          cutsUs = Seq("2024-01-08", "2024-01-15", "2024-01-22")
-            .map(d => java.time.LocalDate.parse(d).atStartOfDay(java.time.ZoneOffset.UTC)
-              .toInstant.toEpochMilli * 1000L))._2)),
+      MtmEngine.runSliced(bars(s, dir), PnlConfig.default,
+        cutsUs = Seq("2024-01-08", "2024-01-15", "2024-01-22")
+          .map(d => java.time.LocalDate.parse(d).atStartOfDay(java.time.ZoneOffset.UTC)
+            .toInstant.toEpochMilli * 1000L))._2),
     "q_trades_long_short" -> ((s, dir) => MtmEngine.blotterQuery(bars(s, dir), longShortCfg)),
     "q_mtm_timeline" -> ((s, dir) => MtmEngine.timelineQuery(bars(s, dir), PnlConfig.default)),
     // same engine over symbol-bucketed bars: the engine's one exchange

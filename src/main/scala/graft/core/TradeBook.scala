@@ -20,9 +20,9 @@ object BookTrade {
   /** Fee-included normalized pnl of a CLOSED trade — the reference's
     * `pnl_normalized` (models.py:60-91): ((±(exit−entry)) − fee·entry −
     * fee·entry)/entry. The ONE definition of this expression shape:
-    * every consumer (batch blotter, sliced runner, streaming blotter)
-    * and the oracles' mirrored SQL must stay token-identical for
-    * bit-exact parity.
+    * every consumer (the engine walk, whole or sliced, and the streaming
+    * blotter) and the oracles' mirrored SQL must stay token-identical
+    * for bit-exact parity.
     */
   def closedPnlNorm(t: BookTrade, feeRate: Double): Double = {
     val fee = math.abs(feeRate)

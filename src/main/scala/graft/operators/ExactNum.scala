@@ -76,6 +76,12 @@ private[graft] object ExactNum {
 
     def set(o: UnitSum): Unit = { hi = o.hi; lo = o.lo }
 
+    /** Writes the count as its hi and lo words (16 bytes). */
+    def save(b: java.nio.ByteBuffer): Unit = b.putLong(hi).putLong(lo)
+
+    /** Reads what [[save]] wrote. */
+    def restore(b: java.nio.ByteBuffer): Unit = { hi = b.getLong; lo = b.getLong }
+
     /** this := a − b */
     def setDiff(a: UnitSum, b: UnitSum): Unit = {
       val borrow = if (java.lang.Long.compareUnsigned(a.lo, b.lo) < 0) 1L else 0L

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.core.{BookTrade, OpenPos, PnlConfig, TradeBook}
 import graft.plans.MtmPass
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.nio.ByteBuffer
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -60,12 +62,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MtmEngine {
 
-  /** Input bar (μs epoch; event_id tiebreaks equal timestamps) — the
-    * slice runner's typed view of a sorted bar row.
-    */
-  private[graft] final case class EngineBar(
-      symbol: Long, ts_us: Long, event_id: Long, close: Double, buy: Int, sell: Int)
-
   /** events → canonical bar view (SURVEY §2): user_id plays the symbol,
     * value the close price, purchase/click the buy/sell signals; every
     * event row is a bar (non-signal types are hold bars). Contract: a
@@ -84,19 +80,24 @@ object MtmEngine {
       when(col("event_type") === "purchase", 1).otherwise(0).as("buy"),
       when(col("event_type") === "click", 1).otherwise(0).as("sell"))
 
-  /** The engine's only shuffle: co-locate each symbol's bars and order
+  /** The bar columns in the order the walk reads them: symbol, ts_us,
+    * event_id (long), close (double), buy, sell (int).
+    */
+  private def barColumns(bars: DataFrame): DataFrame =
+    bars.select(
+      col("symbol").cast("long"), col("ts_us").cast("long"),
+      col("event_id").cast("long"), col("close").cast("double"),
+      col("buy").cast("int"), col("sell").cast("int"))
+
+  private def sortedBars(bars: DataFrame, colocated: Boolean): DataFrame =
+    sortRuns(barColumns(bars), colocated)
+
+  /** The engine's only shuffle: co-locate each symbol's rows and order
     * them totally within the partition (secondary sort). AQE partition
     * coalescing is safe: symbol runs stay contiguous because a symbol
-    * hashes to exactly one pre-coalesce partition. Columns, in the order
-    * the walk reads them: symbol, ts_us, event_id (long), close (double),
-    * buy, sell (int).
+    * hashes to exactly one pre-coalesce partition.
     */
-  private def sortedBars(bars: DataFrame, colocated: Boolean): DataFrame = {
-    val projected = bars
-      .select(
-        col("symbol").cast("long"), col("ts_us").cast("long"),
-        col("event_id").cast("long"), col("close").cast("double"),
-        col("buy").cast("int"), col("sell").cast("int"))
+  private def sortRuns(rows: DataFrame, colocated: Boolean): DataFrame = {
     // colocated: the caller guarantees each symbol's bars already share
     // a partition (a symbol-bucketed table scan — BucketedTables.bars),
     // so the engine's one exchange is elided and only the in-partition
@@ -104,7 +105,7 @@ object MtmEngine {
     // would itself shuffle, and split symbol runs would silently reset
     // book state mid-run — callers own the layout contract
     // (ColocatedEngineSpec pins bit-equality on the bucketed layout).
-    val dist = if (colocated) projected else projected.repartition(col("symbol"))
+    val dist = if (colocated) rows else rows.repartition(col("symbol"))
     dist.sortWithinPartitions("symbol", "ts_us", "event_id")
   }
 
@@ -146,6 +147,12 @@ object MtmEngine {
         Seq("pnl" -> DoubleType, "n_trades" -> LongType, "win_rate" -> DoubleType,
           "avg_holding_secs" -> DoubleType, "max_drawdown" -> DoubleType,
           "sharpe_ratio" -> DoubleType).map { case (n, t) => field(n, t, nullable = true) }))
+
+    /** (symbol, carry): one symbol run's state at a slice boundary, as
+      * written by the walk of a non-final slice — see [[runSliced]].
+      */
+    case object Carry extends Family(3, StructType(Seq(
+      field("symbol", LongType), field("carry", BinaryType))))
   }
 
   /** One symbol run's summary row — see [[RunStats]]. */
@@ -165,6 +172,7 @@ object MtmEngine {
     *  - the closed-trade count, wins and holding µs.
     */
   private final class RunStats(feeRate: Double) {
+    // `gap` is scratch: every other field is carried across a slice cut
     private val cum = new ExactNum.UnitSum
     private val peak = new ExactNum.UnitSum
     private val gap = new ExactNum.UnitSum
@@ -211,10 +219,29 @@ object MtmEngine {
 
     def pnlRatio: Double = cum.toDouble(1e9)
 
+    /** Writes the carried fields ([[RunStats.CarryBytes]]). */
+    def save(b: ByteBuffer): Unit = {
+      Seq(cum, peak, maxDd, sumX).foreach(_.save(b))
+      b.putDouble(n).putDouble(mean).putDouble(m2).putLong(firstMs).putLong(lastMs)
+        .putLong(nTrades).putLong(nWins).putLong(holdUs)
+    }
+
+    /** Reads what [[save]] wrote. */
+    def restore(b: ByteBuffer): Unit = {
+      Seq(cum, peak, maxDd, sumX).foreach(_.restore(b))
+      n = b.getDouble; mean = b.getDouble; m2 = b.getDouble; firstMs = b.getLong; lastMs = b.getLong
+      nTrades = b.getLong; nWins = b.getLong; holdUs = b.getLong
+    }
+
     def summary: SymbolSummary = SymbolSummary(
       pnl = cum.toDouble(1e9), max_drawdown = maxDd.toDouble(1e9),
       sum_x = sumX.toDouble(1e9), span_ms = (lastMs - firstMs).toDouble,
       sigma = math.sqrt(m2 / n), n_trades = nTrades, n_wins = nWins, hold_us = holdUs)
+  }
+
+  private object RunStats {
+    /** Four 128-bit sums, three doubles and five longs. */
+    val CarryBytes: Int = 4 * 16 + 3 * 8 + 5 * 8
   }
 
   /** SURVEY #7: per-symbol Sharpe, reference formula
@@ -261,12 +288,17 @@ object MtmEngine {
     * and each wanted family's rows written through a reused
     * UnsafeRowWriter into `out` — a timeline row per bar, a blotter row
     * per closed trade and, at the end of a run, per flushed-open
-    * position, and one summary row per run.
+    * position, and one summary row per run. With `carryOut` (a non-final
+    * slice) a run ends with one [[Family.Carry]] row instead of the
+    * flush and the summary; a carry read by [[row]] starts its symbol
+    * run where the previous slice's ended.
     */
-  private final class Walk(cfg: PnlConfig, tl: Boolean, bl: Boolean, sm: Boolean, out: Sink) {
+  private final class Walk(
+      cfg: PnlConfig, tl: Boolean, bl: Boolean, sm: Boolean, carryOut: Boolean, out: Sink) {
     private val tlRow = new UnsafeRowWriter(Family.Timeline.schema.length)
     private val blRow = new UnsafeRowWriter(Family.Blotter.schema.length, 32)
     private val smRow = new UnsafeRowWriter(Family.Summary.schema.length)
+    private val cyRow = new UnsafeRowWriter(Family.Carry.schema.length, 256)
     // closed trades are recorded only for a consumer: a timeline-only
     // walk keeps O(open positions) state on signal-dense mega-symbols
     private val trades = bl || sm
@@ -275,16 +307,18 @@ object MtmEngine {
     private var symbol = 0L
     private var prevClose = Double.NaN
 
+    /** One sorted input row: a carry (its 7th column, `carry`, set) or a
+      * bar.
+      */
+    def row(r: InternalRow): Unit =
+      if (r.numFields > 6 && !r.isNullAt(6)) restore(r.getLong(0), r.getBinary(6)) else bar(r)
+
     def bar(r: InternalRow): Unit = {
-      if (r.anyNull)
+      if (r.anyNull && nullBar(r))
         throw new NullPointerException(
           "MtmEngine: a bar has a null symbol, ts_us, event_id, close, buy or sell")
       val sym = r.getLong(0)
-      if (book == null || sym != symbol) {
-        endRun()
-        book = new TradeBook(cfg, trades); stats = new RunStats(cfg.feeRate)
-        symbol = sym; prevClose = Double.NaN
-      }
+      if (book == null || sym != symbol) startRun(sym)
       val ts = r.getLong(1)
       val close = r.getDouble(3)
       val diff = if (prevClose.isNaN) Double.NaN else close - prevClose
@@ -309,17 +343,60 @@ object MtmEngine {
       }
     }
 
+    /** Whether one of the six bar columns is null. */
+    private def nullBar(r: InternalRow): Boolean = {
+      var i = 0
+      while (i < 6 && !r.isNullAt(i)) i += 1
+      i < 6
+    }
+
     /** Ends the partition's last run. */
     def finish(): Unit = { endRun(); book = null }
 
+    private def startRun(sym: Long): Unit = {
+      endRun()
+      book = new TradeBook(cfg, trades); stats = new RunStats(cfg.feeRate)
+      symbol = sym; prevClose = Double.NaN
+    }
+
     private def endRun(): Unit = if (book != null) {
-      if (bl) book.flushOpen().foreach(t => out.add(Family.Blotter, blotterRow(t)))
-      if (sm) out.add(Family.Summary, summaryRow(stats.summary))
+      if (carryOut) out.add(Family.Carry, carryRow())
+      else {
+        if (bl) book.flushOpen().foreach(t => out.add(Family.Blotter, blotterRow(t)))
+        if (sm) out.add(Family.Summary, summaryRow(stats.summary))
+      }
+    }
+
+    /** The run's state: the previous close, the open longs and shorts as
+      * (entryUs, entryPrice) in insertion order, then the [[RunStats]].
+      */
+    private def carryRow(): UnsafeRow = {
+      val (longs, shorts) = book.snapshotOpen()
+      val b = ByteBuffer.allocate(16 + 16 * (longs.size + shorts.size) + RunStats.CarryBytes)
+      b.putDouble(prevClose)
+      for (side <- Seq(longs, shorts)) {
+        b.putInt(side.size)
+        side.foreach(p => b.putLong(p.entryUs).putDouble(p.entryPrice))
+      }
+      stats.save(b)
+      cyRow.reset()
+      cyRow.write(0, symbol); cyRow.write(1, b.array)
+      cyRow.getRow
+    }
+
+    /** Starts `sym`'s run from a [[carryRow]]'s bytes. */
+    private def restore(sym: Long, carry: Array[Byte]): Unit = {
+      startRun(sym)
+      val b = ByteBuffer.wrap(carry)
+      prevClose = b.getDouble
+      def side(isLong: Boolean) = Seq.fill(b.getInt)(OpenPos(b.getLong, b.getDouble, isLong))
+      book.restoreOpen(side(isLong = true), side(isLong = false))
+      stats.restore(b)
     }
 
     /** pnl_norm is the reference's fee-included `pnl_normalized`
       * (models.py:60-91); `pnl` the raw pnl derived from it — see
-      * [[MtmEngine.blotterQueryFrom]].
+      * [[MtmEngine.blotterQuery]].
       */
     private def blotterRow(t: BookTrade): UnsafeRow = {
       blRow.reset(); blRow.zeroOutNullBytes()
@@ -398,7 +475,7 @@ object MtmEngine {
       bars: Iterator[InternalRow]): Iterator[InternalRow] = new PageReader(family) {
     private val buf = new PageBuilder
     private val walk = new Walk(cfg, family == Family.Timeline, family == Family.Blotter,
-      family == Family.Summary, buf)
+      family == Family.Summary, carryOut = false, buf)
     private var done = false
 
     protected def advance(): Boolean = {
@@ -416,11 +493,12 @@ object MtmEngine {
   /** Every family of the pass over one partition of sorted bars, as
     * (family id, page) pairs — one page sequence per family.
     */
-  private def packPages(cfg: PnlConfig)(bars: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
+  private def packPages(cfg: PnlConfig, carryOut: Boolean)(bars: Iterator[InternalRow])
+      : Iterator[(Int, Array[Byte])] =
     new Iterator[(Int, Array[Byte])] {
       private val full = scala.collection.mutable.Queue.empty[(Int, Array[Byte])]
-      private val pages = Array.fill(3)(new PageBuilder)
-      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, new Sink {
+      private val pages = Array.fill(4)(new PageBuilder)
+      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, carryOut, new Sink {
         def add(family: Family, row: UnsafeRow): Unit = {
           val b = pages(family.id)
           if (b.size > 0 && b.size + 4 + row.getSizeInBytes > PageBytes) {
@@ -433,7 +511,7 @@ object MtmEngine {
 
       def hasNext: Boolean = {
         while (full.isEmpty && !done) {
-          if (bars.hasNext) walk.bar(bars.next())
+          if (bars.hasNext) walk.row(bars.next())
           else {
             walk.finish()
             for (id <- pages.indices if pages(id).size > 0) full += id -> pages(id).page
@@ -456,24 +534,56 @@ object MtmEngine {
     * [[blotterQuery]] and the summary surfaces. Consumers that need more
     * than one family (MtmRunner.calculate) would otherwise pay the
     * repartition+sort+walk per family.
+    *
+    * With `cutsUs`, slice i covers [cutsUs(i-1), cutsUs(i)) and is the
+    * same stored pass over its bars plus slice i−1's [[Family.Carry]]
+    * rows, which take ts_us = Long.MinValue so that each sorts first in
+    * its symbol run; every slice but the last ends its runs with a carry
+    * instead of the open flush and the summary. The frames read the
+    * union of all slices' pages. `colocated` applies to the no-cut case
+    * only: the carries always need the exchange.
     */
-  private[graft] def combinedRun(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false)
+  private[graft] def combinedRun(
+      bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false, cutsUs: Seq[Long] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bars.sparkSession
-    val sorted = sortedBars(bars, colocated)
-    // EAGER (r16 lazy-checkpoint audit — see the object doc); the
-    // execution id ties both jobs to one SQL execution, as
-    // Dataset.localCheckpoint's own would
-    val pages = SQLExecution.withNewExecutionId(sorted.queryExecution, Some("localCheckpoint")) {
-      val pages = sorted.queryExecution.toRdd.mapPartitions(packPages(cfg))
+    val last = cutsUs.length
+    def sorted(i: Int, carried: Option[RDD[(Int, Array[Byte])]]): DataFrame =
+      if (last == 0) sortedBars(bars, colocated)
+      else {
+        val lo = if (i == 0) lit(true) else col("ts_us") >= cutsUs(i - 1)
+        val hi = if (i == last) lit(true) else col("ts_us") < cutsUs(i)
+        val slice = barColumns(bars).filter(lo && hi)
+          .withColumn("carry", lit(null).cast(BinaryType))
+        sortRuns(carried.fold(slice)(pages => slice.unionAll(
+          stored(spark, pages, Family.Carry).select(
+            col("symbol"), lit(Long.MinValue).as("ts_us"), lit(0L).as("event_id"),
+            lit(0.0).as("close"), lit(0).as("buy"), lit(0).as("sell"), col("carry")))),
+          colocated = false)
+      }
+    def store(i: Int, sorted: DataFrame): RDD[(Int, Array[Byte])] = {
+      val pages = sorted.queryExecution.toRdd.mapPartitions(packPages(cfg, carryOut = i < last))
       pages.localCheckpoint()
-      pages.count()
       pages
     }
-    def frame(family: Family): DataFrame = GraftInternal.internalCreateDataFrame(
-      spark, pages.mapPartitions(storedRows(family)), family.schema)
-    (frame(Family.Timeline), frame(Family.Blotter), frame(Family.Summary))
+    val first = sorted(0, None)
+    // EAGER (r16 lazy-checkpoint audit — see the object doc): one count
+    // stores the whole slice chain, each slice's pages as slice i+1's
+    // exchange first reads them; the execution id ties every job to one
+    // SQL execution, as Dataset.localCheckpoint's own would
+    val pages = SQLExecution.withNewExecutionId(first.queryExecution, Some("localCheckpoint")) {
+      val pages = (1 to last).scanLeft(store(0, first))((prev, i) => store(i, sorted(i, Some(prev))))
+      pages.last.count()
+      pages
+    }
+    val all = if (pages.length == 1) pages.head else spark.sparkContext.union(pages)
+    (stored(spark, all, Family.Timeline), stored(spark, all, Family.Blotter),
+      stored(spark, all, Family.Summary))
   }
+
+  /** `family`'s rows of stored pages, as a frame in its schema. */
+  private def stored(spark: SparkSession, pages: RDD[(Int, Array[Byte])], family: Family): DataFrame =
+    GraftInternal.internalCreateDataFrame(spark, pages.mapPartitions(storedRows(family)), family.schema)
 
   /** `family`'s rows out of one partition of stored pages. */
   private def storedRows(family: Family)(pages: Iterator[(Int, Array[Byte])]): Iterator[InternalRow] =
@@ -489,95 +599,14 @@ object MtmEngine {
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
 
-  /** Unified slice-input row: a market bar, or (isState) the carried-in
-    * book state of a symbol from the previous slice. State rows take
-    * ts_us = Long.MinValue so the per-partition sort places them before
-    * every bar of their symbol run.
-    */
-  private[graft] final case class SliceIn(
-      symbol: Long, ts_us: Long, event_id: Long, close: Double, buy: Int, sell: Int,
-      isState: Boolean, prevClose: Double,
-      openLongs: Seq[(Long, Double)], openShorts: Seq[(Long, Double)])
-
-  /** Unified slice-output row, discriminated by `kind`:
-    * "tl" timeline point, "bl" blotter record, "st" end-of-slice state.
-    */
-  private[graft] final case class SliceOut(
-      kind: String,
-      symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
-      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0,
-      direction: String = null, entry_ts_us: Long = 0L, entry_price: Double = 0.0,
-      exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
-      pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
-      is_closed: Boolean = false,
-      prevClose: Double = Double.NaN,
-      openLongs: Seq[(Long, Double)] = Nil, openShorts: Seq[(Long, Double)] = Nil)
-
-  private def sliceRunner(cfg: PnlConfig, isLast: Boolean)(
-      it: Iterator[SliceIn]): Iterator[SliceOut] = {
-    var book: TradeBook = null
-    var symbol = 0L
-    var prevClose = Double.NaN
-
-    def blRow(sym: Long, t: BookTrade): SliceOut =
-      if (t.isClosed) {
-        SliceOut("bl", sym,
-          direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice,
-          exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
-          pnl_norm = Some(BookTrade.closedPnlNorm(t, cfg.feeRate)),
-          close_reason = Some(t.reason), is_closed = true)
-      } else
-        SliceOut("bl", sym,
-          direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice)
-
-    def endRun(): Seq[SliceOut] =
-      if (book == null) Nil
-      else if (isLast) book.flushOpen().map(t => blRow(symbol, t))
-      else {
-        val (ls, ss) = book.snapshotOpen()
-        Seq(SliceOut("st", symbol, prevClose = prevClose,
-          openLongs = ls.map(p => (p.entryUs, p.entryPrice)),
-          openShorts = ss.map(p => (p.entryUs, p.entryPrice))))
-      }
-
-    val perRow = it.flatMap { r =>
-      val boundary =
-        if (book == null || r.symbol != symbol) {
-          val fin = endRun()
-          book = new TradeBook(cfg); symbol = r.symbol; prevClose = Double.NaN
-          fin
-        } else Nil
-      if (r.isState) {
-        book.restoreOpen(
-          r.openLongs.map { case (ts, px) => OpenPos(ts, px, isLong = true) },
-          r.openShorts.map { case (ts, px) => OpenPos(ts, px, isLong = false) })
-        prevClose = r.prevClose
-        boundary.iterator
-      } else {
-        val diff = if (prevClose.isNaN) Double.NaN else r.close - prevClose
-        prevClose = r.close
-        val mtm = book.step(r.ts_us, r.close, diff, r.buy == 1, r.sell == 1)
-        val closed = book.drainTrades().map(t => blRow(symbol, t))
-        boundary.iterator ++
-          Iterator(SliceOut("tl", r.symbol, r.ts_us, r.event_id, r.close,
-            r.buy, r.sell, mtm_ratio = mtm)) ++
-          closed.iterator
-      }
-    }
-    // Iterator.++ takes its suffix BY NAME: the final symbol run's
-    // flush/state is built only after perRow exhausts the partition
-    perRow ++ endRun().iterator
-  }
-
   /** Time-sliced engine run: bars split into `nSlices` ranges at
-    * approximate ts quantiles; each slice runs the normal
-    * repartition-sort-mapPartitions pipeline seeded with the previous
-    * slice's per-symbol book snapshots (open positions + previous
-    * close), materialized slice-by-slice. Output (timeline, blotter) is
-    * bar-for-bar identical to the unsliced engine — spec'd in
-    * MtmEngineSpec with a planted mega-symbol.
+    * approximate ts quantiles; each slice is [[combinedRun]]'s stored
+    * pass started from the previous slice's per-symbol carries (open
+    * positions, previous close and the run's [[RunStats]]). Output
+    * (timeline, blotter, summary), in the public schemas of
+    * [[timelineQuery]], [[blotterQuery]] and the summary surfaces, is
+    * bit-for-bit equal to `MtmRunner.calculate` on the same bars —
+    * spec'd in MtmEngineSpec with a planted mega-symbol.
     *
     * Why: the unsliced engine streams a whole symbol through ONE task,
     * so a mega-symbol holding half the corpus makes wall-clock equal to
@@ -589,14 +618,14 @@ object MtmEngine {
     * carried state is O(symbols × max_position) — tiny.
     *
     * Durability caveat: slices chain through `localCheckpoint`, whose
-    * blocks are executor-local with lineage truncated — a lost executor
-    * mid-run fails the job unrecoverably rather than recomputing. For
-    * multi-hour runs on preemptible fleets, wire the inter-slice seam
-    * to durable storage instead: write each slice's end-state (the
-    * O(symbols × max_position) SliceOut "st" rows) to parquet and seed
-    * the next slice from that table — same seam, restartable.
+    * blocks are executor-local — a lost executor mid-run fails the job or
+    * recomputes the chain rather than resuming. For multi-hour runs on
+    * preemptible fleets, wire the inter-slice seam to durable storage
+    * instead: write each slice's [[Family.Carry]] rows (O(symbols ×
+    * max_position) bytes) to parquet and seed the next slice from that
+    * table — same seam, restartable.
     */
-  def runSliced(bars: DataFrame, cfg: PnlConfig, nSlices: Int): (DataFrame, DataFrame) = {
+  def runSliced(bars: DataFrame, cfg: PnlConfig, nSlices: Int): (DataFrame, DataFrame, DataFrame) = {
     require(nSlices >= 1, "need at least one slice")
     // approximate quantile cuts balance slice volume even when bar
     // density drifts over time; exactness is irrelevant (any cut is
@@ -617,68 +646,13 @@ object MtmEngine {
     * covers [cuts(i-1), cuts(i)). No pre-scan: the natural form when
     * slices follow day/batch boundaries known up front.
     */
-  def runSliced(bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long]): (DataFrame, DataFrame) = {
+  def runSliced(bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long]): (DataFrame, DataFrame, DataFrame) = {
     // out-of-order or duplicate cuts would make slice ranges overlap —
     // rows in the overlap run through TWO slices and silently duplicate
     require(
       cutsUs.isEmpty || cutsUs.sliding(2).forall(w => w.length < 2 || w(0) < w(1)),
       s"slice cuts must be strictly ascending, got $cutsUs")
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val typed = bars.select(
-      col("symbol").cast("long"), col("ts_us").cast("long"),
-      col("event_id").cast("long"), col("close").cast("double"),
-      col("buy").cast("int"), col("sell").cast("int"))
-    val cuts = cutsUs.toArray
-    var state: Dataset[SliceIn] = spark.emptyDataset[SliceIn]
-    val parts = (0 to cuts.length).map { i =>
-      val lo = if (i == 0) None else Some(cuts(i - 1))
-      val hi = if (i == cuts.length) None else Some(cuts(i))
-      val isLast = i == cuts.length
-      val sliceBars = typed
-        .filter(lo.map(col("ts_us") >= _).getOrElse(lit(true))
-          && hi.map(col("ts_us") < _).getOrElse(lit(true)))
-        .as[EngineBar]
-        .map(b => SliceIn(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell,
-          isState = false, Double.NaN, Nil, Nil))
-      // LAZY local checkpoint: marks the slice output for storage without
-      // launching a job per slice — the consumer's single action computes
-      // the whole slice chain as one job (5× fewer job launches), each
-      // slice's partitions are stored as they are first computed, and
-      // slice i+1 (and the final union) read the stored partitions
-      // instead of recomputing 0..i.
-      // SAFE LAZY (r16 audit): unlike the multi-branch shapes flipped
-      // eager this round, no two stages can read slice i's blocks
-      // concurrently — slice i's only same-job consumers are slice
-      // i+1's map stage and the final-union result stage, and the
-      // latter transitively depends on the LAST slice's shuffle, which
-      // orders it after every chain stage. Caveat recorded: a caller
-      // consuming BOTH returned frames in one job would put two
-      // unordered branches on the last slice — today's only sliced
-      // caller (q_trades_sliced) reads the blotter frame alone.
-      val out = sliceBars.union(state)
-        .repartition(col("symbol"))
-        .sortWithinPartitions("symbol", "ts_us", "event_id")
-        .as[SliceIn]
-        .mapPartitions(sliceRunner(cfg, isLast))
-        .toDF()
-        .localCheckpoint(eager = false)
-      state = out.filter(col("kind") === "st")
-        .select("symbol", "prevClose", "openLongs", "openShorts")
-        .as[(Long, Double, Seq[(Long, Double)], Seq[(Long, Double)])]
-        .map { case (sym, pc, ls, ss) =>
-          SliceIn(sym, Long.MinValue, 0L, 0.0, 0, 0, isState = true, pc, ls, ss)
-        }
-      out
-    }
-    val tl = parts.map(_.filter(col("kind") === "tl")
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio"))
-      .reduce(_.unionAll(_))
-    val bl = parts.map(_.filter(col("kind") === "bl")
-      .select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed"))
-      .reduce(_.unionAll(_))
-    (tl, bl)
+    combinedRun(bars, cfg, cutsUs = cutsUs)
   }
 
   // ---- query surfaces (timestamps are TIMESTAMP μs) ----
@@ -703,7 +677,16 @@ object MtmEngine {
     * flushed as OPEN rows (reference `outstanding_*` in Mtm_Result,
     * runner_mtm.py:191-203). pnl_norm is the reference's fee-included
     * `pnl_normalized` (models.py:60-91): ((±(exit−entry)) − fee·entry −
-    * fee·entry)/entry; `pnl` as in [[blotterQueryFrom]].
+    * fee·entry)/entry. `pnl` is the reference's raw (price-unit) pnl
+    * alongside the normalized one — ProxyTrade exposes both
+    * (models.py:60-83,117-131). NOTE the derivation direction is
+    * deliberately INVERTED vs the reference: models.py computes raw pnl
+    * directly ((exit−entry) − 2·fee·entry) and derives normalized from
+    * it, while the walk derives raw = pnl_norm × entry_price from the
+    * already-computed normalized value so the engine, sliced, runner and
+    * oracle surfaces stay bit-equal to each other ((x/e)·e is not
+    * IEEE-bit-equal to x, so our raw pnl can differ from the reference's
+    * by ULPs).
     */
   def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
     pass(bars, cfg, Family.Blotter, colocated)
@@ -729,25 +712,6 @@ object MtmEngine {
       unix_micros(col("entry_ts")).as("entry_ts_us"), col("entry_price"),
       unix_micros(col("exit_ts")).as("exit_ts_us"), col("exit_price"),
       col("pnl_norm"), col("close_reason"), col("is_closed"))
-
-  /** A µs-long blotter (the sliced runner's) in [[blotterQuery]]'s schema.
-    * `pnl` is the reference's raw (price-unit) pnl alongside the
-    * normalized one — ProxyTrade exposes both (models.py:60-83,117-131).
-    * NOTE the derivation direction is deliberately INVERTED vs the
-    * reference: models.py computes raw pnl directly
-    * ((exit−entry) − 2·fee·entry) and derives normalized from it, while
-    * we derive raw = pnl_norm × entry_price from the already-computed
-    * normalized value so the engine, sliced, runner and oracle surfaces
-    * stay bit-equal to each other ((x/e)·e is not IEEE-bit-equal to x,
-    * so our raw pnl can differ from the reference's by ULPs).
-    */
-  private[graft] def blotterQueryFrom(bl: DataFrame): DataFrame =
-    bl.select(
-      col("symbol"), col("direction"),
-      timestamp_micros(col("entry_ts_us")).as("entry_ts"), col("entry_price"),
-      timestamp_micros(col("exit_ts_us")).as("exit_ts"), col("exit_price"),
-      col("pnl_norm"), (col("pnl_norm") * col("entry_price")).as("pnl"),
-      col("close_reason"), col("is_closed"))
 
   /** SURVEY #6: per-symbol max drawdown — running peak of cum-pnl floored
     * at 0, minus current, maxed (reference runner_mtm.py:144,168-172).

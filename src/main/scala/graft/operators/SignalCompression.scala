@@ -42,7 +42,7 @@ object SignalCompression {
       .withColumn("exit_price", lead("close", 1).over(byRun))
       .filter(col("action") === "B")
       // raw (price-unit) pnl = pnl_norm × entry_price, in the same column
-      // position as MtmEngine.blotterQueryFrom (…, pnl_norm, pnl,
+      // position as MtmEngine.blotterQuery (…, pnl_norm, pnl,
       // close_reason, is_closed) so positional consumers agree
       .withColumn("pn", when(col("exit_ts_us").isNotNull,
         (col("exit_price") - col("close") - lit(0.0) * col("close") - lit(0.0) * col("close"))

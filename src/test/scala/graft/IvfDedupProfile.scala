@@ -31,9 +31,10 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object IvfDedupProfile {
   /** Bumped by hand whenever the operator-under-test's kernel changes
-    * meaningfully: parse_r16_logs.py refuses to min-merge concatenated
-    * logs whose generations differ, so per-tag "bests" can never mix
-    * two different operators (the r16 flat-vs-twolevel hazard).
+    * meaningfully, so per-tag "bests" merged from concatenated logs can
+    * never mix two different operators (the r16 flat-vs-twolevel hazard;
+    * the merged results are the `lsh_vs_ivf_*` measurements in
+    * SCALING_r16.json).
     */
   private val harnessGen = "hierfit-r17"
 

@@ -14,8 +14,8 @@ import graft.operators.Similarity
   * CAVEAT (r17 review): each reported wall still INCLUDES its call's
   * own sample-draw job — the draw is not timed separately, so
   * small-nCells hier walls are draw-dominated and can invert
-  * (parse_r17_logs' monotonicity flagger annotates those points
-  * in-key); read the FLAT column's growth and the large-nCells hier
+  * (SCALING_r17.json's `ivf_fit_ab.noise_note` records those
+  * points); read the FLAT column's growth and the large-nCells hier
   * points, never small-nCells hier deltas.
   *
   * Per grid point prints

@@ -211,6 +211,31 @@ class MtmEngineSpec extends AnyFunSuite {
     }
   }
 
+  /** A frame's rows as a multiset: doubles by their bits (so equal
+    * means `Double.compare == 0`), nulls equal.
+    */
+  private def rowBag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case v => v
+    }).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** `sliced`'s (timeline, blotter, summary) equal `want`'s — every
+    * column, bit for bit, as multisets (so a dropped or doubled row at a
+    * slice boundary is caught).
+    */
+  private def assertSlicedSame(
+      what: String, sliced: (DataFrame, DataFrame, DataFrame), want: MtmRunner.MtmResult): Unit =
+    for ((family, got, exp) <- Seq(("timeline", sliced._1, want.timeline),
+        ("blotter", sliced._2, want.trades), ("summary", sliced._3, want.summary))) {
+      assert(got.schema == exp.schema, s"$what $family schema")
+      val (g, e) = (rowBag(got), rowBag(exp))
+      assert(e.nonEmpty, s"$what $family: test premise")
+      assert(g == e, s"$what $family" +
+        s"\nsliced-only: ${(g.toSet -- e.toSet).take(5)}" +
+        s"\nunsliced-only: ${(e.toSet -- g.toSet).take(5)}")
+    }
+
   test("time-sliced run equals the unsliced engine under a planted mega-symbol") {
     // collapse half the users into symbol 777 → one symbol carries ~50%
     // of all bars (the skew case slicing exists for); event_id keeps
@@ -220,37 +245,10 @@ class MtmEngineSpec extends AnyFunSuite {
     val cfg = PnlConfig(
       roi = Map(0 -> 0.2, 60 -> 0.1), stoploss = -0.15,
       enableShortPosition = true, maxPositionPerSymbol = 2, feeRate = 0.001)
-    val (slTl, slBl) = MtmEngine.runSliced(bars, cfg, nSlices = 4)
-
-    def tlKey(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "ts_us", "event_id", "mtm_ratio").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3)).toMap
-    val exact = tlKey(MtmEngine.timeline(bars, cfg))
-    val sliced = tlKey(slTl)
-    assert(sliced.keySet == exact.keySet)
-    // identical arithmetic path per bar (restored state preserves
-    // position order and prev close) → bit-exact equality
-    exact.foreach { case (k, v) =>
-      assert(java.lang.Double.compare(sliced(k), v) == 0, s"bar $k: ${sliced(k)} vs $v")
-    }
-
-    // multiset, not set: two legitimately identical blotter rows (same
-    // prices/timestamps on different trades) must not mask a dropped or
-    // doubled record at a slice boundary
-    def blBag(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "pnl_norm", "close_reason", "is_closed").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
-          if (r.isNullAt(4)) -1L else r.getLong(4),
-          // stringified: NaN (open rows) would fail numeric equality
-          if (r.isNullAt(5)) "null" else r.getDouble(5).toString,
-          if (r.isNullAt(6)) "OPEN" else r.getString(6), r.getBoolean(7)))
-        .groupBy(identity).map { case (k, v) => k -> v.length }
-    val gotBl = blBag(slBl)
-    val expBl = blBag(MtmEngine.blotter(bars, cfg))
-    assert(gotBl == expBl,
-      s"\nsliced-only: ${(gotBl.toSet -- expBl.toSet).take(5)}" +
-        s"\nunsliced-only: ${(expBl.toSet -- gotBl.toSet).take(5)}")
+    // identical arithmetic path per bar (the carry preserves position
+    // order, the previous close and the run's exact sums) → bit-exact
+    assertSlicedSame("4 slices", MtmEngine.runSliced(bars, cfg, nSlices = 4),
+      MtmRunner.calculate(bars, cfg))
   }
 
   test("time-sliced run matches under adversarial explicit cuts; bad cuts rejected") {
@@ -259,10 +257,7 @@ class MtmEngineSpec extends AnyFunSuite {
     val Array(minTs, maxTs) = bars
       .agg(min(col("ts_us")), max(col("ts_us"))).collect()
       .flatMap(r => Array(r.getLong(0), r.getLong(1)))
-    def tlKey(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "ts_us", "event_id", "mtm_ratio").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3)).toMap
-    val exact = tlKey(MtmEngine.timeline(bars, cfg))
+    val want = MtmRunner.calculate(bars, cfg)
     val span = maxTs - minTs
     // degenerate cut sets: empty slices at both ends (cuts outside the
     // data range), a cut exactly ON the min (first slice empty), dense
@@ -275,13 +270,8 @@ class MtmEngineSpec extends AnyFunSuite {
       Seq(minTs),
       Seq(minTs + span / 100, minTs + span / 50, minTs + span / 25),
       randomCuts)
-    for (cuts <- cutSets) {
-      val sliced = tlKey(MtmEngine.runSliced(bars, cfg, cuts)._1)
-      assert(sliced.keySet == exact.keySet, s"row set diverged for cuts $cuts")
-      exact.foreach { case (k, v) =>
-        assert(java.lang.Double.compare(sliced(k), v) == 0, s"cuts $cuts bar $k")
-      }
-    }
+    for (cuts <- cutSets)
+      assertSlicedSame(s"cuts $cuts", MtmEngine.runSliced(bars, cfg, cuts), want)
     // overlapping/unsorted cuts would silently duplicate rows — rejected
     intercept[IllegalArgumentException] {
       MtmEngine.runSliced(bars, cfg, Seq(minTs + 2000L, minTs + 1000L))
@@ -289,6 +279,40 @@ class MtmEngineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       MtmEngine.runSliced(bars, cfg, Seq(minTs + 1000L, minTs + 1000L))
     }
+  }
+
+  test("a carry that crosses an empty slice is restored and re-emitted unchanged") {
+    import spark.implicits._
+    val sec = 1000000L
+    def b(sym: Long, t: Long, close: Double, buy: Int = 0, sell: Int = 0) =
+      (sym, t * sec, sym * 100 + t, close, buy, sell)
+    // symbol 1 holds three longs and symbol 2 two shorts at cut 1 (5 s),
+    // and neither has a bar in [5 s, 8 s); after 8 s the carried entries
+    // are closed by ROI (the restored entry prices and times) and by
+    // FIFO signals (the restored order). Symbol 3 fills the middle
+    // slice; symbol 4 has no bar after cut 1, so its two longs and its
+    // summary come out of carries only.
+    val bars = Seq(
+      b(1, 1, 10.0, buy = 1), b(1, 2, 10.5, buy = 1), b(1, 3, 10.3, buy = 1),
+      b(1, 10, 11.0), b(1, 11, 10.8, sell = 1), b(1, 12, 10.9),
+      b(2, 1, 20.0, sell = 1), b(2, 2, 19.0, sell = 1), b(2, 3, 19.5),
+      b(2, 10, 18.0, buy = 1), b(2, 11, 18.5),
+      b(3, 1, 5.0, buy = 1), b(3, 2, 5.1), b(3, 3, 5.2), b(3, 4, 5.0), b(3, 6, 4.9),
+      b(3, 7, 5.3, sell = 1), b(3, 10, 5.5), b(3, 12, 5.4),
+      b(4, 1, 7.0, buy = 1), b(4, 2, 7.3, buy = 1), b(4, 3, 7.2)
+    ).toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+    val cfg = PnlConfig(roi = Map(0 -> 0.08), enableShortPosition = true,
+      maxPositionPerSymbol = 3, feeRate = 0.001, laidBackTax = 0.0001)
+    val want = MtmRunner.calculate(bars, cfg)
+    // premise: the positions open at 5 s, per symbol, in the unsliced run
+    val openAtCut = want.trades
+      .filter(col("entry_ts") < timestamp_micros(lit(5 * sec)) &&
+        (col("exit_ts").isNull || col("exit_ts") >= timestamp_micros(lit(8 * sec))))
+      .groupBy("symbol").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(openAtCut == Map(1L -> 3L, 2L -> 2L, 4L -> 2L), s"premise: $openAtCut")
+    // [4.5 s, 5 s) and [12.5 s, ∞) hold no bar at all
+    for (cuts <- Seq(Seq(5 * sec, 8 * sec), Seq(4 * sec + sec / 2, 5 * sec, 8 * sec, 12 * sec + sec / 2)))
+      assertSlicedSame(s"cuts $cuts", MtmEngine.runSliced(bars, cfg, cuts), want)
   }
 
   test("engine is insensitive to input row order") {
@@ -357,14 +381,20 @@ class MtmEngineSpec extends AnyFunSuite {
       (symbol, (i + 1) * 1000000L, symbol * 100 + i, c, if (i == 0) 1 else 0, 0)
     }
 
-  test("cumulative units past Long range match the DECIMAL reference exactly, never wrapping") {
+  /** Per-bar mtm ≈ ±9e9 (9e18 units, just under 2^63) on symbol 1: the
+    * cumulative reaches ≈ 2.7e19 units after its 4th bar (4 s) and the
+    * drawdown back to ≈ 0 as much.
+    */
+  private def longRangeBars: DataFrame = {
     import spark.implicits._
     val p = 1e-3
-    // per-bar mtm ≈ ±9e9 (9e18 units, just under 2^63); the cumulative
-    // reaches ≈ 1.8e19 units and the drawdown back to ≈ 0 as much
-    val bars = (jumpBars(1L, Seq(p, p + 9e6, p + 1.8e7, p + 2.7e7, p + 1.8e7, p + 9e6, p)) ++
+    (jumpBars(1L, Seq(p, p + 9e6, p + 1.8e7, p + 2.7e7, p + 1.8e7, p + 9e6, p)) ++
       jumpBars(2L, Seq(10.0, 11.0, 9.5, 12.0)))
       .toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+  }
+
+  test("cumulative units past Long range match the DECIMAL reference exactly, never wrapping") {
+    val bars = longRangeBars
     val (tlPub, _, sm) = MtmEngine.combinedRun(bars, PnlConfig.default)
     val peakUnits = refPnlRatio(MtmEngine.timelineMicros(tlPub)).filter(col("symbol") === 1L)
       .agg(max(col("pnl_ratio"))).head().getDouble(0) * 1e9
@@ -372,6 +402,22 @@ class MtmEngineSpec extends AnyFunSuite {
     val dd = sm.filter(col("symbol") === 1L).select("max_drawdown").head().getDouble(0) * 1e9
     assert(dd > 2.0 * Long.MaxValue, s"drawdown $dd units must not wrap")
     checkParity(bars, PnlConfig.default)
+  }
+
+  test("a unit sum past Long range crosses a slice cut exactly") {
+    val bars = longRangeBars
+    val (tlPub, blPub, _) = MtmEngine.combinedRun(bars, PnlConfig.default)
+    val (tl, bl) = (MtmEngine.timelineMicros(tlPub), MtmEngine.blotterMicros(blPub))
+    // the cut falls after symbol 1's 4th bar, where the cumulative and
+    // the peak are past 2^64 units: the carry's hi words are nonzero
+    val cut = 4500000L
+    val atCut = refPnlRatio(tl).filter(col("symbol") === 1L && col("ts_us") < cut)
+      .agg(max(col("pnl_ratio"))).head().getDouble(0) * 1e9
+    assert(atCut > 18446744073709551616.0, s"test premise: $atCut units at the cut")
+    val sliced = MtmEngine.runSliced(bars, PnlConfig.default, Seq(cut))
+    assertSame("sliced summary", bySymbol(sliced._3, Seq("pnl", "max_drawdown")),
+      bySymbol(refSummary(tl, bl), Seq("pnl", "max_drawdown")))
+    assertSlicedSame("one cut", sliced, MtmRunner.calculate(bars, PnlConfig.default))
   }
 
   test("a single bar's unit overflow fails with the ExactNum.units error, like the reference") {
