@@ -161,17 +161,15 @@ object Sessions {
       // still needs from the conf — the one measured large-SF spill
       // site (the ngram index cache, 1 GB deterministic at sf100 under
       // pinned 32) is sized from DATA by its owning operator since r17
-      // (Dedup.indexShuffleParts / ConnectedComponents.buildEdges:
-      // AQE cannot re-plan inside a persisted plan, so cached
-      // exchanges carry their own data-driven counts and are immune to
-      // this conf at both ends of the scale axis).
+      // (Dedup.indexShuffleParts: AQE cannot re-plan inside a persisted
+      // plan, so a cached exchange carries its own data-driven count
+      // and is immune to this conf at both ends of the scale axis).
       // canChangeCachedPlanOutputPartitioning likewise stays at its
       // false default: flipped true (the other way to size cached
-      // exchanges), the coalesced cache no longer satisfies consumers'
-      // co-partitioning — PlanAuditSpec measured CC's round join
-      // re-exchanging the edge CACHE every round (3 exchanges where
-      // the wired plan has 1), re-shuffling the largest frame per
-      // round at corpus scale.
+      // exchanges), a coalesced cache no longer satisfies its
+      // consumers' co-partitioning, and every consumer that relies on
+      // the cache's partitioning re-exchanges it (measured r17: 3
+      // exchanges where the wired plan had 1).
       .config(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         initialPartitions(cores))
@@ -212,7 +210,7 @@ object Sessions {
       // generated class NAME (cache-key-relevant source text), every
       // stage of a plan is textually unique even when the generated
       // BODIES are identical. Measured (r18, CodegenChurnAB on
-      // q_dedup_groups — a CC round loop whose per-round stages are
+      // q_dedup_groups, then a CC round loop whose per-round stages are
       // textually identical): id-in-name loads 12,819 generated
       // classes for ONE run where stable names load 87 (~150x), and
       // steady-state wall drops 3.7 -> 2.5 s because C2 compiles each

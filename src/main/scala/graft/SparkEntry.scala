@@ -276,12 +276,11 @@ object SparkEntry {
       TextOps.qualityFilterGopher(TextOps.withPlantedStructure(Tables.documents(s, dir)))),
     "q_pack_sequences" -> ((s, dir) =>
       Packing.packSequences(Tables.documents(s, dir), packBudget)),
-    // O(log n) star-contraction sibling of q_dedup_groups: component
-    // labels are canonical (min reachable id), so it answers the SAME
-    // oracle as the propagation variant
+    // kept under its name in the frozen query set: the same call as
+    // q_dedup_groups, which picks its one-task or star-contraction path
+    // from the observed pair count, so it answers the SAME oracle
     "q_dedup_groups_star" -> ((s, dir) => ConnectedComponents.dupGroups(
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), maxShingleDf = Some(1000)),
-      starContraction = true))
+      Dedup.ngramJaccardPairs(Tables.documents(s, dir), maxShingleDf = Some(1000))))
   )
 
   /** Stratum → keep-rate for the wired stratified sample; unlisted
@@ -660,8 +659,8 @@ object SparkEntry {
     oracleSqlBase +
       ("q_mtm_timeline_colocated" -> oracleSqlBase("q_mtm_timeline")) +
       ("q_dedup_groups" -> dupGroupsOracle) +
-      // component labels are canonical (min reachable id) — algorithm-
-      // independent, so contraction answers propagation's oracle
+      // component labels are canonical (min reachable id), whichever
+      // path dupGroups takes
       ("q_dedup_groups_star" -> dupGroupsOracle)
 
   private lazy val dupGroupsOracle: String =

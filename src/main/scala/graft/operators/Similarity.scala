@@ -202,28 +202,24 @@ object Similarity {
     // count() scan on the COMMON path — every wired caller whose
     // corpus is draw-sized (n < 1.5·target, i.e. every bench-scale
     // corpus) started at frac = 1.0 and verified a count it had just
-    // computed itself. The guard is now the collect ITSELF, bounded:
-    // take at most 4·target+1 rows (limit+collect is executeTake — an
-    // incremental partition scan, so even a lying caller moves ≤ ~4×
-    // the sample bytes, never the corpus). A COMPLETE result proves
-    // the corpus really is draw-sized and IS the frac=1.0 draw — zero
-    // extra jobs on the honest path; a TRUNCATED result proves the
-    // claim wrong, and only then is the count() paid to rebase frac —
-    // subsequent escalation doubles from the verified baseline, so a
-    // later frac=1.0 collect only happens when the corpus truly is
-    // draw-sized. Which rows a truncated take returns is arbitrary and
-    // irrelevant: a truncated probe is always discarded.
+    // computed itself. The guard is now a bounded probe of the 8-byte
+    // hash column ALONE: take at most 4·target+1 hashes (limit+collect
+    // is executeTake — an incremental partition scan, so even a lying
+    // caller moves ~8 bytes a row, never vectors and never the corpus).
+    // A COMPLETE probe proves the corpus really is draw-sized, and the
+    // frac = 1.0 cutoff collect below fetches its vectors; a TRUNCATED
+    // probe proves the claim wrong, and only then is the count() paid
+    // to rebase frac — subsequent escalation doubles from the verified
+    // baseline, so a later frac=1.0 collect only happens when the
+    // corpus truly is draw-sized. Which hashes a truncated take returns
+    // is irrelevant: a truncated probe is always discarded.
     var countVerified = false
     while (!done) {
       if (frac >= 1.0 && !countVerified) {
         countVerified = true
         val cap = 4 * target + 1
-        val probe = e.select(xxhash64(col("vec_id")).as("h"), col("v"))
-          .limit(cap).collect()
-        if (probe.length < cap) {
-          drawn = probe.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          done = true
-        } else {
+        val probed = e.select(xxhash64(col("vec_id")).as("h")).limit(cap).collect().length
+        if (probed >= cap) {
           val realN = e.count()
           System.err.println(
             s"[graft] fitDraw: caller claimed nRows=$nRows but corpus has " +
@@ -232,16 +228,14 @@ object Similarity {
           frac = math.min(1.0, 1.5 * target.toDouble / realN)
         }
       }
-      if (!done) {
-        val cutoff = hashCutoff(frac)
-        drawn = e.withColumn("h", xxhash64(col("vec_id")))
-          .filter(col("h") <= cutoff)
-          .select(col("h"), col("v"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        done = drawn.length >= target || frac >= 1.0
-        if (!done) frac = math.min(1.0, frac * 2)
-      }
+      val cutoff = hashCutoff(frac)
+      drawn = e.withColumn("h", xxhash64(col("vec_id")))
+        .filter(col("h") <= cutoff)
+        .select(col("h"), col("v"))
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      done = drawn.length >= target || frac >= 1.0
+      if (!done) frac = math.min(1.0, frac * 2)
     }
     drawn.sortBy(_._1).take(target).map(_._2)
   }

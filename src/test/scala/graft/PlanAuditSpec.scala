@@ -164,55 +164,6 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the size guard must reuse the bucket aggregation's exchange, saw $exchanges:\n$p")
   }
 
-  test("CC edge cache: a propagation-round join reads edges with no exchange and no sort") {
-    // Pins the capture semantics dupGroups relies on (r11 probed it
-    // empirically; this makes a Spark upgrade that changes them fail a
-    // test): the persisted symmetric edge set — built by the REAL
-    // buildEdges — must report hashpartitioning(src)+sorted from the
-    // cache, so the round's sort-merge join adds neither an Exchange
-    // nor a Sort on the edge side. Expected wide ops are exactly the
-    // labels side's: the distinct's exchange (whose output partitioning
-    // then also serves the join, plus one sort on v) and the per-round
-    // groupBy(dst) exchange. The merge hint forces SMJ (tiny test data
-    // would otherwise broadcast and assert nothing).
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, min => fmin}
-    val p = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 8L)).toDF("src", "dst")
-    val edges = ConnectedComponents.buildEdges(p)
-    try {
-      edges.count() // materialize the cache, as dupGroups' first action does
-      val labels = edges.select(col("src").as("v")).distinct().withColumn("label", col("v"))
-      // the FULL r14 fused round: neighbor labels from the join UNION
-      // every vertex's own label, one partial-aggregated min — no
-      // second join back to the labels
-      val round = edges.hint("merge").join(labels, edges("src") === labels("v"))
-        .select(col("dst"), col("label"))
-        .union(labels.select(col("v").as("dst"), col("label")))
-        .groupBy(col("dst")).agg(fmin(col("label")).as("label"))
-      round.collect()
-      // count by tree traversal, not plan-string grep: the string form
-      // re-prints the cached plan's OWN exchange+sort under every
-      // InMemoryRelation (innerChildren), which is build-time work done
-      // once, not per-round work (see [[gatherExecuted]]).
-      import org.apache.spark.sql.execution.SortExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      val nodes = gatherExecuted(round.queryExecution.executedPlan)
-      val p2 = plan(round)
-      assert(nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-        s"merge hint must force SMJ:\n$p2")
-      assert(nodes.exists(_.nodeName.contains("InMemoryTableScan")),
-        s"edge side must read the cache:\n$p2")
-      val exchanges = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
-      // 1 = the groupBy(dst) aggregate. Even the labels-side distinct
-      // rides the cache's hashpartitioning(src) (v is an alias of src),
-      // and the edge side of the SMJ must add nothing.
-      assert(exchanges == 1,
-        s"expected only the groupBy(dst) exchange, saw $exchanges:\n$p2")
-      val sorts = nodes.count(_.isInstanceOf[SortExec])
-      assert(sorts == 1, s"expected only the labels-side SMJ sort, saw $sorts:\n$p2")
-    } finally edges.unpersist(blocking = true)
-  }
-
   test("decontaminate: corpus pass is exchange-free — probe generator, no join/aggregate") {
     // r14 kernel pin: the overlap computation rides the broadcast eval
     // index inside the scan (EvalContainment), so the corpus-side plan

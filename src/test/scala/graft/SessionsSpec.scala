@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every sub-second shuffly query while the one measured large-SF
   * spill site is data-sized by its owning operator), the env override
   * exists for cluster-posture probes, and cached-plan re-planning
-  * stays off so consumers can ride cache partitioning (flipped on, CC's
-  * round join re-exchanged the edge cache every round). AQE coalescing
+  * stays off so consumers can ride cache partitioning (flipped on, a
+  * consumer re-exchanges the cache it reads). AQE coalescing
   * itself must stay active — without it every small shuffle runs the
   * full initial count of tasks.
   */
@@ -34,11 +34,10 @@ class SessionsSpec extends AnyFunSuite {
     assert(
       spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true") === "true")
     // must stay at its false default: flipped on, a coalesced cache no
-    // longer satisfies its consumers' co-partitioning and CC's round
-    // join re-exchanges the edge CACHE every round (measured: 3
-    // exchanges where the wired plan has 1). The persist-heavy
-    // operators size their cached exchanges explicitly instead
-    // (Dedup.indexShuffleParts / ConnectedComponents.buildEdges).
+    // longer satisfies its consumers' co-partitioning, and a consumer
+    // that relies on it re-exchanges the cache (measured: 3 exchanges
+    // where the wired plan has 1). A persist-heavy operator sizes its
+    // cached exchange explicitly instead (Dedup.indexShuffleParts).
     assert(
       spark.conf.get(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false") === "false")

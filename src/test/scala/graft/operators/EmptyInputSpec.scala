@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * empty partition day, and one no oracle run exercises (the driver's
   * sf dirs are never empty). collect(), not count(), so output
   * projections actually evaluate (see AdversarialInputSpec's pruning
-  * note). CC's empty early-return (the SQL-NULL labelSum guard) and
+  * note). CC's empty labeling (a union-find over no pairs) and
   * stageReport's "an empty stage still reports a 0 row" contract are
   * the two non-obvious cases pinned here.
   */
