@@ -20,9 +20,9 @@ object BookTrade {
   /** Fee-included normalized pnl of a CLOSED trade — the reference's
     * `pnl_normalized` (models.py:60-91): ((±(exit−entry)) − fee·entry −
     * fee·entry)/entry. The ONE definition of this expression shape:
-    * every consumer (the engine walk, whole or sliced, and the streaming
-    * blotter) and the oracles' mirrored SQL must stay token-identical
-    * for bit-exact parity.
+    * its one consumer, `MtmEngine.Walk` (which also serves the sliced
+    * run and the MTM streams), and the oracles' mirrored SQL must stay
+    * token-identical for bit-exact parity.
     */
   def closedPnlNorm(t: BookTrade, feeRate: Double): Double = {
     val fee = math.abs(feeRate)
@@ -199,13 +199,15 @@ final class TradeBook(cfg: PnlConfig, trackTrades: Boolean = true) extends Seria
 
   def openCount: Int = longs.length + shorts.length
 
-  /** Current open positions (longs, shorts) — for checkpointing the book
-    * across streaming micro-batches (graft.streaming).
+  /** Current open positions (longs, shorts) — for `MtmEngine.Walk`'s
+    * carry, which checkpoints the book across slices and streaming
+    * micro-batches.
     */
   def snapshotOpen(): (Seq[OpenPos], Seq[OpenPos]) = (longs.toSeq, shorts.toSeq)
 
   /** Restore open positions saved by [[snapshotOpen]] (insertion order
-    * preserved so FIFO selection is unchanged). Only valid on a fresh book.
+    * preserved so FIFO selection is unchanged), when `MtmEngine.Walk`
+    * restores a carry. Only valid on a fresh book.
     */
   def restoreOpen(openLongs: Seq[OpenPos], openShorts: Seq[OpenPos]): Unit = {
     require(longs.isEmpty && shorts.isEmpty && drained.isEmpty, "restore requires a fresh book")

@@ -518,6 +518,14 @@ object Dedup {
     * corpus-sized artifact. Precision is exact post-verify; recall is
     * the LSH probability curve (spec'd against #22 in DedupSpec).
     *
+    * Construction stores the per-doc table and the candidate pairs
+    * (eager checkpoints), but the returned frame is LAZY: its verify tail
+    * — two broadcast semi-filter candidate-id sets, each behind a
+    * distinct shuffle, plus the two join stages — runs in whichever
+    * consumer materializes the frame first, about 6 jobs at sf0.01. In
+    * `corpus_dedup` that is `ConnectedComponents.dupGroups`' pair
+    * checkpoint, so those jobs count against `dupGroups`.
+    *
     * @param maxBucketSize hot-bucket cap (see [[capBuckets]]).
     * @param dropObs optional observation receiving the dropped-membership
     *        count of the final action.

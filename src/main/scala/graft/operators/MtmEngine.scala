@@ -148,8 +148,11 @@ object MtmEngine {
           "avg_holding_secs" -> DoubleType, "max_drawdown" -> DoubleType,
           "sharpe_ratio" -> DoubleType).map { case (n, t) => field(n, t, nullable = true) }))
 
-    /** (symbol, carry): one symbol run's state at a slice boundary, as
-      * written by the walk of a non-final slice — see [[runSliced]].
+    /** (symbol, carry): one symbol run's state where the run stops
+      * without ending — at a slice boundary, written by the walk of a
+      * non-final slice ([[runSliced]]), and after a micro-batch, where
+      * the bytes are the MTM streams' per-symbol group state
+      * ([[graft.streaming.StreamingJobs]]).
       */
     case object Carry extends Family(3, StructType(Seq(
       field("symbol", LongType), field("carry", BinaryType))))
@@ -274,27 +277,42 @@ object MtmEngine {
   /** Where the walk's rows go: `row` is reused by the walk, so a sink
     * copies what it keeps before returning.
     */
-  private trait Sink {
+  private[graft] trait Sink {
     def add(family: Family, row: UnsafeRow): Unit
+  }
+
+  /** How the walk ends a symbol run: `Open` flushes open positions as
+    * OPEN blotter rows and writes the summary row (`calculate`, the last
+    * slice); `Carry` writes one [[Family.Carry]] row (a non-final slice,
+    * a live stream's micro-batch); `Evicted` closes open positions as
+    * EVICTED blotter rows at the run's last bar (ts, close) — a stream's
+    * timed-out group, or a stream job run on a batch Dataset.
+    */
+  private[graft] sealed trait RunEnd
+
+  private[graft] object RunEnd {
+    case object Open extends RunEnd
+    case object Carry extends RunEnd
+    case object Evicted extends RunEnd
   }
 
   private val LongDir = UTF8String.fromString("LONG")
   private val ShortDir = UTF8String.fromString("SHORT")
-  private val Reasons = Seq("SIGNAL", "ROI", "STOP_LOSS").map(r => r -> UTF8String.fromString(r)).toMap
+  private val Reasons =
+    Seq("SIGNAL", "ROI", "STOP_LOSS", "EVICTED").map(r => r -> UTF8String.fromString(r)).toMap
 
   /** The engine walk over one partition of sorted bar rows: a fresh
     * TradeBook and [[RunStats]] per symbol run, price_diff from the
     * previous bar in-stream (the partition is already symbol-ordered),
     * and each wanted family's rows written through a reused
     * UnsafeRowWriter into `out` — a timeline row per bar, a blotter row
-    * per closed trade and, at the end of a run, per flushed-open
-    * position, and one summary row per run. With `carryOut` (a non-final
-    * slice) a run ends with one [[Family.Carry]] row instead of the
-    * flush and the summary; a carry read by [[row]] starts its symbol
-    * run where the previous slice's ended.
+    * per closed trade, and the rows of `end` when a run ends
+    * ([[RunEnd]]). A carry read by [[row]] or [[restore]] starts its
+    * symbol run where the carry's run stopped. The MTM streams drive one
+    * walk per micro-batch group through [[step]].
     */
-  private final class Walk(
-      cfg: PnlConfig, tl: Boolean, bl: Boolean, sm: Boolean, carryOut: Boolean, out: Sink) {
+  private[graft] final class Walk(
+      cfg: PnlConfig, tl: Boolean, bl: Boolean, sm: Boolean, end: RunEnd, out: Sink) {
     private val tlRow = new UnsafeRowWriter(Family.Timeline.schema.length)
     private val blRow = new UnsafeRowWriter(Family.Blotter.schema.length, 32)
     private val smRow = new UnsafeRowWriter(Family.Summary.schema.length)
@@ -306,6 +324,14 @@ object MtmEngine {
     private var stats: RunStats = null
     private var symbol = 0L
     private var prevClose = Double.NaN
+    private var markTs = Long.MinValue
+    private var markEvent = Long.MinValue
+
+    /** The run's high-water mark: its newest bar's (ts_us, event_id),
+      * Long.MinValue before any.
+      */
+    def lastTsUs: Long = markTs
+    def lastEventId: Long = markEvent
 
     /** One sorted input row: a carry (its 7th column, `carry`, set) or a
       * bar.
@@ -317,18 +343,21 @@ object MtmEngine {
       if (r.anyNull && nullBar(r))
         throw new NullPointerException(
           "MtmEngine: a bar has a null symbol, ts_us, event_id, close, buy or sell")
-      val sym = r.getLong(0)
+      step(r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4), r.getInt(5))
+    }
+
+    /** One bar; a new `sym` ends the current run and starts its own. */
+    def step(sym: Long, ts: Long, eventId: Long, close: Double, buy: Int, sell: Int): Unit = {
       if (book == null || sym != symbol) startRun(sym)
-      val ts = r.getLong(1)
-      val close = r.getDouble(3)
       val diff = if (prevClose.isNaN) Double.NaN else close - prevClose
       prevClose = close
-      val mtm = book.step(ts, close, diff, r.getInt(4) == 1, r.getInt(5) == 1)
+      markTs = ts; markEvent = eventId
+      val mtm = book.step(ts, close, diff, buy == 1, sell == 1)
       stats.bar(ts, mtm)
       if (tl) {
         tlRow.reset()
-        tlRow.write(0, sym); tlRow.write(1, ts); tlRow.write(2, r.getLong(2))
-        tlRow.write(3, close); tlRow.write(4, r.getInt(4)); tlRow.write(5, r.getInt(5))
+        tlRow.write(0, sym); tlRow.write(1, ts); tlRow.write(2, eventId)
+        tlRow.write(3, close); tlRow.write(4, buy); tlRow.write(5, sell)
         tlRow.write(6, mtm); tlRow.write(7, stats.pnlRatio)
         out.add(Family.Timeline, tlRow.getRow)
       }
@@ -356,24 +385,27 @@ object MtmEngine {
     private def startRun(sym: Long): Unit = {
       endRun()
       book = new TradeBook(cfg, trades); stats = new RunStats(cfg.feeRate)
-      symbol = sym; prevClose = Double.NaN
+      symbol = sym; prevClose = Double.NaN; markTs = Long.MinValue; markEvent = Long.MinValue
     }
 
-    private def endRun(): Unit = if (book != null) {
-      if (carryOut) out.add(Family.Carry, carryRow())
-      else {
+    private def endRun(): Unit = if (book != null) end match {
+      case RunEnd.Carry => out.add(Family.Carry, carryRow())
+      case RunEnd.Open =>
         if (bl) book.flushOpen().foreach(t => out.add(Family.Blotter, blotterRow(t)))
         if (sm) out.add(Family.Summary, summaryRow(stats.summary))
-      }
+      case RunEnd.Evicted =>
+        if (bl) book.flushOpen().foreach(t => out.add(Family.Blotter, blotterRow(
+          t.copy(exitUs = markTs, exitPrice = prevClose, reason = "EVICTED", isClosed = true))))
     }
 
-    /** The run's state: the previous close, the open longs and shorts as
-      * (entryUs, entryPrice) in insertion order, then the [[RunStats]].
+    /** The run's state: the previous close, the high-water (ts_us,
+      * event_id), the open longs and shorts as (entryUs, entryPrice) in
+      * insertion order, then the [[RunStats]].
       */
     private def carryRow(): UnsafeRow = {
       val (longs, shorts) = book.snapshotOpen()
-      val b = ByteBuffer.allocate(16 + 16 * (longs.size + shorts.size) + RunStats.CarryBytes)
-      b.putDouble(prevClose)
+      val b = ByteBuffer.allocate(32 + 16 * (longs.size + shorts.size) + RunStats.CarryBytes)
+      b.putDouble(prevClose).putLong(markTs).putLong(markEvent)
       for (side <- Seq(longs, shorts)) {
         b.putInt(side.size)
         side.foreach(p => b.putLong(p.entryUs).putDouble(p.entryPrice))
@@ -385,10 +417,10 @@ object MtmEngine {
     }
 
     /** Starts `sym`'s run from a [[carryRow]]'s bytes. */
-    private def restore(sym: Long, carry: Array[Byte]): Unit = {
+    def restore(sym: Long, carry: Array[Byte]): Unit = {
       startRun(sym)
       val b = ByteBuffer.wrap(carry)
-      prevClose = b.getDouble
+      prevClose = b.getDouble; markTs = b.getLong; markEvent = b.getLong
       def side(isLong: Boolean) = Seq.fill(b.getInt)(OpenPos(b.getLong, b.getDouble, isLong))
       book.restoreOpen(side(isLong = true), side(isLong = false))
       stats.restore(b)
@@ -407,7 +439,7 @@ object MtmEngine {
         val pnl = BookTrade.closedPnlNorm(t, cfg.feeRate)
         blRow.write(4, t.exitUs); blRow.write(5, t.exitPrice)
         blRow.write(6, pnl); blRow.write(7, pnl * t.entryPrice)
-        blRow.write(8, Reasons.getOrElse(t.reason, UTF8String.fromString(t.reason)))
+        blRow.write(8, Reasons(t.reason))
       } else (4 to 8).foreach(blRow.setNullAt)
       blRow.write(9, t.isClosed)
       blRow.getRow
@@ -475,7 +507,7 @@ object MtmEngine {
       bars: Iterator[InternalRow]): Iterator[InternalRow] = new PageReader(family) {
     private val buf = new PageBuilder
     private val walk = new Walk(cfg, family == Family.Timeline, family == Family.Blotter,
-      family == Family.Summary, carryOut = false, buf)
+      family == Family.Summary, RunEnd.Open, buf)
     private var done = false
 
     protected def advance(): Boolean = {
@@ -493,12 +525,12 @@ object MtmEngine {
   /** Every family of the pass over one partition of sorted bars, as
     * (family id, page) pairs — one page sequence per family.
     */
-  private def packPages(cfg: PnlConfig, carryOut: Boolean)(bars: Iterator[InternalRow])
+  private def packPages(cfg: PnlConfig, end: RunEnd)(bars: Iterator[InternalRow])
       : Iterator[(Int, Array[Byte])] =
     new Iterator[(Int, Array[Byte])] {
       private val full = scala.collection.mutable.Queue.empty[(Int, Array[Byte])]
       private val pages = Array.fill(4)(new PageBuilder)
-      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, carryOut, new Sink {
+      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, end, new Sink {
         def add(family: Family, row: UnsafeRow): Unit = {
           val b = pages(family.id)
           if (b.size > 0 && b.size + 4 + row.getSizeInBytes > PageBytes) {
@@ -562,7 +594,8 @@ object MtmEngine {
           colocated = false)
       }
     def store(i: Int, sorted: DataFrame): RDD[(Int, Array[Byte])] = {
-      val pages = sorted.queryExecution.toRdd.mapPartitions(packPages(cfg, carryOut = i < last))
+      val pages = sorted.queryExecution.toRdd.mapPartitions(
+        packPages(cfg, if (i < last) RunEnd.Carry else RunEnd.Open))
       pages.localCheckpoint()
       pages
     }

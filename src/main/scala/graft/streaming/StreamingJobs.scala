@@ -1,10 +1,13 @@
 package graft.streaming
 
-import graft.core.{BookTrade, OpenPos, PnlConfig, TradeBook}
-import graft.operators.ExactNum
-import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset}
+import graft.core.PnlConfig
+import graft.operators.{ExactNum, MtmEngine}
+import graft.operators.MtmEngine.{Family, RunEnd}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.mutable.ArrayBuffer
 
 /** Structured Streaming jobs (SURVEY §2 #29-30): the streaming twins of
   * the batch tumbling aggregation and of the MTM engine. Both run on any
@@ -103,17 +106,6 @@ object StreamingJobs {
   /** Streamed timeline point. */
   final case class StreamPoint(symbol: Long, ts_us: Long, event_id: Long, mtm_ratio: Double)
 
-  /** Serializable checkpoint of one symbol's book between micro-batches.
-    * `(lastTsUs, lastEventId)` is the high-water mark of the symbol's
-    * newest processed bar — `lastTsUs` anchors the idle-eviction timeout
-    * and the flush price timestamp at eviction; the pair together guards
-    * against cross-batch redelivery (an at-least-once source replaying a
-    * bar AT the last processed timestamp must not re-step the book).
-    */
-  final case class BookState(
-      prevClose: Double, hasPrev: Boolean, lastTsUs: Long, lastEventId: Long,
-      longs: Seq[(Long, Double)], shorts: Seq[(Long, Double)])
-
   /** Streamed closed trade (the blotter's is_closed=true rows, plus
     * EVICTED flush rows for positions force-closed at state eviction).
     * Field order matches the batch blotter column order
@@ -156,174 +148,132 @@ object StreamingJobs {
       .groupBy(col("symbol")).as[Long, StreamBar]
   }
 
-  /** Shared micro-batch group runner for both MTM streams: restore the
-    * symbol's book + previous close from GroupState, step the batch's
-    * bars feeding `emit`, snapshot back and arm the idle-eviction
-    * timeout once the iterator drains. Heap is O(open positions) per
-    * symbol: bars arrive (ts_us, event_id)-sorted from
-    * [[orderedBySymbolTime]] and are consumed lazily; the state commit
-    * rides the completion tail of the returned iterator (honored by the
-    * stateful operator's completion callback). On timeout the group's
-    * state is flushed through `onEvict` and removed. Contracts: (1) bars
-    * must arrive in non-decreasing event-time order across batches for a
-    * symbol (in-order source or upstream watermark+sort); (2) the
-    * consumer must DRAIN each group's output fully — every built-in
-    * streaming sink does — because a short-circuiting consumer (a
-    * limit/take inside foreachBatch) would skip the commit tail and
-    * lose the batch's state update for the cut-off groups. That is the
-    * price of O(open-positions) heap; the eager alternative pays
-    * O(micro-batch group) memory per task.
+  /** Both MTM streams: the batch engine's walk ([[MtmEngine.Walk]]) run
+    * incrementally under `flatMapGroupsWithState`. A symbol's group state
+    * is the walk's [[MtmEngine.Family.Carry]] bytes — open positions,
+    * previous close, the run's (ts_us, event_id) high-water mark and its
+    * RunStats. A micro-batch group restores a walk from them, steps its
+    * bars, and stores the carry that the walk's run end writes as the
+    * next state; `row` maps each timeline or blotter row the walk writes.
+    * A timed-out group ends with the walk's EVICTED flush and drops its
+    * state; so does every group of a stream job run on a BATCH Dataset,
+    * whose GroupState is discarded at the end and whose timeout never
+    * fires — the flush accounts for every open position.
+    *
+    * Heap is O(open positions) per symbol: bars arrive (ts_us,
+    * event_id)-sorted from [[orderedBySymbolTime]] and are consumed
+    * lazily; the state commit rides the completion tail of the returned
+    * iterator (honored by the stateful operator's completion callback).
+    * Contracts: (1) bars must arrive in non-decreasing event-time order
+    * across batches for a symbol (in-order source or upstream
+    * watermark+sort); (2) the consumer must DRAIN each group's output
+    * fully — every built-in streaming sink does — because a
+    * short-circuiting consumer (a limit/take inside foreachBatch) would
+    * skip the commit tail and lose the batch's state update for the
+    * cut-off groups. That is the price of O(open-positions) heap; the
+    * eager alternative pays O(micro-batch group) memory per task.
+    *
+    * Since the streams share the batch walk: (1) state stores written by
+    * the earlier tuple-list group state cannot be restored — a query
+    * checkpointed by it must restart from a fresh checkpoint; (2) a group
+    * accumulates the walk's RunStats, so a bar whose |mtm| reaches
+    * ExactNum's 2^63-unit range (1e-9 units) fails with the same named
+    * `ExactNum.units overflow` error that `MtmRunner.calculate` raises.
     */
-  private def runSymbolBatch[T](
-      cfg: PnlConfig, trackTrades: Boolean, streaming: Boolean, evictAfterMs: Long,
-      it: Iterator[StreamBar], state: GroupState[BookState])(
-      emit: (TradeBook, StreamBar, Double) => IterableOnce[T])(
-      onEvict: BookState => Iterator[T]): Iterator[T] = {
-    if (state.hasTimedOut) {
-      // idle symbol: flush whatever is open, then drop the group
-      val out = state.getOption.map(onEvict).getOrElse(Iterator.empty).toVector
-      state.remove()
-      out.iterator
-    } else {
-      val book = new TradeBook(cfg, trackTrades)
-      var prevClose = Double.NaN
-      var lastTsUs = Long.MinValue
-      var lastEventId = Long.MinValue
-      state.getOption.foreach { s =>
-        if (s.hasPrev) prevClose = s.prevClose
-        lastTsUs = s.lastTsUs
-        lastEventId = s.lastEventId
-        book.restoreOpen(
-          s.longs.map { case (ts, px) => OpenPos(ts, px, isLong = true) },
-          s.shorts.map { case (ts, px) => OpenPos(ts, px, isLong = false) })
+  private def mtmStream[T: Encoder](
+      bars: Dataset[StreamBar], cfg: PnlConfig, watermarkDelay: String, evictAfterMs: Long,
+      timeline: Boolean)(row: UnsafeRow => T): Dataset[T] = {
+    implicit val carryEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    val streaming = bars.isStreaming
+    orderedBySymbolTime(bars, watermarkDelay)
+      .flatMapGroupsWithState[Array[Byte], T](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        case (symbol, it, state: GroupState[Array[Byte]]) =>
+          val rows = new ArrayBuffer[T]
+          var carry: Array[Byte] = null
+          val end = if (streaming && !state.hasTimedOut) RunEnd.Carry else RunEnd.Evicted
+          val walk = new MtmEngine.Walk(cfg, tl = timeline, bl = !timeline, sm = false, end,
+            new MtmEngine.Sink {
+              def add(family: Family, r: UnsafeRow): Unit =
+                if (family == Family.Carry) carry = r.getBinary(1) else rows += row(r)
+            })
+          state.getOption.foreach(walk.restore(symbol, _))
+          def drained(): Iterator[T] =
+            if (rows.isEmpty) Iterator.empty
+            else { val out = rows.toList; rows.clear(); out.iterator }
+          if (state.hasTimedOut) {
+            // idle symbol: flush whatever is open, then drop the group
+            walk.finish()
+            state.remove()
+            drained()
+          } else {
+            val stepped = it.flatMap { b =>
+              // at-or-before the (ts_us, event_id) high-water mark:
+              // cross-batch disorder the watermark cannot catch, or an
+              // at-least-once source redelivering a bar. Stepping it
+              // would accrue against the wrong previous close, double
+              // fees and opens, and regress the eviction clock. Equal-ts
+              // bars with FRESH event ids still step. Stream-only: batch
+              // `calculate` steps every bar it is given.
+              if (b.ts_us < walk.lastTsUs ||
+                (b.ts_us == walk.lastTsUs && b.event_id <= walk.lastEventId)) Iterator.empty
+              else {
+                walk.step(symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell)
+                drained()
+              }
+            }
+            // completion tail: runs after the last bar is consumed, before
+            // the operator's completion callback persists the group state
+            stepped ++ {
+              walk.finish()
+              if (streaming && carry != null) {
+                state.update(carry)
+                // evict once event time moves evictAfterMs past this
+                // symbol's newest bar; clamp above the current watermark
+                // (a lagging group may already be older than watermark -
+                // evictAfter). floorDiv, not /: truncation rounds a
+                // pre-1970 µs timestamp UP, anchoring eviction 1 ms late
+                state.setTimeoutTimestamp(
+                  math.max(Math.floorDiv(walk.lastTsUs, 1000L) + evictAfterMs,
+                    state.getCurrentWatermarkMs() + 1))
+              }
+              drained()
+            }
+          }
       }
-      val stepped = it.flatMap { b =>
-        // a bar newer than the watermark but at-or-before this symbol's
-        // (ts_us, event_id) high-water mark — cross-batch disorder the
-        // watermark cannot catch, or an at-least-once source redelivering
-        // the last bar — must not step the book: its price diff would
-        // accrue against the wrong previous close, fees would be double
-        // charged, positions would double open, and lastTsUs would
-        // regress the eviction clock. The event_id tiebreak matches the
-        // (ts_us, event_id) sort order bars arrive in, so equal-ts bars
-        // with FRESH event ids still process. Dropping enforces contract
-        // (1) instead of assuming it.
-        if (b.ts_us < lastTsUs || (b.ts_us == lastTsUs && b.event_id <= lastEventId)) {
-          Iterator.empty
-        } else {
-          val diff = if (prevClose.isNaN) Double.NaN else b.close - prevClose
-          prevClose = b.close
-          lastTsUs = b.ts_us
-          lastEventId = b.event_id
-          val mtm = book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
-          emit(book, b, mtm)
-        }
-      }
-      // completion tail: runs after the last bar is consumed, before the
-      // operator's completion callback persists the group state
-      stepped ++ {
-        val (ol, os) = book.snapshotOpen()
-        val snap = BookState(
-          prevClose, !prevClose.isNaN, lastTsUs, lastEventId,
-          ol.map(p => (p.entryUs, p.entryPrice)),
-          os.map(p => (p.entryUs, p.entryPrice)))
-        if (streaming) {
-          state.update(snap)
-          // evict once event time moves evictAfterMs past this symbol's
-          // newest bar; clamp above the current watermark (a lagging
-          // group may already be older than watermark - evictAfter)
-          // floorDiv, not /: truncation rounds a pre-1970 µs timestamp
-          // UP to the next ms, anchoring eviction 1 ms late
-          state.setTimeoutTimestamp(
-            math.max(Math.floorDiv(lastTsUs, 1000L) + evictAfterMs,
-              state.getCurrentWatermarkMs() + 1))
-          Iterator.empty
-        } else {
-          // BATCH execution: GroupState is discarded when the job ends
-          // and the eviction timeout never fires, so open positions
-          // would silently vanish. Flush them through the same eviction
-          // path — the stream's open-flush analog — so a batch run of
-          // the stream job accounts for every position.
-          onEvict(snap)
-        }
-      }
-    }
   }
 
-  /** Eviction flush for the blotter stream: force-close every open
-    * position at the symbol's last seen close price/timestamp with
-    * close_reason EVICTED, using the single [[BookTrade.closedPnlNorm]]
-    * expression shape all blotter surfaces share.
-    */
-  private def evictFlush(cfg: PnlConfig, symbol: Long)(s: BookState): Iterator[StreamTrade] = {
-    val all = s.longs.iterator.map { case (ts, px) => (ts, px, true) } ++
-      s.shorts.iterator.map { case (ts, px) => (ts, px, false) }
-    all.map { case (entryUs, entryPx, isLong) =>
-      val t = BookTrade(isLong, entryUs, entryPx, s.lastTsUs, s.prevClose,
-        reason = "EVICTED", isClosed = true)
-      val pnlNorm = BookTrade.closedPnlNorm(t, cfg.feeRate)
-      StreamTrade(symbol, if (isLong) "LONG" else "SHORT",
-        entryUs, entryPx, s.lastTsUs, s.prevClose, pnlNorm, pnlNorm * entryPx, "EVICTED")
-    }
-  }
-
-  /** SURVEY #30: the SAME TradeBook core as the batch engine, run
-    * incrementally under `flatMapGroupsWithState` — see
-    * [[runSymbolBatch]] for the state/ordering/eviction contract.
-    * trackTrades is off: the timeline stream never drains the blotter,
-    * so closed-trade records would pile up per batch. An idle symbol's
-    * state is dropped after `evictAfterMs` of event time (nothing to
-    * flush — timeline points are emitted as bars arrive); if it
-    * re-appears later it restarts from a flat book.
+  /** SURVEY #30: the timeline stream — see [[mtmStream]] for the
+    * state/ordering/eviction contract and the known differences. The
+    * walk records no closed trades: the timeline stream never reads the
+    * blotter. An idle symbol's state is dropped after `evictAfterMs` of
+    * event time (nothing to flush — points are emitted as bars arrive);
+    * if it re-appears later it restarts from a flat book.
     */
   def mtmTimelineStream(
       bars: Dataset[StreamBar], cfg: PnlConfig,
       watermarkDelay: String = "2 hours",
-      evictAfterMs: Long = DefaultEvictAfterMs): Dataset[StreamPoint] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val streaming = bars.isStreaming
-    orderedBySymbolTime(bars, watermarkDelay)
-      .flatMapGroupsWithState[BookState, StreamPoint](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (symbol, it, state: GroupState[BookState]) =>
-          runSymbolBatch(cfg, trackTrades = false, streaming, evictAfterMs, it, state) {
-            (_, b, mtm) => Iterator.single(StreamPoint(symbol, b.ts_us, b.event_id, mtm))
-          }(_ => Iterator.empty)
-      }
-  }
+      evictAfterMs: Long = DefaultEvictAfterMs): Dataset[StreamPoint] =
+    mtmStream(bars, cfg, watermarkDelay, evictAfterMs, timeline = true)(
+      r => StreamPoint(r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(6)))(
+      Encoders.product[StreamPoint])
 
   /** The trade-blotter twin of [[mtmTimelineStream]]: each micro-batch
-    * emits the trades CLOSED by its bars (signal/ROI/stop-loss), with
-    * the same fee-included pnl_norm as the batch blotter
-    * ([[graft.core.BookTrade.closedPnlNorm]]). Open positions checkpoint
-    * through GroupState and surface once closed — or force-closed as
-    * EVICTED rows when the symbol's state is dropped after
-    * `evictAfterMs` of event-time idleness ([[evictFlush]]), the
-    * append-mode analogue of the batch blotter's OPEN flush.
+    * emits the trades CLOSED by its bars (signal/ROI/stop-loss) as the
+    * batch blotter's rows, bit for bit. Open positions are carried in the
+    * group state and surface once closed — or force-closed as EVICTED
+    * rows at the symbol's last bar when its state is dropped after
+    * `evictAfterMs` of event-time idleness, the append-mode analogue of
+    * the batch blotter's OPEN flush.
     */
   def mtmBlotterStream(
       bars: Dataset[StreamBar], cfg: PnlConfig,
       watermarkDelay: String = "2 hours",
-      evictAfterMs: Long = DefaultEvictAfterMs): Dataset[StreamTrade] = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val streaming = bars.isStreaming
-    orderedBySymbolTime(bars, watermarkDelay)
-      .flatMapGroupsWithState[BookState, StreamTrade](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (symbol, it, state: GroupState[BookState]) =>
-          runSymbolBatch(cfg, trackTrades = true, streaming, evictAfterMs, it, state) {
-            (book, _, _) =>
-              book.drainTrades().map { t =>
-                val pnlNorm = BookTrade.closedPnlNorm(t, cfg.feeRate)
-                StreamTrade(symbol, if (t.isLong) "LONG" else "SHORT",
-                  t.entryUs, t.entryPrice, t.exitUs, t.exitPrice,
-                  pnlNorm, pnlNorm * t.entryPrice, t.reason)
-              }
-          }(evictFlush(cfg, symbol))
-      }
-  }
+      evictAfterMs: Long = DefaultEvictAfterMs): Dataset[StreamTrade] =
+    mtmStream(bars, cfg, watermarkDelay, evictAfterMs, timeline = false)(r =>
+      StreamTrade(r.getLong(0), r.getUTF8String(1).toString, r.getLong(2), r.getDouble(3),
+        r.getLong(4), r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getUTF8String(8).toString))(
+      Encoders.product[StreamTrade])
 
   /** Streaming as-of join input: the tagged union the batch operator
     * ([[graft.operators.AsofJoin]]) builds internally, made explicit —
@@ -360,7 +310,7 @@ object StreamingJobs {
     * updates the carry BEFORE the left row reads it (ties include
     * equality, as in `ON l.ts >= r.ts`).
     *
-    * Contracts, mirroring [[runSymbolBatch]]: (1) per-key in-order
+    * Contracts, mirroring [[mtmStream]]: (1) per-key in-order
     * arrival ACROSS batches (the watermark + per-batch sort orders
     * within a batch); rows at-or-under the carry's per-side
     * (ts_us, event_id) high-waters — cross-batch disorder or

@@ -31,6 +31,10 @@ class StaleStoreSpec extends AnyFunSuite {
         val r = MtmRunner.calculate(bars)
         Seq(r.timeline, r.trades, r.summary)
       }),
+      ("runSliced", () => {
+        val (timeline, blotter, summary) = MtmEngine.runSliced(bars, graft.core.PnlConfig.default, 3)
+        Seq(timeline, blotter, summary)
+      }),
       ("cleanCorpus", () => Seq(CorpusPipeline.cleanCorpus(docs))),
       ("minhashLshPairs", () => Seq(Dedup.minhashLshPairs(docs))))
     for ((name, build) <- surfaces) {

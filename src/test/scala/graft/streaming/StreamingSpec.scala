@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{Sessions, Tables}
 import graft.core.PnlConfig
-import graft.operators.{Analytics, MtmEngine}
+import graft.operators.{Analytics, MtmEngine, MtmRunner}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -16,6 +16,34 @@ class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.local("4")
   private val sfDir = "/root/testdata/sf0.001"
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** sf0.001's bars as stream input, in (ts_us, event_id) order. */
+  private def streamBars(): Array[StreamingJobs.StreamBar] =
+    MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+      .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
+      .orderBy("ts_us", "event_id")
+      .collect()
+      .map(r => StreamingJobs.StreamBar(
+        r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4), r.getInt(5)))
+
+  /** Every field of each trade, doubles as raw bits, as a multiset. */
+  private def tradeBag(trades: Seq[StreamingJobs.StreamTrade]) =
+    trades.map(t => (t.symbol, t.direction, t.entry_ts_us, bits(t.entry_price), t.exit_ts_us,
+        bits(t.exit_price), bits(t.pnl_norm), bits(t.pnl), t.close_reason))
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+
+  /** `MtmEngine.blotterQuery`'s closed rows on sf0.001, as stream trades. */
+  private def batchClosed(cfg: PnlConfig): Seq[StreamingJobs.StreamTrade] = {
+    import spark.implicits._
+    MtmEngine.blotterQuery(MtmEngine.barsFromEvents(Tables.events(spark, sfDir)), cfg)
+      .filter(col("is_closed"))
+      .select(col("symbol"), col("direction"), unix_micros(col("entry_ts")).as("entry_ts_us"),
+        col("entry_price"), unix_micros(col("exit_ts")).as("exit_ts_us"), col("exit_price"),
+        col("pnl_norm"), col("pnl"), col("close_reason"))
+      .as[StreamingJobs.StreamTrade].collect().toSeq
+  }
 
   test("#29 watermarked tumbling agg matches the batch twin on closed windows") {
     import spark.implicits._
@@ -52,12 +80,7 @@ class StreamingSpec extends AnyFunSuite {
   test("#30 streaming blotter matches the batch blotter's closed trades") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
-      .orderBy("ts_us", "event_id")
-      .collect()
-      .map(r => StreamingJobs.StreamBar(
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4), r.getInt(5)))
+    val bars = streamBars()
     val cfg = PnlConfig(
       roi = Map(0 -> 0.2, 60 -> 0.1), stoploss = -0.15,
       enableShortPosition = true, maxPositionPerSymbol = 2, feeRate = 0.001)
@@ -69,18 +92,9 @@ class StreamingSpec extends AnyFunSuite {
         stream.addData(chunk.toSeq); q.processAllAvailable()
       }
     } finally q.stop()
-    // multiset compare on fully-identifying closed-trade tuples
-    def bag(rows: Array[(Long, String, Long, Long, Double, String)]) =
-      rows.groupBy(identity).map { case (k, v) => k -> v.length }
-    // StreamTrade field order: …, pnl_norm(6), pnl(7), close_reason(8)
-    val got = bag(spark.table("blotterstream").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4),
-        r.getDouble(6), r.getString(8))))
-    val exp = bag(MtmEngine.blotter(
-        MtmEngine.barsFromEvents(Tables.events(spark, sfDir)), cfg)
-      .filter(col("is_closed")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4),
-        r.getDouble(6), r.getString(7))))
+    // every field, bit for bit: the stream runs the batch walk
+    val got = tradeBag(spark.table("blotterstream").as[StreamingJobs.StreamTrade].collect().toSeq)
+    val exp = tradeBag(batchClosed(cfg))
     assert(exp.nonEmpty && got == exp)
   }
 
@@ -367,6 +381,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(open.entry_ts_us == t0 + 2 * us && open.entry_price == 120.0,
       "the open position must flush through the eviction path in batch mode")
     assert(got.exists(_.close_reason == "SIGNAL"))
+    // on real bars: the EVICTED rows are calculate's OPEN rows, closed at
+    // their symbol's last bar
+    val cfg = PnlConfig(enableShortPosition = true, maxPositionPerSymbol = 3)
+    val real = streamBars()
+    val evicted = StreamingJobs.mtmBlotterStream(real.toSeq.toDS(), cfg).collect()
+      .filter(_.close_reason == "EVICTED")
+    val stillOpen = MtmRunner.calculate(MtmEngine.barsFromEvents(Tables.events(spark, sfDir)), cfg)
+      .trades.filter(!col("is_closed"))
+      .select(col("symbol"), col("direction"), unix_micros(col("entry_ts")), col("entry_price"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), bits(r.getDouble(3))))
+    assert(stillOpen.nonEmpty, "premise: some position is still open at the end")
+    def bag[K](ks: Seq[K]) = ks.groupBy(identity).map { case (k, v) => k -> v.length }
+    assert(bag(evicted.toSeq.map(t => (t.symbol, t.direction, t.entry_ts_us, bits(t.entry_price))))
+      == bag(stillOpen.toSeq))
+    val lastBar = real.groupBy(_.symbol).map { case (s, bs) => s -> bs.last }
+    evicted.foreach { t =>
+      val b = lastBar(t.symbol)
+      assert(t.exit_ts_us == b.ts_us && bits(t.exit_price) == bits(b.close), s"$t vs last bar $b")
+    }
   }
 
   test("#30 timeline stream restarts from a flat book after eviction") {
@@ -399,12 +432,7 @@ class StreamingSpec extends AnyFunSuite {
   test("#30 streaming blotter parity holds across engine configs and chunkings") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
-      .orderBy("ts_us", "event_id")
-      .collect()
-      .map(r => StreamingJobs.StreamBar(
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4), r.getInt(5)))
+    val bars = streamBars()
     val trials = Seq(
       ("fees_tax", PnlConfig(feeRate = 0.001, laidBackTax = 0.0001), 2),
       ("lifo_maxpos", PnlConfig(enableShortPosition = true, maxPositionPerSymbol = 3,
@@ -420,18 +448,50 @@ class StreamingSpec extends AnyFunSuite {
           stream.addData(chunk.toSeq); q.processAllAvailable()
         }
       } finally q.stop()
-      def bag(rows: Array[(Long, String, Long, Long, Double, String)]) =
-        rows.groupBy(identity).map { case (k, v) => k -> v.length }
-      val got = bag(spark.table(s"bs$ti").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4),
-          r.getDouble(6), r.getString(8))))
-      val exp = bag(MtmEngine.blotter(
-          MtmEngine.barsFromEvents(Tables.events(spark, sfDir)), cfg)
-        .filter(col("is_closed")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4),
-          r.getDouble(6), r.getString(7))))
+      val got = tradeBag(spark.table(s"bs$ti").as[StreamingJobs.StreamTrade].collect().toSeq)
+      val exp = tradeBag(batchClosed(cfg))
       assert(exp.nonEmpty && got == exp, s"trial $name ($nChunks chunks) diverged")
     }
+  }
+
+  test("#30 blotter stream restarted on its checkpoint equals an uninterrupted run") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    import StreamingJobs.{StreamBar, StreamTrade}
+    val bars = streamBars()
+    val cfg = PnlConfig(roi = Map(0 -> 0.15, 120 -> 0.05), stoploss = -0.1,
+      enableShortPosition = true, maxPositionPerSymbol = 3, feeRate = 0.0005)
+    val chunks = bars.grouped(bars.length / 6 + 1).map(_.toSeq).toSeq
+    // a symbol's bars are ~10 h apart on average: at a 6 h horizon some
+    // symbols are evicted at every batch, so timeouts cross the restart
+    // as well as carries
+    val evictMs = 6L * 3600 * 1000
+    /** Runs `parts` as consecutive queries on one checkpoint; returns the
+      * output and its length after each part.
+      */
+    def run(tag: String, parts: Seq[Seq[Seq[StreamBar]]]): (Seq[StreamTrade], Seq[Int]) = {
+      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_restart_$tag").toString
+      val stream = MemoryStream[StreamBar]
+      val out = scala.collection.mutable.ArrayBuffer.empty[StreamTrade]
+      val sink: (org.apache.spark.sql.Dataset[StreamTrade], Long) => Unit =
+        (ds, _) => out ++= ds.collect()
+      val sizes = parts.map { part =>
+        val q = StreamingJobs.mtmBlotterStream(stream.toDS(), cfg, "0 seconds", evictMs)
+          .writeStream.option("checkpointLocation", ckpt).foreachBatch(sink).start()
+        try part.foreach { c => stream.addData(c); q.processAllAvailable() } finally q.stop()
+        out.length
+      }
+      (out.toSeq, sizes)
+    }
+    val (whole, _) = run("whole", Seq(chunks))
+    val (restarted, sizes) = run("split", Seq(chunks.take(3), chunks.drop(3)))
+    assert(whole.exists(_.close_reason == "EVICTED"), "premise: some symbol is evicted")
+    // the restarted query closed positions opened before the restart: the
+    // book came back through the state store
+    val restartUs = chunks(3).head.ts_us
+    assert(restarted.drop(sizes.head).exists(_.entry_ts_us < restartUs),
+      "no trade crossed the restart")
+    assert(tradeBag(restarted) == tradeBag(whole))
   }
 
   test("stratified sampling and split assignment run unchanged on streams") {
@@ -543,12 +603,7 @@ class StreamingSpec extends AnyFunSuite {
   test("#30 flatMapGroupsWithState MTM engine matches the batch engine") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
-      .orderBy("ts_us", "event_id")
-      .collect()
-      .map(r => StreamingJobs.StreamBar(
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4), r.getInt(5)))
+    val bars = streamBars()
     val cfg = PnlConfig(
       roi = Map(0 -> 0.2, 60 -> 0.1), stoploss = -0.15, enableShortPosition = true)
     val stream = MemoryStream[StreamingJobs.StreamBar]
@@ -567,8 +622,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(6)).toMap
     assert(exp.nonEmpty && got.size == exp.size)
     exp.foreach { case (k, v) =>
-      assert(got.contains(k) && math.abs(got(k) - v) <= 1e-12 * math.max(1.0, math.abs(v)),
-        s"bar $k: stream ${got.get(k)} vs batch $v")
+      assert(got.contains(k) && bits(got(k)) == bits(v), s"bar $k: stream ${got.get(k)} vs batch $v")
     }
   }
 
