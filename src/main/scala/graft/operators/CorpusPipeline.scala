@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object CorpusPipeline {
 
-  /** The staged pipeline, built once: each stage output is materialized
-    * EAGERLY (localCheckpoint) because every stage has ≥2 consumers —
-    * the next stage plus the final/report reads — and those consumers
+  /** The staged pipeline, built once: the exact-dedup stage's output is
+    * materialized EAGERLY (localCheckpoint) because it has ≥2 consumers
+    * — the near-dup stage plus the final/report reads — and those consumers
     * are independent stages of the SAME downstream job: a lazy
     * checkpoint only stores partitions as whichever consumer's tasks
     * compute them first, so concurrent consumers race the block store
@@ -36,27 +36,48 @@ object CorpusPipeline {
     * jobs it fronts are the same work the first action paid anyway.
     * This operator is in the README's "Eager construction" class —
     * build once and reuse, never construct in a loop.
-    * Callers therefore get an EAGER-construction surface (two Spark
-    * jobs run inside cleanCorpus/stageReport before any action) —
-    * build once and reuse, as with Decontaminate.flagged.
+    * Callers therefore get an EAGER-construction surface (Spark jobs
+    * run inside cleanCorpus/stageReport before any action) — build
+    * once and reuse, as with Decontaminate.flagged.
+    *
+    * Stage 1 has one consumer, stage 2's lineage, so it is not stored:
+    * it runs inside stage 2's checkpoint job, fused with the
+    * fingerprint window's map side. `nScored` reads its row count as
+    * observed there (stageReport's quality-gate row).
     */
-  private final case class Stages(scored: DataFrame, canonical: DataFrame, cleaned: DataFrame)
+  private final case class Stages(nScored: () => Long, canonical: DataFrame, cleaned: DataFrame)
 
-  /** @param needScored whether the caller reads `Stages.scored` as its
-    *   own frame (stageReport's quality-gate count). cleanCorpus does
-    *   NOT — its only consumer of stage 1 is stage 2's lineage — so the
-    *   scored checkpoint there was one full materialization job whose
-    *   blocks were read exactly once, by the very next job (r20, guide
-    *   §1.2: don't store what has a single consumer). With it elided,
-    *   the kernel chain (redact → gopher → quality) still evaluates
-    *   exactly once — inside stage 2's eager checkpoint job, fused with
-    *   the fingerprint window's exchange — and stage 2's checkpoint
-    *   remains the multi-consumer barrier it always was.
+  /** Stage 1, shared by [[build]] and
+    * `StreamingJobs.corpusIngestStream`: optional PII redaction, then
+    * the optional Gopher-rules gate and the quality gate, then
+    * `quality_score`. Returns `docs`' columns, `text` redacted when
+    * `redactPii`, plus `quality_score`, for the rows that pass.
+    *
+    * Each kernel runs once per row. Redaction is a `Project`. The
+    * [[graft.functions.TextStats]] and [[graft.functions.GopherStats]]
+    * structs come out of [[EvalOnce]], and the gates and the score read
+    * those generated columns. As a redact → filter → filter → project
+    * chain, the pushed-down filters ran `pii_redact` 27 times,
+    * `gopher_stats` 19 times and `text_stats` 8 times a row.
     */
+  private[graft] def qualityGated(
+      docs: DataFrame, minQuality: Double, redactPii: Boolean, gopherRules: Boolean): DataFrame = {
+    val redacted =
+      if (!redactPii) docs
+      else docs.withColumn("text", graft.functions.PiiRedact.redacted(col("text")).getField("clean"))
+    val text = col("text")
+    val stats =
+      TextOps.statsOf(text).as("_ts") +:
+        (if (gopherRules) Seq(graft.functions.GopherStats.stats(text).as("_gs")) else Nil)
+    val scored = EvalOnce.withColumns(redacted, stats: _*)
+      .withColumn("quality_score", TextOps.qualityFrom(text, col("_ts")))
+      .filter(col("quality_score") >= minQuality)
+    (if (gopherRules) scored.filter(TextOps.gopherKeepOf(col("_gs"))) else scored).drop("_ts", "_gs")
+  }
+
   private def build(
       documents: DataFrame, minQuality: Double, jaccardThreshold: Double,
-      redactPii: Boolean = false, gopherRules: Boolean = false,
-      needScored: Boolean = true): Stages = {
+      redactPii: Boolean = false, gopherRules: Boolean = false): Stages = {
     // CPU-spread guard (r19, shared [[CpuSpread]]): stage 1 fuses the
     // round's heaviest per-row kernels (redaction, Gopher stats,
     // quality, fingerprint) into the scan stage — on an unsplittable
@@ -66,35 +87,21 @@ object CorpusPipeline {
     // buys full-core kernels; a many-file corpus at scale takes the
     // no-op branch (no exchange added). Row placement only — every
     // downstream stage keys by content.
-    val spread = CpuSpread.spread(documents)
-    // 0. optional PII redaction — a second projection fused into the
-    // same scan stage (no exchange): redact BEFORE the quality gate so
-    // scoring and both dedup stages see the text that would actually
-    // ship. Off by default; the standalone q_redact_pii query gates the
-    // kernel itself.
-    val redacted =
-      if (!redactPii) spread
-      else spread.select(
-        col("doc_id"),
-        graft.functions.PiiRedact.redacted(col("text")).getField("clean").as("text"))
-    // 0b. optional Gopher-rules gate — a stateless filter in the same
-    // scan stage (one fused GopherStats pass); off by default, the
-    // standalone q_quality_filter_gopher query gates the rules. The
-    // streaming twin (StreamingJobs.corpusIngestStream) composes the
-    // identical expressions behind the same flags.
-    val input =
-      if (!gopherRules) redacted
-      else redacted.filter(TextOps.gopherKeepExpr(col("text")))
-    // 1. per-row quality gate — a pure projection + filter inside the
-    // scan stage (qualityExpr attaches the score without the join a
-    // (doc_id → score) lookup would need)
-    val scoredPlan = input
-      .select(col("doc_id"), col("text"),
-        TextOps.qualityExpr(col("text")).as("quality_score"))
-      .filter(col("quality_score") >= minQuality)
-    // the stage-1 checkpoint exists for stageReport's second consumer;
-    // with one consumer (cleanCorpus) it is elided — see `needScored`
-    val scored = if (needScored) scoredPlan.localCheckpoint(true) else scoredPlan
+    val spread = CpuSpread.spread(documents).select("doc_id", "text")
+    // 0-1. redaction BEFORE the gates, so scoring and both dedup stages
+    // see the text that would actually ship; both flags are off by
+    // default (the standalone q_redact_pii and q_quality_filter_gopher
+    // queries gate the kernels themselves)
+    val gated = qualityGated(spread, minQuality, redactPii, gopherRules)
+    val scoredObs = Observation()
+    val scored = gated.observe(scoredObs, count(lit(1)).as("n"))
+    val nScored = () =>
+      Observed.metrics(scoredObs, "CorpusPipeline.stageReport", "n").get("n") match {
+        case Some(n: Long) => n
+        // no observation node ran: the optimizer pruned stage 1 as
+        // provably empty (a limit(0) input) — count the unobserved twin
+        case _ => gated.count()
+      }
     // 2. exact dedup — keep the canonical (min doc_id) of each group.
     // The min-id window rides the single fingerprint shuffle; joining
     // exactDups back by doc_id would move the text a second time.
@@ -107,7 +114,7 @@ object CorpusPipeline {
     // 3. near-dup dedup — drop the higher doc_id of each verified pair
     val dropIds = Dedup.minhashLshPairs(canonical, jaccardThreshold)
       .select(col("doc_id_b").as("doc_id")).distinct()
-    Stages(scored, canonical, canonical.join(dropIds, Seq("doc_id"), "left_anti"))
+    Stages(nScored, canonical, canonical.join(dropIds, Seq("doc_id"), "left_anti"))
   }
 
   /** Cleaned corpus: (doc_id, text, quality_score) for documents that
@@ -128,15 +135,15 @@ object CorpusPipeline {
       jaccardThreshold: Double = 0.8,
       redactPii: Boolean = false,
       gopherRules: Boolean = false): DataFrame =
-    build(documents, minQuality, jaccardThreshold, redactPii, gopherRules,
-      needScored = false).cleaned
+    build(documents, minQuality, jaccardThreshold, redactPii, gopherRules).cleaned
 
   /** Per-stage survivor counts — the pipeline's audit trail (silent
     * shrinkage is how corpus bugs ship). Shares the staged build with
     * [[cleanCorpus]], so the report always describes the pipeline that
-    * actually runs. The four counts are a UNION of global aggregates —
-    * one Spark job over the checkpointed stages when the consumer
-    * materializes it, not four sequential driver actions (global agg,
+    * actually runs. The quality-gate count is observed on stage 1 while
+    * the build's checkpoint job runs it; the other three counts are a
+    * UNION of global aggregates — one Spark job over the input and the
+    * checkpointed stages when the consumer materializes it (global agg,
     * not groupBy(lit): an empty stage must still report a 0 row).
     */
   def stageReport(
@@ -144,14 +151,14 @@ object CorpusPipeline {
       minQuality: Double = 0.5,
       jaccardThreshold: Double = 0.8): DataFrame = {
     val st = build(documents, minQuality, jaccardThreshold)
+    val nScored = st.nScored()
+    def counted(name: String, df: DataFrame): DataFrame =
+      df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"), col("n_docs"))
     Seq(
-      ("input", documents),
-      ("quality_gate", st.scored),
-      ("exact_dedup", st.canonical),
-      ("near_dedup", st.cleaned))
-      .map { case (name, df) =>
-        df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"), col("n_docs"))
-      }
+      counted("input", documents),
+      documents.sparkSession.range(1).select(lit("quality_gate").as("stage"), lit(nScored).as("n_docs")),
+      counted("exact_dedup", st.canonical),
+      counted("near_dedup", st.cleaned))
       .reduce(_ unionByName _)
   }
 }

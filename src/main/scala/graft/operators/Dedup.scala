@@ -456,13 +456,13 @@ object Dedup {
       .groupBy("rid_a", "rid_b")
       .agg(count(lit(1)).as("n_pref"))
       .drop("n_pref")
-    val pairs = cand
-      .join(perDocM.select(
-        col("doc_id").as("rid_a"), col("hs").as("hs_a"), col("n").as("na")), "rid_a")
-      .join(perDocM.select(
-        col("doc_id").as("rid_b"), col("hs").as("hs_b"), col("n").as("nb")), "rid_b")
-      .withColumn("n_common",
-        graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")))
+    val pairs = EvalOnce.withColumns(
+        cand
+          .join(perDocM.select(
+            col("doc_id").as("rid_a"), col("hs").as("hs_a"), col("n").as("na")), "rid_a")
+          .join(perDocM.select(
+            col("doc_id").as("rid_b"), col("hs").as("hs_b"), col("n").as("nb")), "rid_b"),
+        graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")).as("n_common"))
       .withColumn(
         "jaccard",
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
@@ -615,11 +615,11 @@ object Dedup {
         .join(broadcast(cands.select(col(idCol).as("doc_id")).distinct()),
           Seq("doc_id"), "leftsemi")
         .select(col("doc_id").as(idCol), col("hs").as(hsCol), col("n").as(nCol))
-    cands
-      .join(candSide("doc_id_a", "hs_a", "na"), "doc_id_a")
-      .join(candSide("doc_id_b", "hs_b", "nb"), "doc_id_b")
-      .withColumn("n_common",
-        graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")))
+    EvalOnce.withColumns(
+        cands
+          .join(candSide("doc_id_a", "hs_a", "na"), "doc_id_a")
+          .join(candSide("doc_id_b", "hs_b", "nb"), "doc_id_b"),
+        graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")).as("n_common"))
       .withColumn(
         "jaccard",
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
@@ -725,11 +725,11 @@ object Dedup {
     */
   private def cosineVerify(
       candsWithA: DataFrame, e: DataFrame, threshold: Double): DataFrame =
-    candsWithA
-      .join(e.select(col("vec_id").as("vec_id_b"), col("v").as("vb"), col("norm").as("nb")),
-        "vec_id_b")
-      .withColumn(
-        "cosine", Similarity.cosine(col("va"), col("vb"), col("na"), col("nb")))
+    EvalOnce.withColumns(
+        candsWithA.join(
+          e.select(col("vec_id").as("vec_id_b"), col("v").as("vb"), col("norm").as("nb")),
+          "vec_id_b"),
+        Similarity.cosine(col("va"), col("vb"), col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .select("vec_id_a", "vec_id_b", "cosine")
 

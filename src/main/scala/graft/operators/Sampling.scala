@@ -45,7 +45,7 @@ object Sampling {
   private def keyed(events: DataFrame): DataFrame = {
     graft.functions.RollingHash.register(events.sparkSession)
     graft.functions.FibFinish.register(events.sparkSession)
-    events.withColumn("sample_key", sampleKey(col("event_id")))
+    EvalOnce.withColumns(events, sampleKey(col("event_id")).as("sample_key"))
   }
 
   /** Per-stratum Bernoulli downsampling: keep a row iff its sample key
@@ -192,8 +192,7 @@ object Sampling {
   def applyMixture(documents: DataFrame, thresholds: DataFrame): DataFrame = {
     graft.functions.RollingHash.register(documents.sparkSession)
     graft.functions.FibFinish.register(documents.sparkSession)
-    documents
-      .select(col("doc_id"), col("source"), col("lang"),
+    EvalOnce.withColumns(documents.select(col("doc_id"), col("source"), col("lang")),
         sampleKey(col("doc_id")).as("sample_key"))
       .join(broadcast(thresholds), "source")
       .filter(col("sample_key") < col("thr"))

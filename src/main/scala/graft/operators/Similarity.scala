@@ -593,10 +593,9 @@ object Similarity {
   private def centroidScores(v: Column, centroids: Seq[Seq[Double]]): Column =
     CentroidScores.scores(v, centroids)
 
-  private def nearestCentroid(v: Column, centroids: Seq[Seq[Double]]): Column = {
-    val scores = centroidScores(v, centroids)
+  /** The nearest centroid's index: the position of the highest score. */
+  private def nearestCentroid(scores: Column): Column =
     (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
 
   /** SURVEY #27 (scale-path sibling): IVF approximate top-k. The corpus
     * partitions into `nCentroids` Voronoi cells; each query probes its
@@ -638,7 +637,9 @@ object Similarity {
       embeddings, nCentroids, lloydIters,
       nRows = Observed.metrics(nObs, "Similarity.annIvfTopK", "n")("n").asInstanceOf[Long],
       normed = Some(e))
-    val corpus = e.withColumn("cluster", nearestCentroid(col("v"), centroids))
+    val corpus = EvalOnce.withColumns(e, centroidScores(col("v"), centroids).as("scores"))
+      .withColumn("cluster", nearestCentroid(col("scores")))
+      .drop("scores")
     // nProbe nearest cells per query: sort (−score, idx) structs, slice
     val probes = {
       val scored = transform(

@@ -27,11 +27,13 @@ object TextOps {
   private val EnStopWords = Seq("the", "a", "and", "of", "to", "is", "in", "that", "it", "on")
 
   /** The fused per-row count kernel (ws tokens, subtokens, punct chars,
-    * EnStop hits in one pass — [[graft.functions.TextStats]]); equal
-    * `statsOf` calls collapse via codegen subexpression elimination, so
-    * a projection computing every ratio still scans the text once.
+    * EnStop hits in one pass — [[graft.functions.TextStats]]). Equal
+    * `statsOf` calls collapse only inside a `Project`, where codegen
+    * eliminates common subexpressions; a `Filter` evaluates every copy.
+    * So a score that gates rows is computed from ONE carried struct
+    * ([[qualityFrom]]), as CorpusPipeline's stage 1 does.
     */
-  private def statsOf(text: Column): Column =
+  private[graft] def statsOf(text: Column): Column =
     graft.functions.TextStats.stats(text, EnStopWords)
 
   /** SURVEY #17: whitespace tokens + BPE-ish subtokens (letter runs,
@@ -46,38 +48,43 @@ object TextOps {
       statsOf(col("text")).getField("n_ws_tokens").as("n_ws_tokens"),
       statsOf(col("text")).getField("n_subtokens").as("n_subtokens"))
 
-  private def punctRatioExpr(text: Column): Column = {
+  // the score arithmetic over (punct, ws-token, stop-hit) counts — one
+  // copy shared by the fused kernel and the regex twin
+  private def punctRatio(text: Column, nPunct: Column): Column = {
     val nChars = length(text).cast("bigint")
-    when(nChars === 0, lit(0.0))
-      .otherwise(statsOf(text).getField("n_punct").cast("double") / nChars.cast("double"))
+    when(nChars === 0, lit(0.0)).otherwise(nPunct.cast("double") / nChars.cast("double"))
   }
 
-  private def stopRatioExpr(text: Column): Column = {
-    val nWs = statsOf(text).getField("n_ws_tokens")
-    when(nWs === 0, lit(0.0))
-      .otherwise(statsOf(text).getField("n_stop").cast("double") / nWs.cast("double"))
+  private def stopRatio(nWs: Column, nStop: Column): Column =
+    when(nWs === 0, lit(0.0)).otherwise(nStop.cast("double") / nWs.cast("double"))
+
+  private def quality(text: Column, nPunct: Column, nWs: Column, nStop: Column): Column = {
+    val lenScore = least(lit(1.0), length(text).cast("bigint").cast("double") / lit(500.0))
+    lit(0.4) * lenScore + lit(0.3) * (lit(1.0) - punctRatio(text, nPunct)) +
+      lit(0.3) * least(lit(1.0), stopRatio(nWs, nStop) * lit(5.0))
   }
+
+  /** The quality score from `text` and its [[statsOf]] struct `ts`. */
+  private[graft] def qualityFrom(text: Column, ts: Column): Column =
+    quality(text, ts.getField("n_punct"), ts.getField("n_ws_tokens"), ts.getField("n_stop"))
 
   /** The quality score as a single column expression over raw text —
-    * pipelines attach it with a projection instead of a join
-    * (CorpusPipeline's stage 1 stays shuffle-free this way).
+    * pipelines attach it with a projection instead of a join.
     */
-  def qualityExpr(text: Column): Column = {
-    val lenScore = least(lit(1.0), length(text).cast("bigint").cast("double") / lit(500.0))
-    lit(0.4) * lenScore + lit(0.3) * (lit(1.0) - punctRatioExpr(text)) +
-      lit(0.3) * least(lit(1.0), stopRatioExpr(text) * lit(5.0))
-  }
+  def qualityExpr(text: Column): Column = qualityFrom(text, statsOf(text))
 
   /** SURVEY #18: quality score from length, punctuation and stopword
     * ratios (the standard LLM-corpus heuristics family).
     */
-  def qualityScore(documents: DataFrame): DataFrame =
+  def qualityScore(documents: DataFrame): DataFrame = {
+    val ts = statsOf(col("text"))
     documents.select(
       col("doc_id"),
       length(col("text")).cast("bigint").as("n_chars"),
-      punctRatioExpr(col("text")).as("punct_ratio"),
-      stopRatioExpr(col("text")).as("stop_ratio"),
-      qualityExpr(col("text")).as("quality_score"))
+      punctRatio(col("text"), ts.getField("n_punct")).as("punct_ratio"),
+      stopRatio(ts.getField("n_ws_tokens"), ts.getField("n_stop")).as("stop_ratio"),
+      qualityFrom(col("text"), ts).as("quality_score"))
+  }
 
   // ---- regex formulations: the DuckDB oracles' literal shapes, kept as
   // parity gates for the fused TextStats kernel (TextStatsSpec) ----
@@ -89,30 +96,17 @@ object TextOps {
       nMatches(col("text"), "\\S+").as("n_ws_tokens"),
       nMatches(col("text"), "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]").as("n_subtokens"))
 
-  private def punctRatioRegex(text: Column): Column = {
-    val nChars = length(text).cast("bigint")
-    when(nChars === 0, lit(0.0))
-      .otherwise(nMatches(text, "[^A-Za-z0-9\\s]").cast("double") / nChars.cast("double"))
-  }
-
-  private def stopRatioRegex(text: Column): Column = {
-    val nWs = nMatches(text, "\\S+")
-    when(nWs === 0, lit(0.0))
-      .otherwise(nMatches(lower(text), EnStop).cast("double") / nWs.cast("double"))
-  }
-
   private[graft] def qualityScoreRegex(documents: DataFrame): DataFrame = {
-    def qex(text: Column): Column = {
-      val lenScore = least(lit(1.0), length(text).cast("bigint").cast("double") / lit(500.0))
-      lit(0.4) * lenScore + lit(0.3) * (lit(1.0) - punctRatioRegex(text)) +
-        lit(0.3) * least(lit(1.0), stopRatioRegex(text) * lit(5.0))
-    }
+    val text = col("text")
+    val nPunct = nMatches(text, "[^A-Za-z0-9\\s]")
+    val nWs = nMatches(text, "\\S+")
+    val nStop = nMatches(lower(text), EnStop)
     documents.select(
       col("doc_id"),
-      length(col("text")).cast("bigint").as("n_chars"),
-      punctRatioRegex(col("text")).as("punct_ratio"),
-      stopRatioRegex(col("text")).as("stop_ratio"),
-      qex(col("text")).as("quality_score"))
+      length(text).cast("bigint").as("n_chars"),
+      punctRatio(text, nPunct).as("punct_ratio"),
+      stopRatio(nWs, nStop).as("stop_ratio"),
+      quality(text, nPunct, nWs, nStop).as("quality_score"))
   }
 
   /** Per-language stopword regexes (ASCII word-boundary; zh uses common
@@ -397,61 +391,53 @@ object TextOps {
   private def gopherRatio(num: Column, den: Column): Column =
     when(den === 0L, lit(0.0)).otherwise(num.cast("double") / den.cast("double"))
 
-  /** The A1.1 rule conjunction over the derived ratio columns — the one
-    * place the thresholds are applied; [[gopherProject]] (the audited
-    * per-rule projection) and [[gopherKeepExpr]] (the single-column
-    * streaming/filter form) both route through it.
+  /** The A1.1 rule inputs derived from a `gs` struct of the eight
+    * [[graft.functions.GopherStats]] counts, as (name, column) in output
+    * order. Single divisions of exact integers: bit-identical across
+    * engines, no quantization needed.
     */
-  private def gopherKeepFrom(
-      nWords: Column, meanWordLen: Column, alphaRatio: Column, symbolRatio: Column,
-      bulletRatio: Column, ellipsisRatio: Column, nStopDistinct: Column): Column =
-    nWords >= GopherMinWords && nWords <= GopherMaxWords &&
-      meanWordLen >= GopherMinMeanWordLen &&
-      meanWordLen <= GopherMaxMeanWordLen &&
-      symbolRatio < GopherMaxSymbolRatio &&
-      bulletRatio <= GopherMaxBulletRatio &&
-      ellipsisRatio <= GopherMaxEllipsisRatio &&
-      alphaRatio >= GopherMinAlphaRatio &&
-      nStopDistinct >= GopherMinStopDistinct
+  private def gopherRatios(gs: Column): Seq[(String, Column)] = Seq(
+    "n_words" -> gs.getField("n_words"),
+    "mean_word_len" -> gopherRatio(gs.getField("n_word_chars"), gs.getField("n_words")),
+    "alpha_ratio" -> gopherRatio(gs.getField("n_alpha_words"), gs.getField("n_words")),
+    "symbol_ratio" -> gopherRatio(gs.getField("n_symbols"), gs.getField("n_words")),
+    "bullet_ratio" -> gs.getField("n_bullet_lines").cast("double") / gs.getField("n_lines").cast("double"),
+    "ellipsis_ratio" -> gs.getField("n_ellipsis_lines").cast("double") / gs.getField("n_lines").cast("double"),
+    "n_stop_distinct" -> gs.getField("n_stop_distinct"))
+
+  /** The A1.1 rule conjunction over the [[gopherRatios]] columns — the
+    * one place the thresholds are applied.
+    */
+  private def gopherKeepFrom(r: Map[String, Column]): Column =
+    r("n_words") >= GopherMinWords && r("n_words") <= GopherMaxWords &&
+      r("mean_word_len") >= GopherMinMeanWordLen &&
+      r("mean_word_len") <= GopherMaxMeanWordLen &&
+      r("symbol_ratio") < GopherMaxSymbolRatio &&
+      r("bullet_ratio") <= GopherMaxBulletRatio &&
+      r("ellipsis_ratio") <= GopherMaxEllipsisRatio &&
+      r("alpha_ratio") >= GopherMinAlphaRatio &&
+      r("n_stop_distinct") >= GopherMinStopDistinct
+
+  /** The Gopher gate over a `gs` struct of GopherStats counts. */
+  private[graft] def gopherKeepOf(gs: Column): Column = gopherKeepFrom(gopherRatios(gs).toMap)
 
   /** The Gopher gate as a single boolean Column over raw text — the
     * form a stateless streaming stage (or an inline batch filter)
     * composes without reshaping the frame: one fused
     * [[graft.functions.GopherStats]] scan, the same rule arithmetic as
-    * [[qualityFilterGopher]] via [[gopherKeepFrom]].
+    * [[qualityFilterGopher]].
     */
-  def gopherKeepExpr(text: Column): Column = {
-    val gs = graft.functions.GopherStats.stats(text)
-    gopherKeepFrom(
-      gs.getField("n_words"),
-      gopherRatio(gs.getField("n_word_chars"), gs.getField("n_words")),
-      gopherRatio(gs.getField("n_alpha_words"), gs.getField("n_words")),
-      gopherRatio(gs.getField("n_symbols"), gs.getField("n_words")),
-      gs.getField("n_bullet_lines").cast("double") / gs.getField("n_lines").cast("double"),
-      gs.getField("n_ellipsis_lines").cast("double") / gs.getField("n_lines").cast("double"),
-      gs.getField("n_stop_distinct"))
-  }
+  def gopherKeepExpr(text: Column): Column = gopherKeepOf(graft.functions.GopherStats.stats(text))
 
   /** The shared stats→(ratios, keep) projection over a frame holding
     * `doc_id` and a `gs` struct with the eight GopherStats counts —
-    * both the fused kernel and the regex twin route through it, so the
-    * rule arithmetic exists once. Single divisions of exact integers:
-    * bit-identical across engines, no quantization needed.
+    * both the fused kernel and the regex twin route through it.
     */
-  private def gopherProject(withGs: DataFrame): DataFrame =
-    withGs.select(
-      col("doc_id"),
-      col("gs.n_words").as("n_words"),
-      gopherRatio(col("gs.n_word_chars"), col("gs.n_words")).as("mean_word_len"),
-      gopherRatio(col("gs.n_alpha_words"), col("gs.n_words")).as("alpha_ratio"),
-      gopherRatio(col("gs.n_symbols"), col("gs.n_words")).as("symbol_ratio"),
-      (col("gs.n_bullet_lines").cast("double") / col("gs.n_lines").cast("double")).as("bullet_ratio"),
-      (col("gs.n_ellipsis_lines").cast("double") / col("gs.n_lines").cast("double")).as("ellipsis_ratio"),
-      col("gs.n_stop_distinct").as("n_stop_distinct"))
-      .withColumn("keep",
-        gopherKeepFrom(
-          col("n_words"), col("mean_word_len"), col("alpha_ratio"), col("symbol_ratio"),
-          col("bullet_ratio"), col("ellipsis_ratio"), col("n_stop_distinct")))
+  private def gopherProject(withGs: DataFrame): DataFrame = {
+    val names = gopherRatios(col("gs")).map(_._1)
+    withGs.select(col("doc_id") +: gopherRatios(col("gs")).map { case (n, c) => c.as(n) }: _*)
+      .withColumn("keep", gopherKeepFrom(names.map(n => n -> col(n)).toMap))
+  }
 
   /** SURVEY #51: the Gopher heuristic-rules quality filter (word-count
     * bounds, mean word length, symbol-to-word ratio, bullet/ellipsis

@@ -58,22 +58,20 @@ object StreamingJobs {
 
   /** Streaming corpus ingest — the streaming twin of
     * `CorpusPipeline.cleanCorpus` stages 0-2 (LLM-pipeline SURVEY block),
-    * stage-for-stage behind the same flags: optional PII redaction
-    * (stateless [[graft.functions.PiiRedact]] projection, BEFORE scoring
-    * so every downstream stage sees the text that would ship — the batch
-    * pipeline's documented order), optional Gopher-rules gate
-    * ([[graft.operators.TextOps.gopherKeepExpr]], one fused
-    * [[graft.functions.GopherStats]] scan), the scored quality gate
-    * (fused [[graft.operators.TextOps.qualityExpr]] kernel), then
-    * exact-dedup on the canonical normalized-text fingerprint with
-    * `dropDuplicatesWithinWatermark` — dedup state is bounded by the
-    * watermark horizon instead of growing with corpus size. Contract:
-    * the first occurrence wins; a duplicate arriving within the horizon
-    * is dropped; one arriving after state expiry is re-admitted as a new
-    * document (the standard streaming-dedup tradeoff — at-most-once
-    * dedup per horizon, exact batch dedup remains `Dedup.exactDups`).
-    * The three text stages are all stateless single-scan projections /
-    * filters, so results are chunking-invariant by construction
+    * behind the same flags. Stages 0-1 are the batch pipeline's own
+    * stage-1 builder (`CorpusPipeline.qualityGated`): optional PII
+    * redaction ([[graft.functions.PiiRedact]], BEFORE scoring so every
+    * downstream stage sees the text that would ship), the optional
+    * Gopher-rules gate and the scored quality gate, each kernel run once
+    * per row. Then exact-dedup on the canonical normalized-text
+    * fingerprint with `dropDuplicatesWithinWatermark` — dedup state is
+    * bounded by the watermark horizon instead of growing with corpus
+    * size. Contract: the first occurrence wins; a duplicate arriving
+    * within the horizon is dropped; one arriving after state expiry is
+    * re-admitted as a new document (the standard streaming-dedup
+    * tradeoff — at-most-once dedup per horizon, exact batch dedup
+    * remains `Dedup.exactDups`). The text stages are stateless per-row
+    * operators, so results are chunking-invariant by construction
     * (StreamingSpec pins streamed == batch under any chunking).
     *
     * @param docs streaming frame with (ingest_ts timestamp, doc_id, text)
@@ -83,21 +81,11 @@ object StreamingJobs {
       minQuality: Double = 0.5,
       watermarkDelay: String = "2 hours",
       redactPii: Boolean = false,
-      gopherRules: Boolean = false): DataFrame = {
-    val redacted =
-      if (!redactPii) docs
-      else docs.withColumn(
-        "text", graft.functions.PiiRedact.redacted(col("text")).getField("clean"))
-    val gated =
-      if (!gopherRules) redacted
-      else redacted.filter(graft.operators.TextOps.gopherKeepExpr(col("text")))
-    gated
+      gopherRules: Boolean = false): DataFrame =
+    graft.operators.CorpusPipeline.qualityGated(docs, minQuality, redactPii, gopherRules)
       .withWatermark("ingest_ts", watermarkDelay)
-      .withColumn("quality_score", graft.operators.TextOps.qualityExpr(col("text")))
-      .filter(col("quality_score") >= minQuality)
       .withColumn("fp_md5", graft.operators.TextOps.fingerprintExpr(col("text")))
       .dropDuplicatesWithinWatermark("fp_md5")
-  }
 
   /** Engine input bar (same canonical view as the batch engine). */
   final case class StreamBar(

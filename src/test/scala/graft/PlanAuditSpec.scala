@@ -2,6 +2,11 @@ package graft
 
 import graft.core.PnlConfig
 import graft.operators._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that make these plans survive a
@@ -34,6 +39,90 @@ class PlanAuditSpec extends AnyFunSuite {
       case q: QueryStageExec => Seq(q.plan)
       case other => other.children
     }).flatMap(gatherExecuted)
+  }
+
+  /** Operators grouped by whole-stage-codegen stage: a
+    * WholeStageCodegenExec's operators down to its InputAdapters form
+    * one group; an operator outside codegen is a group of its own.
+    * Expands AQE/query-stage wrappers like [[gatherExecuted]].
+    */
+  private def codegenStages(p: SparkPlan): Seq[Seq[SparkPlan]] = {
+    def inside(q: SparkPlan): (Seq[SparkPlan], Seq[SparkPlan]) = q match {
+      case i: InputAdapter => (Nil, Seq(i.child))
+      case other =>
+        val sub = other.children.map(inside)
+        (other +: sub.flatMap(_._1), sub.flatMap(_._2))
+    }
+    p match {
+      case a: AdaptiveSparkPlanExec => codegenStages(a.executedPlan)
+      case q: QueryStageExec => codegenStages(q.plan)
+      case w: WholeStageCodegenExec =>
+        val (ops, below) = inside(w.child)
+        ops +: below.flatMap(codegenStages)
+      case other => Seq(other) +: other.children.flatMap(codegenStages)
+    }
+  }
+
+  /** Each per-row `graft.functions` kernel call in `op`, canonicalized
+    * (kernel plus its input), with its number of occurrences. Left out:
+    * `ntz_as_utc_instant`, which reinterprets one timestamp value and
+    * scans nothing — `Tables.events` applies it under every events read,
+    * so an inferred `isnotnull(ts)` or a time filter re-runs a field
+    * read, and a generator there would tax every MTM scan instead.
+    */
+  private def kernelCalls(op: SparkPlan): Map[Expression, Int] =
+    op.expressions.flatMap(_.collect {
+      case e if e.getClass.getName.startsWith("graft.functions.") &&
+          !e.isInstanceOf[AggregateFunction] &&
+          !e.isInstanceOf[graft.functions.NtzAsUtcInstant] => e.canonicalized
+    }).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** The kernel guard: within one codegen stage, a kernel over one
+    * canonical input may sit in at most one operator, and more than once
+    * only in a ProjectExec — the one operator whose codegen eliminates
+    * common subexpressions; every other copy runs again per row.
+    */
+  private def kernelRepeats(p: SparkPlan): Seq[String] =
+    codegenStages(p).flatMap { ops =>
+      val calls = ops.map(op => op -> kernelCalls(op))
+      calls.flatMap(_._2.keys).distinct.flatMap { k =>
+        val holders = calls.filter(_._2.contains(k))
+        if (holders.size > 1) Seq(s"$k in ${holders.map(_._1.nodeName).mkString(", ")}")
+        else holders.collect {
+          case (op, n) if n(k) > 1 && !op.isInstanceOf[ProjectExec] => s"$k ${n(k)}x in ${op.nodeName}"
+        }
+      }
+    }
+
+  /** The QueryExecution of every SQL action `body` runs — eager
+    * checkpoints and sizing counts as well as its collects. Listener
+    * events arrive asynchronously and in order, so a marked action after
+    * `body` closes the capture.
+    */
+  private def actionsOf(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val mark = s"end_of_capture_${System.nanoTime()}"
+    def isMark(qe: QueryExecution) = qe.analyzed.output.exists(_.name == mark)
+    import scala.jdk.CollectionConverters._
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(1).as(mark)).collect()
+      val deadline = System.nanoTime() + 60_000_000_000L
+      while (!seen.asScala.exists(isMark) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(isMark), "listener events did not arrive within 60 s")
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.filterNot(isMark).toSeq
+  }
+
+  /** How many operators of `plans` hold a call of each named kernel. */
+  private def kernelOperators(plans: Seq[SparkPlan], names: Seq[String]): Map[String, Int] = {
+    val ops = plans.flatMap(gatherExecuted)
+    names.map(n => n -> ops.count(op => kernelCalls(op).keys.exists(_.prettyName == n))).toMap
   }
 
   test("q1 pricing summary: filter and columns pushed to the scan") {
@@ -253,5 +342,60 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(exchanges <= 3,
       s"expected win shuffle + starts groupBy + at most the doc-join toks side, " +
         s"got $exchanges:\n$p2")
+  }
+
+  test("corpus stage 1 runs each text kernel once: cleanCorpus, stageReport, corpusIngestStream") {
+    // the kernels of stage 1 live in the eager checkpoint jobs' plans:
+    // the surfaces' own final plans read them as a LogicalRDD
+    val docs = TextOps.withPlantedPipeline(Tables.documents(spark, sfDir))
+    val kernels = Seq("pii_redact", "gopher_stats", "text_stats")
+    def once(redact: Boolean, gopher: Boolean) = Map(
+      "pii_redact" -> (if (redact) 1 else 0), "gopher_stats" -> (if (gopher) 1 else 0), "text_stats" -> 1)
+    val surfaces =
+      (for (redact <- Seq(false, true); gopher <- Seq(false, true)) yield
+        (s"cleanCorpus(redactPii=$redact, gopherRules=$gopher)", once(redact, gopher),
+          () => { CorpusPipeline.cleanCorpus(docs, redactPii = redact, gopherRules = gopher).collect(); () })) :+
+        (("stageReport", once(false, false), () => { CorpusPipeline.stageReport(docs).collect(); () }))
+    for ((name, want, run) <- surfaces) {
+      val plans = actionsOf(run()).map(_.executedPlan)
+      val repeats = plans.flatMap(kernelRepeats)
+      assert(repeats.isEmpty, s"$name repeats a kernel in a codegen stage:\n${repeats.mkString("\n")}")
+      assert(kernelOperators(plans, kernels) == want, s"$name:\n${plans.mkString("\n")}")
+    }
+    // the ingest stream runs the same builder
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
+    import spark.implicits._
+    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val t0 = new java.sql.Timestamp(1700000000000L)
+    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
+    // the last execution must be the data batch, not the empty batch a
+    // watermark advance runs after it
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    try {
+      val q = graft.streaming.StreamingJobs.corpusIngestStream(
+          stream.toDF().toDF("ingest_ts", "doc_id", "text"), redactPii = true, gopherRules = true)
+        .writeStream.format("memory").queryName("ingestplan").outputMode(OutputMode.Append).start()
+      try {
+        stream.addData(docs.as[(Long, String)].collect().toSeq.map { case (id, t) => (t0, id, t) })
+        q.processAllAvailable()
+        val p = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan
+        assert(kernelRepeats(p).isEmpty, s"the ingest stream repeats a kernel:\n$p")
+        assert(kernelOperators(Seq(p), kernels) == once(true, true), s"ingest stream:\n$p")
+      } finally q.stop()
+    } finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+  }
+
+  test("graft kernels repeat only inside a projection, across every SparkEntry query") {
+    // the repo-wide lint: a kernel copied into a Filter (or into two
+    // operators of one codegen stage) runs once per copy, per row
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+      actionsOf { q(spark, sfDir).collect(); () }
+        .flatMap(qe => kernelRepeats(qe.executedPlan)).map(r => s"$name: $r")
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
