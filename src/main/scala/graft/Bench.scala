@@ -77,14 +77,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * whole-window stall that inflates every run of ONE query leaves its
   * runs AGREEING at the wrong value and the within-query trigger blind
   * (this round's first re-verify side reproduced it: q_dedup_groups
-  * 9.5 s on agreeing runs vs 1.2 s steady, sentinel already noisy);
-  * (3) a stall watchdog
-  * dumps all threads (with per-thread cpu deltas between two samples)
-  * while a run exceeding 3x its reference is LIVE, and every timed run
-  * logs its /proc/stat steal delta. The hn/noisy sentinel still
-  * describes the MAIN suite as it ran (tail re-runs only lower minima;
-  * its post-suite calibration samples are taken before the tail phase
-  * so the verdict brackets exactly the window it judges).
+  * 9.5 s on agreeing runs vs 1.2 s steady, sentinel already noisy).
+  * Every timed run logs its /proc/stat steal delta. The hn/noisy
+  * sentinel still describes the MAIN suite as it ran (tail re-runs only
+  * lower minima; its post-suite calibration samples are taken before
+  * the tail phase so the verdict brackets exactly the window it judges).
   *
   * SPARK_GRAFT_BENCH_ONLY (comma-separated substrings) filters the query
   * set for local iteration; the driver never sets it.
@@ -145,42 +142,6 @@ object Bench {
     while (i < (1 << 27)) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
     calSink = x
     (System.nanoTime() - t0) / 1000000L
-  }
-
-  /** One stderr line of JIT state: per-CodeHeap used/max MB plus the
-    * JVM's cumulative compilation ms. Sampled at every query boundary
-    * (r18): the captured excursions burn 10-30x CPU on identical work
-    * with flat host calibration — the interpreted-execution signature —
-    * and code-cache exhaustion/deopt churn is the leading JVM-side
-    * cause. A pegged CodeHeap or a compilation-time balloon across an
-    * excursion confirms it; flat lines refute it.
-    */
-  private def jitLine(): String = {
-    import scala.jdk.CollectionConverters._
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getName.startsWith("CodeHeap"))
-      .map { pl =>
-        val u = pl.getUsage
-        s"${pl.getName.stripPrefix("CodeHeap ").replaceAll("[' ]", "")}=" +
-          s"${u.getUsed >> 20}/${u.getMax >> 20}MB"
-      }
-    val comp = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-      .map(c => s" comp_ms=${c.getTotalCompilationTime}").getOrElse("")
-    // loaded-class count disambiguates rising comp_ms: flat count +
-    // rising ms = the JVM C2-ing already-loaded classes (one-time
-    // backlog, benign); a count still climbing per RE-run = generated-
-    // source churn (codegen cache misses), since every janino cache
-    // miss defines and loads fresh classes
-    val cls = java.lang.management.ManagementFactory.getClassLoadingMXBean
-    // janino compiles (codegen-cache MISSES) vs JIT comp_ms: rising
-    // comp_ms at flat janino = C2 backlog on already-generated classes;
-    // rising janino count = the generated SOURCE varied (cache cannot
-    // hit) — the two churn classes need different fixes (r19)
-    val jan = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    pools.mkString(" ") + comp +
-      s" janino=${jan.getCount}" +
-      s" classes=${cls.getTotalLoadedClassCount}/${cls.getUnloadedClassCount}u"
   }
 
   /** Hypervisor steal ticks (USER_HZ-cpu-seconds·100, summed over all
@@ -311,7 +272,6 @@ object Bench {
       Sessions.dropAllCaches(spark)
       System.gc()
       Thread.sleep(200)
-      System.err.println(s"[bench] jit ${jitLine()}")
       // one mid-suite calibration sample per query boundary (r18): the
       // before/after pairs bracket the suite but cannot see a host
       // phase that starts and ends INSIDE it — which is exactly how the
@@ -335,184 +295,25 @@ object Bench {
       .filter { case (name, _) => only.forall(pats => pats.exists(name.contains)) }
     val selected = twinsFirst.flatMap(t => all.find(_._1 == t)) ++
       all.filterNot { case (name, _) => twinsFirst.contains(name) }
-    // SPARK_GRAFT_BENCH_STAGEPROF=1 (r18): per-stage attribution for
-    // EXCURSION runs only. The r17/r18 campaigns measured rare 7-20x
-    // wall excursions on the ngram family that (a) need suite context
-    // to reproduce (12 isolated QueryProfile runs stay flat), (b) are
-    // not host load (boundary calibrations stay ~flat through one),
-    // so only an in-suite stage dump can attribute them. When a timed
-    // run exceeds 3x the query's best-so-far, the run's stages land on
-    // stderr: whether the time sits in one stage's tasks (cpu/gc/
-    // shuffle/spill columns) or BETWEEN stages (scheduler/cleaner gap
-    // = wall - stage walls) decides the next fix.
-    val stageProf = sys.env.contains("SPARK_GRAFT_BENCH_STAGEPROF")
-    val profStages = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Int, Long, Int, Long, Long, Long, Long, Long, Long)]()
-    if (stageProf) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          if (si.failureReason.isEmpty) {
-            val ms = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
-              .getOrElse(-1L)
-            val tm = si.taskMetrics
-            // run=executorRunTime (wall-in-task) NEXT TO cpu=
-            // executorCpuTime (ns actually on-core): high run at low
-            // cpu = tasks BLOCKED (I/O, lock, descheduled); high run
-            // at matching cpu = tasks BURNING (interpreted/deopt
-            // execution) — the r19 excursion adjudication hinges on
-            // exactly this bit
-            profStages.add((si.stageId, ms, si.numTasks, tm.executorRunTime,
-              tm.executorCpuTime / 1000000L,
-              tm.shuffleReadMetrics.totalBytesRead >> 20,
-              tm.shuffleWriteMetrics.bytesWritten >> 20,
-              tm.jvmGCTime, tm.diskBytesSpilled >> 20))
-          }
-        }
-      })
-    def dumpExcursion(name: String, wall: Double, best: Double): Unit = {
-      import scala.jdk.CollectionConverters._
-      // stage-completed events arrive on the ASYNC listener bus: snap
-      // too early and the excursion's final stages are missing (under-
-      // counting stageWallSum mis-attributes in-stage time to the
-      // gap estimate — the exact decision this dump exists to make)
-      // then bleed into the NEXT run's cleared queue. Poll to
-      // quiescence like EdgeBytesProbe.drained() — seeded from the
-      // CURRENT size (not -1) so a bus already drained exits after one
-      // confirming 200 ms window instead of a guaranteed 800 ms.
-      var prev = profStages.size; var waited = 0; var stable = false
-      while (!stable && waited < 5000) {
-        Thread.sleep(200); waited += 200
-        val cur = profStages.size
-        stable = cur == prev
-        prev = cur
-      }
-      val snap = profStages.asScala.toVector
-      // Clear HERE too (not only at the next run's start): stages
-      // completed by the settle/cache-drop work between runs would
-      // otherwise land in the queue attributed to nothing.
-      profStages.clear()
-      val stageWallSum = snap.map(_._2).sum / 1000.0
-      System.err.println(
-        f"[bench] EXCURSION $name wall=$wall%.2f s best=$best%.2f s " +
-          f"stages=${snap.size} stageWallSum=$stageWallSum%.2f s " +
-          f"gapEstimate=${wall - stageWallSum}%.2f s (serial-stage estimate)")
-      snap.sortBy(-_._2).take(10).foreach { case (id, ms, nt, rt, ct, sr, sw, gc, sp) =>
-        System.err.println(
-          f"[bench]   stage=$id%-5d wall=${ms / 1000.0}%7.2f s run=${rt / 1000.0}%8.2f s " +
-            f"cpu=${ct / 1000.0}%8.2f s gc=${gc / 1000.0}%6.2f s tasks=$nt%-4d " +
-            f"read=${sr}MB write=${sw}MB spill=${sp}MB")
-      }
-    }
-    // In-flight stall attribution (r19, the r18 verdict's item 1): the
-    // residual excursion signature — a timed run 3-40x its own best with
-    // stages uniformly inflated at near-zero task CPU and a ~10 s
-    // out-of-stage gap — is a DRIVER-side phenomenon (boundary
-    // calibration stays flat through one, so host CPU is available),
-    // and only a thread dump taken WHILE the run is stuck can name the
-    // thread. A daemon watchdog arms per timed run once a best-so-far
-    // exists: if the run is still in flight at max(3x best, best+2 s)
-    // it dumps every thread (ThreadMXBean with lock-owner info, the
-    // jcmd Thread.print equivalent — guide 7.3) plus the jit line, and
-    // samples again 2 s later — the stack that does not move between
-    // the two samples is the stall, and the STALLCPU ranking orders
-    // threads by the RAW cpu-ms each burned across that ~2 s window
-    // (no normalization — a delta near 2000 ms reads as a pegged
-    // core; r19 ADVICE fixed this comment, the code always printed
-    // raw deltas). Post-run stage dumps
-    // (SPARK_GRAFT_BENCH_STAGEPROF) stay complementary: they say WHERE
-    // the time landed, the watchdog says WHO was holding it up.
-    def dumpThreads(tag: String, prevCpu: Map[Long, Long] = Map.empty): Map[Long, Long] = {
-      val mx = java.lang.management.ManagementFactory.getThreadMXBean
-      val infos = mx.dumpAllThreads(true, true, 16)
-      val cpu = infos.map(ti => ti.getThreadId -> mx.getThreadCpuTime(ti.getThreadId)).toMap
-      System.err.println(
-        s"[bench] STALLDUMP $tag threads=${infos.length} ${jitLine()}")
-      // formatted by hand, NOT ThreadInfo.toString: on JDK 17 toString
-      // truncates each stack at 8 frames ("...") — the 16 frames
-      // dumpAllThreads collected were being discarded, and the
-      // committed r19 I/O-stall dumps show exactly the 8-frame cut.
-      // Depth 9-16 is where e.g. the operator above a DiskBlockObject-
-      // Writer/LZ4 frame lives, i.e. the attribution this dump is for.
-      infos.foreach { ti =>
-        val lock = Option(ti.getLockName).map { l =>
-          s" on $l" + Option(ti.getLockOwnerName)
-            .map(o => s""" owned by "$o" Id=${ti.getLockOwnerId}""").getOrElse("")
-        }.getOrElse("")
-        System.err.println(
-          s"""[bench] "${ti.getThreadName}" Id=${ti.getThreadId} ${ti.getThreadState}$lock""")
-        ti.getStackTrace.foreach(f => System.err.println(s"[bench]     at $f"))
-        // HELD locks, not just the waited-on one (r19 ADVICE): the
-        // dumpAllThreads(true, true, ...) call collects them and the
-        // hand-rolled formatter was dropping them — lock ATTRIBUTION
-        // (who blocks whom) is half of what this dump exists for
-        ti.getLockedMonitors.foreach(m => System.err.println(
-          s"[bench]     holds monitor $m (at frame ${m.getLockedStackDepth})"))
-        ti.getLockedSynchronizers.foreach(s => System.err.println(
-          s"[bench]     holds synchronizer $s"))
-      }
-      // when a first sample exists, rank threads by CPU burned BETWEEN
-      // the two samples — the stall's active party regardless of where
-      // any single snapshot caught it
-      if (prevCpu.nonEmpty) {
-        val deltas = infos
-          .map(ti => (ti, cpu.getOrElse(ti.getThreadId, 0L) -
-            prevCpu.getOrElse(ti.getThreadId, 0L)))
-          .filter(_._2 > 0).sortBy(-_._2).take(12)
-        System.err.println(s"[bench] STALLCPU $tag top threads by cpu since sample1:")
-        deltas.foreach { case (ti, d) =>
-          val top = ti.getStackTrace.take(3).mkString(" <- ")
-          System.err.println(
-            f"[bench]   cpu=${d / 1e6}%8.1f ms ${ti.getThreadName}%-60s $top")
-        }
-      }
-      System.err.println(s"[bench] STALLDUMP-END $tag")
-      cpu
-    }
-    def timedRun(
-        fn: (SparkSession, String) => DataFrame,
-        name: String, bestSoFar: Option[Double]): Option[Double] = {
+    def timedRun(fn: (SparkSession, String) => DataFrame): Option[Double] = {
       // every timed run re-executes the WHOLE pipeline, including any
       // intermediates the operator persist()s: without this, the warm
       // run's cache would turn the timed runs into cached-view reads
       // (r13's ngram measured 5.8 s vs its honest ~12 s at sf10 that
       // way). The clearing itself happens outside the timer.
       Sessions.dropAllCaches(spark)
-      val done = new java.util.concurrent.CountDownLatch(1)
-      bestSoFar.filter(_ > 0).foreach { b =>
-        val triggerMs = (math.max(3.0 * b, b + 2.0) * 1000).toLong
-        val w = new Thread(() => {
-          if (!done.await(triggerMs, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-            val c1 = dumpThreads(f"$name sample1 @${triggerMs / 1000.0}%.1f s (best $b%.2f s)")
-            if (!done.await(2000, java.util.concurrent.TimeUnit.MILLISECONDS))
-              dumpThreads(s"$name sample2 +2s", c1)
-          }
-        }, s"bench-stall-watchdog-$name")
-        w.setDaemon(true)
-        w.start()
-      }
       val t0 = System.nanoTime()
       try { materialize(fn); Some((System.nanoTime() - t0) / 1e9) }
       catch { case _: Throwable => None }
-      finally done.countDown()
     }
     // per-query worst steal delta across its timed runs — input (c) of
     // the tail re-run decision ([[needsTailRun]])
     val stealMaxByQuery = scala.collection.mutable.Map[String, Long]()
     val results = selected.map { case (name, fn) =>
       settleBetweenQueries()
-      // the warm-up wall seeds the stall watchdog for timed run 1: the
-      // captured whole-window excursions inflate EVERY timed run of the
-      // struck query (best-of-N useless against them), so waiting for a
-      // clean timed best would never arm the dump exactly when it is
-      // needed most. A stalled warm-up only raises the trigger (never a
-      // false fire).
-      val warmT0 = System.nanoTime()
       val warmOk =
         try { materialize(fn); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val warmWall = (System.nanoTime() - warmT0) / 1e9
       if (!warmOk) (name, -1.0, -1.0, 0)
       else {
         // best of nRuns timed runs: damps background-load / GC noise so
@@ -522,11 +323,8 @@ object Bench {
         var times = Vector.empty[Double]
         var steals = Vector.empty[Long]
         def instrumentedRun(): Unit = {
-          if (stageProf) profStages.clear()
           val st0 = stealTicks()
-          timedRun(fn, name, Some(if (times.isEmpty) warmWall else times.min)).foreach { w =>
-            if (stageProf && times.nonEmpty && w > 3 * times.min)
-              dumpExcursion(name, w, times.min)
+          timedRun(fn).foreach { w =>
             times = times :+ w
             steals = steals :+ (stealTicks() - st0)
           }
@@ -634,7 +432,7 @@ object Bench {
       if (!tailSet.contains(name)) r
       else {
         settleBetweenQueries()
-        timedRun(fnByName(name), name, Some(v)) match {
+        timedRun(fnByName(name)) match {
           case Some(w) =>
             System.err.println(f"[bench] tailrun $name suite_best=$v%.3f s rerun=$w%.3f s")
             val hi = math.max(v + s, w)

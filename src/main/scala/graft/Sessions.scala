@@ -209,9 +209,9 @@ object Sessions {
       // stages: with the whole-stage codegenStageId embedded in the
       // generated class NAME (cache-key-relevant source text), every
       // stage of a plan is textually unique even when the generated
-      // BODIES are identical. Measured (r18, CodegenChurnAB on
-      // q_dedup_groups, then a CC round loop whose per-round stages are
-      // textually identical): id-in-name loads 12,819 generated
+      // BODIES are identical. Measured (r18, on q_dedup_groups, then a
+      // CC round loop whose per-round stages are textually
+      // identical): id-in-name loads 12,819 generated
       // classes for ONE run where stable names load 87 (~150x), and
       // steady-state wall drops 3.7 -> 2.5 s because C2 compiles each
       // distinct body once instead of per stage. The id survives in

@@ -201,8 +201,8 @@ object MinHashDoc {
     // the hash-outer order pays a coeff load + an mh read-modify-write
     // per element instead. Same arithmetic, element-wise identical —
     // measured ~15% faster on the interleaved single-thread A/B
-    // (MinHashKernelAB; Spark stage CPU can't adjudicate this, host
-    // phases drift more than the delta).
+    // (SCALING_r13 `minhash_per_row_kernel_late_r13`; Spark stage CPU
+    // can't adjudicate this, host phases drift more than the delta).
     val mh = new Array[Long](perms)
     var p = 0
     while (p < perms) {

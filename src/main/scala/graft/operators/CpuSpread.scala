@@ -24,11 +24,11 @@ import org.apache.spark.sql.DataFrame
 private[operators] object CpuSpread {
 
   /** Floor (bytes, compressed file size) below which a file-backed
-    * frame is never spread; `spark.graft.cpuSpread.minBytes` overrides
-    * (r20, verdict item 2 — SIZED FROM THE MEASUREMENT EVIDENCE, not
-    * the verdict's suggested 128 MiB: every r19 spread winner fires on
-    * a 0.5–11 MB single-row-group local file, so a one-partition-worth
-    * floor would disable all 12 measured wins. The break-even is
+    * frame is never spread (r20, verdict item 2 — SIZED FROM THE
+    * MEASUREMENT EVIDENCE, not the verdict's suggested 128 MiB: every
+    * r19 spread winner fires on a 0.5–11 MB single-row-group local
+    * file, so a one-partition-worth floor would disable all 12 measured
+    * wins. The break-even is
     * kernel-bound, not split-bound — the heaviest measured kernel
     * chain runs ~1.7 ms per input KiB, so the ~0.1–0.2 s 32-task
     * exchange only amortizes above roughly 64–128 KiB of input; below
@@ -93,30 +93,11 @@ private[operators] object CpuSpread {
   private[operators] def scanPartitionEstimate(df: DataFrame): Option[Int] =
     scanInfo(df).map(_._1)
 
-  /** A session conf value parsed by `parse`; a malformed value fails
-    * naming the key and the value.
-    */
-  private def conf[A](df: DataFrame, key: String, default: String, what: String)(
-      parse: String => A): A = {
-    val v = df.sparkSession.conf.get(key, default)
-    try parse(v)
-    catch {
-      case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(s"$key must be a $what, got '$v'", e)
-    }
-  }
-
   /** One round-robin exchange when the scan cannot feed the cores;
-    * no-op otherwise. See object doc. `spark.graft.cpuSpread.enabled`
-    * (session conf, default true) is the measurement/deployment escape
-    * hatch — it exists so an interleaved same-JVM A/B can price the
-    * guard per query (r19) and so a deployment that KNOWS its scans
-    * are wide can pin the no-op without relying on the estimate.
+    * no-op otherwise. See object doc.
     */
   private[operators] def spread(
       df: DataFrame, plannedFallback: Boolean = false): DataFrame = {
-    if (!conf(df, "spark.graft.cpuSpread.enabled", "true", "boolean")(_.toBoolean))
-      return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     // Default: FILE-BACKED frames only (r19 A/B): a frame with no
     // file-scan leaf is an upstream operator's output (checkpoint, join
@@ -139,9 +120,7 @@ private[operators] object CpuSpread {
       // branch (Multimodal, in-memory frames) has no cheap byte
       // estimate and keeps its r8 semantics unchanged.
       case Some((e, bytes)) =>
-        val minBytes = conf(df, "spark.graft.cpuSpread.minBytes",
-          MinSpreadBytesDefault.toString, "whole number of bytes")(_.toLong)
-        if (e < par && bytes >= minBytes) df.repartition(par) else df
+        if (e < par && bytes >= MinSpreadBytesDefault) df.repartition(par) else df
       case None if plannedFallback && df.rdd.getNumPartitions < par =>
         df.repartition(par)
       case _ => df

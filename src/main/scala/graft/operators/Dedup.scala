@@ -933,8 +933,8 @@ object Dedup {
     * Recall is DATA-DEPENDENT, not a theorem: a pair qualifies iff its
     * two top-`probes` cell sets intersect, which no closed form bounds
     * for arbitrary geometry (contrast the LSH sibling's
-    * 1−(1−q₁^bits)^T floor). MEASURED ADJUDICATION (r15,
-    * IvfDedupProfile, threshold 0.4 on the near-uniform synthetic —
+    * 1−(1−q₁^bits)^T floor). MEASURED ADJUDICATION (r15, SCALING_r16
+    * `lsh_vs_ivf_*`, threshold 0.4 on the near-uniform synthetic —
     * the hardest regime for any bucketing method; sampled-exact ground
     * truth at sf10): at sf10, probes=32 beats the LSH sibling on BOTH
     * recall (0.953 vs 0.886) and shuffle (845 vs 1468 MB), and
@@ -945,8 +945,8 @@ object Dedup {
     * win, measured 18.4× sf1→sf10 shuffle at held-or-better recall vs
     * the LSH sibling's 25.3×, though not an escape from growth
     * altogether at this threshold. r16 re-ran the adjudication at one
-    * HEAD and ADDED the clustered ≥0.9 regime (IvfDedupProfile
-    * plantCopies: 4 sign-perturbed copies/vector, within-cluster
+    * HEAD and ADDED the clustered ≥0.9 regime (`lsh_vs_ivf_clustered_*`,
+    * plant_copies 4: sign-perturbed copies/vector, within-cluster
     * cos≈0.92): the structural claim holds for RECALL — probes=4
     * matches LSH recall at sf1 (0.991 vs 0.992) and sf10/800k (0.959
     * vs 0.953) with 2.5× less shuffle (809 vs 2027 MB) — but WALL
@@ -1179,7 +1179,8 @@ object Dedup {
     // join goes sort-merge (the at-scale shape: spanStarts outgrows the
     // broadcast threshold), both map stages are submitted concurrently
     // and, lazy, race the block store, each re-running the corpus text
-    // scan + split. CkptRaceAB measures the before/after at sf10.
+    // scan + split. SCALING_r16 `ckpt_race_ab_dedup_spans_sf10` records
+    // the before/after at sf10.
     // CpuSpread (r19): the split + downstream token_windows generator
     // are scan-stage CPU; single-task on an unsplittable local file,
     // no-op at scale

@@ -603,7 +603,7 @@ object Similarity {
     * on the probed candidates only — the scan fraction is ~nProbe/C.
     * Same broadcast-queries / heap-shuffle shape as the other ANN paths;
     * recall spec'd vs brute force in SimilaritySpec (floor 0.8; the
-    * IvfSweep harness reproduces the parameter grid). Defaults are tuned
+    * parameter sweep is recorded in SURVEY.md). Defaults are tuned
     * for the synthetic NEAR-UNIFORM corpus, where recall can only track
     * scan fraction (16 cells / 12 probes ⇒ recall ≈0.92 at ~75% scan);
     * clustered real embeddings buy much more recall per probed cell, so

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    survivors net-negative),
   *  - plannedFallback=true (Multimodal): an under-parallel frame
   *    spreads even without a file-scan leaf, via the planned count,
-  *  - spark.graft.cpuSpread.enabled=false pins the no-op everywhere.
+  *  - a file-backed frame under the r20 byte floor is never spread.
   */
 class CpuSpreadSpec extends AnyFunSuite {
 
@@ -38,30 +38,24 @@ class CpuSpreadSpec extends AnyFunSuite {
       .rdd.getNumPartitions === par)
   }
 
-  /** Run `body` with a session conf key set, restoring the PRE-test
-    * value (or unset) afterwards — r19 ADVICE: restoring a literal
-    * leaves the shared session's conf explicitly set for later suites.
-    */
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("a single-file scan spreads to the cores under the default policy") {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cpuspread").toString
-    narrow().write.mode("overwrite").parquet(dir)
+    // random bytes do not compress, so the one file clears the r20 byte
+    // floor the way a real single-row-group corpus file does
+    val rnd = new java.util.Random(7L)
+    (1 to 256).map { i =>
+      val b = new Array[Byte](512)
+      rnd.nextBytes(b)
+      (i.toLong, b)
+    }.toDF("id", "payload").coalesce(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     val par = spark.sparkContext.defaultParallelism
-    // the test file is a few KiB — under the r20 byte floor by design,
-    // so the spread behavior itself is gated with the floor disabled
-    withConf("spark.graft.cpuSpread.minBytes", "0") {
-      assert(CpuSpread.spread(scan).rdd.getNumPartitions === par)
-    }
+    val (est, bytes) = CpuSpread.scanInfo(scan).get
+    assert(bytes >= CpuSpread.MinSpreadBytesDefault,
+      s"test premise: the parquet ($bytes B) clears the floor")
+    assert(est < par)
+    assert(CpuSpread.spread(scan).rdd.getNumPartitions === par)
   }
 
   test("r20 size floor: a sub-floor file-backed frame is NOT spread") {
@@ -72,41 +66,8 @@ class CpuSpreadSpec extends AnyFunSuite {
     assert(bytes > 0 && bytes < CpuSpread.MinSpreadBytesDefault,
       s"test premise: the tiny parquet ($bytes B) sits under the floor")
     assert(est < spark.sparkContext.defaultParallelism)
-    // default floor: no exchange added despite est < par
+    // no exchange added despite est < par
     assert(CpuSpread.spread(scan).rdd.getNumPartitions ===
       scan.rdd.getNumPartitions)
-    // conf override re-arms the spread (deployment escape hatch)
-    withConf("spark.graft.cpuSpread.minBytes", "1") {
-      assert(CpuSpread.spread(scan).rdd.getNumPartitions ===
-        spark.sparkContext.defaultParallelism)
-    }
-  }
-
-  test("the escape hatch pins the no-op for both policies") {
-    withConf("spark.graft.cpuSpread.enabled", "false") {
-      val df = narrow()
-      assert(CpuSpread.spread(df, plannedFallback = true)
-        .rdd.getNumPartitions === 1)
-      val dir = java.nio.file.Files.createTempDirectory("cpuspread2").toString
-      df.write.mode("overwrite").parquet(dir)
-      assert(CpuSpread.spread(spark.read.parquet(dir))
-        .rdd.getNumPartitions === 1)
-    }
-  }
-
-  test("a malformed cpuSpread conf value fails naming the key and the value") {
-    val dir = java.nio.file.Files.createTempDirectory("cpuspread_conf").toString
-    narrow().write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
-    withConf("spark.graft.cpuSpread.minBytes", "64k") {
-      val e = intercept[IllegalArgumentException](CpuSpread.spread(scan))
-      assert(e.getMessage.contains("spark.graft.cpuSpread.minBytes") &&
-        e.getMessage.contains("'64k'"), e.getMessage)
-    }
-    withConf("spark.graft.cpuSpread.enabled", "yes") {
-      val e = intercept[IllegalArgumentException](CpuSpread.spread(narrow()))
-      assert(e.getMessage.contains("spark.graft.cpuSpread.enabled") &&
-        e.getMessage.contains("'yes'"), e.getMessage)
-    }
   }
 }

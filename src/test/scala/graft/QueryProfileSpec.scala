@@ -1,0 +1,38 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins README's "Eager construction" split through the profiler: a lazy
+  * query runs none of its own jobs until its action, an eager one runs
+  * its stores at construction.
+  */
+class QueryProfileSpec extends AnyFunSuite {
+
+  private lazy val spark = Sessions.local("4")
+  private val sfDir = "/root/testdata/sf0.001"
+  // Spark resolves a parquet file's schema with one job (its parallel
+  // footer read), so construction pays it once per `Tables` read; both
+  // queries below read the documents table once
+  private val ReadJobs = 1
+
+  private def once(q: String): QueryProfile.Run = {
+    val runs = QueryProfile.profile(spark, q, sfDir, 1)
+    assert(runs.size === 1)
+    val r = runs.head
+    assert(r.query === q && r.run === 1)
+    assert(r.constructMs >= 0 && r.actionMs >= 0)
+    assert(r.stages.nonEmpty && r.stages.forall(s => s.tasks > 0 && s.wallMs >= 0), r)
+    r
+  }
+
+  test("a lazy query runs only its table read at construction and its work in the action") {
+    val r = once("q_dedup_exact")
+    assert(r.constructJobs === ReadJobs, r)
+    assert(r.actionJobs >= 1, r)
+  }
+
+  test("an eager query runs its checkpoint jobs at construction") {
+    val r = once("q_dedup_groups")
+    assert(r.constructJobs > ReadJobs, r)
+  }
+}

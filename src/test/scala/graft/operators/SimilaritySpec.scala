@@ -106,7 +106,7 @@ class SimilaritySpec extends AnyFunSuite {
     val mean = recalls.sum / recalls.size
     info(s"IVF mean recall@10 = $mean")
     // measured 0.93 (sf0.01) / 0.92 (sf0.1) at the default 12-probe/16
-    // cells (IvfSweep grid); 0.8 matches the LSH floor and still fails a
+    // cells (SURVEY.md's sweep); 0.8 matches the LSH floor and still fails a
     // degraded quantizer or a broken sampled fit
     assert(mean >= 0.8, s"mean recall@10 $mean below 0.8 — IVF parameters degraded")
     // candidates carry exact cosines, so returned neighbors are real
