@@ -124,7 +124,7 @@ object Sessions {
     * may persist() internal frames they cannot safely unpersist
     * themselves (e.g. the ngram prefix phase's ranked/perDoc frames,
     * whose consumers run at the CALLER's action time — see the
-    * [[graft.operators.Dedup.prefixPairPhase]] ownership note), so a
+    * [[graft.operators.Dedup.ngramJaccardPairs]] ownership note), so a
     * session that runs many such queries calls this between them; a
     * missed site silently turns timed runs into cached-view reads
     * (r13 measured ngram at 5.8 s vs its honest ~12 s at sf10 that
@@ -186,8 +186,9 @@ object Sessions {
       // bucketed tables must ALWAYS read one-task-per-bucket: the
       // planner's auto-disable (when it sees no join/agg benefit) falls
       // back to size-based file splitting, which at scale can split one
-      // bucket across tasks — silently breaking the co-location the
-      // zero-exchange engine path (MtmEngine colocated=true) relies on
+      // bucket across tasks — the engine pass then re-exchanges bars a
+      // bucketed scan had already clustered by symbol (MtmPassExec's
+      // required distribution), losing the zero-exchange path
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       // codegen class cache sized for a MULTI-QUERY session (r18). The
       // default 100 entries thrashes under this engine's harnesses: the

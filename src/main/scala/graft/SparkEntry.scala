@@ -111,10 +111,11 @@ object SparkEntry {
             .toInstant.toEpochMilli * 1000L))._2),
     "q_trades_long_short" -> ((s, dir) => MtmEngine.blotterQuery(bars(s, dir), longShortCfg)),
     "q_mtm_timeline" -> ((s, dir) => MtmEngine.timelineQuery(bars(s, dir), PnlConfig.default)),
-    // same engine over symbol-bucketed bars: the engine's one exchange
-    // is already done on disk (BucketedTables.bars + colocated=true)
+    // same engine over symbol-bucketed bars: the scan already satisfies
+    // the engine's clustering by symbol, so the planner elides its one
+    // exchange (BucketedTables.bars)
     "q_mtm_timeline_colocated" -> ((s, dir) => MtmEngine.timelineQuery(
-      graft.sources.BucketedTables.bars(s, dir), PnlConfig.default, colocated = true)),
+      graft.sources.BucketedTables.bars(s, dir), PnlConfig.default)),
     "q_mtm_timeline_fees" -> ((s, dir) => MtmEngine.timelineQuery(bars(s, dir), feesCfg)),
     "q_max_drawdown" -> ((s, dir) => MtmEngine.maxDrawdown(bars(s, dir), PnlConfig.default)),
     "q_sharpe_ratio" -> ((s, dir) => MtmEngine.sharpeRatio(bars(s, dir), PnlConfig.default)),

@@ -90,9 +90,6 @@ private[operators] object CpuSpread {
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2)))
   }
 
-  private[operators] def scanPartitionEstimate(df: DataFrame): Option[Int] =
-    scanInfo(df).map(_._1)
-
   /** One round-robin exchange when the scan cannot feed the cores;
     * no-op otherwise. See object doc.
     */

@@ -71,15 +71,15 @@ object Decontaminate {
     // grouped eval inverted index: one row per DISTINCT eval shingle
     // with its posting list — the leanest driver-side representation
     // (n_eval per doc falls out of the posting lists, no second job).
-    // spread = false (r20): the eval set is small BY CONSTRUCTION
-    // (benchmarks are thousands of docs), so the shared index's
-    // CpuSpread exchange is pure 32-task overhead here — the same
+    // not CpuSpread (r20): the eval set is small BY CONSTRUCTION
+    // (benchmarks are thousands of docs), so a round-robin exchange
+    // would be pure 32-task overhead here — the same
     // adjudication that reverted the corpus-side spread in r19 (the
     // interleaved A/B measured q_decontaminate 0.35 s unspread vs
     // 0.44 s spread); CpuSpread's byte floor cannot catch this case
     // because the eval frame is a FILTER over the full corpus table
     // and the file-index size does not see the filter.
-    val grouped = Dedup.shingleIndex(evalDocs, spread = false)
+    val grouped = Dedup.shingleIndex(evalDocs)
       .groupBy("shingle").agg(collect_list(col("doc_id").cast("long")).as("ids"))
       .collect()
       .map(r => (r.getString(0), r.getSeq[Long](1).toArray))
@@ -111,7 +111,7 @@ object Decontaminate {
       minContainment: Double = 0.5): DataFrame = {
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0,1], got $minContainment")
-    val evalInv = Dedup.shingleIndex(evalDocs, spread = false)
+    val evalInv = Dedup.shingleIndex(evalDocs)
     val evalSizes = evalInv.groupBy("doc_id").agg(count(lit(1)).as("n_eval"))
     val evalSide = evalInv.join(evalSizes, "doc_id")
       .select(col("doc_id").as("eval_id"), col("shingle"), col("n_eval"))

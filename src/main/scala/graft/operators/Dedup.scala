@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * re-evaluates an array-producing expression inside every consumer
   * lambda — measured ~100× slower at equal semantics. All-pairs work
   * exists only in `embeddingNearDupsExact`, the oracle/verify path; the
-  * scale path for embeddings is LSH bucketing (see Similarity).
+  * scale path for embeddings is LSH bucketing (see Similarity). The
+  * word-3-gram Jaccard pairs (#22) are one lazy PPJoin prefix join: no
+  * statistics job at construction picks between plans.
   */
 object Dedup {
 
@@ -54,18 +56,14 @@ object Dedup {
     * caller passing DUPLICATE doc_ids would get duplicate index rows
     * (the old distinct absorbed them); no wired producer does.
     */
-  private[graft] def shingleIndex(
-      documents: DataFrame, spread: Boolean = true): DataFrame = {
+  private[graft] def shingleIndex(documents: DataFrame): DataFrame = {
     graft.functions.ShingleGenerator.register(documents.sparkSession)
-    // CpuSpread (r19): the generator is the scan stage's CPU — an
-    // unsplittable single-file local table pins it to one task; no-op
-    // on many-file corpora (see CpuSpread's scaladoc). `spread = false`
-    // (r20) is the per-site opt-out for callers whose input is small BY
-    // CONSTRUCTION rather than by scale factor — Decontaminate's eval
-    // side reads the same file-backed table as the winners, so no byte
-    // floor can tell them apart; only the caller knows.
-    val in = if (spread) CpuSpread.spread(documents) else documents
-    in.selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+    // no CpuSpread here: whether the generator's scan stage should
+    // spread depends on the caller's input — TextOps.ngramTopK spreads
+    // its corpus, while Decontaminate's eval side is small BY
+    // CONSTRUCTION yet reads the same file-backed table as the corpus,
+    // so no byte floor could tell the two apart
+    documents.selectExpr("doc_id", "shingles_distinct(text) AS shingle")
   }
 
   /** The signature-space backbone: the same inverted index with the
@@ -80,8 +78,9 @@ object Dedup {
     * ~10⁸ distinct shingles). SimHash consumes the [[mixedShingleIndex]]
     * twin; production MinHash computes the same values per ROW
     * ([[graft.functions.MinHashDoc]], r13) and this index is its
-    * spec-side reference. The exact-string path for the oracle stays
-    * [[shingleIndex]] / [[ngramJaccardPairs]].
+    * spec-side reference. The exact-string index stays
+    * [[shingleIndex]]; [[ngramJaccardPairs]] hashes the same distinct
+    * shingles with the same xxhash64 inline.
     */
   private[graft] def hashedShingleIndex(documents: DataFrame): DataFrame = {
     graft.functions.ShingleGenerator.register(documents.sparkSession)
@@ -152,190 +151,32 @@ object Dedup {
       .withColumn("is_canonical", col("doc_id") === col("canonical_id"))
   }
 
-  /** SURVEY #22: word-3-gram Jaccard ≥ threshold pairs — r13 shape:
-    * ADAPTIVE exact-fingerprint canonicalization feeding an
-    * AllPairs/PPJoin-style prefix+positional-filtered join in the
-    * 64-bit hashed shingle space (Chaudhuri et al. SSJoin '06, Bayardo
-    * et al. WWW '07, Xiao et al. WWW '08 — public algorithms), with
-    * duplicate groups expanded back over the rep-level pair set.
-    *
-    * Canonicalization (phase 0): jaccard is a pure function of the
-    * shingle SET, and the md5 fingerprint (exactDups' normalization —
-    * the SAME lower/\\s+/trim the shingle generator applies) equates
-    * exactly the docs with identical normalized text, so the quadratic
-    * stage only needs ONE representative per group; member pairs
-    * reconstruct afterwards (within a group every pair shares all m
-    * joinable shingles — jaccard m/(2n−m), NOT always 1.0 under a df
-    * cap; a cross-group rep pair's jaccard double holds verbatim for
-    * every member combination). Real crawl corpora are heavy with
-    * exact dups — the reason pipelines exact-dedup before near-dedup —
-    * but a corpus of unique docs would pay the member-expansion joins
-    * for nothing, so the choice is ADAPTIVE: one scan-level
-    * approx_count_distinct(fp) (2 % rsd) estimates the dup mass and
-    * the canonical path engages only when >10 % of docs are copies.
-    * Either branch emits the identical pair set — the estimate picks a
-    * plan, never semantics.
-    *
-    * Pair phase (see [[prefixPairPhase]]) and expansion both keep the
-    * md5 OUT of the shingle-level pipeline: phase 1 is keyed by the
-    * rep's doc_id (16-byte rows), and fingerprints rejoin on the
-    * pair-sized results only — carrying the 33-byte fp string through
-    * the inverted index measured +~700 MB of pure key freight at the
-    * sf10 falsifier.
-    *
-    * Input contract: doc_ids must be UNIQUE (the documents-table key) —
-    * [[shingleIndex]]'s generator-side set semantics and the na row
-    * counts both assume it; duplicate ids would inflate sizes and
-    * jaccard values (the r12 `.distinct()` removal moved this contract
-    * here from the plan).
-    *
-    * @param maxShingleDf optional document-frequency cap: a shingle
-    *        appearing in more than this many docs (FULL corpus count,
-    *        not rep count — the rep-level window weights by group
-    *        size) is excluded from the pair join AND the common count
-    *        (its contribution to Σdf² is quadratic — THE skew bomb of
-    *        inverted-index joins at corpus scale). None (default)
-    *        keeps exact Jaccard semantics for the oracle; production
-    *        corpora should cap (standard practice — ultra-common
-    *        shingles carry no near-dup signal).
-    */
-  def ngramJaccardPairs(
-      documents: DataFrame,
-      threshold: Double = 0.8,
-      maxShingleDf: Option[Int] = None): DataFrame = {
-    graft.functions.ShingleGenerator.register(documents.sparkSession)
-    val fpCol = TextOps.fingerprintExpr(col("text"))
-    val est = documents
-      .agg(count(lit(1)).as("n"), approx_count_distinct(fpCol, 0.02).as("nfp")).head()
-    val nDocs = est.getLong(0)
-    val nFp = est.getLong(1)
-    if (nDocs == 0 || nFp >= 0.9 * nDocs) {
-      // index-exchange sizing from the SCAN-anchored corpus frame
-      // (repDocs-style join products have no scan-backed stats); the
-      // whole corpus enters the index in this branch, so the full
-      // x16 expansion applies
-      val nParts = indexShuffleParts(documents)
-      val (pairs, _) = prefixPairPhase(
-        documents.select(col("doc_id"), lit(1L).as("g"), col("text")),
-        threshold, maxShingleDf, nParts)
-      pairs.select(
-        col("rid_a").as("doc_id_a"), col("rid_b").as("doc_id_b"), col("jaccard"))
-    } else {
-      // EAGER (r16 lazy-checkpoint audit): members feeds four
-      // independent branches of the final job (the groups aggregate
-      // plus both expansion joins ×2 sides) and groups feeds three
-      // (repDocs' join — whose small side AQE may BROADCAST, putting
-      // an async broadcast-build job in the race — and repMap's two
-      // uses). Lazy, those concurrent consumers race the block store
-      // and each re-run the corpus scan + fingerprint kernel (the
-      // ConnectedComponents r15 diagnosis). The operator already runs
-      // a job at construction (the est head() above), so eager adds
-      // no new API-contract split — see README "Eager construction".
-      val members = documents.select(col("doc_id"), fpCol.as("fp"))
-        .localCheckpoint(eager = true)
-      val groups = members.groupBy("fp")
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("g"))
-        .localCheckpoint(eager = true)
-      // rep text rides a doc_id join (broadcasts while the rep set
-      // fits; degrades to one text shuffle at corpus scale), never a
-      // min_by(text) aggregate — whose per-map-partition partials
-      // moved the whole corpus text through the fp exchange
-      val repDocs = documents.select(col("doc_id"), col("text"))
-        .join(groups.select(col("doc_id"), col("g")), Seq("doc_id"))
-        .select(col("doc_id"), col("g"), col("text"))
-      // only the REP set (one doc per distinct fingerprint) enters the
-      // rep-phase index, so full-corpus sizing would re-create the
-      // over-partitioned-cache tax (index_cache_tax_sf01) at exactly
-      // the dup mass that engages this branch — scale the expansion by
-      // the measured rep share (nFp/nDocs < 0.9 here), floored at 1
-      val repParts = indexShuffleParts(
-        documents, math.max(1L, math.round(16.0 * nFp / nDocs)))
-      val (repPairs, repStats) = prefixPairPhase(repDocs, threshold, maxShingleDf, repParts)
-      // Phase 2: expand rep pairs back through the duplicate groups.
-      // The two sets are disjoint (same vs different fingerprint), so
-      // a plain union needs no dedup; expansion rows are exactly the
-      // output rows.
-      val repMap = groups.select(col("doc_id").as("rid"), col("fp"), col("g"))
-      val within = repStats
-        .join(repMap.filter(col("g") >= 2), col("doc_id") === col("rid"))
-        .withColumn("jaccard",
-          col("m").cast("double") / (col("n") + col("n") - col("m")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select("fp", "jaccard")
-        .join(members.select(col("fp"), col("doc_id").as("doc_id_a")), "fp")
-        .join(members.select(col("fp"), col("doc_id").as("doc_id_b")), "fp")
-        .filter(col("doc_id_a") < col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b", "jaccard")
-      val cross = repPairs
-        .join(repMap.select(col("rid").as("rid_a"), col("fp").as("fp_a")), "rid_a")
-        .join(repMap.select(col("rid").as("rid_b"), col("fp").as("fp_b")), "rid_b")
-        .join(members.select(col("fp").as("fp_a"), col("doc_id").as("ma")), "fp_a")
-        .join(members.select(col("fp").as("fp_b"), col("doc_id").as("mb")), "fp_b")
-        .select(
-          least(col("ma"), col("mb")).as("doc_id_a"),
-          greatest(col("ma"), col("mb")).as("doc_id_b"),
-          col("jaccard"))
-      within.unionByName(cross)
-    }
-  }
-
-  /** Explicit partition count for the cached shingle-index exchanges,
-    * from the CORPUS frame's optimizer stats (file-size-backed for the
-    * wired scan inputs): ceil(stats x expansion / 64 MB), floored at
-    * the session's parallelism, capped at 64x. Needed because the
-    * ranked/perDoc frames persist() and AQE cannot re-plan inside a
-    * cached plan (canChangeCachedPlanOutputPartitioning stays false so
-    * the per-doc aggregate can RIDE the cache): a conf-pinned count
-    * either spills — per-partition bytes grow a decade per decade at
-    * the local cores pin (SCALING_r17 ngram_partition_scale_ab_sf100:
-    * 1 GB deterministic sort/aggregate spill at sf100, gone at 320
-    * partitions) — or, deployment-raised, materializes the cache
-    * un-coalesced at the full initial count (the 1.28-1.55x
-    * persist-heavy tax SCALING_r17 index_cache_tax_sf01 priced at 10x
-    * cores). `expansion` ~ hashed-shingle-row bytes per input byte:
-    * ~1 row per token (~6 input bytes) at ~50 B a row, measured
-    * ~12-25x vs the snappy parquet footprint at sf100 — 16 keeps the
-    * post-shuffle chunks near the 64 MB advisory with 2x margin either
-    * way. Frames whose stats are unusable (non-positive, or past the
-    * 2^52 ≈ 4.5 PB sanity bound — the defaultSizeInBytes sentinel and
-    * multi-table join products, never a real corpus scan) fall back to
-    * the floor — the old posture, never worse. The bound is
-    * deliberately ABOVE any real single-corpus size: a 100 TB scan
-    * must reach the cap branch (its sizing IS this function's job),
-    * and the cap already limits how wrong a merely-inflated estimate
-    * can be (64x floor, reached at ~8.6 GB of stats at 32 cores).
-    */
-  private[graft] def indexShuffleParts(corpus: DataFrame, expansion: Long = 16L): Int = {
-    val floor = corpus.sparkSession.sparkContext.defaultParallelism
-    val cap = BigInt(floor) * 64
-    val target = BigInt(64L << 20)
-    val stats = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (stats <= 0 || stats > (BigInt(1) << 52)) floor
-    else ((BigInt(expansion) * stats + target - 1) / target).min(cap).toInt.max(floor)
-  }
-
-  /** The r13 set-similarity engine shared by both ngramJaccardPairs
-    * branches: a prefix-filtered, positional-filtered, length-filtered
-    * self-join over the hashed shingle space, with exact in-stage
-    * verification. Input: (doc_id, g, text) with UNIQUE doc_id; g is
-    * the exact-dup multiplicity the df window weights by (1 when
-    * uncanonicalized). Returns (pairs(rid_a, rid_b, jaccard),
-    * stats(doc_id, n, m)) — n the full distinct-shingle count, m the
-    * joinable (df ≤ cap) count.
+  /** SURVEY #22: word-3-gram Jaccard ≥ threshold pairs — an
+    * AllPairs/PPJoin-style prefix-filtered, positional-filtered,
+    * length-filtered self-join over the 64-bit hashed shingle space,
+    * with exact in-stage verification (Chaudhuri et al. SSJoin '06,
+    * Bayardo et al. WWW '07, Xiao et al. WWW '08 — public algorithms).
+    * Exact copies need no plan of their own: identical documents pair
+    * through the prefix join like any others (jaccard m/(2n−m) under a
+    * df cap, 1.0 without), and pipelines that carry copy mass
+    * exact-dedup first ([[CorpusPipeline]]). The operator is lazy: it
+    * runs no job until its caller's action.
     *
     * Plan, in exchange order: the scan hashes each doc's distinct
-    * shingles to 64 bits; a window by h adjoins Σg document frequency;
-    * a window by doc_id ranks each doc's joinable shingles
+    * shingles to 64 bits; a window by h adjoins the document
+    * frequency; a window by doc_id ranks each doc's joinable shingles
     * rarest-first in the (df, h) global total order and computes
     * n/m — persist()ed once for its two consumers, with the
     * InMemoryRelation keeping hashpartitioning(doc_id) so the per-doc
-    * aggregate (sorted hash-set array + n + m) adds NO exchange
-    * (pinned in PlanAuditSpec). Only each doc's PREFIX — its first
-    * m − α + 1 ranked shingles — enters the self-join, and matched
-    * rows pass three in-stage prunes before anything crosses to the
-    * pair-dedup aggregate, whose rows are the bare 16-byte
-    * (rid_a, rid_b) key (sizes rejoin from the per-doc table in the
-    * verify, so candidate freight is the minimum possible).
+    * aggregate (sorted hash-set array + n) adds NO exchange
+    * (pinned in PlanAuditSpec; a localCheckpoint there would report
+    * Unknown partitioning under AQE and re-exchange the whole index).
+    * Only each doc's PREFIX — its first m − α + 1 ranked shingles —
+    * enters the self-join, and matched rows pass three in-stage prunes
+    * before anything crosses to the pair-dedup aggregate, whose rows
+    * are the bare 16-byte (doc_id_a, doc_id_b) key (sizes rejoin from
+    * the per-doc table in the verify, so candidate freight is the
+    * minimum possible).
     *
     * Losslessness of the three prunes at threshold t (all proofs in
     * REAL arithmetic, then slackened for doubles):
@@ -376,45 +217,43 @@ object Dedup {
     * strings and row counts are collision-free. The verify jaccard is
     * the shared c/(na+nb−c) double shape of [[minhashLshPairs]] — the
     * two sites must never drift apart.
+    *
+    * CACHE OWNERSHIP: the operator cannot unpersist its two cached
+    * frames (ranked and perDoc) itself — their consumers execute at the
+    * CALLER's action time, after this function returns (unlike CC,
+    * which drives its own per-round actions and releases its caches
+    * before returning) — so each call leaves two MEMORY_AND_DISK entries
+    * in the CacheManager until the session releases them. Spill + LRU
+    * bound the memory; a long-lived session running many dedup queries
+    * calls [[graft.Sessions.dropAllCaches]] between them, as
+    * Bench/Verify/QueryProfile do.
+    *
+    * Input contract: doc_ids must be UNIQUE (the documents-table key) —
+    * the generator-side set semantics ([[shingleIndex]]) and the na row
+    * counts both assume it; duplicate ids would inflate sizes and
+    * jaccard values.
+    *
+    * @param maxShingleDf optional document-frequency cap: a shingle
+    *        appearing in more than this many docs is excluded from the
+    *        pair join AND the common count (its contribution to Σdf² is
+    *        quadratic — THE skew bomb of inverted-index joins at corpus
+    *        scale). None (default) keeps exact Jaccard semantics for the
+    *        oracle; production corpora should cap (standard practice —
+    *        ultra-common shingles carry no near-dup signal).
     */
-  private[graft] def prefixPairPhase(
-      docsG: DataFrame,
-      threshold: Double,
-      maxShingleDf: Option[Int],
-      // explicit count for the two index exchanges feeding the ranked
-      // cache (see [[indexShuffleParts]]); 0 = derive from docsG's own
-      // stats (direct/spec callers — the wired canonicalized caller
-      // passes a count derived from the SCAN-anchored corpus frame,
-      // since repDocs' join-product stats are not scan-backed)
-      nParts: Int = 0,
-      // materialization hook for the two multi-consumer frames (ranked
-      // and perDoc). CACHE OWNERSHIP: the operator cannot unpersist
-      // these itself — their consumers execute at the CALLER's action
-      // time, after this function returns (unlike CC, which drives its
-      // own per-round actions and releases its caches before
-      // returning) — so each call leaves two MEMORY_AND_DISK entries
-      // in the CacheManager until the session releases them. Spill +
-      // LRU bound the memory; a long-lived session running many dedup
-      // queries calls [[graft.Sessions.dropAllCaches]] between them,
-      // as Bench/Verify/QueryProfile do.
-      // Production uses persist(), NOT localCheckpoint:
-      // under AQE a checkpoint's LogicalRDD reports Unknown
-      // partitioning (AdaptiveSparkPlanExec hides the final plan's),
-      // so the per-doc aggregate silently re-exchanged the whole index
-      // by doc_id — the same hazard class CC's edge cache hit in r12;
-      // the InMemoryRelation keeps hashpartitioning(doc_id) and
-      // PlanAuditSpec pins the no-exchange read. The hook exists so
-      // the audit can observe the frames production materializes.
-      mat: DataFrame => DataFrame = _.persist()): (DataFrame, DataFrame) = {
-    graft.functions.ShingleGenerator.register(docsG.sparkSession)
-    val nP = if (nParts > 0) nParts else indexShuffleParts(docsG)
+  def ngramJaccardPairs(
+      documents: DataFrame,
+      threshold: Double = 0.8,
+      maxShingleDf: Option[Int] = None): DataFrame = {
+    graft.functions.ShingleGenerator.register(documents.sparkSession)
+    val nP = indexShuffleParts(documents)
     // CpuSpread (r19): the shingle generator + xxhash64 are the scan
     // stage's CPU; single-task on an unsplittable local file (the r19
     // profile read ~1.5 s of one-core generator work inside
     // q_dedup_groups), no-op on many-file corpora
-    val hashed = CpuSpread.spread(docsG)
-      .selectExpr("doc_id", "g", "shingles_distinct(text) AS shingle")
-      .select(col("doc_id"), col("g"), xxhash64(col("shingle")).as("h"))
+    val hashed = CpuSpread.spread(documents.select(col("doc_id"), col("text")))
+      .selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
     val keep = maxShingleDf.map(cap => col("df") <= cap).getOrElse(lit(true))
     val wDoc = Window.partitionBy("doc_id")
     // both index exchanges are explicit repartitions the windows then
@@ -423,7 +262,7 @@ object Dedup {
     // plan AQE cannot size them, see [[indexShuffleParts]]
     val ranked = hashed
       .repartition(nP, col("h"))
-      .withColumn("df", sum(col("g")).over(Window.partitionBy("h")))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
       .repartition(nP, col("doc_id"))
       .withColumn("na", count(lit(1)).over(wDoc))
       .withColumn("m", count(when(keep, lit(1))).over(wDoc))
@@ -431,46 +270,78 @@ object Dedup {
         wDoc.orderBy(when(keep, 0).otherwise(1), col("df"), col("h"))))
       .withColumn("keep", keep)
       .select("doc_id", "h", "na", "m", "rn", "keep")
-    val rankedM = mat(ranked)
+      .persist()
     val alpha = greatest(ceil(col("na") * lit(threshold)).cast("long") - lit(3L), lit(1L))
-    val pre = rankedM
+    val pre = ranked
       .filter(col("keep") && col("rn") <= col("m") - alpha + lit(1L))
       .select("doc_id", "h", "na", "m", "rn")
-    val perDoc = rankedM
+    val perDoc = ranked
       .groupBy("doc_id")
       .agg(
         graft.functions.SortedLongSetAgg.column(when(col("keep"), col("h"))).as("hs"),
-        max(col("na")).as("n"),
-        max(col("m")).as("m"))
-    val perDocM = mat(perDoc)
+        max(col("na")).as("n"))
+      .persist()
     val tt = threshold / (1.0 + threshold)
-    val cand = pre.select(col("h"), col("doc_id").as("rid_a"),
+    val cand = pre.select(col("h"), col("doc_id").as("doc_id_a"),
         col("na").as("pna"), col("m").as("ma"), col("rn").as("ra"))
-      .join(pre.select(col("h"), col("doc_id").as("rid_b"),
+      .join(pre.select(col("h"), col("doc_id").as("doc_id_b"),
         col("na").as("pnb"), col("m").as("mb"), col("rn").as("rb")), Seq("h"))
-      .filter(col("rid_a") < col("rid_b"))
+      .filter(col("doc_id_a") < col("doc_id_b"))
       .filter(least(col("pna"), col("pnb")).cast("double") /
         greatest(col("pna"), col("pnb")).cast("double") >= threshold)
       .filter((least(col("ma") - col("ra"), col("mb") - col("rb")) + lit(4L)).cast("double") >=
         (col("pna") + col("pnb")).cast("double") * lit(tt))
-      .groupBy("rid_a", "rid_b")
+      .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("n_pref"))
       .drop("n_pref")
-    val pairs = EvalOnce.withColumns(
+    EvalOnce.withColumns(
         cand
-          .join(perDocM.select(
-            col("doc_id").as("rid_a"), col("hs").as("hs_a"), col("n").as("na")), "rid_a")
-          .join(perDocM.select(
-            col("doc_id").as("rid_b"), col("hs").as("hs_b"), col("n").as("nb")), "rid_b"),
+          .join(perDoc.select(
+            col("doc_id").as("doc_id_a"), col("hs").as("hs_a"), col("n").as("na")), "doc_id_a")
+          .join(perDoc.select(
+            col("doc_id").as("doc_id_b"), col("hs").as("hs_b"), col("n").as("nb")), "doc_id_b"),
         graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")).as("n_common"))
       .withColumn(
         "jaccard",
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select("rid_a", "rid_b", "jaccard")
-    (pairs, perDocM.select("doc_id", "n", "m"))
+      .select("doc_id_a", "doc_id_b", "jaccard")
   }
 
+  /** Explicit partition count for the cached shingle-index exchanges,
+    * from the CORPUS frame's optimizer stats (file-size-backed for the
+    * wired scan inputs): ceil(stats x 16 / 64 MB), floored at the
+    * session's parallelism, capped at 64x. Needed because the
+    * ranked/perDoc frames persist() and AQE cannot re-plan inside a
+    * cached plan (canChangeCachedPlanOutputPartitioning stays false so
+    * the per-doc aggregate can RIDE the cache): a conf-pinned count
+    * either spills — per-partition bytes grow a decade per decade at
+    * the local cores pin (SCALING_r17 ngram_partition_scale_ab_sf100:
+    * 1 GB deterministic sort/aggregate spill at sf100, gone at 320
+    * partitions) — or, deployment-raised, materializes the cache
+    * un-coalesced at the full initial count (the 1.28-1.55x
+    * persist-heavy tax SCALING_r17 index_cache_tax_sf01 priced at 10x
+    * cores). The x16 expansion ~ hashed-shingle-row bytes per input
+    * byte: ~1 row per token (~6 input bytes) at ~50 B a row, measured
+    * ~12-25x vs the snappy parquet footprint at sf100 — 16 keeps the
+    * post-shuffle chunks near the 64 MB advisory with 2x margin either
+    * way. Frames whose stats are unusable (non-positive, or past the
+    * 2^52 ≈ 4.5 PB sanity bound — the defaultSizeInBytes sentinel and
+    * multi-table join products, never a real corpus scan) fall back to
+    * the floor — the old posture, never worse. The bound is
+    * deliberately ABOVE any real single-corpus size: a 100 TB scan
+    * must reach the cap branch (its sizing IS this function's job),
+    * and the cap already limits how wrong a merely-inflated estimate
+    * can be (64x floor, reached at ~8.6 GB of stats at 32 cores).
+    */
+  private[graft] def indexShuffleParts(corpus: DataFrame): Int = {
+    val floor = corpus.sparkSession.sparkContext.defaultParallelism
+    val cap = BigInt(floor) * 64
+    val target = BigInt(64L << 20)
+    val stats = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (stats <= 0 || stats > (BigInt(1) << 52)) floor
+    else ((stats * 16 + target - 1) / target).min(cap).toInt.max(floor)
+  }
 
   /** Drop bucket memberships belonging to a bucket larger than
     * `maxBucketSize` BEFORE any `collect_set` builds a per-bucket array:

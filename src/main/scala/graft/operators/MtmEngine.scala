@@ -19,11 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * the reference's `Trade_Mtm_Runner.calculate` → `Mtm_Result` pipeline
   * (reference: runner_mtm.py:71-205, trade_reward.py:81-170).
   *
-  * Plan shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
-  * `sortWithinPartitions(symbol, ts, event_id)` → [[graft.plans.MtmPass]],
+  * Plan shape (SURVEY.md §4): canonical bars → [[graft.plans.MtmPass]],
   * a row-level node that runs the [[graft.core.TradeBook]] state machine
   * per symbol-run over the sorted InternalRows and writes one output
-  * family's UnsafeRows through reused writers. ONE shuffle total;
+  * family's UnsafeRows through reused writers. Its physical node
+  * requires its input clustered by symbol and sorted by [[RunOrder]],
+  * so the planner adds `hashpartitioning(symbol)` and a partition-local
+  * sort, and drops the exchange over a symbol-bucketed scan. ONE
+  * shuffle at most;
   * parallelism = #symbols spread by hash; per-task state is O(open
   * positions) and rows stream through an iterator, so a skewed
   * mega-symbol is wall-clock-bound but never OOMs. At 100 TB the symbol
@@ -89,25 +92,21 @@ object MtmEngine {
       col("event_id").cast("long"), col("close").cast("double"),
       col("buy").cast("int"), col("sell").cast("int"))
 
-  private def sortedBars(bars: DataFrame, colocated: Boolean): DataFrame =
-    sortRuns(barColumns(bars), colocated)
-
-  /** The engine's only shuffle: co-locate each symbol's rows and order
-    * them totally within the partition (secondary sort). AQE partition
-    * coalescing is safe: symbol runs stay contiguous because a symbol
-    * hashes to exactly one pre-coalesce partition.
+  /** The walk's input layout: each symbol's rows in one partition,
+    * ordered totally by these columns within it. [[graft.plans.MtmPassExec]]
+    * requires it of its child, so the planner adds the exchange and
+    * the sort, or elides the exchange over a scan already clustered by
+    * symbol (BucketedTables.bars); [[combinedRun]] builds it itself.
     */
-  private def sortRuns(rows: DataFrame, colocated: Boolean): DataFrame = {
-    // colocated: the caller guarantees each symbol's bars already share
-    // a partition (a symbol-bucketed table scan — BucketedTables.bars),
-    // so the engine's one exchange is elided and only the in-partition
-    // secondary sort remains. Opt-in and UNCHECKED: verifying the claim
-    // would itself shuffle, and split symbol runs would silently reset
-    // book state mid-run — callers own the layout contract
-    // (ColocatedEngineSpec pins bit-equality on the bucketed layout).
-    val dist = if (colocated) rows else rows.repartition(col("symbol"))
-    dist.sortWithinPartitions("symbol", "ts_us", "event_id")
-  }
+  private[graft] val RunOrder: Seq[String] = Seq("symbol", "ts_us", "event_id")
+
+  /** [[combinedRun]]'s copy of that layout: co-locate each symbol's rows
+    * and sort them within the partition. AQE partition coalescing is
+    * safe: symbol runs stay contiguous because a symbol hashes to
+    * exactly one pre-coalesce partition.
+    */
+  private def sortRuns(rows: DataFrame): DataFrame =
+    rows.repartition(col("symbol")).sortWithinPartitions(RunOrder.map(col): _*)
 
   /** One output family of the pass, with its public schema. Timestamps
     * are TIMESTAMP columns, whose row form is the µs long the walk
@@ -572,16 +571,21 @@ object MtmEngine {
     * rows, which take ts_us = Long.MinValue so that each sorts first in
     * its symbol run; every slice but the last ends its runs with a carry
     * instead of the open flush and the summary. The frames read the
-    * union of all slices' pages. `colocated` applies to the no-cut case
-    * only: the carries always need the exchange.
+    * union of all slices' pages.
+    *
+    * The pass is stored as an RDD below the planner, so it sorts its
+    * input itself ([[sortRuns]]) rather than through
+    * [[graft.plans.MtmPassExec]]'s required layout; every input it
+    * takes needs the exchange anyway — the bars of `calculate`, and the
+    * slices' unions with the carries.
     */
   private[graft] def combinedRun(
-      bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false, cutsUs: Seq[Long] = Nil)
+      bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bars.sparkSession
     val last = cutsUs.length
     def sorted(i: Int, carried: Option[RDD[(Int, Array[Byte])]]): DataFrame =
-      if (last == 0) sortedBars(bars, colocated)
+      if (last == 0) sortRuns(barColumns(bars))
       else {
         val lo = if (i == 0) lit(true) else col("ts_us") >= cutsUs(i - 1)
         val hi = if (i == last) lit(true) else col("ts_us") < cutsUs(i)
@@ -590,8 +594,7 @@ object MtmEngine {
         sortRuns(carried.fold(slice)(pages => slice.unionAll(
           stored(spark, pages, Family.Carry).select(
             col("symbol"), lit(Long.MinValue).as("ts_us"), lit(0L).as("event_id"),
-            lit(0.0).as("close"), lit(0).as("buy"), lit(0).as("sell"), col("carry")))),
-          colocated = false)
+            lit(0.0).as("close"), lit(0).as("buy"), lit(0).as("sell"), col("carry")))))
       }
     def store(i: Int, sorted: DataFrame): RDD[(Int, Array[Byte])] = {
       val pages = sorted.queryExecution.toRdd.mapPartitions(
@@ -690,20 +693,20 @@ object MtmEngine {
 
   // ---- query surfaces (timestamps are TIMESTAMP μs) ----
 
-  // Each public (bars, cfg) surface is one lazy MtmPass over the sorted
-  // bars; MtmRunner.calculate runs the pass ONCE and stores it
-  // (combinedRun) instead of re-running the walk per family.
+  // Each public (bars, cfg) surface is one lazy MtmPass over the bars,
+  // which the planner lays out in RunOrder; MtmRunner.calculate runs the
+  // pass ONCE and stores it (combinedRun) instead of re-running the
+  // walk per family.
 
-  private def pass(bars: DataFrame, cfg: PnlConfig, family: Family, colocated: Boolean = false)
-      : DataFrame =
-    MtmPass(sortedBars(bars, colocated), cfg, family)
+  private def pass(bars: DataFrame, cfg: PnlConfig, family: Family): DataFrame =
+    MtmPass(barColumns(bars), cfg, family)
 
   /** SURVEY #4/#5: per-bar mtm_ratio + cumulative pnl_ratio
     * (reference pnl_timeline: runner_mtm.py:136-183), one row per input
     * bar — the reference's `mtm_history` (trade_reward.py:109,166).
     */
-  def timelineQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    pass(bars, cfg, Family.Timeline, colocated)
+  def timelineQuery(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    pass(bars, cfg, Family.Timeline)
 
   /** SURVEY #2/#3: the trade blotter as a query — closed trades
     * (reference `archive_*_positions_list`) plus still-open positions
@@ -721,18 +724,18 @@ object MtmEngine {
     * IEEE-bit-equal to x, so our raw pnl can differ from the reference's
     * by ULPs).
     */
-  def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    pass(bars, cfg, Family.Blotter, colocated)
+  def blotterQuery(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    pass(bars, cfg, Family.Blotter)
 
   /** [[timelineQuery]] with `ts` as µs longs (`ts_us`). */
-  def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    timelineMicros(timelineQuery(bars, cfg, colocated))
+  def timeline(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    timelineMicros(timelineQuery(bars, cfg))
 
   /** [[blotterQuery]] with µs-long timestamps (`entry_ts_us`,
     * `exit_ts_us`) and without the derived `pnl`.
     */
-  def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
-    blotterMicros(blotterQuery(bars, cfg, colocated))
+  def blotter(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    blotterMicros(blotterQuery(bars, cfg))
 
   private[graft] def timelineMicros(tl: DataFrame): DataFrame =
     tl.select(

@@ -197,13 +197,14 @@ object TextOps {
     * shingle text, so the cut is a total order and the result
     * deterministic) — the "what's boilerplate in this crawl" probe run
     * before choosing dedup thresholds. Shares Dedup's word-3-gram
-    * inverted index, counts with map-side partial aggregation, and the
+    * inverted index over a CpuSpread input (the generator is the scan
+    * stage's CPU), counts with map-side partial aggregation, and the
     * `orderBy.limit` compiles to TakeOrderedAndProject: each reduce task
     * keeps a k-row heap and the driver merges #partitions × k rows —
     * no global sort at any scale (pinned in PlanAuditSpec).
     */
   def ngramTopK(documents: DataFrame, k: Int = 50): DataFrame =
-    Dedup.shingleIndex(documents)
+    Dedup.shingleIndex(CpuSpread.spread(documents))
       .groupBy("shingle")
       .agg(count(lit(1)).as("doc_freq"))
       .orderBy(col("doc_freq").desc, col("shingle").asc)

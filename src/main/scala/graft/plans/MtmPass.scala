@@ -5,15 +5,16 @@ import graft.operators.MtmEngine
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.GraftInternal
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** The MTM engine's per-symbol walk as a logical node: the child is the
-  * engine's sorted bar view (symbol, ts_us, event_id, close, buy, sell —
-  * see `MtmEngine.sortedBars`), the output is one family of the pass
+  * engine's bar view (symbol, ts_us, event_id, close, buy, sell — see
+  * `MtmEngine.barColumns`), the output is one family of the pass
   * (timeline, blotter or summary) in its public schema. [[MtmPassStrategy]]
   * plans it to [[MtmPassExec]], which walks the child's InternalRows and
   * writes the family's UnsafeRows directly — no encoder round trip on
@@ -31,18 +32,29 @@ final case class MtmPass(
 }
 
 object MtmPass {
-  /** `family` of the engine pass over `sorted`, lazily. */
-  private[graft] def apply(sorted: DataFrame, cfg: PnlConfig, family: MtmEngine.Family): DataFrame = {
-    Strategies.register(sorted.sparkSession, MtmPassStrategy)
-    GraftInternal.ofRows(sorted.sparkSession, MtmPass(
-      cfg, family, DataTypeUtils.toAttributes(family.schema), sorted.queryExecution.analyzed))
+  /** `family` of the engine pass over `bars`, lazily. */
+  private[graft] def apply(bars: DataFrame, cfg: PnlConfig, family: MtmEngine.Family): DataFrame = {
+    Strategies.register(bars.sparkSession, MtmPassStrategy)
+    GraftInternal.ofRows(bars.sparkSession, MtmPass(
+      cfg, family, DataTypeUtils.toAttributes(family.schema), bars.queryExecution.analyzed))
   }
 }
 
-/** Physical [[MtmPass]]: one walk per partition of the sorted bars. */
+/** Physical [[MtmPass]]: one walk per partition of the bars. The walk
+  * needs every symbol's bars in one partition, in `MtmEngine.RunOrder`;
+  * the node states that layout, so `EnsureRequirements` adds the
+  * exchange and the sort, and checks a clustered scan
+  * (`BucketedTables.bars`) rather than trusting it: a layout that does
+  * not satisfy the distribution gets the exchange.
+  */
 final case class MtmPassExec(
     cfg: PnlConfig, family: MtmEngine.Family, output: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
+  private def runKey: Seq[Attribute] = MtmEngine.RunOrder.map(n => child.output.find(_.name == n).get)
+  override def requiredChildDistribution: Seq[Distribution] =
+    ClusteredDistribution(runKey.take(1)) :: Nil
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    runKey.map(SortOrder(_, Ascending)) :: Nil
   override def producedAttributes: AttributeSet = outputSet
   override protected def doExecute(): RDD[InternalRow] = {
     val (c, f) = (cfg, family) // the closure must not capture the plan

@@ -61,11 +61,13 @@ object BucketedTables {
     // self-healing (same pattern as Tables.events): a foreign session
     // without Sessions.local's config would let the planner fall back
     // to size-based splitting of bucket files, breaking the
-    // co-location contract downstream paths rely on. DELIBERATELY not
-    // restored: the pin must hold when the returned table is SCANNED,
-    // which happens long after this call — a save/restore here would
-    // re-arm the size-based fallback for exactly the queries the pin
-    // protects. Correctness of colocated reads over planner freedom.
+    // co-location downstream paths read for free (each states its
+    // required distribution, so a split scan costs an exchange, not a
+    // wrong result). DELIBERATELY not restored: the pin must hold when
+    // the returned table is SCANNED, which happens long after this
+    // call — a save/restore here would re-arm the size-based fallback
+    // for exactly the queries the pin protects. Colocated reads over
+    // planner freedom.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val tbl = s"graft_b_${name}_${tag(sfDir)}"
     if (!spark.catalog.tableExists(tbl)) {
@@ -93,10 +95,10 @@ object BucketedTables {
     spark.table(ensure(spark, sfDir, "lineitem", "l_orderkey", nBuckets))
 
   /** Engine bars bucketed by symbol — the layout under the
-    * zero-exchange MTM engine path (`MtmEngine.timeline/blotter` with
-    * `colocated = true`): every symbol's bars land in exactly one
-    * bucket, so the engine's repartition is already done on disk and
-    * only the in-partition secondary sort remains at read time.
+    * zero-exchange MTM engine path: every symbol's bars land in exactly
+    * one bucket, so the scan satisfies the engine pass's required
+    * clustering by symbol (`MtmPassExec`), the planner adds no exchange,
+    * and only the in-partition secondary sort remains at read time.
     */
   def bars(spark: SparkSession, sfDir: String, nBuckets: Int = 32): DataFrame =
     spark.table(ensureFrom(spark, sfDir, "bars", "symbol", nBuckets)(

@@ -5,9 +5,10 @@ import graft.operators.MtmEngine
 import graft.sources.BucketedTables
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The zero-exchange MTM engine path: symbol-bucketed bars + the
-  * colocated flag must produce bit-identical results with the engine's
-  * repartition gone from the plan.
+/** The zero-exchange MTM engine path: over symbol-bucketed bars the
+  * engine pass's required clustering by symbol is already met, so the
+  * planner drops the engine's exchange, and the results stay
+  * bit-identical to the shuffled engine.
   */
 class ColocatedEngineSpec extends AnyFunSuite {
 
@@ -20,7 +21,7 @@ class ColocatedEngineSpec extends AnyFunSuite {
   test("timeline over bucketed bars is bit-identical to the shuffled engine") {
     val a = MtmEngine.timelineQuery(shuffledBars, PnlConfig.default)
       .collect().map(_.toSeq).toSet
-    val b = MtmEngine.timelineQuery(bucketedBars, PnlConfig.default, colocated = true)
+    val b = MtmEngine.timelineQuery(bucketedBars, PnlConfig.default)
       .collect().map(_.toSeq).toSet
     assert(a.nonEmpty && a == b)
   }
@@ -28,13 +29,13 @@ class ColocatedEngineSpec extends AnyFunSuite {
   test("blotter over bucketed bars is bit-identical to the shuffled engine") {
     val a = MtmEngine.blotterQuery(shuffledBars, PnlConfig.default)
       .collect().map(_.toSeq).toSet
-    val b = MtmEngine.blotterQuery(bucketedBars, PnlConfig.default, colocated = true)
+    val b = MtmEngine.blotterQuery(bucketedBars, PnlConfig.default)
       .collect().map(_.toSeq).toSet
     assert(a.nonEmpty && a == b)
   }
 
   test("colocated engine plans ZERO exchanges (the layout did the shuffle)") {
-    val p = MtmEngine.timeline(bucketedBars, PnlConfig.default, colocated = true)
+    val p = MtmEngine.timeline(bucketedBars, PnlConfig.default)
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges == 0, s"bucketed bars should feed the engine with no exchange, saw:\n$p")

@@ -277,43 +277,40 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ngram prefix phase: per-doc aggregate rides the ranked cache's partitioning") {
-    // r13 pin for the prefixPairPhase materialization choice. The
+    // r13 pin for ngramJaccardPairs' materialization choice. The
     // doc-partitioned ranked frame is persist()ed, NOT checkpointed —
     // under AQE a checkpoint's LogicalRDD reports Unknown partitioning
-    // (this test, run against a localCheckpoint hook, catches exactly
-    // that full re-exchange of the index by doc_id), while the
-    // InMemoryRelation keeps hashpartitioning(doc_id). The hook
-    // records the perDoc frame production builds over the REAL
-    // materialized ranked frame; after driving an action we audit its
-    // executed plan by tree walk (the CC edge-cache pattern): the
-    // aggregate must read an InMemoryTableScan and add NO shuffle.
-    import org.apache.spark.sql.functions.{col, lit}
+    // (this test, run against a localCheckpoint of ranked, catches
+    // exactly that full re-exchange of the index by doc_id), while the
+    // InMemoryRelation keeps hashpartitioning(doc_id). After driving
+    // the public operator's action we walk into the perDoc cache's
+    // executed plan (the CC edge-cache pattern): its aggregate must
+    // read the ranked InMemoryTableScan and add NO shuffle.
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // another suite running the same sf0.001 prefix phase leaves its
+    // another suite running the same sf0.001 operator leaves its
     // persisted frames in the shared session's CacheManager, which
-    // would rewrite THIS test's perDoc plan into an InMemoryTableScan
-    // of itself and hide the aggregate from the walk
+    // would rewrite THIS test's plan into reads of those caches
     spark.catalog.clearCache()
-    val recorded = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), lit(1L).as("g"), col("text"))
-    // persist ranked exactly as production does; leave perDoc bare so
-    // its executed plan (agg over the ranked cache) stays inspectable
-    Dedup.prefixPairPhase(docs, 0.8, Some(1000), mat =
-      df => { recorded += df; if (recorded.size == 1) df.persist() else df })
     try {
-      assert(recorded.size == 2, "expected ranked + perDoc materializations")
-      val perDoc = recorded(1)
-      perDoc.count() // drive AQE to the final plan
-      val nodes = gatherExecuted(perDoc.queryExecution.executedPlan)
-      val p2 = plan(perDoc)
-      assert(nodes.exists(_.nodeName.contains("ObjectHashAggregate")),
+      val pairs = Dedup.ngramJaccardPairs(Tables.documents(spark, sfDir), 0.8, Some(1000))
+      pairs.write.format("noop").mode("overwrite").save()
+      val perDoc = gatherExecuted(pairs.queryExecution.executedPlan).collect {
+        case s: InMemoryTableScanExec
+            if gatherExecuted(s.relation.cachedPlan).exists(_.isInstanceOf[ObjectHashAggregateExec]) =>
+          s.relation.cachedPlan
+      }
+      assert(perDoc.nonEmpty, s"pairs must read the perDoc cache:\n${plan(pairs)}")
+      val nodes = gatherExecuted(perDoc.head)
+      val p2 = perDoc.head.toString
+      assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]),
         s"perDoc must aggregate the sorted hash-set arrays:\n$p2")
-      assert(nodes.exists(_.nodeName.contains("InMemoryTableScan")),
+      assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
         s"perDoc must read the ranked cache:\n$p2")
       assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeLike]),
         s"perDoc aggregate must ride the cache's doc_id partitioning, no exchange:\n$p2")
-    } finally recorded.headOption.foreach(_.unpersist())
+    } finally spark.catalog.clearCache()
   }
 
   test("span dedup: one win exchange into a single window pass, no dup-set join") {

@@ -11,8 +11,8 @@ class QueryProfileSpec extends AnyFunSuite {
   private lazy val spark = Sessions.local("4")
   private val sfDir = "/root/testdata/sf0.001"
   // Spark resolves a parquet file's schema with one job (its parallel
-  // footer read), so construction pays it once per `Tables` read; both
-  // queries below read the documents table once
+  // footer read), so construction pays it once per `Tables` read; every
+  // query below reads the documents table once
   private val ReadJobs = 1
 
   private def once(q: String): QueryProfile.Run = {
@@ -26,9 +26,11 @@ class QueryProfileSpec extends AnyFunSuite {
   }
 
   test("a lazy query runs only its table read at construction and its work in the action") {
-    val r = once("q_dedup_exact")
-    assert(r.constructJobs === ReadJobs, r)
-    assert(r.actionJobs >= 1, r)
+    for (q <- Seq("q_dedup_exact", "q_dedup_ngram_jaccard")) {
+      val r = once(q)
+      assert(r.constructJobs === ReadJobs, r)
+      assert(r.actionJobs >= 1, r)
+    }
   }
 
   test("an eager query runs its checkpoint jobs at construction") {

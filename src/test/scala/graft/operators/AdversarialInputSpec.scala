@@ -50,9 +50,8 @@ class AdversarialInputSpec extends AnyFunSuite {
     assert(TextOps.ngramTopK(docs).collect().length >= 0)
     assert(Dedup.simhashPairs(docs).collect().length >= 0)
     assert(Dedup.minhashLshPairs(docs).collect().length >= 0)
-    // "" and " " normalize to the same empty fingerprint: the
-    // canonicalization path must not emit a 0/0 within-group pair for
-    // shingle-less duplicate groups
+    // "" and " " normalize to the same empty text: shingle-less
+    // identical docs must not pair (no 0/0 jaccard)
     assert(Dedup.ngramJaccardPairs(docs).collect().length == 0)
   }
 }

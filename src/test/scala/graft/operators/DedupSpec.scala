@@ -160,13 +160,14 @@ class DedupSpec extends AnyFunSuite {
 
   test("ngram-jaccard canonicalization expands dup groups exactly (incl. capped within-group)") {
     import spark.implicits._
-    // Exercises the r13 exact-fingerprint phase: duplicate groups that
-    // only match after normalization (case/whitespace variants), a
-    // near-dup CROSS two groups, a df cap that pushes a within-group
-    // jaccard to m/(2n-m) < 1 (and below threshold for one group), and
-    // sub-3-token docs that have no shingles at all. Reference is a
-    // driver-side brute force replaying the oracle's cap semantics: df
-    // over ALL docs, common count over capped shingles, sizes full.
+    // Exact copies pair through the one prefix join like any other
+    // docs: duplicate groups that only match after normalization
+    // (case/whitespace variants), a near-dup CROSS two groups, a df cap
+    // that pushes a within-group jaccard to m/(2n-m) < 1 (and below
+    // threshold for one group), and sub-3-token docs that have no
+    // shingles at all. Reference is a driver-side brute force replaying
+    // the oracle's cap semantics: df over ALL docs, common count over
+    // capped shingles, sizes full.
     val words = (0 until 30).map(i => s"u$i")
     val base = words.mkString(" ")
     val baseVar = words.mkString("  ").toUpperCase // same normalized text

@@ -11,11 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (prefix boundaries land on every α = ⌈t·n⌉ rounding case), random
   * thresholds sweep the prefix fraction and the positional-filter
   * slack, random df caps exercise the capped-universe algebra (m vs n
-  * divergence), and planted exact-copy rounds flip the adaptive
-  * canonicalization branch (>10 % copy mass) while copy-free rounds
-  * keep the pure prefix path — both branches must emit the identical
-  * pair set WITH identical jaccard doubles (the shared c/(na+nb−c)
-  * shape, same division on both sides).
+  * divergence), and even rounds plant exact copies (case/whitespace
+  * variants) so identical documents meet the prefix join too — every
+  * round must emit the replica's pair set WITH identical jaccard
+  * doubles (the shared c/(na+nb−c) shape, same division on both
+  * sides).
   */
 class NgramJaccardRandomSpec extends AnyFunSuite {
 
@@ -55,8 +55,7 @@ class NgramJaccardRandomSpec extends AnyFunSuite {
         id -> (0 until len).map(_ => s"w${rnd.nextInt(vocab)}").mkString(" ")
       }
       // even rounds plant exact copies (case/whitespace variants of
-      // random base docs) above the 10 % adaptive trigger; odd rounds
-      // stay copy-free so the pure prefix branch runs
+      // random base docs); odd rounds stay copy-free
       val copies =
         if (round % 2 == 1) Seq.empty
         else (0 until math.max(2, nDocs / 3)).map { i =>
