@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -13,8 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * every row). `array<double>` out, one pass over a reference-held
   * centroid matrix — same rationale as [[HyperplaneBuckets]]: the
   * per-centroid DotProduct composition inlined the matrix as codegen
-  * literals and re-read the vector per centroid. Backs
-  * [[graft.operators.Similarity.annIvfTopK]] (SURVEY §2 #27 sibling).
+  * literals and re-read the vector per centroid. No operator runs it:
+  * both IVF operators assign and probe through [[ProbeCells]], and
+  * ProbeCellsSpec keeps this kernel as the reference half of the r15
+  * `sort_array` composition ProbeCells must reproduce.
   */
 case class CentroidScores(
     child: Expression,
@@ -120,20 +121,5 @@ object CentroidScores {
     ColumnBridge.column(CentroidScores(
       ColumnBridge.expression(v), centroids.flatten.toArray, norms,
       centroids.length, centroids.head.length))
-  }
-
-  /** Register `centroid_scores(v)` bound to a fixed centroid matrix for
-    * the SQL/`selectExpr` surface. Session-global (last registration
-    * wins) — Scala callers should prefer [[scores]].
-    */
-  def register(spark: SparkSession, centroids: Seq[Seq[Double]]): Unit = {
-    val dim = centroids.head.length
-    val flat = centroids.flatten.toArray
-    val norms = centroids.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "centroid_scores",
-      FunctionArity.checked("centroid_scores", 1)(
-        exprs => CentroidScores(exprs.head, flat, norms, centroids.length, dim)),
-      "built-in")
   }
 }

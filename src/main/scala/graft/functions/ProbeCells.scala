@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Top-`probes` IVF cell ids of a vector in ONE fused native kernel —
   * the assignment step of [[graft.operators.Dedup.embeddingNearDupsIvf]]
-  * (SURVEY §2 #25). Replaces the r15 composition
+  * (SURVEY §2 #25) and of [[graft.operators.Similarity.annIvfTopK]]
+  * (#27: top-1 for the corpus, top-nProbe for queries). Replaces the r15 composition
   * `slice(sort_array(transform(centroid_scores(v), …)), 1, p)`, whose
   * cost the r16 cellFactor sweep exposed (SCALING_r16
   * `lsh_vs_ivf_clustered_sf10`: 62/102/236 s at cells ×2/4/8 — the

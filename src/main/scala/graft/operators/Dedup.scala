@@ -214,9 +214,9 @@ object Dedup {
     * tolerance [[minhashLshPairs]] rides against the identical
     * exact-string DuckDB oracle). n (and the final jaccard's sizes)
     * stay EXACT string counts regardless: the generator emits distinct
-    * strings and row counts are collision-free. The verify jaccard is
-    * the shared c/(na+nb−c) double shape of [[minhashLshPairs]] — the
-    * two sites must never drift apart.
+    * strings and row counts are collision-free. The verify is
+    * [[jaccardVerify]], the c/(na+nb−c) double shape shared with
+    * [[minhashLshPairs]].
     *
     * CACHE OWNERSHIP: the operator cannot unpersist its two cached
     * frames (ranked and perDoc) itself — their consumers execute at the
@@ -294,11 +294,24 @@ object Dedup {
       .groupBy("doc_id_a", "doc_id_b")
       .agg(count(lit(1)).as("n_pref"))
       .drop("n_pref")
+    jaccardVerify(cand, perDoc, perDoc, threshold)
+  }
+
+  /** The ONE Jaccard-verify shape, shared by [[ngramJaccardPairs]] and
+    * [[minhashLshPairs]] so the two can never drift: candidate
+    * (doc_id_a, doc_id_b) pairs join the per-doc (doc_id, hs, n) sides,
+    * the compiled merge walk ([[graft.functions.SortedIntersectCount]],
+    * evaluated once) counts the sorted hash-set intersection c, and a
+    * pair passes when the double c/(na+nb−c) ≥ threshold — the shape
+    * the DuckDB oracles replay.
+    */
+  private def jaccardVerify(
+      cands: DataFrame, sideA: DataFrame, sideB: DataFrame, threshold: Double): DataFrame =
     EvalOnce.withColumns(
-        cand
-          .join(perDoc.select(
+        cands
+          .join(sideA.select(
             col("doc_id").as("doc_id_a"), col("hs").as("hs_a"), col("n").as("na")), "doc_id_a")
-          .join(perDoc.select(
+          .join(sideB.select(
             col("doc_id").as("doc_id_b"), col("hs").as("hs_b"), col("n").as("nb")), "doc_id_b"),
         graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")).as("n_common"))
       .withColumn(
@@ -306,7 +319,6 @@ object Dedup {
         col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("doc_id_a", "doc_id_b", "jaccard")
-  }
 
   /** Explicit partition count for the cached shingle-index exchanges,
     * from the CORPUS frame's optimizer stats (file-size-backed for the
@@ -478,24 +490,13 @@ object Dedup {
     // broadcast) before the hs arrays enter any join. Without the
     // filter the static planner sees the checkpoint's unknown stats
     // and SMJs both joins — the whole corpus's hash sets exchanged
-    // twice, 282 of the query's 540 shuffle MB at sf10. Same jaccard
-    // arithmetic as [[jaccardFinalize]], so the DuckDB oracle parity
-    // is unchanged.
-    def candSide(idCol: String, hsCol: String, nCol: String): DataFrame =
-      perDoc
-        .join(broadcast(cands.select(col(idCol).as("doc_id")).distinct()),
-          Seq("doc_id"), "leftsemi")
-        .select(col("doc_id").as(idCol), col("hs").as(hsCol), col("n").as(nCol))
-    EvalOnce.withColumns(
-        cands
-          .join(candSide("doc_id_a", "hs_a", "na"), "doc_id_a")
-          .join(candSide("doc_id_b", "hs_b", "nb"), "doc_id_b"),
-        graft.functions.SortedIntersectCount.column(col("hs_a"), col("hs_b")).as("n_common"))
-      .withColumn(
-        "jaccard",
-        col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_id_a", "doc_id_b", "jaccard")
+    // twice, 282 of the query's 540 shuffle MB at sf10. The arithmetic
+    // is [[jaccardVerify]]'s, shared with ngramJaccardPairs, so the
+    // DuckDB oracle parity is unchanged.
+    def candSide(idCol: String): DataFrame =
+      perDoc.join(broadcast(cands.select(col(idCol).as("doc_id")).distinct()),
+        Seq("doc_id"), "leftsemi")
+    jaccardVerify(cands, candSide("doc_id_a"), candSide("doc_id_b"), threshold)
   }
 
   /** Per-doc 64-bit SimHash: per bit, the sign of the ±1 vote sum across
@@ -604,6 +605,36 @@ object Dedup {
       .filter(col("cosine") >= threshold)
       .select("vec_id_a", "vec_id_b", "cosine")
 
+  /** The (bits, tables) choice for [[embeddingNearDupsLsh]], as a pure
+    * function of the corpus size and the quality budget — spec'd
+    * directly (DedupSpec) since the recall floor is a THEOREM about
+    * these two numbers: a pair at exactly `threshold` cosine matches
+    * one table with p₁ = q₁^bits (q₁ = 1 − θ/π), so recall after T
+    * OR'd tables is 1 − (1 − p₁)^T ≥ recallFloor.
+    */
+  private[graft] def lshParams(
+      n: Long, threshold: Double, tables: Int, bits: Int,
+      targetBucketSize: Int, recallFloor: Double, maxTables: Int): (Int, Int) = {
+    val q1 = 1.0 - math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi
+    // largest bits for which `maxTables` tables can still reach the
+    // recall floor: p1(bits) >= 1 - (1-floor)^(1/maxTables). The cap
+    // binds UNCONDITIONALLY — including over a caller-supplied `bits`
+    // above it (r10 took max(bits, cap), so an oversized floor request
+    // silently produced a configuration whose theoretical recall was
+    // below recallFloor — the exact failure mode this function exists
+    // to prevent). `bits` is a bucket-granularity FLOOR, recallFloor is
+    // the contract; when they conflict, granularity yields (bigger
+    // buckets, never silent recall loss).
+    val p1Min = 1.0 - math.pow(1.0 - recallFloor, 1.0 / maxTables)
+    val bitsCap = math.max(1, (math.log(p1Min) / math.log(q1)).toInt)
+    val effBits = math.min(bitsCap, math.max(bits, math.ceil(
+      math.log(math.max(1.0, n.toDouble / targetBucketSize)) / math.log(2.0)).toInt))
+    val p1 = math.pow(q1, effBits)
+    val tablesEff = math.max(tables, math.min(maxTables.toDouble,
+      math.ceil(math.log(1.0 - recallFloor) / math.log(1.0 - p1))).toInt)
+    (effBits, tablesEff)
+  }
+
   /** SURVEY #25 (scale path): the same embedding near-dup pairs with
     * hyperplane-LSH candidate generation instead of the O(n²) cross
     * join: vectors hash into `tables` independent `bits`-bit sign
@@ -647,36 +678,6 @@ object Dedup {
     * per-table miss probability compounds over `tables` independent
     * tables (e.g. cos 0.96, 8 bits: miss ≈ (1−0.91⁸)¹⁶ ≈ 4e-5).
     */
-  /** The (bits, tables) choice for [[embeddingNearDupsLsh]], as a pure
-    * function of the corpus size and the quality budget — spec'd
-    * directly (DedupSpec) since the recall floor is a THEOREM about
-    * these two numbers: a pair at exactly `threshold` cosine matches
-    * one table with p₁ = q₁^bits (q₁ = 1 − θ/π), so recall after T
-    * OR'd tables is 1 − (1 − p₁)^T ≥ recallFloor.
-    */
-  private[graft] def lshParams(
-      n: Long, threshold: Double, tables: Int, bits: Int,
-      targetBucketSize: Int, recallFloor: Double, maxTables: Int): (Int, Int) = {
-    val q1 = 1.0 - math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi
-    // largest bits for which `maxTables` tables can still reach the
-    // recall floor: p1(bits) >= 1 - (1-floor)^(1/maxTables). The cap
-    // binds UNCONDITIONALLY — including over a caller-supplied `bits`
-    // above it (r10 took max(bits, cap), so an oversized floor request
-    // silently produced a configuration whose theoretical recall was
-    // below recallFloor — the exact failure mode this function exists
-    // to prevent). `bits` is a bucket-granularity FLOOR, recallFloor is
-    // the contract; when they conflict, granularity yields (bigger
-    // buckets, never silent recall loss).
-    val p1Min = 1.0 - math.pow(1.0 - recallFloor, 1.0 / maxTables)
-    val bitsCap = math.max(1, (math.log(p1Min) / math.log(q1)).toInt)
-    val effBits = math.min(bitsCap, math.max(bits, math.ceil(
-      math.log(math.max(1.0, n.toDouble / targetBucketSize)) / math.log(2.0)).toInt))
-    val p1 = math.pow(q1, effBits)
-    val tablesEff = math.max(tables, math.min(maxTables.toDouble,
-      math.ceil(math.log(1.0 - recallFloor) / math.log(1.0 - p1))).toInt)
-    (effBits, tablesEff)
-  }
-
   def embeddingNearDupsLsh(
       embeddings: DataFrame,
       threshold: Double = 0.4,
@@ -770,6 +771,28 @@ object Dedup {
       e, threshold)
   }
 
+  /** The IVF cell-count sizing rule, extracted (r18) so the byte gate
+    * is directly spec-gated and the profiling harnesses can report
+    * requested-vs-gated cells without re-deriving the arithmetic:
+    * demand = max(cellFactor·√n, n·probes/(cap/2)) — the classical √n
+    * operating point, lifted so expected multi-probe population stays
+    * at half the hot-cell cap; supply = min(maxCells, maxCentroidBytes
+    * / (8·dim)) — the count cap AND the centroid-matrix byte gate (the
+    * matrix rides the task binary; see the wiring comment at the call
+    * site). Floor at max(minCells, probes).
+    */
+  private[graft] def ivfCellCount(
+      n: Long, dim: Int, probes: Int, cellFactor: Double,
+      minCells: Int = IvfDefaults.MinCells, maxCells: Int = IvfDefaults.MaxCells,
+      maxBucketSize: Int = IvfDefaults.MaxBucketSize,
+      maxCentroidBytes: Long = IvfDefaults.MaxCentroidBytes): Int = {
+    val cellsByBytes = math.max(minCells.toLong, maxCentroidBytes / (8L * dim))
+    math.max(math.max(minCells, probes).toLong,
+      math.min(math.min(maxCells.toLong, cellsByBytes),
+        math.max(math.ceil(cellFactor * math.sqrt(n.toDouble)).toLong,
+          math.ceil(n.toDouble * probes / (maxBucketSize / 2)).toLong))).toInt
+  }
+
   /** SURVEY #25 (second scale path, r15): the same embedding near-dup
     * pairs through IVF coarse-quantizer sharding instead of LSH tables
     * — the escape the LSH docstring declares for past the table budget,
@@ -781,8 +804,8 @@ object Dedup {
     * Shape: fit `nCells ≈ cellFactor·√n` coarse centroids on a BOUNDED
     * sample ([[Similarity.ivfCentroids]] — one hash-cutoff filtered
     * scan + driver-local Lloyd, corpus-size-independent); each vector assigns
-    * map-side to its `probes` nearest cells (full-precision
-    * [[graft.functions.CentroidScores]], the annIvfTopK assignment);
+    * map-side to its `probes` nearest cells (full-precision scores
+    * through [[graft.functions.ProbeCells]], the annIvfTopK assignment);
     * the ONE corpus-sized exchange carries each vector `probes` times,
     * int16-QUANTIZED (the r13 payload) and keyed by cell — n·probes
     * rows with probes a small CONSTANT, so the exchange grows LINEARLY
@@ -858,28 +881,6 @@ object Dedup {
     * equality and selection order are spec-gated in ProbeCellsSpec;
     * recall floor in DedupSpec; both regimes profiled in SCALING_r16.
     */
-  /** The IVF cell-count sizing rule, extracted (r18) so the byte gate
-    * is directly spec-gated and the profiling harnesses can report
-    * requested-vs-gated cells without re-deriving the arithmetic:
-    * demand = max(cellFactor·√n, n·probes/(cap/2)) — the classical √n
-    * operating point, lifted so expected multi-probe population stays
-    * at half the hot-cell cap; supply = min(maxCells, maxCentroidBytes
-    * / (8·dim)) — the count cap AND the centroid-matrix byte gate (the
-    * matrix rides the task binary; see the wiring comment at the call
-    * site). Floor at max(minCells, probes).
-    */
-  private[graft] def ivfCellCount(
-      n: Long, dim: Int, probes: Int, cellFactor: Double,
-      minCells: Int = IvfDefaults.MinCells, maxCells: Int = IvfDefaults.MaxCells,
-      maxBucketSize: Int = IvfDefaults.MaxBucketSize,
-      maxCentroidBytes: Long = IvfDefaults.MaxCentroidBytes): Int = {
-    val cellsByBytes = math.max(minCells.toLong, maxCentroidBytes / (8L * dim))
-    math.max(math.max(minCells, probes).toLong,
-      math.min(math.min(maxCells.toLong, cellsByBytes),
-        math.max(math.ceil(cellFactor * math.sqrt(n.toDouble)).toLong,
-          math.ceil(n.toDouble * probes / (maxBucketSize / 2)).toLong))).toInt
-  }
-
   def embeddingNearDupsIvf(
       embeddings: DataFrame,
       threshold: Double = 0.4,
@@ -922,8 +923,7 @@ object Dedup {
     val dim = Similarity.dimOf(embeddings)
     val nCells = ivfCellCount(
       n, dim, probes, cellFactor, minCells, maxCells, maxBucketSize, maxCentroidBytes)
-    val centroids = Similarity.ivfCentroids(
-      embeddings, nCells, lloydIters, nRows = n, normed = Some(e))
+    val centroids = Similarity.ivfCentroids(e, n, nCells, lloydIters)
     val pEff = math.min(probes, centroids.length)
     graft.functions.QuantCosinePairs.register(embeddings.sparkSession)
     // top-p cells per vector via the fused ProbeCells kernel (r16):

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.Random
 
-import graft.functions.{CentroidScores, DotProduct, HyperplaneBuckets, TopKByScore}
+import graft.functions.{DotProduct, HyperplaneBuckets, ProbeCells, TopKByScore}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -142,21 +142,7 @@ object Similarity {
   private def bucketsFor(v: Column, planes: Seq[Seq[Double]], tables: Int, bits: Int): Column =
     HyperplaneBuckets.buckets(v, planes, tables, bits)
 
-  /** SURVEY #27: hyperplane-LSH approximate top-k. Corpus and queries
-    * hash into `tables` independent `bits`-bit sign buckets; candidates
-    * are corpus vectors sharing any bucket with a query (bucket join on
-    * (table, bucket) with the tiny query side broadcast), then exact
-    * cosine + bounded-heap top-k on the candidate set only. Recall vs
-    * the exact #26 is spec'd in SimilaritySpec; on uniform data recall
-    * rises with `tables` and falls with `bits` (the standard LSH curve).
-    */
-  /** Deterministic IVF coarse quantizer: seed centroids are the corpus
-    * vectors with the `nCentroids` smallest xxhash64(vec_id) (a seeded
-    * pseudo-random draw), refined with `lloydIters` Lloyd iterations run
-    * as dataframe aggregations. The returned centroid table is tiny
-    * (C × dim doubles) and lives on the driver — index construction is a
-    * fit step, like any ML estimator.
-    */
+
   /** The unsigned-64 hash value below which a uniform xxhash64 lands
     * with probability `frac` — the pre-filter the fit draw uses to
     * bound per-task collect results.
@@ -188,8 +174,8 @@ object Similarity {
   private[graft] def fitDraw(
       e: DataFrame, target: Int, nRows: Long): Array[Array[Double]] = {
     // a non-positive nRows would mean frac = 1.0 — a full-corpus
-    // collect, the exact maxResultSize abort this draw replaces; the
-    // unknown-count fallback lives in ivfCentroids (one count() scan)
+    // collect, the exact maxResultSize abort this draw replaces; every
+    // caller sizes its own corpus
     require(nRows > 0, s"fitDraw needs the corpus row count, got $nRows")
     var frac = math.min(1.0, 1.5 * target.toDouble / nRows)
     var drawn: Array[(Long, Array[Double])] = Array.empty
@@ -240,30 +226,39 @@ object Similarity {
     drawn.sortBy(_._1).take(target).map(_._2)
   }
 
+  /** Fit-sample floor: the draw holds at least this many vectors, and
+    * the hierarchical and supercluster fits Lloyd-refine at most this
+    * many rows per group.
+    */
+  private val FitSample = 4096
+
+  /** Lloyd iterations of the supercluster fit in [[superQuantizer]]. */
+  private val SuperLloydIters = 2
+
+  /** Deterministic IVF coarse quantizer: seed centroids are the corpus
+    * vectors with the `nCentroids` smallest xxhash64(vec_id) (a seeded
+    * pseudo-random draw), refined with `lloydIters` Lloyd iterations run
+    * driver-local on that bounded draw. The returned centroid table is tiny
+    * (C × dim doubles) and lives on the driver — index construction is a
+    * fit step, like any ML estimator.
+    */
   private[graft] def ivfCentroids(
-      embeddings: DataFrame, nCentroids: Int, lloydIters: Int,
-      fitSample: Int = 4096,
-      hierThreshold: Int = 4096,
-      nRows: Long = -1L,
-      normed: Option[DataFrame] = None): Seq[Seq[Double]] = {
+      normed: DataFrame, nRows: Long, nCentroids: Int, lloydIters: Int,
+      hierThreshold: Int = 4096): Seq[Seq[Double]] = {
     // Bounded fit: ONE cluster-side filtered-collect job draws the
-    // max(nCentroids, fitSample) non-zero corpus vectors with the
-    // smallest xxhash64(vec_id) (see [[fitDraw]] for why it is a hash
-    // cutoff, not a TakeOrdered), and the Lloyd refinement runs
-    // driver-local on that sample matrix — the standard
-    // train-on-a-sample coarse quantizer. `nRows` is the caller's
-    // known non-zero-vector count (every wired caller has one from its
-    // own sizing); -1 falls back to one count() scan here. `normed` is
-    // the caller's already-materialized withNorm frame — every wired
-    // caller checkpoints one, and without it each draw round re-scans
-    // and re-norms the raw source (at 800k x dim 768, a full parquet
-    // rescan) while the normed blocks sit in the block store.
-    // The final cell ASSIGNMENT (annIvfTopK / ProbeCells) stays exact
-    // and distributed over the full corpus. The first nCentroids of the
-    // draw seed the cells (same seeding rule as the previous
-    // full-corpus fit); assignment scoring mirrors the CentroidScores
-    // kernel: dot(v,c)/‖c‖, −∞ for a zero centroid, first-max
-    // tie-break.
+    // max(nCentroids, FitSample) vectors with the smallest
+    // xxhash64(vec_id) (see [[fitDraw]] for why it is a hash cutoff,
+    // not a TakeOrdered), and the Lloyd refinement runs driver-local on
+    // that sample matrix — the standard train-on-a-sample coarse
+    // quantizer. `normed` is the caller's materialized [[withNorm]]
+    // frame (zero vectors can neither seed nor steer a cell — withNorm
+    // already excludes them) and `nRows` its row count; without the
+    // stored frame each draw round would re-scan and re-norm the raw
+    // source (at 800k x dim 768, a full parquet rescan). The final cell
+    // ASSIGNMENT (ProbeCells, in annIvfTopK and embeddingNearDupsIvf)
+    // stays exact and distributed over the full corpus. The first
+    // nCentroids of the draw seed the cells; fit scoring is
+    // [[nearestRow]], the driver twin of the ProbeCells rule.
     //
     // Past `hierThreshold` effective cells the fit goes HIERARCHICAL
     // (r17, verdict item 2): the flat Lloyd is O(iters·sample·nCells·
@@ -273,31 +268,27 @@ object Similarity {
     // [[hierarchicalCells]]. At or below the threshold the flat path
     // is byte-identical to the r15/r16 fit, so every oracled small-SF
     // result is unchanged.
-    // zero vectors can neither seed nor steer a cell — withNorm
-    // already excludes them centrally
-    val e = normed.getOrElse(withNorm(embeddings))
-    val n = if (nRows > 0) nRows else e.count()
     // an all-zero/empty corpus has nothing to seed cells with: return
     // the empty matrix (pEff = 0 downstream) instead of tripping
     // fitDraw's positive-count require with a confusing message
-    if (n == 0) return Seq.empty
-    val sample: Array[Array[Double]] =
-      fitDraw(e, math.max(nCentroids, fitSample), n)
+    if (nRows == 0) return Seq.empty
+    val sample = fitDraw(normed, math.max(nCentroids, FitSample), nRows)
     val effective = math.min(nCentroids, sample.length)
     val cells =
       if (effective <= hierThreshold)
         lloydRefine(sample, sample.take(nCentroids), lloydIters)
-      else hierarchicalCells(sample, effective, lloydIters, fitSample)
+      else hierarchicalCells(sample, effective, lloydIters)
     cells.map(_.toSeq).toSeq
   }
 
-  /** The shared Lloyd refinement: assign every sample vector to its
-    * best-scoring centroid (norm-scaled dot, −∞ zero-norm guard,
-    * first-max tie-break), recompute means, `iters` times; empty
-    * clusters keep their previous centroid. Factored out of
-    * [[ivfCentroids]] UNCHANGED (r17) so the flat path stays
-    * bit-identical to the r15/r16 fits; the hierarchical path reuses it
-    * per super.
+  private def rowNorms(mat: Array[Array[Double]]): Array[Double] =
+    mat.map(c => math.sqrt(c.map(x => x * x).sum))
+
+  /** The one Lloyd refinement: assign every sample vector to its
+    * [[nearestRow]], recompute means, `iters` times; empty clusters
+    * keep their previous centroid. The flat fit, each super of the
+    * hierarchical fit and the supercluster fit all run it, so every
+    * fit is bit-identical to the r15/r16 loops it replaced.
     */
   private def lloydRefine(
       sample: Array[Array[Double]],
@@ -307,25 +298,12 @@ object Similarity {
     val nC = centroids.length
     for (_ <- 1 to iters if nC > 0) {
       val dim = centroids(0).length
-      val norms = centroids.map(c => math.sqrt(c.map(x => x * x).sum))
+      val norms = rowNorms(centroids)
       val sums = Array.fill(nC)(new Array[Double](dim))
       val counts = new Array[Long](nC)
       for (v <- sample) {
         require(v.length == dim, s"ivf fit dimension mismatch: expected $dim, got ${v.length}")
-        var best = 0
-        var bestS = Double.NegativeInfinity
-        var c = 0
-        while (c < nC) {
-          var s = Double.NegativeInfinity
-          if (norms(c) != 0.0) {
-            var acc = 0.0
-            var i = 0
-            while (i < dim) { acc += v(i) * centroids(c)(i); i += 1 }
-            s = acc / norms(c)
-          }
-          if (s > bestS) { bestS = s; best = c }
-          c += 1
-        }
+        val best = nearestRow(v, centroids, norms, dim)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
@@ -339,10 +317,9 @@ object Similarity {
     centroids
   }
 
-  /** Index of the best-scoring row of `mat` for `v` under the shared
-    * rule (norm-scaled dot, zero-norm rows never win, first-max
-    * tie-break). The standalone twin of the scoring loop inside
-    * [[lloydRefine]] / [[superQuantizer]].
+  /** Index of the best-scoring row of `mat` for `v` — the one driver-side
+    * scoring loop, the twin of [[graft.functions.ProbeCells]]' top-1:
+    * norm-scaled dot, zero-norm rows never win, first-max tie-break.
     */
   private def nearestRow(
       v: Array[Double], mat: Array[Array[Double]], norms: Array[Double], dim: Int): Int = {
@@ -362,12 +339,39 @@ object Similarity {
     best
   }
 
+  /** [[nearestRow]] of every vector, parallel over driver cores. */
+  private def nearestRows(vs: Array[Array[Double]], mat: Array[Array[Double]]): Array[Int] = {
+    val norms = rowNorms(mat)
+    val dim = mat.head.length
+    val out = new Array[Int](vs.length)
+    java.util.stream.IntStream.range(0, vs.length).parallel()
+      .forEach(i => out(i) = nearestRow(vs(i), mat, norms, dim))
+    out
+  }
+
+  /** The one CSR builder: group `i` lands in group `assign(i)`, and the
+    * returned (offsets, members) lists each group's ids in ascending
+    * order (a stable counting pass), members(offsets(g) until
+    * offsets(g + 1)) for group g.
+    */
+  private def csr(assign: Array[Int], groups: Int): (Array[Int], Array[Int]) = {
+    val offsets = new Array[Int](groups + 1)
+    assign.foreach(a => offsets(a + 1) += 1)
+    var g = 0
+    while (g < groups) { offsets(g + 1) += offsets(g); g += 1 }
+    val cursor = offsets.clone()
+    val members = new Array[Int](assign.length)
+    var i = 0
+    while (i < assign.length) { val a = assign(i); members(cursor(a)) = i; cursor(a) += 1; i += 1 }
+    (offsets, members)
+  }
+
   /** Hierarchical coarse fit (r17, verdict item 2) — the escape from
     * the flat fit's O(nCells²·dim) driver Lloyd once the requested cell
     * count outgrows `hierThreshold`:
     *
     *  1. fit ~√nCells SUPER centroids with the ordinary Lloyd over the
-    *     bounded `fitSample` prefix of the draw (the supers only steer
+    *     bounded `FitSample` prefix of the draw (the supers only steer
     *     sample partitioning — they never ship anywhere);
     *  2. assign EVERY drawn sample vector to its nearest super — one
     *     O(sample·√nCells·dim) pass, parallel over driver cores;
@@ -377,7 +381,7 @@ object Similarity {
     *     and Lloyd-refine its cells from its OWN members, seeded by the
     *     first `quota` members in the global hash-draw order (the flat
     *     seeding rule, applied within the super). Each super's refine
-    *     set is capped at max(quota, fitSample) stride-sampled members,
+    *     set is capped at max(quota, FitSample) stride-sampled members,
     *     so a skewed super cannot reintroduce the quadratic.
     *
     * Total driver cost O(nCells^1.5·dim·iters) with steps 2-3 parallel
@@ -395,38 +399,25 @@ object Similarity {
   private def hierarchicalCells(
       sample: Array[Array[Double]],
       nCentroids: Int,
-      lloydIters: Int,
-      fitSample: Int): Array[Array[Double]] = {
+      lloydIters: Int): Array[Array[Double]] = {
     val n = sample.length
     val target = math.min(nCentroids, n)
-    val dim = sample.head.length
     val sRows = math.max(1, math.ceil(math.sqrt(target.toDouble)).toInt)
     val supers = lloydRefine(
-      sample.take(math.min(fitSample, n)), sample.take(sRows), lloydIters)
-    val sNorms = supers.map(c => math.sqrt(c.map(x => x * x).sum))
+      sample.take(math.min(FitSample, n)), sample.take(sRows), lloydIters)
     val sEff = supers.length
-    val assign = new Array[Int](n)
-    java.util.stream.IntStream.range(0, n).parallel()
-      .forEach(i => assign(i) = nearestRow(sample(i), supers, sNorms, dim))
-    // CSR members per super, preserving the global hash-draw order
-    // (stable counting pass) so per-super seeding follows the same
-    // "first k of the draw" rule the flat fit uses
-    val counts = new Array[Int](sEff)
-    assign.foreach(a => counts(a) += 1)
-    val offsets = new Array[Int](sEff + 1)
-    var s = 0
-    while (s < sEff) { offsets(s + 1) = offsets(s) + counts(s); s += 1 }
-    val cursor = offsets.clone()
-    val members = new Array[Int](n)
-    var i = 0
-    while (i < n) { val a = assign(i); members(cursor(a)) = i; cursor(a) += 1; i += 1 }
+    // CSR members per super, preserving the global hash-draw order so
+    // per-super seeding follows the same "first k of the draw" rule the
+    // flat fit uses
+    val (offsets, members) = csr(nearestRows(sample, supers), sEff)
+    val counts = Array.tabulate(sEff)(s => offsets(s + 1) - offsets(s))
     // proportional quota, largest remainder, capped by member count.
     // Σcounts = n ≥ target, so the remainder loop always terminates
     // with Σquota = target exactly.
     val quota = new Array[Int](sEff)
     val frac = new Array[Double](sEff)
     var allocated = 0
-    s = 0
+    var s = 0
     while (s < sEff) {
       val ideal = target.toDouble * counts(s) / n
       quota(s) = math.min(counts(s), ideal.toInt)
@@ -458,9 +449,9 @@ object Similarity {
         val memA = Array.tabulate(mCount)(j => sample(members(offsets(sp) + j)))
         // bounded per-super refine set: seeds stay the first q members
         // (flat rule); the Lloyd sample is a stride-thinning past
-        // max(q, fitSample) members so per-super cost is
-        // O(max(q, fitSample)·q·dim), never O(members·q·dim)
-        val cap = math.max(q, math.min(mCount, fitSample))
+        // max(q, FitSample) members so per-super cost is
+        // O(max(q, FitSample)·q·dim), never O(members·q·dim)
+        val cap = math.max(q, math.min(mCount, FitSample))
         val fit =
           if (mCount <= cap) memA
           else {
@@ -486,9 +477,8 @@ object Similarity {
     *
     * Entirely driver-local like the Lloyd refinement above — the cell
     * matrix is already on the driver (≤ maxCells × dim doubles), the
-    * fit runs on a ≤ `fitSample` stride-sample of it with the same
-    * scoring rule (norm-scaled dot, −∞ zero-norm guard, first-max
-    * tie-break), and the final cell→super assignment parallelizes over
+    * fit runs [[lloydRefine]] on a ≤ `FitSample` stride-sample of it,
+    * and the final cell→super assignment parallelizes over
     * driver cores (it is O(nCells·√nCells·dim) — ~0.2 s at 20k cells,
     * and nCells is capped at 2²⁰ upstream). Returns the supercluster
     * matrix plus a CSR (offsets, members) partition of ALL cell ids:
@@ -496,106 +486,31 @@ object Similarity {
     * superclusters reproduces flat assignment EXACTLY (the spec gate).
     */
   private[graft] def superQuantizer(
-      cells: Seq[Seq[Double]],
-      lloydIters: Int = 2,
-      fitSample: Int = 4096): (Seq[Seq[Double]], Array[Int], Array[Int]) = {
+      cells: Seq[Seq[Double]]): (Seq[Seq[Double]], Array[Int], Array[Int]) = {
     val nC = cells.length
     require(nC > 0, "superQuantizer needs at least one cell")
-    val dim = cells.head.length
     val sRows = math.max(1, math.ceil(math.sqrt(nC.toDouble)).toInt)
     val cellArr: Array[Array[Double]] = cells.map(_.toArray).toArray
     // deterministic stride sample: the cell matrix itself came from a
     // hashed corpus draw, so stride order carries no structure
-    val stride = math.max(1, nC / fitSample)
+    val stride = math.max(1, nC / FitSample)
     val sample: Array[Array[Double]] =
       Iterator.range(0, nC, stride).map(cellArr(_)).toArray
-
-    def bestOf(v: Array[Double], mat: Array[Array[Double]], norms: Array[Double]): Int = {
-      var best = 0
-      var bestS = Double.NegativeInfinity
-      var c = 0
-      while (c < mat.length) {
-        if (norms(c) != 0.0) {
-          var acc = 0.0
-          var i = 0
-          while (i < dim) { acc += v(i) * mat(c)(i); i += 1 }
-          val s = acc / norms(c)
-          if (s > bestS) { bestS = s; best = c }
-        }
-        c += 1
-      }
-      best
-    }
-
-    var supers: Array[Array[Double]] = sample.take(sRows).map(_.clone())
-    val sEff = supers.length
-    for (_ <- 1 to lloydIters) {
-      val norms = supers.map(c => math.sqrt(c.map(x => x * x).sum))
-      val sums = Array.fill(sEff)(new Array[Double](dim))
-      val counts = new Array[Long](sEff)
-      for (v <- sample) {
-        val b = bestOf(v, supers, norms)
-        var i = 0
-        while (i < dim) { sums(b)(i) += v(i); i += 1 }
-        counts(b) += 1
-      }
-      supers = Array.tabulate(sEff) { c =>
-        if (counts(c) == 0L) supers(c) else sums(c).map(_ / counts(c))
-      }
-    }
-
-    val norms = supers.map(c => math.sqrt(c.map(x => x * x).sum))
-    val assign = new Array[Int](nC)
-    java.util.stream.IntStream.range(0, nC).parallel()
-      .forEach(i => assign(i) = bestOf(cellArr(i), supers, norms))
-    val counts = new Array[Int](sEff)
-    assign.foreach(a => counts(a) += 1)
-    // drop EMPTY superclusters before shipping the matrix: Lloyd can
-    // strand a seed with no assigned cells, and a vector that spends
-    // one of its superProbes slots on an empty super gets nothing back
-    // for it — silently thinning the candidate pool the pruning recall
-    // depends on
-    val remap = new Array[Int](sEff)
-    val keptBuf = Array.newBuilder[Array[Double]]
-    var kept = 0
-    var s = 0
-    while (s < sEff) {
-      if (counts(s) > 0) { remap(s) = kept; keptBuf += supers(s); kept += 1 }
-      else remap(s) = -1 // never dereferenced: no cell assigns here
-      s += 1
-    }
-    val keptSupers = keptBuf.result()
+    val supers = lloydRefine(sample, sample.take(sRows), SuperLloydIters)
     // CSR over ascending cell ids within each supercluster — the probe
     // kernel's tie order is (score desc, cell asc), and member order
     // does not affect its selection, but determinism keeps plans
     // byte-identical across builds
-    val keptCounts = new Array[Int](kept)
-    assign.foreach(a => keptCounts(remap(a)) += 1)
-    val offsets = new Array[Int](kept + 1)
-    s = 0
-    while (s < kept) { offsets(s + 1) = offsets(s) + keptCounts(s); s += 1 }
-    val cursor = offsets.clone()
-    val membersArr = new Array[Int](nC)
-    var c = 0
-    while (c < nC) {
-      val d = remap(assign(c))
-      membersArr(cursor(d)) = c; cursor(d) += 1; c += 1
-    }
-    (keptSupers.map(_.toSeq).toSeq, offsets, membersArr)
+    val (offsets, members) = csr(nearestRows(cellArr, supers), supers.length)
+    // drop EMPTY superclusters before shipping the matrix: Lloyd can
+    // strand a seed with no assigned cells, and a vector that spends
+    // one of its superProbes slots on an empty super gets nothing back
+    // for it — silently thinning the candidate pool the pruning recall
+    // depends on. An empty group's offsets repeat, so dropping it
+    // leaves `members` as is and the distinct offsets as the CSR.
+    val kept = supers.indices.filter(s => offsets(s + 1) > offsets(s))
+    (kept.map(supers(_).toSeq), offsets.distinct, members)
   }
-
-  /** Per-row centroid scores — one fused native kernel
-    * ([[graft.functions.CentroidScores]]) constructed directly on these
-    * centroids (no session registry): norm-scaled dots, −∞ for a
-    * degenerate zero centroid (NaN would sort greatest and swallow every
-    * row).
-    */
-  private def centroidScores(v: Column, centroids: Seq[Seq[Double]]): Column =
-    CentroidScores.scores(v, centroids)
-
-  /** The nearest centroid's index: the position of the highest score. */
-  private def nearestCentroid(scores: Column): Column =
-    (array_position(scores, array_max(scores)) - 1).cast("int")
 
   /** SURVEY #27 (scale-path sibling): IVF approximate top-k. The corpus
     * partitions into `nCentroids` Voronoi cells; each query probes its
@@ -608,6 +523,8 @@ object Similarity {
     * scan fraction (16 cells / 12 probes ⇒ recall ≈0.92 at ~75% scan);
     * clustered real embeddings buy much more recall per probed cell, so
     * production should re-sweep nProbe downward on its own data.
+    * Cell assignment (top-1) and query probing (top-nProbe) both run
+    * the [[graft.functions.ProbeCells]] kernel the IVF dedup path uses.
     */
   def annIvfTopK(
       embeddings: DataFrame,
@@ -634,23 +551,17 @@ object Similarity {
       .observe(nObs, count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
     val centroids = ivfCentroids(
-      embeddings, nCentroids, lloydIters,
-      nRows = Observed.metrics(nObs, "Similarity.annIvfTopK", "n")("n").asInstanceOf[Long],
-      normed = Some(e))
-    val corpus = EvalOnce.withColumns(e, centroidScores(col("v"), centroids).as("scores"))
-      .withColumn("cluster", nearestCentroid(col("scores")))
-      .drop("scores")
-    // nProbe nearest cells per query: sort (−score, idx) structs, slice
-    val probes = {
-      val scored = transform(
-        centroidScores(col("v"), centroids),
-        (s, i) => struct((-s).as("ns"), i.as("idx")))
-      transform(slice(sort_array(scored), 1, nProbe), x => x.getField("idx"))
-    }
+      e, Observed.metrics(nObs, "Similarity.annIvfTopK", "n")("n").asInstanceOf[Long],
+      nCentroids, lloydIters)
+    // the top-1 cell as a generator output, not an alias: the join's
+    // inferred isnotnull(cluster) filter would otherwise copy the kernel
+    // (see [[EvalOnce]])
+    val corpus = e.select(col("*"), explode(ProbeCells.flat(col("v"), centroids, 1)).as("cluster"))
     val queries = e.filter(col("vec_id") < nQueries)
       .select(
         col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"),
-        explode(probes).as("cluster"))
+        explode(ProbeCells.flat(col("v"), centroids, math.min(nProbe, centroids.length)))
+          .as("cluster"))
     topKExplode(
       corpus.join(broadcast(queries), Seq("cluster"))
         .filter(col("vec_id") =!= col("query_id"))
@@ -670,6 +581,14 @@ object Similarity {
     withNorm(embeddings).withColumn("bkts", bucketsFor(col("v"), planes, tables, bits))
   }
 
+  /** SURVEY #27: hyperplane-LSH approximate top-k. Corpus and queries
+    * hash into `tables` independent `bits`-bit sign buckets; candidates
+    * are corpus vectors sharing any bucket with a query (bucket join on
+    * (table, bucket) with the tiny query side broadcast), then exact
+    * cosine + bounded-heap top-k on the candidate set only. Recall vs
+    * the exact #26 is spec'd in SimilaritySpec; on uniform data recall
+    * rises with `tables` and falls with `bits` (the standard LSH curve).
+    */
   def annLshTopK(
       embeddings: DataFrame,
       k: Int = 10,

@@ -203,8 +203,10 @@ class PlanAuditSpec extends AnyFunSuite {
       "LSH bucketing must go through the fused kernel (per-plane literal " +
         "DotProducts regress codegen size and bucketing cost ~5x)")
     val ivf = plan(Similarity.annIvfTopK(Tables.embeddings(spark, sfDir)))
-    assert(ivf.contains("centroid_scores"),
-      "IVF assignment must go through the fused centroid kernel")
+    assert(ivf.contains("probe_cells"),
+      "IVF assignment and probing must go through the fused ProbeCells kernel")
+    assert(!ivf.contains("centroid_scores") && !ivf.contains("sort_array"),
+      s"the retired centroid_scores/sort_array selection is back:\n$ivf")
   }
 
   test("signature pipeline: one doc_id exchange of raw rows, wide buffers stay local") {

@@ -53,13 +53,14 @@ class HierFitSpec extends AnyFunSuite {
   }
 
   test("hierarchical fit: count contract, determinism, quality within 5% of flat") {
-    val emb = corpus(2000, 16, seed = 61L)
+    val emb = Similarity.withNorm(corpus(2000, 16, seed = 61L))
+    val n = emb.count()
     val nCells = 256
     // hierThreshold=64 forces the hierarchical path at a size where the
     // flat fit is still cheap enough to be the in-test reference
-    val hier = Similarity.ivfCentroids(emb, nCells, 2, hierThreshold = 64)
-    val hier2 = Similarity.ivfCentroids(emb, nCells, 2, hierThreshold = 64)
-    val flat = Similarity.ivfCentroids(emb, nCells, 2, hierThreshold = Int.MaxValue)
+    val hier = Similarity.ivfCentroids(emb, n, nCells, 2, hierThreshold = 64)
+    val hier2 = Similarity.ivfCentroids(emb, n, nCells, 2, hierThreshold = 64)
+    val flat = Similarity.ivfCentroids(emb, n, nCells, 2, hierThreshold = Int.MaxValue)
     assert(hier.length == flat.length && hier.length == nCells)
     assert(hier == hier2, "hierarchical fit is not deterministic")
     assert(hier.forall(c => c.forall(x => !x.isNaN && !x.isInfinite)))
@@ -72,9 +73,10 @@ class HierFitSpec extends AnyFunSuite {
   }
 
   test("hierarchical fit returns the corpus size when fewer non-zero vectors than cells") {
-    val emb = corpus(300, 8, seed = 71L)
-    val hier = Similarity.ivfCentroids(emb, 1000, 1, hierThreshold = 64)
-    val flat = Similarity.ivfCentroids(emb, 1000, 1, hierThreshold = Int.MaxValue)
+    val emb = Similarity.withNorm(corpus(300, 8, seed = 71L))
+    val n = emb.count()
+    val hier = Similarity.ivfCentroids(emb, n, 1000, 1, hierThreshold = 64)
+    val flat = Similarity.ivfCentroids(emb, n, 1000, 1, hierThreshold = Int.MaxValue)
     assert(hier.length == flat.length,
       s"count contract broke on a small corpus: hier=${hier.length} flat=${flat.length}")
   }
@@ -97,8 +99,8 @@ class HierFitSpec extends AnyFunSuite {
       val got = Similarity.fitDraw(e, t, n).map(_.toSeq).toSeq
       assert(got === oldDraw(t), s"draw diverged at target=$t nRows=$n")
     }
-    // a non-positive count must refuse loudly, not full-collect (the
-    // unknown-count fallback is ivfCentroids' one count() scan)
+    // a non-positive count must refuse loudly, not full-collect (every
+    // caller passes the count of the frame it hands over)
     assertThrows[IllegalArgumentException](Similarity.fitDraw(e, 16, -1L))
     // r19 (ADVICE): an nRows that badly UNDERestimates the corpus
     // (claims 1 row for 500) starts frac at 1.0 — the guard must

@@ -4,13 +4,19 @@ of the library): reads Verify output dir, runs each oracle SQL in DuckDB
 against the same sf dir, and compares row sets.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [onlySubstr1,onlySubstr2,...]
+       python3 tools/check.py --digest <verifyOutDir>
 
 The optional third arg restricts the compare to queries whose name
 contains any of the comma-separated substrings (for scaled-dir runs
 where some oracles are deliberately out of scope).
+
+--digest prints one `name sha256` line per query output directory,
+hashing the rows after the same canon() the oracle compare applies
+(floats at full round-trip precision). Two Verify runs with equal
+digests produced bit-identical outputs, which is the only exact check
+the queries without an oracle have. It needs no DuckDB.
 """
-import sys, json, glob, os
-import duckdb
+import sys, json, glob, os, hashlib
 import pyarrow.parquet as pq
 import pandas as pd
 
@@ -23,7 +29,22 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("datetime64[us]")
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
+def read_output(spark_dir):
+    files = sorted(glob.glob(os.path.join(spark_dir, "*.parquet")))
+    return pd.concat([pq.read_table(f).to_pandas() for f in files]) if files else None
+
+def digest(out_dir):
+    for name in sorted(os.listdir(out_dir)):
+        got = read_output(os.path.join(out_dir, name))
+        if got is None:
+            continue
+        g = canon(got)
+        body = ",".join(f"{c}:{t}" for c, t in zip(g.columns, g.dtypes)) + "\n" + g.to_csv(index=False)
+        print(f"{name} {hashlib.sha256(body.encode()).hexdigest()}")
+    return 0
+
 def main(sf_dir, out_dir, only=None):
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -46,11 +67,9 @@ def main(sf_dir, out_dir, only=None):
         oracle = {k: v for k, v in oracle.items() if any(s in k for s in pats)}
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
-        spark_dir = os.path.join(out_dir, name)
-        files = glob.glob(os.path.join(spark_dir, "*.parquet"))
-        if not files:
+        got = read_output(os.path.join(out_dir, name))
+        if got is None:
             print(f"FAIL {name}: no spark output"); n_bad += 1; continue
-        got = pd.concat([pq.read_table(f).to_pandas() for f in files])
         try:
             exp = con.execute(sql).df()
         except Exception as e:
@@ -73,4 +92,6 @@ def main(sf_dir, out_dir, only=None):
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--digest":
+        sys.exit(digest(sys.argv[2]))
     sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None))
