@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
@@ -127,20 +126,4 @@ case class CosinePairs(child: Expression, threshold: Double)
     copy(child = newChild)
 
   override def prettyName: String = "cosine_pairs"
-}
-
-object CosinePairs {
-  /** Register `cosine_pairs(members, threshold)` (threshold a foldable
-    * double literal).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_pairs",
-      FunctionArity.checked("cosine_pairs", 2) { exprs =>
-        val t = exprs(1)
-        require(t.foldable && t.dataType == DoubleType,
-          s"cosine_pairs threshold must be a double literal, got $t")
-        CosinePairs(exprs.head, t.eval().asInstanceOf[Double])
-      },
-      "built-in")
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Sequential dot product of two double arrays as a native Catalyst
@@ -77,10 +78,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Register `dot_product(a, b)` as a SQL/`expr` function on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      FunctionArity.checked("dot_product", 2)(exprs => DotProduct(exprs(0), exprs(1))),
-      "built-in")
+  /** `dot_product(a, b)` as a Column. */
+  def column(a: Column, b: Column): Column =
+    ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

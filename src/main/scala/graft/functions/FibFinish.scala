@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Fibonacci / golden-ratio multiplicative-hash finisher (Knuth, TAOCP
@@ -49,10 +50,6 @@ object FibFinish {
   /** Reference implementation, also the interpreted path. */
   def finish(h: Long): Long = (h * Golden) >>> 40
 
-  /** Register `fib_finish(bigint)` as a SQL/`expr` function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fib_finish",
-      FunctionArity.checked("fib_finish", 1)(exprs => FibFinish(exprs.head)),
-      "built-in")
+  /** `fib_finish(h)` as a Column. */
+  def column(h: Column): Column = ColumnBridge.column(FibFinish(ColumnBridge.expression(h)))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** In-bucket Hamming pair scoring for SimHash banding — the
@@ -109,17 +110,7 @@ case class HammingPairs(child: Expression, maxHamming: Int)
 }
 
 object HammingPairs {
-  /** Register `hamming_pairs(members, maxHamming)` (maxHamming a
-    * foldable int literal).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_pairs",
-      FunctionArity.checked("hamming_pairs", 2) { exprs =>
-        val m = exprs(1)
-        require(m.foldable && m.dataType == IntegerType,
-          s"hamming_pairs maxHamming must be an integer literal, got $m")
-        HammingPairs(exprs.head, m.eval().asInstanceOf[Int])
-      },
-      "built-in")
+  /** `hamming_pairs(members, maxHamming)` as a generator Column. */
+  def column(members: Column, maxHamming: Int): Column =
+    ColumnBridge.column(HammingPairs(ColumnBridge.expression(members), maxHamming))
 }

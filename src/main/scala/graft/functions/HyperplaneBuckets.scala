@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -120,31 +119,14 @@ case class HyperplaneBuckets(
 }
 
 object HyperplaneBuckets {
-  /** The kernel as a Column bound to this plane matrix — direct
-    * expression construction, no session registry involved, so
-    * concurrent callers with different matrices can never observe each
-    * other's binding.
+  /** The kernel as a Column bound to this plane matrix: the matrix
+    * rides the expression itself, so concurrent callers with different
+    * matrices can never observe each other's binding.
     */
   def buckets(v: org.apache.spark.sql.Column, planes: Seq[Seq[Double]],
       tables: Int, bits: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(HyperplaneBuckets(
       ColumnBridge.expression(v), planes.flatten.toArray, tables, bits, planes.head.length))
-  }
-
-  /** Register `hyperplane_buckets(v)` bound to a fixed plane matrix for
-    * the SQL/`selectExpr` surface. Session-global: the LAST registration
-    * wins for plans analyzed afterwards — Scala callers should prefer
-    * [[buckets]], which has no shared state.
-    */
-  def register(
-      spark: SparkSession, planes: Seq[Seq[Double]], tables: Int, bits: Int): Unit = {
-    val dim = planes.head.length
-    val flat = planes.flatten.toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_buckets",
-      FunctionArity.checked("hyperplane_buckets", 1)(
-        exprs => HyperplaneBuckets(exprs.head, flat, tables, bits, dim)),
-      "built-in")
   }
 }

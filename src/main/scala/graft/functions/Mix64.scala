@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** MurmurHash3's 64-bit finalizer (fmix64 — public domain, Appleby): a
@@ -70,10 +71,6 @@ object Mix64 {
     h
   }
 
-  /** Register `mix64(bigint)` as a SQL/`expr` function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mix64",
-      FunctionArity.checked("mix64", 1)(exprs => Mix64(exprs.head)),
-      "built-in")
+  /** `mix64(h)` as a Column. */
+  def column(h: Column): Column = ColumnBridge.column(Mix64(ColumnBridge.expression(h)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
@@ -228,17 +228,9 @@ case class QuantCosinePairs(child: Expression, threshold: Double)
 }
 
 object QuantCosinePairs {
-  /** Register `quant_cosine_pairs(members, threshold)` (threshold a
-    * foldable double literal).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_cosine_pairs",
-      FunctionArity.checked("quant_cosine_pairs", 2) { exprs =>
-        val t = exprs(1)
-        require(t.foldable && t.dataType == DoubleType,
-          s"quant_cosine_pairs threshold must be a double literal, got $t")
-        QuantCosinePairs(exprs.head, t.eval().asInstanceOf[Double])
-      },
-      "built-in")
+  /** `quant_cosine_pairs(members, threshold)` as a generator Column. */
+  def column(members: Column, threshold: Double): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(QuantCosinePairs(ColumnBridge.expression(members), threshold))
+  }
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit polynomial rolling hash of a string's UTF-8 bytes:
@@ -65,10 +66,7 @@ object RollingHash {
     h
   }
 
-  /** Register `rolling_hash(str)` as a SQL/`expr` function on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash",
-      FunctionArity.checked("rolling_hash", 1)(exprs => RollingHash(exprs.head)),
-      "built-in")
+  /** `rolling_hash(text)` as a Column. */
+  def column(text: Column): Column =
+    ColumnBridge.column(RollingHash(ColumnBridge.expression(text)))
 }

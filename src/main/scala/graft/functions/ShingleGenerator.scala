@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,8 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 // CodegenFallback: GenerateExec drives generators through eval() — the
 // win here is eliminating the exchange, not expression codegen
-case class ShingleGenerator(
-    child: Expression, n: Int = 3, fname: String = "shingles", distinct: Boolean = false)
+case class ShingleGenerator(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression with CollectionGenerator with CodegenFallback {
 
   require(n >= 1, "shingle width must be >= 1")
@@ -40,7 +40,7 @@ case class ShingleGenerator(
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$fname requires a string argument, got ${child.dataType}")
+      s"$prettyName requires a string argument, got ${child.dataType}")
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val raw = child.eval(input)
@@ -84,7 +84,8 @@ case class ShingleGenerator(
   override protected def withNewChildInternal(newChild: Expression): ShingleGenerator =
     copy(child = newChild)
 
-  override def prettyName: String = fname
+  override def prettyName: String =
+    if (n == 1) "tokens" else if (distinct) "shingles_distinct" else "shingles"
 }
 
 object ShingleGenerator {
@@ -102,25 +103,11 @@ object ShingleGenerator {
   private[graft] def tokenize(text: String): Array[String] =
     text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
 
-  /** Register `shingles(str)` (3-gram), `tokens(str)` (the n=1
-    * degenerate case — the normalized unigram stream) and
-    * `shingles_distinct(str)` (per-row set semantics, first occurrence
-    * wins) as generator functions.
+  /** The generator as a Column: `shingles(text)` (word 3-grams),
+    * `n = 1` for `tokens(text)` (the normalized unigram stream) and
+    * `distinct = true` for `shingles_distinct(text)` (per-row set
+    * semantics, first occurrence wins).
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles",
-      FunctionArity.checked("shingles", 1)(exprs => ShingleGenerator(exprs.head)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tokens",
-      FunctionArity.checked("tokens", 1)(exprs =>
-        ShingleGenerator(exprs.head, n = 1, fname = "tokens")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_distinct",
-      FunctionArity.checked("shingles_distinct", 1)(exprs =>
-        ShingleGenerator(exprs.head, fname = "shingles_distinct", distinct = true)),
-      "built-in")
-  }
+  def column(text: Column, n: Int = 3, distinct: Boolean = false): Column =
+    ColumnBridge.column(ShingleGenerator(ColumnBridge.expression(text), n, distinct))
 }

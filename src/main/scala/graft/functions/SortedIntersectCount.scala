@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,20 +94,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  /** The expression as a Column — direct construction, no session
-    * registry (same pattern as the other graft kernels).
-    */
+  /** `sorted_intersect_count(a, b)` as a Column. */
   def column(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** Register `sorted_intersect_count(a, b)` for SQL/`expr` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      FunctionArity.checked("sorted_intersect_count", 2)(exprs =>
-        SortedIntersectCount(exprs(0), exprs(1))),
-      "built-in")
 }

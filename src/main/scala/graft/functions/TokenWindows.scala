@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,15 +82,7 @@ case class TokenWindows(child: Expression, k: Int)
 }
 
 object TokenWindows {
-  /** Register `token_windows(str, k)` (k a foldable int literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_windows",
-      FunctionArity.checked("token_windows", 2) { exprs =>
-        val kExpr = exprs(1)
-        require(kExpr.foldable && kExpr.dataType == IntegerType,
-          s"token_windows k must be an integer literal, got $kExpr")
-        TokenWindows(exprs.head, kExpr.eval().asInstanceOf[Int])
-      },
-      "built-in")
+  /** `token_windows(text, k)` as a generator Column. */
+  def column(text: Column, k: Int): Column =
+    ColumnBridge.column(TokenWindows(ColumnBridge.expression(text), k))
 }

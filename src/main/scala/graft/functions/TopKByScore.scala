@@ -4,11 +4,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Bounded-heap top-k aggregate: keeps the k best (score, id) pairs,
@@ -112,13 +113,8 @@ case class TopKByScore(
 }
 
 object TopKByScore {
-  /** Register `topk_by_score(score, id, k)` (k a literal int). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score",
-      FunctionArity.checked("topk_by_score", 3) { exprs =>
-        require(exprs(2).foldable, "k must be a literal")
-        TopKByScore(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Number].intValue())
-      },
-      "built-in")
+  /** `topk_by_score(score, id, k)` as an aggregate Column. */
+  def column(score: Column, id: Column, k: Int): Column =
+    ColumnBridge.column(TopKByScore(
+      ColumnBridge.expression(score), ColumnBridge.expression(id), k).toAggregateExpression())
 }

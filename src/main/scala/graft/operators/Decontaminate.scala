@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.EvalContainment
+import graft.functions.{EvalContainment, ShingleGenerator}
 
 /** Eval-set decontamination (SURVEY §2 — LLM-pipeline block): find and
   * remove training documents that contain a benchmark/eval document,
@@ -115,8 +115,8 @@ object Decontaminate {
     val evalSizes = evalInv.groupBy("doc_id").agg(count(lit(1)).as("n_eval"))
     val evalSide = evalInv.join(evalSizes, "doc_id")
       .select(col("doc_id").as("eval_id"), col("shingle"), col("n_eval"))
-    graft.functions.ShingleGenerator.register(corpus.sparkSession)
-    corpus.selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+    corpus.select(
+        col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
       .join(broadcast(evalSide), "shingle")
       .groupBy(col("doc_id"), col("eval_id"), col("n_eval"))
       .agg(count(lit(1)).as("n_common"))

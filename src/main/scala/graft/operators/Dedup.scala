@@ -1,12 +1,15 @@
 package graft.operators
 
+import graft.functions.{
+  HammingPairs, Mix64, QuantCosinePairs, RollingHash, ShingleGenerator, TokenWindows}
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over `documents` / `embeddings`
-  * (SURVEY §2 #21-25), built from codegen'd expressions plus two native
-  * Catalyst expressions (RollingHash, DotProduct) — no UDFs.
+  * (SURVEY §2 #21-25), built from codegen'd expressions plus graft's
+  * native Catalyst kernels (the `graft.functions` Column constructors)
+  * — no UDFs.
   *
   * 100 TB shuffle discipline (SURVEY §4): the only wide exchanges move
   * (key, doc_id) pairs — the shingle inverted index, LSH band buckets,
@@ -57,13 +60,13 @@ object Dedup {
     * (the old distinct absorbed them); no wired producer does.
     */
   private[graft] def shingleIndex(documents: DataFrame): DataFrame = {
-    graft.functions.ShingleGenerator.register(documents.sparkSession)
     // no CpuSpread here: whether the generator's scan stage should
     // spread depends on the caller's input — TextOps.ngramTopK spreads
     // its corpus, while Decontaminate's eval side is small BY
     // CONSTRUCTION yet reads the same file-backed table as the corpus,
     // so no byte floor could tell the two apart
-    documents.selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+    documents.select(
+      col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
   }
 
   /** The signature-space backbone: the same inverted index with the
@@ -83,7 +86,6 @@ object Dedup {
     * shingles with the same xxhash64 inline.
     */
   private[graft] def hashedShingleIndex(documents: DataFrame): DataFrame = {
-    graft.functions.ShingleGenerator.register(documents.sparkSession)
     documents
       // set semantics from the generator (r12, as shingleIndex): the
       // per-row dedup of distinct STRINGS leaves (doc_id, h) distinct
@@ -92,7 +94,7 @@ object Dedup {
       // hashed space's documented n²/2⁶⁴ tolerance — so the dedup
       // aggregate this index used to run after the exchange is gone
       // (it was a full ObjectHashAggregate pass over the index).
-      .selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+      .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
       .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
       // partition by doc_id BEFORE any per-doc aggregate a consumer
       // adds: the aggregate then runs just past this exchange with ONE
@@ -119,18 +121,14 @@ object Dedup {
     * Jaccard pair set) never inspects the hash values.
     */
   private[graft] def mixedShingleIndex(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    graft.functions.ShingleGenerator.register(spark)
-    graft.functions.RollingHash.register(spark)
-    graft.functions.Mix64.register(spark)
     // CpuSpread (r19): same single-task-scan guard as shingleIndex
     CpuSpread.spread(documents)
       // generator-side set semantics, same rationale and collision
       // class as [[hashedShingleIndex]] (and the oracle replays
       // list_distinct before hashing, so both engines see the same
       // per-doc distinct shingle stream)
-      .selectExpr("doc_id", "shingles_distinct(text) AS shingle")
-      .selectExpr("doc_id", "mix64(rolling_hash(shingle)) AS h")
+      .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
+      .select(col("doc_id"), Mix64.column(RollingHash.column(col("shingle"))).as("h"))
       // same doc_id pre-partition as [[hashedShingleIndex]]: the SimHash
       // aggregate's 65-long vote buffers stay one-per-doc local instead
       // of one-per-doc-per-map-task crossing the exchange
@@ -245,14 +243,13 @@ object Dedup {
       documents: DataFrame,
       threshold: Double = 0.8,
       maxShingleDf: Option[Int] = None): DataFrame = {
-    graft.functions.ShingleGenerator.register(documents.sparkSession)
     val nP = indexShuffleParts(documents)
     // CpuSpread (r19): the shingle generator + xxhash64 are the scan
     // stage's CPU; single-task on an unsplittable local file (the r19
     // profile read ~1.5 s of one-core generator work inside
     // q_dedup_groups), no-op on many-file corpora
     val hashed = CpuSpread.spread(documents.select(col("doc_id"), col("text")))
-      .selectExpr("doc_id", "shingles_distinct(text) AS shingle")
+      .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
       .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
     val keep = maxShingleDf.map(cap => col("df") <= cap).getOrElse(lit(true))
     val wDoc = Window.partitionBy("doc_id")
@@ -550,12 +547,11 @@ object Dedup {
     // the quadratic pair set itself crossed the distinct exchange;
     // the quadratic xor+popcount stays, as CPU, but only pairs within
     // maxHamming — the near-dup set — leave the stage).
-    graft.functions.HammingPairs.register(documents.sparkSession)
     capBuckets(chunks, Seq("chunk", "ck"), maxBucketSize, dropObs)
       .groupBy("chunk", "ck")
       .agg(collect_set(struct(col("doc_id"), col("simhash"))).as("ms"))
       .filter(size(col("ms")) > 1)
-      .selectExpr(s"hamming_pairs(ms, $maxHamming)")
+      .select(HammingPairs.column(col("ms"), maxHamming))
       .distinct()
   }
 
@@ -721,7 +717,6 @@ object Dedup {
     val (effBits, tablesEff) =
       lshParams(n, threshold, tables, bits, targetBucketSize, recallFloor, maxTables)
     val planes = Similarity.hyperplanes(Similarity.dimOf(embeddings), tablesEff, effBits)
-    graft.functions.QuantCosinePairs.register(embeddings.sparkSession)
     // r13 (verdict item 5): the bucket exchange carries int16-QUANTIZED
     // vectors — (vec_id, 2·dim bytes + scale + quantized-norm + norm) —
     // instead of the dim·8 B double arrays, ~3.4× fewer bytes on the one
@@ -753,7 +748,7 @@ object Dedup {
         col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"),
         col("norm"))).as("ms"))
       .filter(size(col("ms")) > 1)
-      .selectExpr(s"quant_cosine_pairs(ms, CAST($threshold AS DOUBLE))")
+      .select(QuantCosinePairs.column(col("ms"), threshold))
       // the one pair-sized exchange: candidates dedupe BEFORE the
       // verify. At int16 the margin band is empty for any realistic
       // density, so this stream is the passing pairs times their
@@ -925,7 +920,6 @@ object Dedup {
       n, dim, probes, cellFactor, minCells, maxCells, maxBucketSize, maxCentroidBytes)
     val centroids = Similarity.ivfCentroids(e, n, nCells, lloydIters)
     val pEff = math.min(probes, centroids.length)
-    graft.functions.QuantCosinePairs.register(embeddings.sparkSession)
     // top-p cells per vector via the fused ProbeCells kernel (r16):
     // bounded selection instead of the r15 sort_array-over-structs
     // composition, applied to the CORPUS side (both members of a pair
@@ -983,7 +977,7 @@ object Dedup {
         col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"),
         col("norm"))).as("ms"))
       .filter(size(col("ms")) > 1)
-      .selectExpr(s"quant_cosine_pairs(ms, CAST($threshold AS DOUBLE))")
+      .select(QuantCosinePairs.column(col("ms"), threshold))
       .distinct() // a pair can surface from up to `probes` shared cells
     cosineVerify(
       cands.join(
@@ -1044,7 +1038,6 @@ object Dedup {
     */
   def dedupSpans(documents: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.TokenWindows.register(documents.sparkSession)
     // EAGER (r16 audit): the windows chain and the final span-removal
     // join's probe side are independent branches of one job — when the
     // join goes sort-merge (the at-scale shape: spanStarts outgrows the
@@ -1067,7 +1060,7 @@ object Dedup {
     // docs (fewer than k tokens) contribute no windows and pass
     // through whole.
     val wins = toks
-      .selectExpr("doc_id", s"token_windows(concat_ws(' ', toks), $k)")
+      .select(col("doc_id"), TokenWindows.column(concat_ws(" ", col("toks")), k))
       // the window TEXT never reaches the output (clean_text rebuilds
       // from token positions), so window equality rides a 128-bit
       // key — two SEED-SEPARATED streams of the same xxhash64 family

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{FibFinish, RollingHash, TopKByScore}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,13 +41,10 @@ object Sampling {
     * the wrap).
     */
   private[graft] def sampleKey(id: Column): Column =
-    call_function("fib_finish", call_function("rolling_hash", id.cast("string")))
+    FibFinish.column(RollingHash.column(id.cast("string")))
 
-  private def keyed(events: DataFrame): DataFrame = {
-    graft.functions.RollingHash.register(events.sparkSession)
-    graft.functions.FibFinish.register(events.sparkSession)
+  private def keyed(events: DataFrame): DataFrame =
     EvalOnce.withColumns(events, sampleKey(col("event_id")).as("sample_key"))
-  }
 
   /** Per-stratum Bernoulli downsampling: keep a row iff its sample key
     * falls under its stratum's rate threshold. `rates` is an explicit
@@ -85,8 +83,6 @@ object Sampling {
     require(weights.forall(_._2 > 0.0), s"weights must be positive: $weights")
     require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
       s"weights must sum to 1: $weights")
-    graft.functions.RollingHash.register(events.sparkSession)
-    graft.functions.FibFinish.register(events.sparkSession)
     val key = sampleKey(col("user_id"))
     val cuts = weights.map(_._2).scanLeft(0.0)(_ + _).tail // cumulative
     val label = weights.init.zip(cuts.init).foldRight(lit(weights.last._1)) {
@@ -110,13 +106,11 @@ object Sampling {
     */
   def fixedSizePerStratum(events: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    graft.functions.TopKByScore.register(events.sparkSession)
     keyed(events)
       .groupBy("event_type")
       // TopKByScore keeps the HIGHEST scores; negate the key so the
       // smallest keys win (tiebreak inside the heap is already id ASC)
-      .agg(call_function("topk_by_score",
-        -col("sample_key").cast("double"), col("event_id"), lit(k)).as("top"))
+      .agg(TopKByScore.column(-col("sample_key").cast("double"), col("event_id"), k).as("top"))
       .select(col("event_type"), posexplode(col("top")))
       .select(
         col("event_type"),
@@ -190,8 +184,6 @@ object Sampling {
     * regardless of micro-batch chunking — spec'd in StreamingSpec.
     */
   def applyMixture(documents: DataFrame, thresholds: DataFrame): DataFrame = {
-    graft.functions.RollingHash.register(documents.sparkSession)
-    graft.functions.FibFinish.register(documents.sparkSession)
     EvalOnce.withColumns(documents.select(col("doc_id"), col("source"), col("lang")),
         sampleKey(col("doc_id")).as("sample_key"))
       .join(broadcast(thresholds), "source")
@@ -219,8 +211,6 @@ object Sampling {
   def shuffleShard(documents: DataFrame, shards: Int, buckets: Int = 32): DataFrame = {
     require(shards > 0, s"shards must be positive, got $shards")
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    graft.functions.RollingHash.register(documents.sparkSession)
-    graft.functions.FibFinish.register(documents.sparkSession)
     val keyed = documents
       .select(col("doc_id"), sampleKey(col("doc_id")).as("skey"))
       // EAGER (r16 audit, ADVICE r15): the cut sketch feeds a
@@ -277,8 +267,6 @@ object Sampling {
     */
   def shuffleCuts(documents: DataFrame, buckets: Int): DataFrame = {
     require(buckets > 1, s"need at least two buckets for a cut table, got $buckets")
-    graft.functions.RollingHash.register(documents.sparkSession)
-    graft.functions.FibFinish.register(documents.sparkSession)
     keyedCuts(documents.select(col("doc_id"), sampleKey(col("doc_id")).as("skey")), buckets)
   }
 
@@ -289,8 +277,6 @@ object Sampling {
     * regardless of micro-batch chunking — spec'd in StreamingSpec.
     */
   def assignShuffleBuckets(documents: DataFrame, cuts: DataFrame): DataFrame = {
-    graft.functions.RollingHash.register(documents.sparkSession)
-    graft.functions.FibFinish.register(documents.sparkSession)
     documents
       .select(col("doc_id"), sampleKey(col("doc_id")).as("skey"))
       .withColumn("one", lit(1))

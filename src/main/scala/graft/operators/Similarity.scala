@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   private[graft] def cosine(va: Column, vb: Column, na: Column, nb: Column): Column =
-    call_function("dot_product", va, vb) / sqrt(na) / sqrt(nb)
+    DotProduct.column(va, vb) / sqrt(na) / sqrt(nb)
 
   /** The (vec_id, v, norm²) projection every scoring path starts from.
     * Zero-norm vectors are FILTERED here, centrally: cosine against
@@ -36,10 +36,9 @@ object Similarity {
     * pinned by the randomized zero-vector gate in DedupSpec.
     */
   private[graft] def withNorm(embeddings: DataFrame): DataFrame = {
-    DotProduct.register(embeddings.sparkSession)
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", call_function("dot_product", col("v"), col("v")))
+      .withColumn("norm", DotProduct.column(col("v"), col("v")))
       .filter(col("norm") > 0.0)
   }
 
@@ -97,7 +96,7 @@ object Similarity {
   private def topKExplode(scored: DataFrame, k: Int): DataFrame =
     scored
       .groupBy("query_id")
-      .agg(expr(s"topk_by_score(cos, vec_id, $k)").as("top"))
+      .agg(TopKByScore.column(col("cos"), col("vec_id"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(
         col("query_id"),
@@ -110,7 +109,6 @@ object Similarity {
     * neighbor id ASC.
     */
   def annBruteForceTopK(embeddings: DataFrame, k: Int = 10, nQueries: Int = 10): DataFrame = {
-    TopKByScore.register(embeddings.sparkSession)
     val e = withNorm(embeddings)
     val queries = e.select(
       col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
@@ -131,17 +129,6 @@ object Similarity {
     val rnd = new Random(seed)
     Seq.fill(tables * bits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
-
-  /** Per-row LSH bucket ids: for each table, the `bits` sign bits of the
-    * hyperplane dot products packed into a long — one fused native
-    * kernel ([[graft.functions.HyperplaneBuckets]]) constructed directly
-    * on this plane matrix (no session registry); the per-plane
-    * DotProduct composition it replaced inlined the whole matrix as
-    * codegen literals and re-read the vector per plane.
-    */
-  private def bucketsFor(v: Column, planes: Seq[Seq[Double]], tables: Int, bits: Int): Column =
-    HyperplaneBuckets.buckets(v, planes, tables, bits)
-
 
   /** The unsigned-64 hash value below which a uniform xxhash64 lands
     * with probability `frac` — the pre-filter the fit draw uses to
@@ -533,7 +520,6 @@ object Similarity {
       nCentroids: Int = 16,
       nProbe: Int = 12,
       lloydIters: Int = 1): DataFrame = {
-    TopKByScore.register(embeddings.sparkSession)
     // materialized once — the corpus assignment and the query projection
     // would otherwise each rescan the source and recompute norms.
     // EAGER (r16 audit): the query projection sits inside broadcast()
@@ -578,7 +564,8 @@ object Similarity {
     */
   private[graft] def lshFeatures(embeddings: DataFrame, tables: Int, bits: Int): DataFrame = {
     val planes = hyperplanes(dimOf(embeddings), tables, bits)
-    withNorm(embeddings).withColumn("bkts", bucketsFor(col("v"), planes, tables, bits))
+    withNorm(embeddings)
+      .withColumn("bkts", HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
   }
 
   /** SURVEY #27: hyperplane-LSH approximate top-k. Corpus and queries
@@ -595,7 +582,6 @@ object Similarity {
       nQueries: Int = 10,
       tables: Int = 12,
       bits: Int = 4): DataFrame = {
-    TopKByScore.register(embeddings.sparkSession)
     // hyperplane width must match the data — a guessed default would
     // now crash in the kernel's dimension check instead of degrading
     // materialized once: FOUR consumers (corpus buckets, query buckets,

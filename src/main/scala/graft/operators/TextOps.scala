@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.RollingHash
+import graft.functions.{Mix64, RollingHash, ShingleGenerator}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -188,10 +188,8 @@ object TextOps {
     * query is rows-only checked and the hash itself is spec'd in
     * RollingHashSpec (codegen vs interpreted vs reference loop).
     */
-  def rollingFingerprint(documents: DataFrame): DataFrame = {
-    RollingHash.register(documents.sparkSession)
-    documents.select(col("doc_id"), expr("rolling_hash(text)").as("fp_rolling"))
-  }
+  def rollingFingerprint(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), RollingHash.column(col("text")).as("fp_rolling"))
 
   /** Corpus-level top-k n-grams by document frequency (ties broken by
     * shingle text, so the cut is a total order and the result
@@ -222,14 +220,10 @@ object TextOps {
     * doc right side.
     */
   def repetitionRatio(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    graft.functions.ShingleGenerator.register(spark)
-    RollingHash.register(spark)
-    graft.functions.Mix64.register(spark)
     // CpuSpread (r19): generator + two hash kernels are scan-stage CPU
     val counts = CpuSpread.spread(documents)
-      .selectExpr("doc_id", "shingles(text) AS shingle") // duplicates kept
-      .selectExpr("doc_id", "mix64(rolling_hash(shingle)) AS h")
+      .select(col("doc_id"), ShingleGenerator.column(col("text")).as("shingle")) // duplicates kept
+      .select(col("doc_id"), Mix64.column(RollingHash.column(col("shingle"))).as("h"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_ngrams"), countDistinct(col("h")).as("n_distinct"))
     documents.select("doc_id").join(counts, Seq("doc_id"), "left")
@@ -263,11 +257,10 @@ object TextOps {
     */
   def tfidfTopTerms(documents: DataFrame, topK: Int = 5): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
-    graft.functions.ShingleGenerator.register(documents.sparkSession)
     // CpuSpread (r19): the tokenizer is the scan stage's CPU;
     // single-task on an unsplittable local file, no-op at scale
     val tf = CpuSpread.spread(documents)
-      .selectExpr("doc_id", "tokens(text) AS term")
+      .select(col("doc_id"), ShingleGenerator.column(col("text"), n = 1).as("term"))
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
       // EAGER (r16 audit): the df aggregate's map stage and the score

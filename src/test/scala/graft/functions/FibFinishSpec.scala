@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.Sessions
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** FibFinish parity: codegen'd expression vs the reference loop, and
@@ -13,28 +14,13 @@ class FibFinishSpec extends AnyFunSuite {
 
   test("codegen matches the reference implementation, keys in [0, 2^24)") {
     import spark.implicits._
-    FibFinish.register(spark)
     val inputs = Seq(0L, 1L, -1L, 31L, Long.MaxValue, Long.MinValue, 123456789123456789L)
-    val got = inputs.toDF("h").selectExpr("h", "fib_finish(h) AS k")
+    val got = inputs.toDF("h").select(col("h"), FibFinish.column(col("h")).as("k"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (h <- inputs) {
       assert(got(h) == FibFinish.finish(h), s"mismatch at $h")
       assert(got(h) >= 0L && got(h) < (1L << 24), s"key out of range at $h: ${got(h)}")
     }
-  }
-
-  test("wrong arity raises an analysis error naming the function, not NoSuchElement") {
-    FibFinish.register(spark)
-    Mix64.register(spark)
-    val e1 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT fib_finish()").collect()
-    }
-    assert(e1.getMessage.contains("fib_finish") && e1.getMessage.contains("1"),
-      s"error must name the function and arity: ${e1.getMessage}")
-    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT mix64(1L, 2L)").collect()
-    }
-    assert(e2.getMessage.contains("mix64"), e2.getMessage)
   }
 
   test("sequential ids spread: keys of 10k consecutive ids fill the space evenly") {

@@ -30,17 +30,16 @@ class HyperplaneBucketsSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val planes = Similarity.hyperplanes(dim, tables, bits)
-    HyperplaneBuckets.register(spark, planes, tables, bits)
     val df = emb.select(
       col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val got = df.selectExpr("vec_id", "hyperplane_buckets(v)")
+    val got = df.select(col("vec_id"), HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
       .as[(Long, Seq[Long])].collect().toMap
     val exp = df.as[(Long, Seq[Double])].collect()
       .map { case (id, v) => id -> refBuckets(v.toArray, planes) }.toMap
     assert(got.nonEmpty && got == exp)
     // sign-fold order matters: the reference uses the same ascending-index
     // accumulation, so equality here pins the fold order too
-    assert(df.selectExpr("hyperplane_buckets(v)").queryExecution
+    assert(df.select(HyperplaneBuckets.buckets(col("v"), planes, tables, bits)).queryExecution
       .executedPlan.toString.contains("*(1)"),
       "bucketing must stay inside whole-stage codegen")
   }
@@ -55,7 +54,6 @@ class HyperplaneBucketsSpec extends AnyFunSuite {
     val dim = 16
     val rnd = new scala.util.Random(0xB17)
     val planes = Similarity.hyperplanes(dim, tables, bits)
-    HyperplaneBuckets.register(spark, planes, tables, bits)
     val vecs: Seq[(Long, Seq[Double])] = (0L until 300L).map { id =>
       val v = Array.tabulate(dim) { _ =>
         rnd.nextInt(5) match {
@@ -70,7 +68,7 @@ class HyperplaneBucketsSpec extends AnyFunSuite {
       (id, v.toSeq)
     }
     val got = vecs.toDF("vec_id", "v")
-      .selectExpr("vec_id", "hyperplane_buckets(v)")
+      .select(col("vec_id"), HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
       .as[(Long, Seq[Long])].collect().toMap
     val exp = vecs.map { case (id, v) => id -> refBuckets(v.toArray, planes) }.toMap
     assert(got == exp)
@@ -79,11 +77,10 @@ class HyperplaneBucketsSpec extends AnyFunSuite {
 
   test("dimension mismatch fails loudly instead of degrading") {
     val planes = Similarity.hyperplanes(4, tables, bits)
-    HyperplaneBuckets.register(spark, planes, tables, bits)
     val err = intercept[Exception] {
       Tables.embeddings(spark, sfDir)
         .select(col("embedding").cast("array<double>").as("v"))
-        .selectExpr("hyperplane_buckets(v)")
+        .select(HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
         .collect()
     }
     assert(err.getMessage != null)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.Sessions
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mix64 parity (codegen vs reference loop) and the avalanche property
@@ -13,9 +14,8 @@ class Mix64Spec extends AnyFunSuite {
 
   test("codegen matches the reference implementation") {
     import spark.implicits._
-    Mix64.register(spark)
     val inputs = Seq(0L, 1L, -1L, 31L, Long.MaxValue, Long.MinValue, 123456789123456789L)
-    val got = inputs.toDF("h").selectExpr("h", "mix64(h) AS m")
+    val got = inputs.toDF("h").select(col("h"), Mix64.column(col("h")).as("m"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (h <- inputs) assert(got(h) == Mix64.mix(h), s"mismatch at $h")
   }

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.Sessions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Losslessness gate for the r13 quantized LSH prefilter: every pair
@@ -18,22 +19,19 @@ class QuantCosineSpec extends AnyFunSuite {
 
   private def msFrames(vecs: Seq[(Long, Seq[Double])]) = {
     import spark.implicits._
-    DotProduct.register(spark)
-    CosinePairs.register(spark)
-    QuantCosinePairs.register(spark)
     val e = vecs.toDF("vec_id", "v0")
       .select(col("vec_id"), col("v0").cast("array<double>").as("v"))
-      .withColumn("norm", call_function("dot_product", col("v"), col("v")))
+      .withColumn("norm", DotProduct.column(col("v"), col("v")))
       .withColumn("qs", QuantizeVec.column(col("v")))
     val quant = e
       .agg(collect_list(struct(
         col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"),
         col("norm"))).as("ms"))
-      .selectExpr("quant_cosine_pairs(ms, CAST(0.4 AS DOUBLE))")
+      .select(QuantCosinePairs.column(col("ms"), 0.4))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = e
       .agg(collect_list(struct(col("vec_id"), col("v"), col("norm"))).as("ms"))
-      .selectExpr("cosine_pairs(ms, CAST(0.4 AS DOUBLE))")
+      .select(ColumnBridge.column(CosinePairs(ColumnBridge.expression(col("ms")), 0.4)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     (quant, exact)
   }

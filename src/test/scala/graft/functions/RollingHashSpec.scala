@@ -25,9 +25,8 @@ class RollingHashSpec extends AnyFunSuite {
 
   test("codegen result equals reference loop on real documents") {
     import spark.implicits._
-    RollingHash.register(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val got = docs.select(col("doc_id"), expr("rolling_hash(text)"))
+    val got = docs.select(col("doc_id"), RollingHash.column(col("text")))
       .as[(Long, Long)].collect().toMap
     val exp = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().map { case (id, t) => id -> refHash(t) }.toMap
@@ -35,16 +34,14 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("two instances in one codegen scope compile (fresh local names)") {
-    RollingHash.register(spark)
-    graft.functions.DotProduct.register(spark)
     // non-nullable children put both expressions in ONE codegen scope;
     // fixed local names would collide and fall back to interpreted eval
     val df = Tables.documents(spark, "/root/testdata/sf0.001")
-      .selectExpr(
-        "rolling_hash(text) AS h1",
-        "rolling_hash(concat(text, 'x')) AS h2",
-        "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d1",
-        "dot_product(array(1.0d, 1.0d), array(1.0d, 1.0d)) AS d2")
+      .select(
+        RollingHash.column(col("text")).as("h1"),
+        RollingHash.column(concat(col("text"), lit("x"))).as("h2"),
+        DotProduct.column(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("d1"),
+        DotProduct.column(array(lit(1.0), lit(1.0)), array(lit(1.0), lit(1.0))).as("d2"))
     val r = df.collect()
     assert(r.nonEmpty && r.head.getDouble(2) == 11.0 && r.head.getDouble(3) == 2.0)
     // values alone can't catch a regression: a janino compile failure
@@ -56,14 +53,13 @@ class RollingHashSpec extends AnyFunSuite {
 
   test("null propagates; plan stays in whole-stage codegen") {
     import spark.implicits._
-    RollingHash.register(spark)
     // local relation: optimizer const-folds through the interpreted path
-    val df = Seq(Some("x"), None).toDF("s").selectExpr("rolling_hash(s) AS h")
+    val df = Seq(Some("x"), None).toDF("s").select(RollingHash.column(col("s")).as("h"))
     assert(df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
       == Set(Some(120L), None))
     // parquet-backed plan: the expression must sit inside a codegen span
     val scan = Tables.documents(spark, "/root/testdata/sf0.001")
-      .selectExpr("rolling_hash(text) AS h")
+      .select(RollingHash.column(col("text")).as("h"))
     // `*(n)` is the WholeStageCodegen marker in the simple plan format
     assert(scan.queryExecution.executedPlan.toString.contains("*(1) Project [rolling_hash"))
     assert(scan.count() > 0)

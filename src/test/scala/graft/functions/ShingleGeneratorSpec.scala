@@ -14,9 +14,8 @@ class ShingleGeneratorSpec extends AnyFunSuite {
 
   private def shinglesOf(text: String): Seq[String] = {
     import spark.implicits._
-    ShingleGenerator.register(spark)
     Seq(Option(text)).toDF("text")
-      .selectExpr("shingles(text) AS s")
+      .select(ShingleGenerator.column(col("text")).as("s"))
       .collect().map(_.getString(0)).toSeq
   }
 
@@ -37,9 +36,9 @@ class ShingleGeneratorSpec extends AnyFunSuite {
 
   test("shingles_distinct: per-row set semantics, first occurrence wins") {
     import spark.implicits._
-    ShingleGenerator.register(spark)
     def d(text: String): Seq[String] =
-      Seq(Option(text)).toDF("text").selectExpr("shingles_distinct(text) AS s")
+      Seq(Option(text)).toDF("text")
+        .select(ShingleGenerator.column(col("text"), distinct = true).as("s"))
         .collect().map(_.getString(0)).toSeq
     // "a b a b a b" → shingles: aba, bab, aba, bab → distinct keeps first of each
     assert(d("a b a b a b") == Seq("a b a", "b a b"))
@@ -48,10 +47,12 @@ class ShingleGeneratorSpec extends AnyFunSuite {
     assert(d(null) == Seq.empty)
     // equivalence on the real corpus: same multiset as distinct-per-doc shingles
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
-    val viaDistinct = docs.selectExpr("doc_id", "shingles(text) AS s").distinct()
+    val viaDistinct = docs.select(col("doc_id"), ShingleGenerator.column(col("text")).as("s"))
+      .distinct()
       .groupBy("doc_id").agg(sort_array(collect_list("s")).as("gs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val native = docs.selectExpr("doc_id", "shingles_distinct(text) AS s")
+    val native = docs
+      .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("s"))
       .groupBy("doc_id").agg(sort_array(collect_list("s")).as("gs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(native == viaDistinct)
@@ -61,8 +62,7 @@ class ShingleGeneratorSpec extends AnyFunSuite {
     * (split normalized text, slide via sequence) on the given docs.
     */
   private def assertMatchesSql(docs: org.apache.spark.sql.DataFrame): Unit = {
-    ShingleGenerator.register(spark)
-    val native = docs.selectExpr("doc_id", "shingles(text) AS shingle")
+    val native = docs.select(col("doc_id"), ShingleGenerator.column(col("text")).as("shingle"))
       .groupBy("doc_id").agg(sort_array(collect_list("shingle")).as("gs"))
     val tokens = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
     // sequence(0, n-3) DESCENDS for n < 3 — emit no window starts there

@@ -50,12 +50,13 @@ class SortedIntersectCountSpec extends AnyFunSuite {
   }
 
   test("SQL registration and null propagation") {
-    SortedIntersectCount.register(spark)
-    val r = spark.sql(
-      "SELECT sorted_intersect_count(array(1L,2L,3L), array(2L,3L,4L)) AS c").head().getLong(0)
+    import org.apache.spark.sql.functions.{array, lit}
+    val one = spark.range(1)
+    val r = one.select(SortedIntersectCount.column(
+      array(lit(1L), lit(2L), lit(3L)), array(lit(2L), lit(3L), lit(4L))).as("c")).head().getLong(0)
     assert(r == 2L)
-    val n = spark.sql(
-      "SELECT sorted_intersect_count(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS c").head()
+    val n = one.select(SortedIntersectCount.column(
+      lit(null).cast("array<bigint>"), array(lit(1L))).as("c")).head()
     assert(n.isNullAt(0))
   }
 }

@@ -54,4 +54,27 @@ class AdversarialInputSpec extends AnyFunSuite {
     // identical docs must not pair (no 0/0 jaccard)
     assert(Dedup.ngramJaccardPairs(docs).collect().length == 0)
   }
+
+  test("embedding operators return zero rows in their normal schemas on an all-zero-vector corpus") {
+    import spark.implicits._
+    // withNorm drops every zero vector, so the IVF fit has no cell to
+    // seed and the LSH/exact paths have no pair to score
+    val zeros = (1L to 20L).map(id => (id, Seq.fill(4)(0.0))).toDF("vec_id", "embedding")
+    val rnd = new scala.util.Random(13)
+    val live = (1L to 20L).map(id => (id, Seq.fill(4)(rnd.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    for ((name, op) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      ("embedding_exact", Dedup.embeddingNearDupsExact(_)),
+      ("embedding_lsh", Dedup.embeddingNearDupsLsh(_)),
+      ("embedding_ivf", Dedup.embeddingNearDupsIvf(_)),
+      ("ann_brute_force", Similarity.annBruteForceTopK(_)),
+      ("ann_lsh", Similarity.annLshTopK(_)),
+      ("ann_ivf", Similarity.annIvfTopK(_))
+    )) withClue(s"$name: ") {
+      val out = op(zeros)
+      assert(out.collect().isEmpty)
+      assert(shape(out) == shape(op(live)))
+    }
+  }
 }
