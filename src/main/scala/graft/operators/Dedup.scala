@@ -22,17 +22,22 @@ import org.apache.spark.sql.functions._
   * re-evaluates an array-producing expression inside every consumer
   * lambda — measured ~100× slower at equal semantics. All-pairs work
   * exists only in `embeddingNearDupsExact`, the oracle/verify path; the
-  * scale path for embeddings is LSH bucketing (see Similarity). The
-  * word-3-gram Jaccard pairs (#22) are one lazy PPJoin prefix join: no
-  * statistics job at construction picks between plans.
+  * embedding scale paths are [[embeddingNearDupsLsh]] (hyperplane-LSH
+  * buckets) and [[embeddingNearDupsIvf]] (IVF cells), both below. The
+  * four bucketed operators (MinHash, SimHash and the two embedding
+  * paths) share one candidate tail, [[bucketPairs]], and each verifies
+  * its candidates exactly. The word-3-gram Jaccard pairs (#22) are one
+  * lazy PPJoin prefix join: no statistics job at construction picks
+  * between plans.
   */
 object Dedup {
 
-  /** Single source of truth for the IVF sizing defaults (r19): both
-    * [[ivfCellCount]] and [[embeddingNearDupsIvf]] default their
-    * shared parameters from here, so the sizing report a harness gets
-    * by calling ivfCellCount with defaults can never silently drift
-    * from the count a default-parameter operator run really used.
+  /** Single source of truth for the IVF sizing constants (r19): both
+    * [[ivfCellCount]]'s defaults and [[embeddingNearDupsIvf]] read them
+    * here, so the sizing report a harness gets by calling ivfCellCount
+    * with defaults can never silently drift from the count the operator
+    * really used. `MaxBucketSize` is also the embedding LSH path's
+    * hot-bucket cap.
     */
   private[graft] object IvfDefaults {
     val MinCells: Int = 8
@@ -352,42 +357,51 @@ object Dedup {
     else ((stats * 16 + target - 1) / target).min(cap).toInt.max(floor)
   }
 
-  /** Drop bucket memberships belonging to a bucket larger than
-    * `maxBucketSize` BEFORE any `collect_set` builds a per-bucket array:
-    * the membership count comes from a window over the same bucket key
-    * (shares the aggregation's shuffle — the window sort is the only
-    * extra work), so a degenerate hot bucket never reaches an
-    * aggregation buffer. When `dropObs` is supplied, the number of
-    * dropped memberships is published as the `dropped_memberships`
-    * observed metric of the final action — note Spark delivers observed
-    * metrics only for a direct action on the pairs frame; a plan that
-    * buries it under a broadcast stage or checkpoint reads nothing
-    * (see CorpusPipeline.cleanCorpus's doc). Precision is unaffected (all
-    * emitted pairs are still exactly verified); recall loss is confined
-    * to pairs whose ONLY shared bucket was dropped — for MinHash's
-    * 64-bit band buckets that means signature-identical floods (junk
-    * that exact dedup #21 usually catches), but see simhashPairs' scale
-    * note: its 16-bit chunk space saturates at corpus scale, so wire
-    * `dropObs` in production and alert on non-zero drops.
+  /** The ONE candidate tail of the bucketed near-dup operators
+    * (MinHash, SimHash, embedding LSH and IVF): cap hot buckets, collect
+    * each bucket's `members` aggregate as `ms`, expand the in-bucket
+    * pairs with the `pairs` kernel over `ms`, and `distinct` them (a
+    * pair can meet in several buckets).
+    *
+    * The cap drops memberships of a bucket larger than `maxBucketSize`
+    * BEFORE the aggregate builds a per-bucket array: the membership
+    * count comes from a window over the same bucket key (it shares the
+    * aggregation's shuffle — the window sort is the only extra work;
+    * PlanAuditSpec pins it), so a degenerate hot bucket never reaches an
+    * aggregation buffer. Singleton buckets go too, so every bucket the
+    * kernel sees has two members or more. When `dropObs` is supplied,
+    * the number of dropped memberships is published as the
+    * `dropped_memberships` observed metric of the final action — note
+    * Spark delivers observed metrics only for a direct action on the
+    * pairs frame; a plan that buries it under a broadcast stage or
+    * checkpoint reads nothing (see CorpusPipeline.cleanCorpus's doc).
+    * Precision is unaffected (all emitted pairs are still exactly
+    * verified); recall loss is confined to pairs whose ONLY shared
+    * bucket was dropped — for MinHash's 64-bit band buckets that means
+    * signature-identical floods (junk that exact dedup #21 usually
+    * catches), but see simhashPairs' scale note: its 16-bit chunk space
+    * saturates at corpus scale, so wire `dropObs` in production and
+    * alert on non-zero drops.
     */
-  private[graft] def capBuckets(
+  private[graft] def bucketPairs(
       buckets: DataFrame,
       keyCols: Seq[String],
+      members: Column,
       maxBucketSize: Int,
-      dropObs: Option[Observation]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-    val sized = buckets.withColumn("bsz", count(lit(1)).over(w))
-    val observed = dropObs match {
-      case Some(o) =>
-        sized.observe(
-          o, sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L)).as("dropped_memberships"))
-      case None => sized
-    }
-    observed.filter(col("bsz") > 1 && col("bsz") <= maxBucketSize).drop("bsz")
+      dropObs: Option[Observation])(pairs: Column => Column): DataFrame = {
+    val keys = keyCols.map(col)
+    val sized = buckets.withColumn("bsz", count(lit(1)).over(Window.partitionBy(keys: _*)))
+    dropObs.fold(sized)(o => sized.observe(
+        o, sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L)).as("dropped_memberships")))
+      .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
+      .groupBy(keys: _*)
+      .agg(members.as("ms"))
+      .select(pairs(col("ms")))
+      .distinct()
   }
 
-  /** SURVEY #23: MinHash + banded LSH near-dup pairs. Signatures band
-    * into `bands` groups of perms/bands rows; docs sharing any band
+  /** SURVEY #23: MinHash + banded LSH near-dup pairs. Signatures of 128
+    * permutations band into 32 groups of 4 rows; docs sharing any band
     * bucket become candidates (shuffle carries (band, bucket_hash,
     * doc_id) only); candidates are verified with exact Jaccard ≥
     * threshold by semi-joining the candidate pairs back onto the shingle
@@ -400,24 +414,22 @@ object Dedup {
     *
     * Construction stores the per-doc table and the candidate pairs
     * (eager checkpoints), but the returned frame is LAZY: its verify tail
-    * — two broadcast semi-filter candidate-id sets, each behind a
-    * distinct shuffle, plus the two join stages — runs in whichever
-    * consumer materializes the frame first, about 6 jobs at sf0.01. In
-    * `corpus_dedup` that is `ConnectedComponents.dupGroups`' pair
-    * checkpoint, so those jobs count against `dupGroups`.
+    * — one broadcast semi-filter candidate-id set behind a distinct
+    * shuffle, plus the join stages — runs in whichever consumer
+    * materializes the frame first. In `corpus_dedup` that is
+    * `ConnectedComponents.dupGroups`' pair checkpoint, so those jobs
+    * count against `dupGroups`.
     *
-    * @param maxBucketSize hot-bucket cap (see [[capBuckets]]).
+    * @param maxBucketSize hot-bucket cap (see [[bucketPairs]]).
     * @param dropObs optional observation receiving the dropped-membership
     *        count of the final action.
     */
   def minhashLshPairs(
       documents: DataFrame,
       threshold: Double = 0.8,
-      perms: Int = 128,
-      bands: Int = 32,
       maxBucketSize: Int = 4096,
       dropObs: Option[Observation] = None): DataFrame = {
-    require(perms % bands == 0, "bands must divide perms")
+    val (perms, bands) = (128, 32)
     val rows = perms / bands
     // ONE per-row kernel over the raw text builds everything the doc
     // contributes downstream: the fused MinHash signature, the doc's
@@ -430,8 +442,8 @@ object Dedup {
     // (313 MB of (doc_id, h) at sf10 — a third of the query's shuffle)
     // plus its whole ObjectHashAggregate pass were pure overhead. The
     // per-doc table (corpus-sized — one row per doc) is checkpointed
-    // once for its three consumers (bucket explode + both verify join
-    // sides); shingle-less docs (< 3 tokens) carry empty arrays and
+    // once for its consumers (bucket explode + the verify side, which
+    // feeds both join sides); shingle-less docs (< 3 tokens) carry empty arrays and
     // are filtered AFTER the checkpoint barrier, where the aggregate
     // shape simply had no group — filtering pre-checkpoint would
     // re-evaluate the kernel per consuming operator (PushDownPredicates
@@ -442,9 +454,9 @@ object Dedup {
       .select(col("doc_id"), graft.functions.MinHashDoc.column(col("text"), perms).as("sig"))
       .select(col("doc_id"), col("sig.mh").as("mh"), col("sig.hs").as("hs"),
         size(col("sig.hs")).cast("long").as("n"))
-      // EAGER (r16 audit): lazy, the two verify sides' BROADCAST
-      // id-set builds are async jobs racing the main job's bucket
-      // branch for these blocks — each loser re-runs the corpus scan
+      // EAGER (r16 audit): lazy, the verify side's BROADCAST id-set
+      // build is an async job racing the main job's bucket branch for
+      // these blocks — each loser re-runs the corpus scan
       // + minhash kernel (the most expensive lineage in the query).
       // Construction now runs this one job up front (README "Eager
       // construction").
@@ -457,20 +469,17 @@ object Dedup {
       .toDF("doc_id", "band", "bucket")
     // Group-then-pair instead of a bucket self-join: one linear pipeline,
     // shuffling only (band, bucket, doc_id); pair expansion happens
-    // inside each bucket, bounded by the hot-bucket cap.
-    val cands = capBuckets(buckets, Seq("band", "bucket"), maxBucketSize, dropObs)
-      .groupBy("band", "bucket")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(pairCombos(col("ids"))).as("p"))
-      .select(col("p.a").as("doc_id_a"), col("p.b").as("doc_id_b"))
-      .distinct()
-      // small (two longs per surviving pair) but consumed three times
-      // below (the join chain + both semi-filter id sets) — checkpoint
-      // so the bucket pipeline runs once, not per consumer. EAGER
-      // (r16 audit): both semi-filter consumers sit inside
-      // broadcast() — async build jobs that, lazy, race each other
-      // (and the join chain) through the whole bucket pipeline.
+    // inside each bucket, bounded by the hot-bucket cap. The ids are
+    // sorted because pairCombos emits (a, b) in array order.
+    val cands = bucketPairs(buckets, Seq("band", "bucket"),
+        sort_array(collect_set(col("doc_id"))), maxBucketSize, dropObs)(
+        ids => inline(pairCombos(ids)))
+      // small (two longs per surviving pair) but consumed twice below
+      // (the join chain + the semi-filter id set) — checkpoint so the
+      // bucket pipeline runs once, not per consumer. EAGER (r16 audit):
+      // the semi-filter consumer sits inside broadcast() — an async
+      // build job that, lazy, races the join chain through the whole
+      // bucket pipeline.
       .localCheckpoint(eager = true)
     // Jaccard verify IN-STAGE (r10): join each candidate pair against
     // the two per-doc sorted hash-set arrays and count the intersection
@@ -481,19 +490,20 @@ object Dedup {
     // twice — 11.8 GB at the sf10 falsifier — with GC-bound 45-195 s
     // spreads, the r9 verdict's unsettled 10.48× flag) and never the
     // CORPUS's array rows: the verify only ever reads docs that appear
-    // in some candidate pair, so each side semi-filters the per-doc
-    // table MAP-SIDE against its broadcast candidate-id set (strictly
-    // smaller than the cands frame the sf1 planner already chose to
-    // broadcast) before the hs arrays enter any join. Without the
+    // in some candidate pair, so the per-doc table is semi-filtered
+    // MAP-SIDE against ONE broadcast set of candidate ids (both id
+    // columns) before the hs arrays enter any join, and that one side
+    // feeds both join sides, as in ngramJaccardPairs. Without the
     // filter the static planner sees the checkpoint's unknown stats
     // and SMJs both joins — the whole corpus's hash sets exchanged
     // twice, 282 of the query's 540 shuffle MB at sf10. The arithmetic
     // is [[jaccardVerify]]'s, shared with ngramJaccardPairs, so the
     // DuckDB oracle parity is unchanged.
-    def candSide(idCol: String): DataFrame =
-      perDoc.join(broadcast(cands.select(col(idCol).as("doc_id")).distinct()),
-        Seq("doc_id"), "leftsemi")
-    jaccardVerify(cands, candSide("doc_id_a"), candSide("doc_id_b"), threshold)
+    val candIds = cands
+      .select(explode(array(col("doc_id_a"), col("doc_id_b"))).as("doc_id"))
+      .distinct()
+    val side = perDoc.join(broadcast(candIds), Seq("doc_id"), "leftsemi")
+    jaccardVerify(cands, side, side, threshold)
   }
 
   /** Per-doc 64-bit SimHash: per bit, the sign of the ±1 vote sum across
@@ -547,22 +557,19 @@ object Dedup {
     // the quadratic pair set itself crossed the distinct exchange;
     // the quadratic xor+popcount stays, as CPU, but only pairs within
     // maxHamming — the near-dup set — leave the stage).
-    capBuckets(chunks, Seq("chunk", "ck"), maxBucketSize, dropObs)
-      .groupBy("chunk", "ck")
-      .agg(collect_set(struct(col("doc_id"), col("simhash"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(HammingPairs.column(col("ms"), maxHamming))
-      .distinct()
+    bucketPairs(chunks, Seq("chunk", "ck"),
+        collect_set(struct(col("doc_id"), col("simhash"))), maxBucketSize, dropObs)(
+        HammingPairs.column(_, maxHamming))
   }
 
   /** All ordered element pairs (a before b in the sorted input array) as
-    * an array of (a, b) structs — the in-bucket pair expansion for LSH
-    * candidate generation. Membership lists reaching this point are
-    * bounded by [[capBuckets]]'s maxBucketSize.
+    * an array of (doc_id_a, doc_id_b) structs — MinHash's in-bucket pair
+    * expansion. Membership lists reaching this point are bounded by
+    * [[bucketPairs]]' maxBucketSize.
     */
   private def pairCombos(ids: Column): Column =
     flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + 2, size(ids)), y => struct(x.as("a"), y.as("b")))))
+      transform(slice(ids, i + 2, size(ids)), y => struct(x.as("doc_id_a"), y.as("doc_id_b")))))
 
   /** SURVEY #25 (oracle path): exact embedding-cosine near-dup pairs.
     * O(n²) by definition — valid for oracle-scale corpora and as the
@@ -587,8 +594,8 @@ object Dedup {
   }
 
   /** The ONE cosine-verify shape (vector rejoin on the b side + cosine
-    * + threshold), shared by the exact all-pairs path and the LSH
-    * sibling so the two can never drift. `candsWithA` carries
+    * + threshold), shared by the exact all-pairs path and the two
+    * bucketed paths ([[embeddingNearDups]]) so they can never drift. `candsWithA` carries
     * (vec_id_a, vec_id_b, va, na); `e` is the withNorm projection.
     */
   private def cosineVerify(
@@ -631,36 +638,88 @@ object Dedup {
     (effBits, tablesEff)
   }
 
+  /** The ONE body of the two embedding scale paths
+    * ([[embeddingNearDupsLsh]], [[embeddingNearDupsIvf]]), which differ
+    * only in `bucketOf`: the bucket generator over `v`, built from the
+    * stored [[Similarity.withNorm]] frame, its row count and the
+    * embedding dimension. Every vector carries its int16-QUANTIZED
+    * payload (r13, verdict item 5 — (vec_id, 2·dim bytes + scale +
+    * quantized-norm + norm) instead of the dim·8 B double arrays, ~3.4×
+    * fewer bytes on the one corpus-sized exchange, measured 2.9 GB at
+    * sf10 for the LSH path) into each of its buckets. Bucket ASSIGNMENT
+    * still reads the full-precision vector map-side (before the
+    * exchange), so recall is bit-identical to the unquantized pipeline;
+    * in-bucket scoring is the [[graft.functions.QuantCosinePairs]]
+    * LOSSLESS prefilter (quantized cosine + rigorous per-pair error
+    * bound — see its scaladoc for the proof), so no qualifying pair is
+    * dropped; and survivors rejoin the full-precision vectors for the
+    * exact cosine ([[cosineVerify]]), so emitted RESULTS are
+    * bit-identical too. The pair space never crosses an exchange (the
+    * r9 falsifier killed that shape on >75 GB of candidate spill); only
+    * the distinct candidate ID pairs — 16-byte rows, near-output-sized
+    * plus the bound's margin band — cross to the verify. Deduping them
+    * BEFORE the verify keeps the verify joins at the distinct-pair
+    * count (8.5M vs 60M rows at the sf10 falsifier), and is sound
+    * because the verify recomputes one cosine per pair whichever bucket
+    * surfaced it. (The measured alternatives both lose: int8's loose
+    * bound let ~5× margin-band junk into the distinct exchange, and
+    * post-verify dedup shipped the multiplicity through the verify
+    * joins.)
+    */
+  private def embeddingNearDups(
+      embeddings: DataFrame, threshold: Double, dropObs: Option[Observation])(
+      bucketOf: (DataFrame, Long, Int) => Column): DataFrame = {
+    // withNorm centrally filters zero-norm vectors (ANSI division would
+    // error, not NaN); they also leave the sizing count.
+    // SAFE LAZY (r16 audit): the synchronous count() below is the first
+    // action and has this frame as its ONLY consumer — it materializes
+    // every block before the bucketing/verify branches (and their async
+    // broadcast builds) can race the store.
+    val e = Similarity.withNorm(embeddings)
+      .localCheckpoint(false) // consumers: sizing count, bucketing, both verify sides
+    val n = e.count()
+    // no vector to bucket (an empty table, or only NULL or zero
+    // vectors): an empty generator keeps the one plan and its schema,
+    // and sizing never asks dimOf for a vector that is not there
+    val bucket =
+      if (n == 0) explode(typedLit(Seq.empty[Long]))
+      else bucketOf(e, n, Similarity.dimOf(embeddings))
+    val buckets = e.select(
+      col("vec_id"), graft.functions.QuantizeVec.column(col("v")).as("qs"), col("norm"), bucket)
+    val cands = bucketPairs(
+        buckets, buckets.columns.toSeq.drop(3), // the generator's columns are the bucket key
+        collect_list(struct(
+          col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"), col("norm"))),
+        IvfDefaults.MaxBucketSize, dropObs)(
+        QuantCosinePairs.column(_, threshold))
+    cosineVerify(
+      cands.join(
+        e.select(col("vec_id").as("vec_id_a"), col("v").as("va"), col("norm").as("na")),
+        "vec_id_a"),
+      e, threshold)
+  }
+
   /** SURVEY #25 (scale path): the same embedding near-dup pairs with
     * hyperplane-LSH candidate generation instead of the O(n²) cross
-    * join: vectors hash into `tables` independent `bits`-bit sign
-    * buckets (the fused [[graft.functions.HyperplaneBuckets]] kernel,
-    * deterministic seeded planes shared with Similarity), candidate
-    * pairs share ≥1 bucket (group-then-pair under the same hot-bucket
-    * cap as the text dedups — a zero or degenerate vector mass is
-    * capped, not exploded), in-bucket pairs pass the
-    * [[graft.functions.QuantCosinePairs]] LOSSLESS int16 prefilter
-    * (r13 — quantized cosine plus a rigorous per-pair error bound;
-    * bucket assignment stays full-precision, so recall is untouched),
-    * and the surviving candidate IDs rejoin full-precision vectors for
-    * the exact cosine ≥ threshold — so the quadratic pair space never
-    * crosses an exchange (r9 — the sf10 falsifier killed the
-    * explode-distinct-rejoin shape on >75 GB of candidate spill) and
-    * the only corpus-sized shuffle carries QUANTIZED bucketed vectors
-    * (n·tables rows of 2·dim bytes + 3 doubles, ~3.4× under the double
-    * arrays it shipped through r12). Emitted rows are verified
-    * near-dups only. Precision is exact post-verify; recall
-    * is the sign-LSH curve
-    * — rising with cosine, so true duplicates are near-certain while
-    * borderline pairs may be missed (floor spec'd vs
+    * join: vectors hash into T independent b-bit sign buckets (the
+    * fused [[graft.functions.HyperplaneBuckets]] kernel, deterministic
+    * seeded planes shared with Similarity), candidate pairs share ≥1
+    * bucket (group-then-pair under the same hot-bucket cap as the text
+    * dedups — a zero or degenerate vector mass is capped, not
+    * exploded), and [[embeddingNearDups]] scores and verifies them.
+    * The only corpus-sized shuffle carries QUANTIZED bucketed vectors
+    * (n·T rows of 2·dim bytes + 3 doubles). Emitted rows are verified
+    * near-dups only. Precision is exact post-verify; recall is the
+    * sign-LSH curve — rising with cosine, so true duplicates are
+    * near-certain while borderline pairs may be missed (floor spec'd vs
     * [[embeddingNearDupsExact]] in DedupSpec).
     *
-    * Sizing at corpus scale: `bits` is only the FLOOR of the bucket
+    * Sizing at corpus scale: 4 bits is only the FLOOR of the bucket
     * space — the effective bit count grows as
-    * `max(bits, ceil(log2(n / targetBucketSize)))`, holding the
-    * EXPECTED bucket population ~constant as the corpus grows. That is
-    * the load-bearing scale property: with any fixed bit count,
-    * bucket population grows linearly in n and the within-bucket pair
+    * `max(4, ceil(log2(n / 128)))`, holding the EXPECTED bucket
+    * population ~constant as the corpus grows. That is the
+    * load-bearing scale property: with any fixed bit count, bucket
+    * population grows linearly in n and the within-bucket pair
     * generation QUADRATICALLY — the r8 sf1 scale run measured exactly
     * that (113× wall time for 10× rows at fixed 4 bits; adaptive bits
     * restored linear behavior). The count that sizes the space rides
@@ -671,100 +730,38 @@ object Dedup {
     * Production near-DUPLICATE detection (threshold ≥ 0.9, p_bit ≥
     * 0.9) is the regime this operator exists for: recall stays
     * near-certain for true dups at 2^4..2^24 bucket spaces because the
-    * per-table miss probability compounds over `tables` independent
+    * per-table miss probability compounds over T ≥ 16 independent
     * tables (e.g. cos 0.96, 8 bits: miss ≈ (1−0.91⁸)¹⁶ ≈ 4e-5).
     */
   def embeddingNearDupsLsh(
       embeddings: DataFrame,
       threshold: Double = 0.4,
-      tables: Int = 16,
-      bits: Int = 4,
-      maxBucketSize: Int = 4096,
-      targetBucketSize: Int = 128,
-      dropObs: Option[Observation] = None,
-      recallFloor: Double = 0.85,
-      maxTables: Int = 128): DataFrame = {
-    require(targetBucketSize > 0, s"targetBucketSize must be positive, got $targetBucketSize")
-    require(recallFloor > 0.0 && recallFloor < 1.0,
-      s"recallFloor must be in (0,1), got $recallFloor")
-    // withNorm centrally filters zero-norm vectors (ANSI division would
-    // error, not NaN); they also leave the sizing count
-    // SAFE LAZY (r16 audit): the synchronous sizing count() below is
-    // the first action and has this frame as its ONLY consumer — it
-    // materializes every block before the bucketing/verify branches
-    // (and their async broadcast builds) can race the store.
-    val e = Similarity.withNorm(embeddings)
-      .localCheckpoint(false) // consumers: sizing count, bucketing, both verify sides
-    // Size the bucket space AND the table count to the data, jointly
-    // (r10 — the RecallProfile falsifier measured recall 0.951 at
-    // sf0.1 collapsing to 0.376 at sf1 under the r8-r9 scheme, which
-    // grew bits with n but held tables at 16): for random hyperplanes,
-    // a pair at exactly `threshold` cosine matches one table's bucket
-    // with p₁ = (1 − θ/π)^bits, so recall after T OR'd tables is
-    // 1 − (1 − p₁)^T. Growing bits alone keeps buckets ~target-sized
-    // (linear in-bucket work) but sends p₁ — and recall — to zero.
-    // Holding BOTH bounded bucket population and a recall floor forces
-    // T ~ n^ρ tables (ρ = ln(1/q₁)/ln 2 — the standard LSH exponent;
-    // ≈0.66 at threshold 0.4): inherent to the method, not this
-    // implementation. So: bits are capped at the largest value whose
-    // recall floor is reachable within `maxTables`, the table count
-    // adapts to the floor, and past the budget boundary
-    // (n ≳ target·2^bitsCap) bucket populations — and in-bucket pair
-    // CPU — grow instead, with `dropObs`/capBuckets as the guard. At
-    // that point the production answer is IVF-style sharding
-    // (annIvfTopK's structure), not more LSH tables.
-    val n = e.count()
-    val (effBits, tablesEff) =
-      lshParams(n, threshold, tables, bits, targetBucketSize, recallFloor, maxTables)
-    val planes = Similarity.hyperplanes(Similarity.dimOf(embeddings), tablesEff, effBits)
-    // r13 (verdict item 5): the bucket exchange carries int16-QUANTIZED
-    // vectors — (vec_id, 2·dim bytes + scale + quantized-norm + norm) —
-    // instead of the dim·8 B double arrays, ~3.4× fewer bytes on the one
-    // corpus-sized exchange (measured 2.9 GB at sf10 shipping each
-    // vector once per table). Bucket ASSIGNMENT still hashes the
-    // full-precision vector map-side (before the exchange), so recall
-    // is bit-identical to the unquantized pipeline; in-bucket scoring
-    // is the QuantCosinePairs LOSSLESS prefilter (quantized cosine +
-    // rigorous per-pair error bound — see its scaladoc for the proof),
-    // so no qualifying pair is dropped; and survivors rejoin the
-    // full-precision vectors for the exact cosine, so emitted RESULTS
-    // are bit-identical too. The pair space still never crosses an
-    // exchange (the r9 falsifier killed that shape on >75 GB of
-    // candidate spill); only the distinct candidate ID pairs — 16-byte
-    // rows, near-output-sized plus the bound's margin band — cross to
-    // the verify. The window and the aggregate share one
-    // hash(tbl, bucket) exchange, and the cross-table distinct on bare
-    // ID pairs is sound because the verify recomputes one cosine per
-    // pair whichever table surfaced it.
-    val buckets = e.select(
-      col("vec_id"),
-      graft.functions.QuantizeVec.column(col("v")).as("qs"),
-      col("norm"),
-      posexplode(graft.functions.HyperplaneBuckets.buckets(col("v"), planes, tablesEff, effBits)))
-      .toDF("vec_id", "qs", "norm", "tbl", "bucket")
-    val cands = capBuckets(buckets, Seq("tbl", "bucket"), maxBucketSize, dropObs)
-      .groupBy("tbl", "bucket")
-      .agg(collect_list(struct(
-        col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"),
-        col("norm"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(QuantCosinePairs.column(col("ms"), threshold))
-      // the one pair-sized exchange: candidates dedupe BEFORE the
-      // verify. At int16 the margin band is empty for any realistic
-      // density, so this stream is the passing pairs times their
-      // cross-table multiplicity — the same rows any global dedup has
-      // to move — and deduping first keeps the verify joins at the
-      // distinct-pair count (8.5M vs 60M rows at the sf10 falsifier).
-      // (The measured alternatives both lose: int8's loose bound let
-      // ~5× margin-band junk into this exchange, and post-verify
-      // dedup shipped the multiplicity through the verify joins.)
-      .distinct()
-    cosineVerify(
-      cands.join(
-        e.select(col("vec_id").as("vec_id_a"), col("v").as("va"), col("norm").as("na")),
-        "vec_id_a"),
-      e, threshold)
-  }
+      dropObs: Option[Observation] = None): DataFrame =
+    embeddingNearDups(embeddings, threshold, dropObs) { (_, n, dim) =>
+      // Size the bucket space AND the table count to the data, jointly
+      // (r10 — the RecallProfile falsifier measured recall 0.951 at
+      // sf0.1 collapsing to 0.376 at sf1 under the r8-r9 scheme, which
+      // grew bits with n but held tables at 16): for random hyperplanes,
+      // a pair at exactly `threshold` cosine matches one table's bucket
+      // with p₁ = (1 − θ/π)^bits, so recall after T OR'd tables is
+      // 1 − (1 − p₁)^T. Growing bits alone keeps buckets ~target-sized
+      // (linear in-bucket work) but sends p₁ — and recall — to zero.
+      // Holding BOTH bounded bucket population and a recall floor forces
+      // T ~ n^ρ tables (ρ = ln(1/q₁)/ln 2 — the standard LSH exponent;
+      // ≈0.66 at threshold 0.4): inherent to the method, not this
+      // implementation. So: bits are capped at the largest value whose
+      // 0.85 recall floor is reachable within 128 tables, the table
+      // count adapts to the floor, and past the budget boundary
+      // (n ≳ 128·2^bitsCap) bucket populations — and in-bucket pair
+      // CPU — grow instead, with `dropObs` and the hot-bucket cap as the
+      // guard. At that point the production answer is IVF-style
+      // sharding ([[embeddingNearDupsIvf]]), not more LSH tables.
+      val (effBits, tablesEff) = lshParams(n, threshold, tables = 16, bits = 4,
+        targetBucketSize = 128, recallFloor = 0.85, maxTables = 128)
+      posexplode(graft.functions.HyperplaneBuckets.buckets(
+        col("v"), Similarity.hyperplanes(dim, tablesEff, effBits), tablesEff, effBits))
+        .as(Seq("tbl", "bucket"))
+    }
 
   /** The IVF cell-count sizing rule, extracted (r18) so the byte gate
     * is directly spec-gated and the profiling harnesses can report
@@ -799,7 +796,7 @@ object Dedup {
     * Shape: fit `nCells ≈ cellFactor·√n` coarse centroids on a BOUNDED
     * sample ([[Similarity.ivfCentroids]] — one hash-cutoff filtered
     * scan + driver-local Lloyd, corpus-size-independent); each vector assigns
-    * map-side to its `probes` nearest cells (full-precision scores
+    * map-side to its `probes` = 8 nearest cells (full-precision scores
     * through [[graft.functions.ProbeCells]], the annIvfTopK assignment);
     * the ONE corpus-sized exchange carries each vector `probes` times,
     * int16-QUANTIZED (the r13 payload) and keyed by cell — n·probes
@@ -815,9 +812,8 @@ object Dedup {
     * multi-probe population (n·probes/nCells) must also stay under the
     * hot-cell cap — see the sizing expression below. Once the
     * population bound binds, assignment CPU per vector is
-    * O(nCells·dim) — growing with n; past that a two-level quantizer
-    * (probe √nCells superclusters first) caps it, declared-not-built
-    * like every next-tier escape here.
+    * O(nCells·dim) — growing with n; past that the two-level quantizer
+    * (probe √nCells superclusters first, built in r16 — below) caps it.
     *
     * Recall is DATA-DEPENDENT, not a theorem: a pair qualifies iff its
     * two top-`probes` cell sets intersect, which no closed form bounds
@@ -852,8 +848,8 @@ object Dedup {
     * top-p SELECTION (the r15 shape full-sorted all nCells scores as
     * structs per vector) and, past 1024 cells, TWO-LEVEL pruning
     * through ~√nCells supercluster centroids
-    * ([[Similarity.superQuantizer]]), with `superProbes` auto-scaled
-    * to max(4, 2·probes) — see the wiring comment below for why it
+    * ([[Similarity.superQuantizer]]), probing max(4, 2·probes)
+    * superclusters — see the wiring comment below for why that count
     * must scale. Measured (SCALING_r16 `lsh_vs_ivf_*_twolevel_*`):
     * clustered ≥0.9 at 800k vectors, the kernel + auto rule holds
     * recall at 0.94-0.95 (LSH 0.953) while wall drops 59→13-21 s —
@@ -879,111 +875,80 @@ object Dedup {
   def embeddingNearDupsIvf(
       embeddings: DataFrame,
       threshold: Double = 0.4,
-      probes: Int = 8,
       cellFactor: Double = 1.0,
-      minCells: Int = IvfDefaults.MinCells,
-      maxCells: Int = IvfDefaults.MaxCells,
-      lloydIters: Int = 2,
-      maxBucketSize: Int = IvfDefaults.MaxBucketSize,
-      superProbes: Int = 0,
       maxCentroidBytes: Long = IvfDefaults.MaxCentroidBytes,
       dropObs: Option[Observation] = None): DataFrame = {
-    require(probes >= 1, s"probes must be >= 1, got $probes")
     require(cellFactor > 0.0, s"cellFactor must be positive, got $cellFactor")
-    require(superProbes >= 0, s"superProbes must be >= 0 (0 = auto), got $superProbes")
-    // SAFE LAZY (r16 audit): the synchronous count() on the next line
-    // is the first action and sole consumer at that point — blocks are
-    // stored before any concurrent branch exists.
-    val e = Similarity.withNorm(embeddings)
-      .localCheckpoint(false) // consumers: sizing count, assignment, both verify sides
-    val n = e.count()
-    // √n is the classical IVF operating point, but multi-probe puts
-    // each vector in `probes` cells, so the EXPECTED population is
-    // n·probes/nCells — sized here to stay at half the hot-cell cap,
-    // or capBuckets (a SKEW guard, not a sizing mechanism) would drop
-    // every average cell once n·probes outgrows √n·cap/2 (the r15
-    // sf10 falsifier: 448 √n-cells at probes=16 put ~7.1k vectors in
-    // every cell and the cap silently emptied the candidate stream).
-    // centroid-matrix BYTE gate (r17, verdict item 2): the cell matrix
-    // rides the plan via addReferenceObj in ProbeCells — nCells·dim·8
-    // bytes inside the task binary every executor deserializes. The
-    // maxCells=2²⁰ cap bounds the COUNT but not the BYTES: dim-768
-    // production embeddings at 2²⁰ cells are a 6 GB matrix, dead long
-    // before the cap. DEGRADE rather than refuse: capping nCells only
-    // raises expected per-cell population, which capBuckets already
-    // guards OBSERVABLY (dropped rows land in dropObs) — a refusal
-    // would turn a tunable into an outage at exactly the scale this
-    // operator exists for. Default 256 MB ⇒ 512k cells at the testdata's
-    // dim 64, ~43k at dim 768.
-    val dim = Similarity.dimOf(embeddings)
-    val nCells = ivfCellCount(
-      n, dim, probes, cellFactor, minCells, maxCells, maxBucketSize, maxCentroidBytes)
-    val centroids = Similarity.ivfCentroids(e, n, nCells, lloydIters)
-    val pEff = math.min(probes, centroids.length)
-    // top-p cells per vector via the fused ProbeCells kernel (r16):
-    // bounded selection instead of the r15 sort_array-over-structs
-    // composition, applied to the CORPUS side (both members of a pair
-    // probe, so they meet iff the sets intersect). Past 1024 cells the
-    // kernel goes TWO-LEVEL — ~√nCells supercluster pruning caps the
-    // per-vector assignment CPU the r16 cellFactor sweep measured as
-    // IVF's wall bottleneck (SCALING_r16 lsh_vs_ivf_clustered_sf10);
-    // below that, flat selection reproduces the r15 set (and order)
-    // exactly, so the oracle-gated small-SF results are unchanged.
-    // superProbes trades recall for assignment CPU: with all supers
-    // probed the result equals flat EXACTLY (ProbeCellsSpec gate).
-    // Default 0 = AUTO: max(4, 2·probes). The r16 sweep showed why it
-    // must scale with probes — in the clustered ≥0.9 regime a pair's
-    // cells co-locate in few superclusters (sp=4 at p=1/2 was
-    // bit-identical to flat at 2.2× less wall), but in near-uniform
-    // low-threshold geometry the top-p cells spread over ~p distinct
-    // superclusters, and a fixed sp=4 gutted p=32 recall 0.953→0.649
-    // (SCALING_r16 lsh_vs_ivf_sf10_twolevel). At p ≳ √nCells the auto
-    // rule degrades to probing every supercluster — flat-equivalent
-    // output, still cheaper than the sort_array it replaced. That is
-    // structural, not a tuning gap: two-level assignment only has an
-    // asymptotic win when probes ≪ √nCells, which is exactly the
-    // clustered regime IVF is the right tool for. r17 swept the
-    // boundary itself (SCALING_r17 lsh_vs_ivf_sf10_knee, p=25 ≈
-    // √nCells/2): probe-all there costs 2.3× assignment wall over
-    // sp=p for the last +1.2 % recall — while the clustered regime
-    // needs the full 2p (sp=p lost 7.5 % recall in the r16 sp4 key).
-    // The rule is recall-safe where two-level wins and pays only at
-    // the boundary where no pruning rule can win: CONFIRMED.
-    // Dispatch on the FITTED cell count, not the requested one (ADVICE
-    // r16): ivfCentroids returns fewer centroids than requested when
-    // the corpus has fewer non-zero vectors than nCells, and deciding
-    // on the request could run two-level pruning (with an auto
-    // superProbes sized off pEff, not the real matrix) in exactly the
-    // small-matrix regime the flat branch promises is exact.
-    val nEff = centroids.length
-    val probeCells = {
-      if (nEff < 1024 || pEff >= nEff)
-        graft.functions.ProbeCells.flat(col("v"), centroids, pEff)
-      else {
-        val spEff = if (superProbes > 0) superProbes else math.max(4, 2 * pEff)
-        val (supers, offs, mems) = Similarity.superQuantizer(centroids)
-        graft.functions.ProbeCells.twoLevel(
-          col("v"), centroids, pEff, supers, spEff, offs, mems)
-      }
+    val probes = 8
+    embeddingNearDups(embeddings, threshold, dropObs) { (e, n, dim) =>
+      // √n is the classical IVF operating point, but multi-probe puts
+      // each vector in `probes` cells, so the EXPECTED population is
+      // n·probes/nCells — sized here to stay at half the hot-cell cap,
+      // or the cap (a SKEW guard, not a sizing mechanism) would drop
+      // every average cell once n·probes outgrows √n·cap/2 (the r15
+      // sf10 falsifier: 448 √n-cells at probes=16 put ~7.1k vectors in
+      // every cell and the cap silently emptied the candidate stream).
+      // centroid-matrix BYTE gate (r17, verdict item 2): the cell matrix
+      // rides the plan via addReferenceObj in ProbeCells — nCells·dim·8
+      // bytes inside the task binary every executor deserializes. The
+      // maxCells=2²⁰ cap bounds the COUNT but not the BYTES: dim-768
+      // production embeddings at 2²⁰ cells are a 6 GB matrix, dead long
+      // before the cap. DEGRADE rather than refuse: capping nCells only
+      // raises expected per-cell population, which the hot-cell cap
+      // already guards OBSERVABLY (dropped rows land in dropObs) — a
+      // refusal would turn a tunable into an outage at exactly the scale
+      // this operator exists for. Default 256 MB ⇒ 512k cells at the
+      // testdata's dim 64, ~43k at dim 768.
+      val nCells = ivfCellCount(n, dim, probes, cellFactor, maxCentroidBytes = maxCentroidBytes)
+      val centroids = Similarity.ivfCentroids(e, n, nCells, lloydIters = 2)
+      val pEff = math.min(probes, centroids.length)
+      // top-p cells per vector via the fused ProbeCells kernel (r16):
+      // bounded selection instead of the r15 sort_array-over-structs
+      // composition, applied to the CORPUS side (both members of a pair
+      // probe, so they meet iff the sets intersect). Past 1024 cells the
+      // kernel goes TWO-LEVEL — ~√nCells supercluster pruning caps the
+      // per-vector assignment CPU the r16 cellFactor sweep measured as
+      // IVF's wall bottleneck (SCALING_r16 lsh_vs_ivf_clustered_sf10);
+      // below that, flat selection reproduces the r15 set (and order)
+      // exactly, so the oracle-gated small-SF results are unchanged.
+      // The supercluster probe count trades recall for assignment CPU:
+      // with all supers probed the result equals flat EXACTLY
+      // (ProbeCellsSpec gate). It is max(4, 2·probes). The r16 sweep
+      // showed why it must scale with probes — in the clustered ≥0.9
+      // regime a pair's cells co-locate in few superclusters (sp=4 at
+      // p=1/2 was bit-identical to flat at 2.2× less wall), but in
+      // near-uniform low-threshold geometry the top-p cells spread over
+      // ~p distinct superclusters, and a fixed sp=4 gutted p=32 recall
+      // 0.953→0.649 (SCALING_r16 lsh_vs_ivf_sf10_twolevel). At p ≳
+      // √nCells the rule degrades to probing every supercluster —
+      // flat-equivalent output, still cheaper than the sort_array it
+      // replaced. That is structural, not a tuning gap: two-level
+      // assignment only has an asymptotic win when probes ≪ √nCells,
+      // which is exactly the clustered regime IVF is the right tool
+      // for. r17 swept the boundary itself (SCALING_r17
+      // lsh_vs_ivf_sf10_knee, p=25 ≈ √nCells/2): probe-all there costs
+      // 2.3× assignment wall over sp=p for the last +1.2 % recall —
+      // while the clustered regime needs the full 2p (sp=p lost 7.5 %
+      // recall in the r16 sp4 key). The rule is recall-safe where
+      // two-level wins and pays only at the boundary where no pruning
+      // rule can win: CONFIRMED.
+      // Dispatch on the FITTED cell count, not the requested one (ADVICE
+      // r16): ivfCentroids returns fewer centroids than requested when
+      // the corpus has fewer non-zero vectors than nCells, and deciding
+      // on the request could run two-level pruning (with a supercluster
+      // probe count sized off pEff, not the real matrix) in exactly the
+      // small-matrix regime the flat branch promises is exact.
+      val nEff = centroids.length
+      val cells =
+        if (nEff < 1024 || pEff >= nEff)
+          graft.functions.ProbeCells.flat(col("v"), centroids, pEff)
+        else {
+          val (supers, offs, mems) = Similarity.superQuantizer(centroids)
+          graft.functions.ProbeCells.twoLevel(
+            col("v"), centroids, pEff, supers, math.max(4, 2 * pEff), offs, mems)
+        }
+      explode(cells).as("cell") // a pair can meet in up to `probes` shared cells
     }
-    val buckets = e.select(
-        col("vec_id"),
-        graft.functions.QuantizeVec.column(col("v")).as("qs"),
-        col("norm"),
-        explode(probeCells).as("cell"))
-    val cands = capBuckets(buckets, Seq("cell"), maxBucketSize, dropObs)
-      .groupBy("cell")
-      .agg(collect_list(struct(
-        col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"),
-        col("norm"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(QuantCosinePairs.column(col("ms"), threshold))
-      .distinct() // a pair can surface from up to `probes` shared cells
-    cosineVerify(
-      cands.join(
-        e.select(col("vec_id").as("vec_id_a"), col("v").as("va"), col("norm").as("na")),
-        "vec_id_a"),
-      e, threshold)
   }
 
   /** Corpus-wide duplicated-SPAN removal (SURVEY §2 #46) — the

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (SURVEY §2 #28): media as opaque binary
-  * columns with typed metadata, processed batched-partition-wise. The
-  * container has no image/audio codecs, so the decode step is a clearly
-  * marked DETERMINISTIC STUB — the real parts are the Spark-side
-  * plumbing: binary schema, magic sniffing, batch shape, and the
-  * mapPartitions pipeline that a codec (JNI/FFI or vectorized reader)
-  * would slot into.
+  * columns with typed metadata. The container has no image/audio
+  * codecs, so the decode step is a clearly marked DETERMINISTIC STUB —
+  * the real parts are the Spark-side plumbing: binary schema, magic
+  * sniffing, the decode's batch shape, and the mapPartitions pipeline
+  * that a codec (JNI/FFI or vectorized reader) would slot into. Resize,
+  * frame sampling and feature extraction are per-row typed maps.
   *
   * Scale: payloads stay opaque bytes end-to-end (no row explosion, no
   * driver collect); decode batches bound memory per task; metadata
@@ -53,7 +53,7 @@ object Multimodal {
         .otherwise("unknown").as("kind"))
   }
 
-  /** Low-parallelism guard for the CPU-bound batched stages — the
+  /** Low-parallelism guard for the CPU-bound per-payload stages — the
     * shared [[CpuSpread]] (its r8-r10 adjudication history lives in
     * that object's scaladoc; extracted r19 so the text/dedup pipelines
     * reuse the identical guard). plannedFallback=true preserves this
@@ -101,27 +101,23 @@ object Multimodal {
   final case class ResizedPayload(
       doc_id: Long, kind: String, width: Int, height: Int, payload: Array[Byte])
 
-  /** Batched binary→binary resize stage. Real parts: batch shape,
+  /** Per-row binary→binary resize stage. Real parts:
     * binary-in/binary-out schema, magic preservation, bounded output
     * size per row (a resized image is O(width·height), independent of
     * input size — the property that makes resize-early the standard
     * scale move). STUB part: the "pixels" are a deterministic prefix of
     * the source payload instead of an actual rescale.
     */
-  def resize(
-      payloads: DataFrame, width: Int = 256, height: Int = 256,
-      batchSize: Int = 64): DataFrame = {
+  def resize(payloads: DataFrame, width: Int = 256, height: Int = 256): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     require(width > 0 && height > 0, s"bad target dims ${width}x$height")
     val ds = cpuSpread(
       payloads.select(col("doc_id").cast("long"), col("payload").cast("binary")))
       .as[(Long, Array[Byte])]
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-        val body = bytes.drop(4).take(math.max(16, width * height / 64))
-        ResizedPayload(id, sniffKind(bytes), width, height, bytes.take(4) ++ body)
-      })
+    ds.map { case (id, bytes) =>
+      val body = bytes.drop(4).take(math.max(16, width * height / 64))
+      ResizedPayload(id, sniffKind(bytes), width, height, bytes.take(4) ++ body)
     }.toDF()
   }
 
@@ -134,26 +130,24 @@ object Multimodal {
     */
   final case class FeatureRow(vec_id: Long, embedding: Array[Float])
 
-  /** Batched payload → feature-vector extraction (the "feature-extract"
+  /** Per-row payload → feature-vector extraction (the "feature-extract"
     * stage of the multimodal pipeline). One pass per payload, fixed
     * 256-float output per row regardless of input size.
     */
-  def featureExtract(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  def featureExtract(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds = cpuSpread(
       payloads.select(col("doc_id").cast("long"), col("payload").cast("binary")))
       .as[(Long, Array[Byte])]
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-        val h = new Array[Float](256)
-        var i = 0
-        while (i < bytes.length) { h(bytes(i) & 0xff) += 1f; i += 1 }
-        val n = math.max(1, bytes.length).toFloat
-        var j = 0
-        while (j < 256) { h(j) /= n; j += 1 }
-        FeatureRow(id, h)
-      })
+    ds.map { case (id, bytes) =>
+      val h = new Array[Float](256)
+      var i = 0
+      while (i < bytes.length) { h(bytes(i) & 0xff) += 1f; i += 1 }
+      val n = math.max(1, bytes.length).toFloat
+      var j = 0
+      while (j < 256) { h(j) /= n; j += 1 }
+      FeatureRow(id, h)
     }.toDF()
   }
 
@@ -176,8 +170,8 @@ object Multimodal {
     * from the payload branch (both branches here are cheap projections
     * of the same scan).
     */
-  def featureSummary(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
-    val feats = featureExtract(payloads, batchSize)
+  def featureSummary(payloads: DataFrame): DataFrame = {
+    val feats = featureExtract(payloads)
     val nBytes = payloads.select(
       col("doc_id"), octet_length(col("payload")).cast("bigint").as("n_bytes"))
     // floor(x+0.5) == round-HALF_UP for the non-negative values here,
@@ -204,7 +198,7 @@ object Multimodal {
   final case class Frame(
       doc_id: Long, frame_idx: Int, frame_ms: Long, frame_payload: Array[Byte])
 
-  /** Batched one-to-many frame sampler: every `everyMs` of (stub)
+  /** One-to-many frame sampler: every `everyMs` of (stub)
     * duration emits one frame, hard-capped at `maxFrames` per doc —
     * the cap is the real scale contract (an unbounded per-doc fan-out
     * is how a single 10-hour video OOMs a task); non-video payloads
@@ -213,25 +207,22 @@ object Multimodal {
     * stub reports.
     */
   def frameSample(
-      payloads: DataFrame, everyMs: Long = 5000L, maxFrames: Int = 8,
-      batchSize: Int = 64): DataFrame = {
+      payloads: DataFrame, everyMs: Long = 5000L, maxFrames: Int = 8): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     require(everyMs > 0 && maxFrames > 0, s"bad sampling ($everyMs ms, $maxFrames frames)")
     val ds = cpuSpread(
       payloads.select(col("doc_id").cast("long"), col("payload").cast("binary")))
       .as[(Long, Array[Byte])]
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
-        val kind = sniffKind(bytes)
-        val h = graft.functions.RollingHash.hashBytes(bytes)
-        val durationMs = if (kind == "riff") math.abs(h % 60000L) else 0L
-        val n = math.min(durationMs / everyMs + 1, maxFrames.toLong).toInt
-        (0 until n).map { i =>
-          val off = 4 + ((bytes.length - 4) * i.toLong / n).toInt
-          Frame(id, i, i * everyMs, bytes.slice(off, math.min(off + 64, bytes.length)))
-        }
-      })
+    ds.flatMap { case (id, bytes) =>
+      val kind = sniffKind(bytes)
+      val h = graft.functions.RollingHash.hashBytes(bytes)
+      val durationMs = if (kind == "riff") math.abs(h % 60000L) else 0L
+      val n = math.min(durationMs / everyMs + 1, maxFrames.toLong).toInt
+      (0 until n).map { i =>
+        val off = 4 + ((bytes.length - 4) * i.toLong / n).toInt
+        Frame(id, i, i * everyMs, bytes.slice(off, math.min(off + 64, bytes.length)))
+      }
     }.toDF()
   }
 

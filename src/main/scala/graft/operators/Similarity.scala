@@ -61,10 +61,21 @@ object Similarity {
     }
 
   private[graft] def dimOf(embeddings: DataFrame): Int = {
+    val d = dimIfAny(embeddings)
+    require(d.nonEmpty,
+      "dimOf: embeddings input has no non-NULL vector — ANN needs at least one to size its index")
+    d.get
+  }
+
+  /** [[dimOf]], or None when the input has no non-NULL vector (an empty
+    * table, or only NULL embeddings): then [[withNorm]] leaves no row
+    * for an index to hold. Only found dimensions are cached.
+    */
+  private def dimIfAny(embeddings: DataFrame): Option[Int] = {
     val analyzed = embeddings.queryExecution.analyzed
     val key = (analyzed.semanticHash(), analyzed.schema.catalogString)
     val hit = dimCache.synchronized(dimCache.get(key))
-    if (hit != null) hit.intValue
+    if (hit != null) Some(hit.intValue)
     else {
       // skip NULL embeddings rather than require the FIRST scanned row
       // be non-null: every consumer (withNorm, the kernels) already
@@ -78,14 +89,14 @@ object Similarity {
       // pass a NULL row through as dimension -1 (r17 ADVICE).
       val row = embeddings.filter(col("embedding").isNotNull)
         .select(size(col("embedding")).as("d")).limit(1).collect()
-      require(row.nonEmpty,
-        "dimOf: embeddings input has no non-NULL vector — ANN needs at least one to size its index")
-      val d = row.head.getInt(0)
-      require(d >= 0,
-        s"dimOf: size(embedding) returned $d — a negative size can only mean legacy " +
-          "null semantics leaked past the null filter or a non-array column")
-      dimCache.synchronized(dimCache.put(key, Integer.valueOf(d)))
-      d
+      row.headOption.map { r =>
+        val d = r.getInt(0)
+        require(d >= 0,
+          s"dimOf: size(embedding) returned $d — a negative size can only mean legacy " +
+            "null semantics leaked past the null filter or a non-array column")
+        dimCache.synchronized(dimCache.put(key, Integer.valueOf(d)))
+        d
+      }
     }
   }
 
@@ -563,7 +574,8 @@ object Similarity {
     * in annLshTopK hides the producing plan from downstream explain).
     */
   private[graft] def lshFeatures(embeddings: DataFrame, tables: Int, bits: Int): DataFrame = {
-    val planes = hyperplanes(dimOf(embeddings), tables, bits)
+    // no non-NULL vector: withNorm leaves no row, so 0-wide planes bucket nothing
+    val planes = hyperplanes(dimIfAny(embeddings).getOrElse(0), tables, bits)
     withNorm(embeddings)
       .withColumn("bkts", HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
   }

@@ -233,7 +233,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // shape joined the index on (doc_id_b, h), which shipped
     // |pair|·|shingles| rows across exchanges (11.8 GB at the sf10
     // falsifier) and re-aggregated them
-    val p = plan(Dedup.minhashLshPairs(Tables.documents(spark, sfDir)))
+    val pairs = Dedup.minhashLshPairs(Tables.documents(spark, sfDir))
+    val p = plan(pairs)
     // (the perDoc aggregate itself sits behind a localCheckpoint, so
     // its sorted_long_set lineage is not visible in this plan — the
     // unboxed agg is gated by DedupSpec's pair parity instead)
@@ -241,16 +242,28 @@ class PlanAuditSpec extends AnyFunSuite {
       "verify must count intersections via the compiled merge walk")
     assert(!"hashpartitioning\\(doc_id_b#\\d+L?, h#".r.findAllIn(p).hasNext,
       s"the pair-x-shingle (doc_id_b, h) exchange is back:\n$p")
+    // both verify join sides read ONE semi-filtered per-doc side, so
+    // the executed plan builds one broadcast candidate-id set (a reuse
+    // of it is a ReusedExchange, not a second build)
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    pairs.collect()
+    val idSets = gatherExecuted(pairs.queryExecution.executedPlan).collect {
+      case b: BroadcastExchangeExec if b.output.map(_.name) == Seq("doc_id") => b
+    }
+    assert(idSets.size == 1,
+      s"expected one broadcast candidate-id set, saw ${idSets.size}:\n" +
+        pairs.queryExecution.executedPlan)
   }
 
   test("bucket cap: window count shares the pair aggregation's shuffle") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.collect_set
+    import org.apache.spark.sql.functions.{collect_set, size}
     val buckets = Seq((1L, 0, 10L), (2L, 0, 10L), (3L, 0, 11L))
       .toDF("doc_id", "band", "bucket")
-    val p = plan(Dedup.capBuckets(buckets, Seq("band", "bucket"), 100, None)
-      .groupBy("band", "bucket").agg(collect_set("doc_id")))
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+    // the tail's other exchange is its pair distinct, keyed on the pairs
+    val p = plan(Dedup.bucketPairs(
+      buckets, Seq("band", "bucket"), collect_set("doc_id"), 100, None)(size(_)))
+    val exchanges = "Exchange hashpartitioning\\(band#".r.findAllIn(p).length
     assert(exchanges == 1,
       s"the size guard must reuse the bucket aggregation's exchange, saw $exchanges:\n$p")
   }

@@ -273,7 +273,8 @@ class DedupSpec extends AnyFunSuite {
     // the SparkEntry wiring threads a real Observation: after an action,
     // reportedDrops must surface the count — 0 on the benign corpus (the
     // adversarial non-zero side is covered by the hot-bucket test above)
-    for (q <- Seq("q_dedup_minhash_lsh", "q_dedup_simhash")) {
+    for (q <- Seq(
+        "q_dedup_minhash_lsh", "q_dedup_simhash", "q_dedup_embedding_lsh", "q_dedup_embedding_ivf")) {
       graft.SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
       assert(graft.SparkEntry.reportedDrops(q).contains(0L),
         s"$q should observe zero drops on the normal corpus")
@@ -307,7 +308,7 @@ class DedupSpec extends AnyFunSuite {
     val recall = exact.count(ivf).toDouble / exact.size
     info(s"embedding IVF recall = $recall")
     // measured 0.99+ at sf0.01/sf0.1 with the default probes; the
-    // per-decade decay (probes is the knob) is profiled in SCALING_r16
+    // per-decade decay against the probe count is profiled in SCALING_r16
     assert(recall >= 0.9, s"recall $recall below 0.9 — cell assignment degraded")
   }
 

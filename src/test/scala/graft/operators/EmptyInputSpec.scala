@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the correct schema to a 0-row (or contractually fixed) result
   * without throwing — the shape a scheduled production run hits on an
   * empty partition day, and one no oracle run exercises (the driver's
-  * sf dirs are never empty). collect(), not count(), so output
+  * sf dirs are never empty); the embedding operators also get an
+  * all-NULL-vector table. collect(), not count(), so output
   * projections actually evaluate (see AdversarialInputSpec's pruning
   * note). CC's empty labeling (a union-find over no pairs) and
   * stageReport's "an empty stage still reports a 0 row" contract are
@@ -22,6 +23,11 @@ class EmptyInputSpec extends AnyFunSuite {
 
   private lazy val docs0 = Tables.documents(spark, sfDir).limit(0)
   private lazy val events0 = Tables.events(spark, sfDir).limit(0)
+  private lazy val emb0 = Tables.embeddings(spark, sfDir).limit(0)
+  private lazy val embNull = {
+    val emb = Tables.embeddings(spark, sfDir)
+    emb.withColumn("embedding", lit(null).cast(emb.schema("embedding").dataType))
+  }
 
   test("dedup and corpus operators yield zero rows on an empty corpus") {
     for ((name, rows) <- Seq[(String, () => Int)](
@@ -29,6 +35,12 @@ class EmptyInputSpec extends AnyFunSuite {
       ("ngram_jaccard", () => Dedup.ngramJaccardPairs(docs0).collect().length),
       ("minhash_lsh", () => Dedup.minhashLshPairs(docs0).collect().length),
       ("simhash", () => Dedup.simhashPairs(docs0).collect().length),
+      ("embedding_lsh", () => Dedup.embeddingNearDupsLsh(emb0).collect().length),
+      ("embedding_ivf", () => Dedup.embeddingNearDupsIvf(emb0).collect().length),
+      ("ann_lsh_topk", () => Similarity.annLshTopK(emb0).collect().length),
+      ("embedding_lsh, NULL vectors", () => Dedup.embeddingNearDupsLsh(embNull).collect().length),
+      ("embedding_ivf, NULL vectors", () => Dedup.embeddingNearDupsIvf(embNull).collect().length),
+      ("ann_lsh_topk, NULL vectors", () => Similarity.annLshTopK(embNull).collect().length),
       ("dup_groups", () => ConnectedComponents.dupGroups(Dedup.ngramJaccardPairs(docs0)).collect().length),
       ("decontaminate", () => Decontaminate.flagged(docs0, docs0).collect().length),
       ("corpus_clean", () => CorpusPipeline.cleanCorpus(docs0).collect().length),

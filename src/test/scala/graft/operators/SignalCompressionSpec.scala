@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The closed-form window plans must reproduce the state-machine engine
   * exactly for the default config — two independent formulations of the
-  * same semantics (SURVEY §4: SignalCompression is the preferred
-  * physical strategy when the config allows it).
+  * same semantics. SignalCompression is the Spark twin of the oracle's
+  * closed-form blotter, kept as this spec's cross-check of the engine;
+  * no query plans through it.
   */
 class SignalCompressionSpec extends AnyFunSuite {
 
