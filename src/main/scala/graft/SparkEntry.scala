@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, octet_length}
 import graft.core.{InventoryMode, PnlConfig}
 import graft.operators._
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.duration._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
@@ -26,24 +27,17 @@ object SparkEntry {
   /** dropped_memberships observed by `qname`'s most recent completed
     * action; None if the query wasn't run or publishes no drop metric.
     * Observation metrics arrive on the ASYNC listener bus, which can lag
-    * a heavy job's end by more than the ~100 ms `getOrEmpty` waits — so
-    * poll briefly instead of sampling once (a silently-missed non-zero
-    * drop count is exactly the alert this hook exists for). Bounded:
-    * returns None after ~2 s for a query whose action never ran.
+    * a heavy job's end — so wait for them ([[Observed.metrics]]) instead
+    * of sampling once (a silently-missed non-zero drop count is exactly
+    * the alert this hook exists for). Bounded: None after 2 s for a
+    * query whose action never ran.
     */
   def reportedDrops(qname: String): Option[Long] =
     dropObservations.get(qname).flatMap { o =>
-      val deadline = System.nanoTime() + 2_000_000_000L
-      var metric: Option[Long] = None
-      var done = false
-      while (!done) {
-        metric = Option(org.apache.spark.sql.classic.GraftInternal
-          .observedMetricsOrEmpty(o).getOrElse("dropped_memberships", null))
-          .map { case n: java.lang.Number => n.longValue }
-        done = metric.isDefined || System.nanoTime() > deadline
-        if (!done) Thread.sleep(50)
-      }
-      metric
+      val metrics =
+        try Observed.metrics(o, qname, "dropped_memberships", 2.seconds)
+        catch { case _: IllegalStateException => Map.empty[String, Any] }
+      metrics.get("dropped_memberships").collect { case n: java.lang.Number => n.longValue }
     }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

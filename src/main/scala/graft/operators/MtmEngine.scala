@@ -6,7 +6,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.classic.GraftInternal
 import org.apache.spark.sql.execution.SQLExecution
@@ -21,14 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Plan shape (SURVEY.md §4): canonical bars → [[graft.plans.MtmPass]],
   * a row-level node that runs the [[graft.core.TradeBook]] state machine
-  * per symbol-run over the sorted InternalRows and writes one output
-  * family's UnsafeRows through reused writers. Its physical node
-  * requires its input clustered by symbol and sorted by [[RunOrder]],
-  * so the planner adds `hashpartitioning(symbol)` and a partition-local
-  * sort, and drops the exchange over a symbol-bucketed scan. ONE
-  * shuffle at most;
+  * per symbol-run over the sorted InternalRows and packs the UnsafeRows
+  * it writes into pages ([[passPartition]]). Every batch surface is
+  * this one node: the lazy ones emit one family's rows read back out of
+  * the pages, `MtmRunner.calculate` stores the pages ([[Emit]]). Its
+  * physical node requires its input clustered by symbol and sorted by
+  * [[RunOrder]], so the planner adds `hashpartitioning(symbol)` and a
+  * partition-local sort, and drops the exchange over a symbol-bucketed
+  * scan. ONE shuffle at most;
   * parallelism = #symbols spread by hash; per-task state is O(open
-  * positions) and rows stream through an iterator, so a skewed
+  * positions) plus at most one page ([[PageBytes]]) per family in
+  * flight, and rows stream through an iterator, so a skewed
   * mega-symbol is wall-clock-bound but never OOMs. At 100 TB the symbol
   * count vastly exceeds core count, so the hash spread stays even.
   *
@@ -55,8 +58,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `CentralMomentAgg`) applied in bar order.
   *
   * Storage ([[combinedRun]], behind `MtmRunner.calculate`): the walk runs
-  * once and packs each family into its own pages — byte arrays of
-  * length-prefixed UnsafeRows — stored with an EAGER local checkpoint.
+  * once and its pages of every family are stored, as the node emits
+  * them, with an EAGER local checkpoint.
   * Eager because the three frames are read by separate actions, and one
   * job reading two of them (a join, a union) would otherwise have two
   * unordered map stages race the block store, each loser re-running the
@@ -96,17 +99,10 @@ object MtmEngine {
     * ordered totally by these columns within it. [[graft.plans.MtmPassExec]]
     * requires it of its child, so the planner adds the exchange and
     * the sort, or elides the exchange over a scan already clustered by
-    * symbol (BucketedTables.bars); [[combinedRun]] builds it itself.
+    * symbol (BucketedTables.bars). The MTM streams sort their
+    * micro-batch groups in it too.
     */
   private[graft] val RunOrder: Seq[String] = Seq("symbol", "ts_us", "event_id")
-
-  /** [[combinedRun]]'s copy of that layout: co-locate each symbol's rows
-    * and sort them within the partition. AQE partition coalescing is
-    * safe: symbol runs stay contiguous because a symbol hashes to
-    * exactly one pre-coalesce partition.
-    */
-  private def sortRuns(rows: DataFrame): DataFrame =
-    rows.repartition(col("symbol")).sortWithinPartitions(RunOrder.map(col): _*)
 
   /** One output family of the pass, with its public schema. Timestamps
     * are TIMESTAMP columns, whose row form is the µs long the walk
@@ -338,7 +334,7 @@ object MtmEngine {
     def row(r: InternalRow): Unit =
       if (r.numFields > 6 && !r.isNullAt(6)) restore(r.getLong(0), r.getBinary(6)) else bar(r)
 
-    def bar(r: InternalRow): Unit = {
+    private def bar(r: InternalRow): Unit = {
       if (r.anyNull && nullBar(r))
         throw new NullPointerException(
           "MtmEngine: a bar has a null symbol, ts_us, event_id, close, buy or sell")
@@ -458,12 +454,14 @@ object MtmEngine {
     }
   }
 
-  /** Length-prefixed UnsafeRows back to back in one growable byte array. */
-  private final class PageBuilder extends Sink {
-    var bytes = new Array[Byte](4096)
+  /** `family`'s length-prefixed UnsafeRows back to back in one growable
+    * byte array.
+    */
+  private final class PageBuilder(family: Family) {
+    private var bytes = new Array[Byte](4096)
     var size = 0
 
-    def add(family: Family, row: UnsafeRow): Unit = {
+    def add(row: UnsafeRow): Unit = {
       val n = row.getSizeInBytes
       if (size + 4 + n > bytes.length)
         bytes = java.util.Arrays.copyOf(bytes, math.max(2 * bytes.length, size + 4 + n))
@@ -472,99 +470,114 @@ object MtmEngine {
       size += 4 + n
     }
 
-    def clear(): Unit = size = 0
-
-    def page: Array[Byte] = java.util.Arrays.copyOf(bytes, size)
-  }
-
-  /** Rows out of pages `bytes[0, end)`, through one reused UnsafeRow. */
-  private abstract class PageReader(family: Family) extends Iterator[InternalRow] {
-    protected var bytes: Array[Byte] = Array.emptyByteArray
-    protected var pos = 0
-    protected var end = 0
-    private val row = new UnsafeRow(family.schema.length)
-
-    /** Loads the next page holding a row; false when there is none. */
-    protected def advance(): Boolean
-
-    final def hasNext: Boolean = pos < end || advance()
-
-    final def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException
-      val n = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + pos)
-      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 4, n)
-      pos += 4 + n
-      row
+    /** The page as a `(family, page)` row; the builder starts empty. */
+    def take(): InternalRow = {
+      val page = new GenericInternalRow(Array[Any](family.id, java.util.Arrays.copyOf(bytes, size)))
+      size = 0
+      page
     }
   }
 
-  /** `family`'s rows of the pass over one partition of sorted bars, lazily
-    * ([[graft.plans.MtmPassExec]]): the walk steps bars until one yields a
-    * row, and those rows are read back before the next bar.
-    */
-  private[graft] def passRows(cfg: PnlConfig, family: Family)(
-      bars: Iterator[InternalRow]): Iterator[InternalRow] = new PageReader(family) {
-    private val buf = new PageBuilder
-    private val walk = new Walk(cfg, family == Family.Timeline, family == Family.Blotter,
-      family == Family.Summary, RunEnd.Open, buf)
-    private var done = false
-
-    protected def advance(): Boolean = {
-      buf.clear()
-      while (buf.size == 0 && bars.hasNext) walk.bar(bars.next())
-      if (buf.size == 0 && !done) { walk.finish(); done = true }
-      bytes = buf.bytes; pos = 0; end = buf.size
-      end > 0
-    }
-  }
-
-  /** Size at which a stored page is cut. */
+  /** Size at which a page is cut. */
   private val PageBytes = 4 << 20
 
-  /** Every family of the pass over one partition of sorted bars, as
-    * (family id, page) pairs — one page sequence per family.
+  /** What a [[graft.plans.MtmPass]] emits; each surface fixes its own. */
+  private[graft] sealed abstract class Emit(val schema: StructType) extends Serializable
+
+  private[graft] object Emit {
+    /** One family's rows in its public schema; runs end with [[RunEnd.Open]]. */
+    final case class Rows(family: Family) extends Emit(family.schema)
+
+    /** Every family's pages as `(family, page)` rows; runs end with `end`.
+      * The rows are not UnsafeRows, so a page leaves the node uncopied:
+      * they are for storing ([[combinedRun]]), not for a shuffle.
+      */
+    final case class Pages(end: RunEnd) extends Emit(StructType(Seq(
+      StructField("family", IntegerType, nullable = false),
+      StructField("page", BinaryType, nullable = false))))
+  }
+
+  /** The pass over one partition of sorted input rows, as `emit` says
+    * ([[graft.plans.MtmPassExec]]): the walk steps each row and packs
+    * the wanted families into pages, each cut before it passes
+    * [[PageBytes]] and emitted as a `(family, page)` row once full or
+    * when the input ends. [[Emit.Rows]] reads its family back out of
+    * those pages.
     */
-  private def packPages(cfg: PnlConfig, end: RunEnd)(bars: Iterator[InternalRow])
-      : Iterator[(Int, Array[Byte])] =
-    new Iterator[(Int, Array[Byte])] {
-      private val full = scala.collection.mutable.Queue.empty[(Int, Array[Byte])]
-      private val pages = Array.fill(4)(new PageBuilder)
-      private val walk = new Walk(cfg, tl = true, bl = true, sm = true, end, new Sink {
-        def add(family: Family, row: UnsafeRow): Unit = {
-          val b = pages(family.id)
-          if (b.size > 0 && b.size + 4 + row.getSizeInBytes > PageBytes) {
-            full += family.id -> b.page; b.clear()
+  private[graft] def passPartition(cfg: PnlConfig, emit: Emit)(
+      rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val (family, end) = emit match {
+      case Emit.Rows(f) => (Some(f), RunEnd.Open)
+      case Emit.Pages(e) => (None, e)
+    }
+    def wants(f: Family) = family.forall(_ == f)
+    val pages: Iterator[InternalRow] = new Iterator[InternalRow] {
+      private val full = scala.collection.mutable.Queue.empty[InternalRow]
+      private val open = // indexed by family id
+        Array(Family.Timeline, Family.Blotter, Family.Summary, Family.Carry).map(new PageBuilder(_))
+      private val walk = new Walk(cfg, wants(Family.Timeline), wants(Family.Blotter),
+        wants(Family.Summary), end, new Sink {
+          def add(family: Family, row: UnsafeRow): Unit = {
+            val b = open(family.id)
+            if (b.size > 0 && b.size + 4 + row.getSizeInBytes > PageBytes) full += b.take()
+            b.add(row)
           }
-          b.add(family, row)
-        }
-      })
+        })
       private var done = false
 
       def hasNext: Boolean = {
         while (full.isEmpty && !done) {
-          if (bars.hasNext) walk.row(bars.next())
+          if (rows.hasNext) walk.row(rows.next())
           else {
             walk.finish()
-            for (id <- pages.indices if pages(id).size > 0) full += id -> pages(id).page
+            for (b <- open if b.size > 0) full += b.take()
             done = true
           }
         }
         full.nonEmpty
       }
 
-      def next(): (Int, Array[Byte]) = {
+      def next(): InternalRow = {
         if (!hasNext) throw new NoSuchElementException
         full.dequeue()
       }
     }
+    family.fold(pages)(read(_)(pages))
+  }
 
-  /** ALL output families from ONE engine pass, stored: one shuffle, one
-    * sort, one walk, materialized once as per-family pages; the returned
+  /** `family`'s rows out of `(family, page)` rows, through one reused
+    * UnsafeRow.
+    */
+  private def read(family: Family)(pages: Iterator[InternalRow]): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private var bytes = Array.emptyByteArray
+      private var pos = 0
+      private val row = new UnsafeRow(family.schema.length)
+
+      def hasNext: Boolean = {
+        while (pos == bytes.length && pages.hasNext) {
+          val p = pages.next()
+          if (p.getInt(0) == family.id) { bytes = p.getBinary(1); pos = 0 }
+        }
+        pos < bytes.length
+      }
+
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val n = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + pos)
+        row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 4, n)
+        pos += 4 + n
+        row
+      }
+    }
+
+  /** ALL output families from ONE engine pass, stored: at most one
+    * shuffle, one sort, one walk, materialized once as per-family pages; the returned
     * (timeline, blotter, summary) frames each read their own family's
     * pages, with the public schemas of [[timelineQuery]],
     * [[blotterQuery]] and the summary surfaces. Consumers that need more
     * than one family (MtmRunner.calculate) would otherwise pay the
-    * repartition+sort+walk per family.
+    * exchange+sort+walk per family.
     *
     * With `cutsUs`, slice i covers [cutsUs(i-1), cutsUs(i)) and is the
     * same stored pass over its bars plus slice i−1's [[Family.Carry]]
@@ -573,42 +586,42 @@ object MtmEngine {
     * instead of the open flush and the summary. The frames read the
     * union of all slices' pages.
     *
-    * The pass is stored as an RDD below the planner, so it sorts its
-    * input itself ([[sortRuns]]) rather than through
-    * [[graft.plans.MtmPassExec]]'s required layout; every input it
-    * takes needs the exchange anyway — the bars of `calculate`, and the
-    * slices' unions with the carries.
+    * Each slice is an [[graft.plans.MtmPass]] emitting [[Emit.Pages]], so
+    * the planner lays its input out as for the lazy surfaces, and stores
+    * the node's `(family, page)` rows as they leave it.
     */
   private[graft] def combinedRun(
       bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = bars.sparkSession
     val last = cutsUs.length
-    def sorted(i: Int, carried: Option[RDD[(Int, Array[Byte])]]): DataFrame =
-      if (last == 0) sortRuns(barColumns(bars))
-      else {
-        val lo = if (i == 0) lit(true) else col("ts_us") >= cutsUs(i - 1)
-        val hi = if (i == last) lit(true) else col("ts_us") < cutsUs(i)
-        val slice = barColumns(bars).filter(lo && hi)
-          .withColumn("carry", lit(null).cast(BinaryType))
-        sortRuns(carried.fold(slice)(pages => slice.unionAll(
-          stored(spark, pages, Family.Carry).select(
-            col("symbol"), lit(Long.MinValue).as("ts_us"), lit(0L).as("event_id"),
-            lit(0.0).as("close"), lit(0).as("buy"), lit(0).as("sell"), col("carry")))))
-      }
-    def store(i: Int, sorted: DataFrame): RDD[(Int, Array[Byte])] = {
-      val pages = sorted.queryExecution.toRdd.mapPartitions(
-        packPages(cfg, if (i < last) RunEnd.Carry else RunEnd.Open))
+    def slicePass(i: Int, carried: Option[RDD[InternalRow]]): DataFrame = {
+      val input =
+        if (last == 0) barColumns(bars)
+        else {
+          val lo = if (i == 0) lit(true) else col("ts_us") >= cutsUs(i - 1)
+          val hi = if (i == last) lit(true) else col("ts_us") < cutsUs(i)
+          val slice = barColumns(bars).filter(lo && hi)
+            .withColumn("carry", lit(null).cast(BinaryType))
+          carried.fold(slice)(pages => slice.unionAll(
+            stored(spark, pages, Family.Carry).select(
+              col("symbol"), lit(Long.MinValue).as("ts_us"), lit(0L).as("event_id"),
+              lit(0.0).as("close"), lit(0).as("buy"), lit(0).as("sell"), col("carry"))))
+        }
+      MtmPass(input, cfg, Emit.Pages(if (i < last) RunEnd.Carry else RunEnd.Open))
+    }
+    def store(run: DataFrame): RDD[InternalRow] = {
+      val pages = run.queryExecution.toRdd
       pages.localCheckpoint()
       pages
     }
-    val first = sorted(0, None)
+    val first = slicePass(0, None)
     // EAGER (r16 lazy-checkpoint audit — see the object doc): one count
     // stores the whole slice chain, each slice's pages as slice i+1's
     // exchange first reads them; the execution id ties every job to one
     // SQL execution, as Dataset.localCheckpoint's own would
     val pages = SQLExecution.withNewExecutionId(first.queryExecution, Some("localCheckpoint")) {
-      val pages = (1 to last).scanLeft(store(0, first))((prev, i) => store(i, sorted(i, Some(prev))))
+      val pages = (1 to last).scanLeft(store(first))((prev, i) => store(slicePass(i, Some(prev))))
       pages.last.count()
       pages
     }
@@ -618,20 +631,8 @@ object MtmEngine {
   }
 
   /** `family`'s rows of stored pages, as a frame in its schema. */
-  private def stored(spark: SparkSession, pages: RDD[(Int, Array[Byte])], family: Family): DataFrame =
-    GraftInternal.internalCreateDataFrame(spark, pages.mapPartitions(storedRows(family)), family.schema)
-
-  /** `family`'s rows out of one partition of stored pages. */
-  private def storedRows(family: Family)(pages: Iterator[(Int, Array[Byte])]): Iterator[InternalRow] =
-    new PageReader(family) {
-      protected def advance(): Boolean = {
-        while (pages.hasNext) {
-          val (id, page) = pages.next()
-          if (id == family.id && page.length > 0) { bytes = page; pos = 0; end = page.length; return true }
-        }
-        false
-      }
-    }
+  private def stored(spark: SparkSession, pages: RDD[InternalRow], family: Family): DataFrame =
+    GraftInternal.internalCreateDataFrame(spark, pages.mapPartitions(read(family)), family.schema)
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
 
@@ -699,7 +700,7 @@ object MtmEngine {
   // walk per family.
 
   private def pass(bars: DataFrame, cfg: PnlConfig, family: Family): DataFrame =
-    MtmPass(barColumns(bars), cfg, family)
+    MtmPass(barColumns(bars), cfg, Emit.Rows(family))
 
   /** SURVEY #4/#5: per-bar mtm_ratio + cumulative pnl_ratio
     * (reference pnl_timeline: runner_mtm.py:136-183), one row per input

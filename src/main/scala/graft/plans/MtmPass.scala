@@ -14,14 +14,16 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** The MTM engine's per-symbol walk as a logical node: the child is the
   * engine's bar view (symbol, ts_us, event_id, close, buy, sell — see
-  * `MtmEngine.barColumns`), the output is one family of the pass
-  * (timeline, blotter or summary) in its public schema. [[MtmPassStrategy]]
-  * plans it to [[MtmPassExec]], which walks the child's InternalRows and
-  * writes the family's UnsafeRows directly — no encoder round trip on
-  * either side.
+  * `MtmEngine.barColumns`), with a `carry` column when a sliced run
+  * restarts its runs from carries. The output is what `emit` selects:
+  * one family of the pass (timeline, blotter or summary) in its public
+  * schema for the lazy surfaces, or every family's pages for the stored
+  * run (`MtmEngine.combinedRun`). [[MtmPassStrategy]] plans it to
+  * [[MtmPassExec]], which walks the child's InternalRows and writes
+  * UnsafeRows directly — no encoder round trip on either side.
   */
 final case class MtmPass(
-    cfg: PnlConfig, family: MtmEngine.Family, output: Seq[Attribute], child: LogicalPlan)
+    cfg: PnlConfig, emit: MtmEngine.Emit, output: Seq[Attribute], child: LogicalPlan)
     extends UnaryNode {
   // every bar column feeds the walk (ColumnPruning must not narrow the
   // child), and the output columns are made here, not taken from it
@@ -32,11 +34,11 @@ final case class MtmPass(
 }
 
 object MtmPass {
-  /** `family` of the engine pass over `bars`, lazily. */
-  private[graft] def apply(bars: DataFrame, cfg: PnlConfig, family: MtmEngine.Family): DataFrame = {
+  /** The engine pass over `bars`, emitting `emit`, lazily. */
+  private[graft] def apply(bars: DataFrame, cfg: PnlConfig, emit: MtmEngine.Emit): DataFrame = {
     Strategies.register(bars.sparkSession, MtmPassStrategy)
     GraftInternal.ofRows(bars.sparkSession, MtmPass(
-      cfg, family, DataTypeUtils.toAttributes(family.schema), bars.queryExecution.analyzed))
+      cfg, emit, DataTypeUtils.toAttributes(emit.schema), bars.queryExecution.analyzed))
   }
 }
 
@@ -48,7 +50,7 @@ object MtmPass {
   * not satisfy the distribution gets the exchange.
   */
 final case class MtmPassExec(
-    cfg: PnlConfig, family: MtmEngine.Family, output: Seq[Attribute], child: SparkPlan)
+    cfg: PnlConfig, emit: MtmEngine.Emit, output: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
   private def runKey: Seq[Attribute] = MtmEngine.RunOrder.map(n => child.output.find(_.name == n).get)
   override def requiredChildDistribution: Seq[Distribution] =
@@ -57,8 +59,8 @@ final case class MtmPassExec(
     runKey.map(SortOrder(_, Ascending)) :: Nil
   override def producedAttributes: AttributeSet = outputSet
   override protected def doExecute(): RDD[InternalRow] = {
-    val (c, f) = (cfg, family) // the closure must not capture the plan
-    child.execute().mapPartitions(bars => MtmEngine.passRows(c, f)(bars))
+    val (c, e) = (cfg, emit) // the closure must not capture the plan
+    child.execute().mapPartitions(MtmEngine.passPartition(c, e))
   }
   override protected def withNewChildInternal(newChild: SparkPlan): MtmPassExec =
     copy(child = newChild)
@@ -67,7 +69,7 @@ final case class MtmPassExec(
 /** Plans [[MtmPass]] to [[MtmPassExec]]. */
 object MtmPassStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case MtmPass(cfg, family, output, child) => MtmPassExec(cfg, family, output, planLater(child)) :: Nil
+    case MtmPass(cfg, emit, output, child) => MtmPassExec(cfg, emit, output, planLater(child)) :: Nil
     case _ => Nil
   }
 }

@@ -98,7 +98,9 @@ object BucketedTables {
     * zero-exchange MTM engine path: every symbol's bars land in exactly
     * one bucket, so the scan satisfies the engine pass's required
     * clustering by symbol (`MtmPassExec`), the planner adds no exchange,
-    * and only the in-partition secondary sort remains at read time.
+    * and only the in-partition secondary sort remains at read time. That
+    * holds for the lazy surfaces and for `MtmRunner.calculate`'s stored
+    * pass alike.
     */
   def bars(spark: SparkSession, sfDir: String, nBuckets: Int = 32): DataFrame =
     spark.table(ensureFrom(spark, sfDir, "bars", "symbol", nBuckets)(

@@ -132,7 +132,7 @@ object StreamingJobs {
       .withColumn("et", timestamp_micros(col("ts_us")))
       .withWatermark("et", watermarkDelay)
       .repartition(col("symbol"))
-    graft.plans.LocalSortHint(clustered, "symbol", "ts_us", "event_id")
+    graft.plans.LocalSortHint(clustered, MtmEngine.RunOrder: _*)
       .groupBy(col("symbol")).as[Long, StreamBar]
   }
 

@@ -281,6 +281,14 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("reportedDrops on a wired dedup query built but never run is None within its bound") {
+    graft.SparkEntry.queries("q_dedup_simhash")(spark, sfDir)
+    val t0 = System.nanoTime()
+    assert(graft.SparkEntry.reportedDrops("q_dedup_simhash").isEmpty)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 5.0, s"reportedDrops waited $secs s")
+  }
+
   test("embedding LSH near-dups: exact precision, recall floor vs the exact operator") {
     val emb = Tables.embeddings(spark, sfDir)
     def pairs(df: org.apache.spark.sql.DataFrame) =

@@ -67,5 +67,15 @@ class EmptyInputSpec extends AnyFunSuite {
     val bars0 = MtmEngine.barsFromEvents(events0)
     assert(MtmEngine.timelineQuery(bars0, PnlConfig.default).collect().isEmpty)
     assert(MtmEngine.sharpeRatio(bars0, PnlConfig.default).collect().isEmpty)
+    val cuts = Seq(1700000000000000L, 1700086400000000L)
+    for ((name, (tl, bl, sm)) <- Seq(
+        "runSliced, 3 quantile slices" -> MtmEngine.runSliced(bars0, PnlConfig.default, 3),
+        "runSliced, two explicit cuts" -> MtmEngine.runSliced(bars0, PnlConfig.default, cuts))) {
+      val fams = Seq(MtmEngine.Family.Timeline, MtmEngine.Family.Blotter, MtmEngine.Family.Summary)
+      for ((df, f) <- Seq(tl, bl, sm).zip(fams)) {
+        assert(df.schema == f.schema, s"$name: $f schema")
+        assert(df.collect().isEmpty, s"$name: $f must be empty")
+      }
+    }
   }
 }

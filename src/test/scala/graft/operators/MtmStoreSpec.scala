@@ -4,6 +4,7 @@ import graft.Sessions
 import graft.core.{InventoryMode, PnlConfig}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,8 +83,8 @@ class MtmStoreSpec extends AnyFunSuite {
     // partition, plus small symbols sharing the other partitions
     val bars = genBars(Seq(7L -> 120000L) ++ (1L to 5L).map(_ -> 3000L))
     val (res, stored) = calculateStored(bars)
-    val tlPages = stored.asInstanceOf[RDD[(Int, Array[Byte])]]
-      .mapPartitions(it => Iterator(it.count(_._1 == MtmEngine.Family.Timeline.id)))
+    val tlPages = stored.asInstanceOf[RDD[InternalRow]]
+      .mapPartitions(it => Iterator(it.count(_.getInt(0) == MtmEngine.Family.Timeline.id)))
       .collect().max
     assert(tlPages >= 2, s"fixture premise: one partition's timeline spans $tlPages pages")
 
