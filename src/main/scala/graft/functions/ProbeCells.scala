@@ -249,20 +249,16 @@ object ProbeCells {
   import org.apache.spark.sql.graft.ColumnBridge
 
   /** Flat mode: score every cell, keep the top `probes` — the exact
-    * drop-in for the sort_array composition (same set, same order). An
-    * empty matrix (a corpus with no non-zero vector fits no cell) probes
-    * nothing: every vector gets the empty cell list.
+    * drop-in for the sort_array composition (same set, same order).
     */
-  def flat(v: Column, centroids: Seq[Seq[Double]], probes: Int): Column =
-    if (centroids.isEmpty) org.apache.spark.sql.functions.typedLit(Array.emptyIntArray)
-    else {
-      val norms = centroids.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
-      ColumnBridge.column(ProbeCells(
-        ColumnBridge.expression(v), centroids.flatten.toArray, norms,
-        centroids.length, centroids.head.length, probes,
-        Array.emptyDoubleArray, Array.emptyDoubleArray, 0, 0,
-        Array(0), Array.emptyIntArray))
-    }
+  def flat(v: Column, centroids: Seq[Seq[Double]], probes: Int): Column = {
+    val norms = centroids.map(c => math.sqrt(c.map(x => x * x).sum)).toArray
+    ColumnBridge.column(ProbeCells(
+      ColumnBridge.expression(v), centroids.flatten.toArray, norms,
+      centroids.length, centroids.head.length, probes,
+      Array.emptyDoubleArray, Array.emptyDoubleArray, 0, 0,
+      Array(0), Array.emptyIntArray))
+  }
 
   /** Two-level mode: prune through `superProbes` of the superclusters
     * produced by [[graft.operators.Similarity.superQuantizer]].

@@ -35,6 +35,14 @@ private[operators] object CpuSpread {
     * that, 32 tasks of a few KiB each are pure task-launch overhead
     * for ANY kernel, the same failure mode the r19 corpus A/B measured
     * on 153-row non-file frames).
+    *
+    * The floor compares WHOLE-TABLE bytes: the relation's file-index
+    * size before any filter and before partition pruning. A small frame
+    * carved from a big table by a filter or a pruned scan therefore
+    * always clears it, and the floor protects only standalone small
+    * tables. No call site can opt out of the spread any more (the
+    * `spread = false` flag is gone), so a filter-heavy caller cannot
+    * rely on this floor to skip the exchange.
     */
   private[operators] val MinSpreadBytesDefault: Long = 64L << 10
 

@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Single source of truth for the IVF sizing constants (r19): both
-    * [[ivfCellCount]]'s defaults and [[embeddingNearDupsIvf]] read them
-    * here, so the sizing report a harness gets by calling ivfCellCount
-    * with defaults can never silently drift from the count the operator
+    * [[ivfCellCount]] and [[embeddingNearDupsIvf]] read them here, so
+    * the sizing report a harness gets by calling ivfCellCount with the
+    * default byte budget can never silently drift from the count the operator
     * really used. `MaxBucketSize` is also the embedding LSH path's
     * hot-bucket cap.
     */
@@ -641,7 +641,7 @@ object Dedup {
   /** The ONE body of the two embedding scale paths
     * ([[embeddingNearDupsLsh]], [[embeddingNearDupsIvf]]), which differ
     * only in `bucketOf`: the bucket generator over `v`, built from the
-    * stored [[Similarity.withNorm]] frame, its row count and the
+    * [[Similarity.stored]] frame, its row count and the
     * embedding dimension. Every vector carries its int16-QUANTIZED
     * payload (r13, verdict item 5 — (vec_id, 2·dim bytes + scale +
     * quantized-norm + norm) instead of the dim·8 B double arrays, ~3.4×
@@ -667,23 +667,10 @@ object Dedup {
     * joins.)
     */
   private def embeddingNearDups(
-      embeddings: DataFrame, threshold: Double, dropObs: Option[Observation])(
+      embeddings: DataFrame, threshold: Double, dropObs: Option[Observation], operator: String)(
       bucketOf: (DataFrame, Long, Int) => Column): DataFrame = {
-    // withNorm centrally filters zero-norm vectors (ANSI division would
-    // error, not NaN); they also leave the sizing count.
-    // SAFE LAZY (r16 audit): the synchronous count() below is the first
-    // action and has this frame as its ONLY consumer — it materializes
-    // every block before the bucketing/verify branches (and their async
-    // broadcast builds) can race the store.
-    val e = Similarity.withNorm(embeddings)
-      .localCheckpoint(false) // consumers: sizing count, bucketing, both verify sides
-    val n = e.count()
-    // no vector to bucket (an empty table, or only NULL or zero
-    // vectors): an empty generator keeps the one plan and its schema,
-    // and sizing never asks dimOf for a vector that is not there
-    val bucket =
-      if (n == 0) explode(typedLit(Seq.empty[Long]))
-      else bucketOf(e, n, Similarity.dimOf(embeddings))
+    // consumers: bucketing and both verify sides
+    val (e, bucket) = Similarity.stored(embeddings, operator, Similarity.NoKeys)(bucketOf)
     val buckets = e.select(
       col("vec_id"), graft.functions.QuantizeVec.column(col("v")).as("qs"), col("norm"), bucket)
     val cands = bucketPairs(
@@ -737,7 +724,7 @@ object Dedup {
       embeddings: DataFrame,
       threshold: Double = 0.4,
       dropObs: Option[Observation] = None): DataFrame =
-    embeddingNearDups(embeddings, threshold, dropObs) { (_, n, dim) =>
+    embeddingNearDups(embeddings, threshold, dropObs, "Dedup.embeddingNearDupsLsh") { (_, n, dim) =>
       // Size the bucket space AND the table count to the data, jointly
       // (r10 — the RecallProfile falsifier measured recall 0.951 at
       // sf0.1 collapsing to 0.376 at sf1 under the r8-r9 scheme, which
@@ -758,9 +745,7 @@ object Dedup {
       // sharding ([[embeddingNearDupsIvf]]), not more LSH tables.
       val (effBits, tablesEff) = lshParams(n, threshold, tables = 16, bits = 4,
         targetBucketSize = 128, recallFloor = 0.85, maxTables = 128)
-      posexplode(graft.functions.HyperplaneBuckets.buckets(
-        col("v"), Similarity.hyperplanes(dim, tablesEff, effBits), tablesEff, effBits))
-        .as(Seq("tbl", "bucket"))
+      Similarity.lshKeys(dim, tablesEff, effBits)
     }
 
   /** The IVF cell-count sizing rule, extracted (r18) so the byte gate
@@ -775,14 +760,13 @@ object Dedup {
     */
   private[graft] def ivfCellCount(
       n: Long, dim: Int, probes: Int, cellFactor: Double,
-      minCells: Int = IvfDefaults.MinCells, maxCells: Int = IvfDefaults.MaxCells,
-      maxBucketSize: Int = IvfDefaults.MaxBucketSize,
       maxCentroidBytes: Long = IvfDefaults.MaxCentroidBytes): Int = {
-    val cellsByBytes = math.max(minCells.toLong, maxCentroidBytes / (8L * dim))
-    math.max(math.max(minCells, probes).toLong,
-      math.min(math.min(maxCells.toLong, cellsByBytes),
+    import IvfDefaults.{MaxBucketSize, MaxCells, MinCells}
+    val cellsByBytes = math.max(MinCells.toLong, maxCentroidBytes / (8L * dim))
+    math.max(math.max(MinCells, probes).toLong,
+      math.min(math.min(MaxCells.toLong, cellsByBytes),
         math.max(math.ceil(cellFactor * math.sqrt(n.toDouble)).toLong,
-          math.ceil(n.toDouble * probes / (maxBucketSize / 2)).toLong))).toInt
+          math.ceil(n.toDouble * probes / (MaxBucketSize / 2)).toLong))).toInt
   }
 
   /** SURVEY #25 (second scale path, r15): the same embedding near-dup
@@ -849,7 +833,7 @@ object Dedup {
     * structs per vector) and, past 1024 cells, TWO-LEVEL pruning
     * through ~√nCells supercluster centroids
     * ([[Similarity.superQuantizer]]), probing max(4, 2·probes)
-    * superclusters — see the wiring comment below for why that count
+    * superclusters — see [[Similarity.ivfKeys]] for why that count
     * must scale. Measured (SCALING_r16 `lsh_vs_ivf_*_twolevel_*`):
     * clustered ≥0.9 at 800k vectors, the kernel + auto rule holds
     * recall at 0.94-0.95 (LSH 0.953) while wall drops 59→13-21 s —
@@ -880,7 +864,7 @@ object Dedup {
       dropObs: Option[Observation] = None): DataFrame = {
     require(cellFactor > 0.0, s"cellFactor must be positive, got $cellFactor")
     val probes = 8
-    embeddingNearDups(embeddings, threshold, dropObs) { (e, n, dim) =>
+    embeddingNearDups(embeddings, threshold, dropObs, "Dedup.embeddingNearDupsIvf") { (e, n, dim) =>
       // √n is the classical IVF operating point, but multi-probe puts
       // each vector in `probes` cells, so the EXPECTED population is
       // n·probes/nCells — sized here to stay at half the hot-cell cap,
@@ -900,54 +884,10 @@ object Dedup {
       // this operator exists for. Default 256 MB ⇒ 512k cells at the
       // testdata's dim 64, ~43k at dim 768.
       val nCells = ivfCellCount(n, dim, probes, cellFactor, maxCentroidBytes = maxCentroidBytes)
-      val centroids = Similarity.ivfCentroids(e, n, nCells, lloydIters = 2)
-      val pEff = math.min(probes, centroids.length)
-      // top-p cells per vector via the fused ProbeCells kernel (r16):
-      // bounded selection instead of the r15 sort_array-over-structs
-      // composition, applied to the CORPUS side (both members of a pair
-      // probe, so they meet iff the sets intersect). Past 1024 cells the
-      // kernel goes TWO-LEVEL — ~√nCells supercluster pruning caps the
-      // per-vector assignment CPU the r16 cellFactor sweep measured as
-      // IVF's wall bottleneck (SCALING_r16 lsh_vs_ivf_clustered_sf10);
-      // below that, flat selection reproduces the r15 set (and order)
-      // exactly, so the oracle-gated small-SF results are unchanged.
-      // The supercluster probe count trades recall for assignment CPU:
-      // with all supers probed the result equals flat EXACTLY
-      // (ProbeCellsSpec gate). It is max(4, 2·probes). The r16 sweep
-      // showed why it must scale with probes — in the clustered ≥0.9
-      // regime a pair's cells co-locate in few superclusters (sp=4 at
-      // p=1/2 was bit-identical to flat at 2.2× less wall), but in
-      // near-uniform low-threshold geometry the top-p cells spread over
-      // ~p distinct superclusters, and a fixed sp=4 gutted p=32 recall
-      // 0.953→0.649 (SCALING_r16 lsh_vs_ivf_sf10_twolevel). At p ≳
-      // √nCells the rule degrades to probing every supercluster —
-      // flat-equivalent output, still cheaper than the sort_array it
-      // replaced. That is structural, not a tuning gap: two-level
-      // assignment only has an asymptotic win when probes ≪ √nCells,
-      // which is exactly the clustered regime IVF is the right tool
-      // for. r17 swept the boundary itself (SCALING_r17
-      // lsh_vs_ivf_sf10_knee, p=25 ≈ √nCells/2): probe-all there costs
-      // 2.3× assignment wall over sp=p for the last +1.2 % recall —
-      // while the clustered regime needs the full 2p (sp=p lost 7.5 %
-      // recall in the r16 sp4 key). The rule is recall-safe where
-      // two-level wins and pays only at the boundary where no pruning
-      // rule can win: CONFIRMED.
-      // Dispatch on the FITTED cell count, not the requested one (ADVICE
-      // r16): ivfCentroids returns fewer centroids than requested when
-      // the corpus has fewer non-zero vectors than nCells, and deciding
-      // on the request could run two-level pruning (with a supercluster
-      // probe count sized off pEff, not the real matrix) in exactly the
-      // small-matrix regime the flat branch promises is exact.
-      val nEff = centroids.length
-      val cells =
-        if (nEff < 1024 || pEff >= nEff)
-          graft.functions.ProbeCells.flat(col("v"), centroids, pEff)
-        else {
-          val (supers, offs, mems) = Similarity.superQuantizer(centroids)
-          graft.functions.ProbeCells.twoLevel(
-            col("v"), centroids, pEff, supers, math.max(4, 2 * pEff), offs, mems)
-        }
-      explode(cells).as("cell") // a pair can meet in up to `probes` shared cells
+      // each vector's top-`probes` cells, on the CORPUS side: both members
+      // of a pair probe, so they meet iff their cell sets intersect (in up
+      // to `probes` shared cells)
+      Similarity.ivfKeys(e, n, nCells, lloydIters = 2)(probes)
     }
   }
 

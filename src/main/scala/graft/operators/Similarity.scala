@@ -3,7 +3,7 @@ package graft.operators
 import scala.util.Random
 
 import graft.functions.{DotProduct, HyperplaneBuckets, ProbeCells, TopKByScore}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (SURVEY §2 #26-27):
@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * approximate variant.
   *
   * 100 TB shape: the query set is small and BROADCAST; the corpus is
-  * scanned once (the LSH/IVF paths materialize the (vec_id, v, norm)
-  * projection before fanning out to their multiple consumers — r7: they
-  * previously rescanned the source per consumer); per-query top-k runs
+  * scanned once (the LSH/IVF paths store the (vec_id, v, norm)
+  * projection, [[stored]], before fanning out to their multiple
+  * consumers — r7: they previously rescanned the source per consumer);
+  * per-query top-k runs
   * through the bounded-heap
   * [[graft.functions.TopKByScore]] aggregate, so each task ships one
   * k-entry heap per query and the only shuffle is Q heap buffers — no
@@ -42,70 +43,54 @@ object Similarity {
       .filter(col("norm") > 0.0)
   }
 
-  /** Embedding dimension, read from the first row — ANN paths must never
-    * guess it (the kernels raise on mismatch rather than truncating).
-    * Cached so repeated ANN calls over the same source (a tuning sweep,
-    * the spec suite) pay the one-row job once. The key is the plan's
-    * SEMANTIC HASH + schema, never the plan object: a retained
-    * LogicalPlan pins everything it references (LocalRelation rows,
-    * localCheckpoint RDDs and their executor blocks) for the cache's
-    * lifetime — a multi-GB leak per entry. A hash collision at equal
-    * schema could only return a wrong dim, which the kernels' dimension
-    * checks catch loudly. Bounded as a true access-order LRU of 64.
-    */
-  private val dimCache =
-    new java.util.LinkedHashMap[(Int, String), Integer](
-      16, 0.75f, /* accessOrder = */ true) {
-      override protected def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), Integer]): Boolean = size() > 64
-    }
+  /** The key generator of an empty corpus: no vector, no key. */
+  private[graft] val NoKeys: Column = explode(typedLit(Seq.empty[Long]))
 
-  private[graft] def dimOf(embeddings: DataFrame): Int = {
-    val d = dimIfAny(embeddings)
-    require(d.nonEmpty,
-      "dimOf: embeddings input has no non-NULL vector — ANN needs at least one to size its index")
-    d.get
+  /** The one stored input of the scale-path vector operators
+    * ([[annLshTopK]], [[annIvfTopK]] and the two embedding dedup paths):
+    * the [[withNorm]] frame, stored by one eager checkpoint job that also
+    * observes its row count and its smallest and largest vector size, so
+    * sizing an index costs no job of its own. EAGER (r16 audit): each
+    * caller reads the frame several times, some inside broadcast(), whose
+    * async build jobs would race a lazy store and re-run the scan per
+    * loser. `keysOf(e, n, dim)` builds the caller's key generator from the
+    * stored frame, its row count and its dimension. It never sees an empty
+    * corpus: then every key is `none`, and the one plan keeps its schema.
+    * Mixed dimensions fail here, naming both sizes, before any kernel runs.
+    */
+  private[graft] def stored[K](embeddings: DataFrame, operator: String, none: K)(
+      keysOf: (DataFrame, Long, Int) => K): (DataFrame, K) = {
+    val obs = Observation()
+    val e = withNorm(embeddings)
+      .observe(obs, count(lit(1)).as("n"),
+        min(size(col("v"))).as("lo"), max(size(col("v"))).as("hi"))
+      .localCheckpoint(eager = true)
+    val m = Observed.metrics(obs, operator, "n")
+    // an empty corpus observes NULL sizes, which unbox to 0 == 0
+    val (n, lo, hi) =
+      (m("n").asInstanceOf[Long], m("lo").asInstanceOf[Int], m("hi").asInstanceOf[Int])
+    require(lo == hi,
+      s"$operator: embeddings mix dimensions $lo and $hi; every vector must have one size")
+    (e, if (n == 0) none else keysOf(e, n, lo))
   }
 
-  /** [[dimOf]], or None when the input has no non-NULL vector (an empty
-    * table, or only NULL embeddings): then [[withNorm]] leaves no row
-    * for an index to hold. Only found dimensions are cached.
+  /** The query set `vec_id < nQueries` of a [[withNorm]] frame, as
+    * (query_id, qv, qn).
     */
-  private def dimIfAny(embeddings: DataFrame): Option[Int] = {
-    val analyzed = embeddings.queryExecution.analyzed
-    val key = (analyzed.semanticHash(), analyzed.schema.catalogString)
-    val hit = dimCache.synchronized(dimCache.get(key))
-    if (hit != null) Some(hit.intValue)
-    else {
-      // skip NULL embeddings rather than require the FIRST scanned row
-      // be non-null: every consumer (withNorm, the kernels) already
-      // drops NULL vectors, so whether the sampler trips on one must
-      // not depend on scan order / file layout (r17 review finding —
-      // the IVF byte gate made this a wired-path crash). The null
-      // filter is on the COLUMN, not on size(): under legacy
-      // sizeOfNull semantics (an ansi=false foreign/spark-submit
-      // session, which Sessions' scaladoc explicitly supports)
-      // size(NULL) is -1, not NULL, and a size-based filter would
-      // pass a NULL row through as dimension -1 (r17 ADVICE).
-      val row = embeddings.filter(col("embedding").isNotNull)
-        .select(size(col("embedding")).as("d")).limit(1).collect()
-      row.headOption.map { r =>
-        val d = r.getInt(0)
-        require(d >= 0,
-          s"dimOf: size(embedding) returned $d — a negative size can only mean legacy " +
-            "null semantics leaked past the null filter or a non-array column")
-        dimCache.synchronized(dimCache.put(key, Integer.valueOf(d)))
-        d
-      }
-    }
-  }
+  private def queryVectors(e: DataFrame, nQueries: Int): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
 
-  /** Shared output tail of every ANN path: per-query bounded-heap top-k
-    * over (query_id, vec_id, cos) scored candidates, exploded to the
-    * (query_id, rank, neighbor_id, cosine) contract.
+  /** Shared output tail of every ANN path: exact cosine of each
+    * (query_id, qv, qn) × (vec_id, v, norm) candidate row, then per-query
+    * bounded-heap top-k, exploded to the (query_id, rank, neighbor_id,
+    * cosine) contract.
     */
-  private def topKExplode(scored: DataFrame, k: Int): DataFrame =
-    scored
+  private def topKExplode(candidates: DataFrame, k: Int): DataFrame =
+    candidates
+      .select(
+        col("query_id"), col("vec_id"),
+        cosine(col("qv"), col("v"), col("qn"), col("norm")).as("cos"))
       .groupBy("query_id")
       .agg(TopKByScore.column(col("cos"), col("vec_id"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")))
@@ -121,15 +106,7 @@ object Similarity {
     */
   def annBruteForceTopK(embeddings: DataFrame, k: Int = 10, nQueries: Int = 10): DataFrame = {
     val e = withNorm(embeddings)
-    val queries = e.select(
-      col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-      .filter(col("query_id") < nQueries)
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("norm")).as("cos"))
-    topKExplode(scored, k)
+    topKExplode(e.join(broadcast(queryVectors(e, nQueries)), col("vec_id") =!= col("query_id")), k)
   }
 
   /** Deterministic random hyperplanes: `tables`·`bits` unit-free normal
@@ -253,7 +230,7 @@ object Similarity {
     // already excludes them) and `nRows` its row count; without the
     // stored frame each draw round would re-scan and re-norm the raw
     // source (at 800k x dim 768, a full parquet rescan). The final cell
-    // ASSIGNMENT (ProbeCells, in annIvfTopK and embeddingNearDupsIvf)
+    // ASSIGNMENT (ProbeCells, in [[ivfKeys]])
     // stays exact and distributed over the full corpus. The first
     // nCentroids of the draw seed the cells; fit scoring is
     // [[nearestRow]], the driver twin of the ProbeCells rule.
@@ -266,10 +243,6 @@ object Similarity {
     // [[hierarchicalCells]]. At or below the threshold the flat path
     // is byte-identical to the r15/r16 fit, so every oracled small-SF
     // result is unchanged.
-    // an all-zero/empty corpus has nothing to seed cells with: return
-    // the empty matrix (pEff = 0 downstream) instead of tripping
-    // fitDraw's positive-count require with a confusing message
-    if (nRows == 0) return Seq.empty
     val sample = fitDraw(normed, math.max(nCentroids, FitSample), nRows)
     val effective = math.min(nCentroids, sample.length)
     val cells =
@@ -300,7 +273,6 @@ object Similarity {
       val sums = Array.fill(nC)(new Array[Double](dim))
       val counts = new Array[Long](nC)
       for (v <- sample) {
-        require(v.length == dim, s"ivf fit dimension mismatch: expected $dim, got ${v.length}")
         val best = nearestRow(v, centroids, norms, dim)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
@@ -486,7 +458,6 @@ object Similarity {
   private[graft] def superQuantizer(
       cells: Seq[Seq[Double]]): (Seq[Seq[Double]], Array[Int], Array[Int]) = {
     val nC = cells.length
-    require(nC > 0, "superQuantizer needs at least one cell")
     val sRows = math.max(1, math.ceil(math.sqrt(nC.toDouble)).toInt)
     val cellArr: Array[Array[Double]] = cells.map(_.toArray).toArray
     // deterministic stride sample: the cell matrix itself came from a
@@ -510,6 +481,78 @@ object Similarity {
     (kept.map(supers(_).toSeq), offsets.distinct, members)
   }
 
+  /** The one IVF key generator: fits [[ivfCentroids]] on the stored
+    * frame, then gives each vector its `probes` nearest cells as `cell`
+    * rows through the fused [[graft.functions.ProbeCells]] kernel. Past
+    * 1024 fitted cells the kernel goes TWO-LEVEL: ~√nCells supercluster
+    * centroids ([[superQuantizer]], fitted once, on first use) prune the
+    * per-vector assignment CPU the r16 cellFactor sweep measured as IVF's
+    * wall bottleneck (SCALING_r16 lsh_vs_ivf_clustered_sf10); below that,
+    * flat selection reproduces the r15 set (and order) exactly, so the
+    * oracle-gated small-SF results are unchanged. The supercluster probe
+    * count max(4, 2·probes) trades recall for assignment CPU; with all
+    * supers probed the result equals flat EXACTLY (ProbeCellsSpec). It
+    * must scale with probes: in the clustered ≥0.9 regime a pair's cells
+    * co-locate in few superclusters (sp=4 at p=1/2 was bit-identical to
+    * flat at 2.2× less wall), but in near-uniform low-threshold geometry
+    * the top-p cells spread over ~p superclusters, and a fixed sp=4
+    * gutted p=32 recall 0.953→0.649 (SCALING_r16 lsh_vs_ivf_sf10_twolevel).
+    * At p ≳ √nCells the rule probes every supercluster, flat-equivalent
+    * output; r17's boundary sweep (SCALING_r17 lsh_vs_ivf_sf10_knee)
+    * found probe-all there costs 2.3× assignment wall over sp=p for the
+    * last +1.2 % recall, while the clustered regime needs the full 2p.
+    * The dispatch reads the FITTED cell count, not the requested one
+    * (ADVICE r16): the fit returns fewer cells than requested when the
+    * corpus has fewer non-zero vectors, and deciding on the request could
+    * run two-level pruning in exactly the small-matrix regime the flat
+    * branch promises is exact.
+    */
+  private[graft] def ivfKeys(
+      e: DataFrame, n: Long, nCentroids: Int, lloydIters: Int): Int => Column = {
+    val centroids = ivfCentroids(e, n, nCentroids, lloydIters)
+    val nEff = centroids.length
+    lazy val (supers, offsets, members) = superQuantizer(centroids)
+    probes => {
+      val p = math.min(probes, nEff)
+      explode(
+        if (nEff < 1024 || p >= nEff) ProbeCells.flat(col("v"), centroids, p)
+        else ProbeCells.twoLevel(
+          col("v"), centroids, p, supers, math.max(4, 2 * p), offsets, members)).as("cell")
+    }
+  }
+
+  /** The one LSH key generator: each vector's `tables` `bits`-bit sign
+    * buckets from the fused [[graft.functions.HyperplaneBuckets]] kernel
+    * (per-plane literal DotProducts regress codegen size and bucketing
+    * cost ~5×), as (tbl, bucket) rows. The planes are [[hyperplanes]]'
+    * seeded draw, so both sides of a join bucket alike.
+    */
+  private[graft] def lshKeys(dim: Int, tables: Int, bits: Int): Column =
+    posexplode(HyperplaneBuckets.buckets(col("v"), hyperplanes(dim, tables, bits), tables, bits))
+      .as(Seq("tbl", "bucket"))
+
+  /** The one scale-path ANN top-k body over a [[stored]] frame: a corpus
+    * vector is a candidate for a query when one of its `corpusKey` rows
+    * equals one of the query's `queryKey` rows (both generators name the
+    * same columns; the tiny query side is broadcast). Candidate
+    * (query_id, vec_id) pairs are deduped BEFORE any cosine is computed:
+    * a pair meeting under several keys would otherwise be scored once per
+    * key, and deduping scored rows would hinge on bitwise-identical
+    * doubles. The key join moves only keys and ids; vectors rejoin after
+    * the dedup for the exact cosine and the bounded-heap top-k.
+    */
+  private def annTopK(
+      e: DataFrame, corpusKey: Column, queryKey: Column, k: Int, nQueries: Int): DataFrame = {
+    val corpus = e.select(col("vec_id"), corpusKey)
+    val queryKeys =
+      e.filter(col("vec_id") < nQueries).select(col("vec_id").as("query_id"), queryKey)
+    val cands = corpus.join(broadcast(queryKeys), corpus.columns.toSeq.tail)
+      .filter(col("vec_id") =!= col("query_id"))
+      .select("query_id", "vec_id")
+      .distinct()
+    topKExplode(cands.join(e, "vec_id").join(broadcast(queryVectors(e, nQueries)), "query_id"), k)
+  }
+
   /** SURVEY #27 (scale-path sibling): IVF approximate top-k. The corpus
     * partitions into `nCentroids` Voronoi cells; each query probes its
     * `nProbe` nearest cells, and exact cosine + bounded-heap top-k runs
@@ -521,8 +564,13 @@ object Similarity {
     * scan fraction (16 cells / 12 probes ⇒ recall ≈0.92 at ~75% scan);
     * clustered real embeddings buy much more recall per probed cell, so
     * production should re-sweep nProbe downward on its own data.
-    * Cell assignment (top-1) and query probing (top-nProbe) both run
-    * the [[graft.functions.ProbeCells]] kernel the IVF dedup path uses.
+    * Cell assignment (top-1) and query probing (top-nProbe) are the
+    * [[ivfKeys]] generator the IVF dedup path uses, and the candidates
+    * run the LSH path's [[annTopK]] body, so they pay its (query_id,
+    * vec_id) distinct, which one corpus cell per vector made redundant
+    * here. Past 1024 fitted centroids the generator probes two-level
+    * (max(4, 2·probes) superclusters) instead of flat, as the dedup path
+    * always has; no query or spec runs that many.
     */
   def annIvfTopK(
       embeddings: DataFrame,
@@ -531,60 +579,17 @@ object Similarity {
       nCentroids: Int = 16,
       nProbe: Int = 12,
       lloydIters: Int = 1): DataFrame = {
-    // materialized once — the corpus assignment and the query projection
-    // would otherwise each rescan the source and recompute norms.
-    // EAGER (r16 audit): the query projection sits inside broadcast()
-    // — an async build job that, lazy, races the corpus branch for
-    // these blocks and rescans the source per loser. Built BEFORE the
-    // fit since r18 so BOTH the fit draw's sizing count and the draw's
-    // own filtered collect read stored blocks instead of re-scanning
-    // and re-norming the source.
-    // r20: the fit's sizing count rides the checkpoint job as an
-    // observed metric — previously a separate stored-block count() job
-    // (the fit-vs-probe profile had construction at ~half this query's
-    // wall, 7 driver jobs).
-    val nObs = org.apache.spark.sql.Observation()
-    val e = withNorm(embeddings)
-      .observe(nObs, count(lit(1)).as("n"))
-      .localCheckpoint(eager = true)
-    val centroids = ivfCentroids(
-      e, Observed.metrics(nObs, "Similarity.annIvfTopK", "n")("n").asInstanceOf[Long],
-      nCentroids, lloydIters)
-    // the top-1 cell as a generator output, not an alias: the join's
-    // inferred isnotnull(cluster) filter would otherwise copy the kernel
-    // (see [[EvalOnce]])
-    val corpus = e.select(col("*"), explode(ProbeCells.flat(col("v"), centroids, 1)).as("cluster"))
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(
-        col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"),
-        explode(ProbeCells.flat(col("v"), centroids, math.min(nProbe, centroids.length)))
-          .as("cluster"))
-    topKExplode(
-      corpus.join(broadcast(queries), Seq("cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(
-          col("query_id"), col("vec_id"),
-          cosine(col("qv"), col("v"), col("qn"), col("norm")).as("cos")),
-      k)
-  }
-
-  /** The LSH feature stage BEFORE materialization: (vec_id, v, norm,
-    * bkts) with bucketing through the fused HyperplaneBuckets kernel.
-    * Split out so the plan audit can assert the kernel (the checkpoint
-    * in annLshTopK hides the producing plan from downstream explain).
-    */
-  private[graft] def lshFeatures(embeddings: DataFrame, tables: Int, bits: Int): DataFrame = {
-    // no non-NULL vector: withNorm leaves no row, so 0-wide planes bucket nothing
-    val planes = hyperplanes(dimIfAny(embeddings).getOrElse(0), tables, bits)
-    withNorm(embeddings)
-      .withColumn("bkts", HyperplaneBuckets.buckets(col("v"), planes, tables, bits))
+    val (e, probe) = stored(embeddings, "Similarity.annIvfTopK", (_: Int) => NoKeys)(
+      (e, n, _) => ivfKeys(e, n, nCentroids, lloydIters))
+    annTopK(e, probe(1), probe(nProbe), k, nQueries)
   }
 
   /** SURVEY #27: hyperplane-LSH approximate top-k. Corpus and queries
     * hash into `tables` independent `bits`-bit sign buckets; candidates
     * are corpus vectors sharing any bucket with a query (bucket join on
     * (table, bucket) with the tiny query side broadcast), then exact
-    * cosine + bounded-heap top-k on the candidate set only. Recall vs
+    * cosine + bounded-heap top-k on the candidate set only ([[lshKeys]]
+    * on both sides of the [[annTopK]] body). Recall vs
     * the exact #26 is spec'd in SimilaritySpec; on uniform data recall
     * rises with `tables` and falls with `bits` (the standard LSH curve).
     */
@@ -594,39 +599,8 @@ object Similarity {
       nQueries: Int = 10,
       tables: Int = 12,
       bits: Int = 4): DataFrame = {
-    // hyperplane width must match the data — a guessed default would
-    // now crash in the kernel's dimension check instead of degrading
-    // materialized once: FOUR consumers (corpus buckets, query buckets,
-    // the vector rejoin, the query vectors) would otherwise each rescan
-    // the source and recompute the norms — the "write the feature table
-    // once" step, same as the dedup LSH paths. EAGER (r16 audit): TWO
-    // of the four consumers (query buckets, query vectors) sit inside
-    // broadcast() — async build jobs that, lazy, race each other and
-    // the corpus branches, each loser re-running the scan + feature
-    // kernel.
-    val e = lshFeatures(embeddings, tables, bits).localCheckpoint(eager = true)
-    // Candidate (query_id, vec_id) pairs are deduped BEFORE any cosine is
-    // computed: a pair colliding in several of the `tables` buckets would
-    // otherwise be scored up to `tables`× (and deduping scored rows would
-    // hinge on bitwise-identical doubles). The bucket join itself moves
-    // only (tbl, bucket, vec_id) — vectors rejoin after the dedup.
-    val corpusBuckets = e.select(
-      col("vec_id"), posexplode(col("bkts")).as(Seq("tbl", "bucket")))
-    val queryBuckets = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), posexplode(col("bkts")).as(Seq("tbl", "bucket")))
-    val candPairs = corpusBuckets.join(broadcast(queryBuckets), Seq("tbl", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-      .distinct()
-    val queries = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    topKExplode(
-      candPairs
-        .join(e.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(
-          col("query_id"), col("vec_id"),
-          cosine(col("qv"), col("v"), col("qn"), col("norm")).as("cos")),
-      k)
+    val (e, keys) = stored(embeddings, "Similarity.annLshTopK", NoKeys)(
+      (_, _, dim) => lshKeys(dim, tables, bits))
+    annTopK(e, keys, keys, k, nQueries)
   }
 }

@@ -196,9 +196,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ANN index math stays fused: one kernel, not per-plane expressions") {
-    // audit the feature stage pre-checkpoint: annLshTopK materializes it
-    // (one scan for four consumers), which hides the producing plan
-    val lsh = plan(Similarity.lshFeatures(Tables.embeddings(spark, sfDir), 12, 4))
+    // the LSH key generator runs after the stored frame's checkpoint, so
+    // the kernel sits in the query's own plan
+    val lsh = plan(Similarity.annLshTopK(Tables.embeddings(spark, sfDir)))
     assert(lsh.contains("hyperplane_buckets"),
       "LSH bucketing must go through the fused kernel (per-plane literal " +
         "DotProducts regress codegen size and bucketing cost ~5x)")

@@ -12,7 +12,7 @@ class QueryProfileSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   // Spark resolves a parquet file's schema with one job (its parallel
   // footer read), so construction pays it once per `Tables` read; every
-  // query below reads the documents table once
+  // query below reads one table once
   private val ReadJobs = 1
 
   private def once(q: String): QueryProfile.Run = {
@@ -36,5 +36,14 @@ class QueryProfileSpec extends AnyFunSuite {
   test("an eager query runs its checkpoint jobs at construction") {
     val r = once("q_dedup_groups")
     assert(r.constructJobs > ReadJobs, r)
+  }
+
+  test("the LSH vector paths build with the table read plus one stored-frame job") {
+    // the stored frame's checkpoint observes the row count and the
+    // dimension, so sizing the index runs no job of its own
+    for (q <- Seq("q_ann_lsh_topk", "q_dedup_embedding_lsh")) {
+      val r = once(q)
+      assert(r.constructJobs === ReadJobs + 1, r)
+    }
   }
 }

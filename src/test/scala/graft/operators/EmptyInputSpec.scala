@@ -38,9 +38,14 @@ class EmptyInputSpec extends AnyFunSuite {
       ("embedding_lsh", () => Dedup.embeddingNearDupsLsh(emb0).collect().length),
       ("embedding_ivf", () => Dedup.embeddingNearDupsIvf(emb0).collect().length),
       ("ann_lsh_topk", () => Similarity.annLshTopK(emb0).collect().length),
+      ("ann_ivf_topk", () => Similarity.annIvfTopK(emb0).collect().length),
+      ("ann_bruteforce_topk", () => Similarity.annBruteForceTopK(emb0).collect().length),
       ("embedding_lsh, NULL vectors", () => Dedup.embeddingNearDupsLsh(embNull).collect().length),
       ("embedding_ivf, NULL vectors", () => Dedup.embeddingNearDupsIvf(embNull).collect().length),
       ("ann_lsh_topk, NULL vectors", () => Similarity.annLshTopK(embNull).collect().length),
+      ("ann_ivf_topk, NULL vectors", () => Similarity.annIvfTopK(embNull).collect().length),
+      ("ann_bruteforce_topk, NULL vectors",
+        () => Similarity.annBruteForceTopK(embNull).collect().length),
       ("dup_groups", () => ConnectedComponents.dupGroups(Dedup.ngramJaccardPairs(docs0)).collect().length),
       ("decontaminate", () => Decontaminate.flagged(docs0, docs0).collect().length),
       ("corpus_clean", () => CorpusPipeline.cleanCorpus(docs0).collect().length),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Sessions, Tables}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN gates (SURVEY §2 #26/#27): the bounded-heap brute-force top-k
@@ -131,25 +132,41 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lsh.values.forall(_.nonEmpty))
   }
 
-  test("dimOf skips NULL embeddings: index sizing must not depend on scan order") {
-    // r17 review regression gate: the IVF byte gate calls dimOf on the
-    // RAW frame, and a corpus whose first scanned row carries a NULL
-    // embedding used to crash the wired path even though every kernel
-    // drops NULL vectors. The sampler now skips NULLs.
+  test("NULL vectors pair with nothing on the scale paths") {
+    // r17 review regression gate: a corpus whose first scanned row
+    // carries a NULL embedding used to crash the wired IVF path even
+    // though every kernel drops NULL vectors. The stored frame sizes the
+    // index from the rows it keeps, so scan order cannot matter.
     import spark.implicits._
     val df = Seq(
       (1L, null.asInstanceOf[Seq[Double]]),
       (2L, Seq(1.0, 2.0, 3.0)),
       (3L, Seq(4.0, 5.0, 6.0))
     ).toDF("vec_id", "embedding")
-    assert(Similarity.dimOf(df) == 3)
-    // and the wired operator end-to-end: the NULL row pairs with nothing,
-    // the identical-direction pair is found
-    val pairs = Dedup.embeddingNearDupsIvf(df, threshold = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!pairs.exists(p => p._1 == 1L || p._2 == 1L), "NULL vector must pair with nothing")
-    val allNull = Seq((9L, null.asInstanceOf[Seq[Double]])).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException](Similarity.dimOf(allNull))
-    assert(e.getMessage.contains("no non-NULL vector"))
+    def ids(out: DataFrame): Set[(Long, Long)] =
+      out.collect().map(r => (r.getLong(0), r.getLong(if (r.length == 4) 2 else 1))).toSet
+    for ((name, op, expected) <- Seq(
+        ("embedding_ivf", Dedup.embeddingNearDupsIvf(_: DataFrame, 0.9), Set((2L, 3L))),
+        ("embedding_lsh", Dedup.embeddingNearDupsLsh(_: DataFrame, 0.9), Set((2L, 3L))),
+        ("ann_lsh_topk", Similarity.annLshTopK(_: DataFrame), Set((2L, 3L), (3L, 2L))),
+        ("ann_ivf_topk", Similarity.annIvfTopK(_: DataFrame), Set((2L, 3L), (3L, 2L))))) {
+      // the NULL row pairs with nothing; the near-identical pair is found
+      assert(ids(op(df)) == expected, name)
+    }
+  }
+
+  test("mixed dimensions fail at construction naming both sizes") {
+    import spark.implicits._
+    val mixed = Seq((1L, Seq(1.0, 2.0, 3.0)), (2L, Seq(1.0, 2.0)), (3L, Seq(3.0, 1.0, 2.0)))
+      .toDF("vec_id", "embedding")
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        ("Dedup.embeddingNearDupsIvf", Dedup.embeddingNearDupsIvf(_)),
+        ("Dedup.embeddingNearDupsLsh", Dedup.embeddingNearDupsLsh(_)),
+        ("Similarity.annLshTopK", Similarity.annLshTopK(_)),
+        ("Similarity.annIvfTopK", Similarity.annIvfTopK(_)))) {
+      // building the frame fails; no action is needed to see it
+      val e = intercept[IllegalArgumentException](op(mixed))
+      assert(e.getMessage.contains(s"$name: embeddings mix dimensions 2 and 3"), e.getMessage)
+    }
   }
 }
