@@ -640,9 +640,10 @@ object Dedup {
 
   /** The ONE body of the two embedding scale paths
     * ([[embeddingNearDupsLsh]], [[embeddingNearDupsIvf]]), which differ
-    * only in `bucketOf`: the bucket generator over `v`, built from the
-    * [[Similarity.stored]] frame, its row count and the
-    * embedding dimension. Every vector carries its int16-QUANTIZED
+    * only in `keysOf`: each vector's bucket-key array over `v`, built
+    * from the [[Similarity.stored]] frame, its row count and the
+    * embedding dimension, and exploded here into one `key` column.
+    * Every vector carries its int16-QUANTIZED
     * payload (r13, verdict item 5 — (vec_id, 2·dim bytes + scale +
     * quantized-norm + norm) instead of the dim·8 B double arrays, ~3.4×
     * fewer bytes on the one corpus-sized exchange, measured 2.9 GB at
@@ -668,13 +669,12 @@ object Dedup {
     */
   private def embeddingNearDups(
       embeddings: DataFrame, threshold: Double, dropObs: Option[Observation], operator: String)(
-      bucketOf: (DataFrame, Long, Int) => Column): DataFrame = {
+      keysOf: (DataFrame, Long, Int) => Column): DataFrame = {
     // consumers: bucketing and both verify sides
-    val (e, bucket) = Similarity.stored(embeddings, operator, Similarity.NoKeys)(bucketOf)
-    val buckets = e.select(
-      col("vec_id"), graft.functions.QuantizeVec.column(col("v")).as("qs"), col("norm"), bucket)
-    val cands = bucketPairs(
-        buckets, buckets.columns.toSeq.drop(3), // the generator's columns are the bucket key
+    val (e, keys) = Similarity.stored(embeddings, operator, Similarity.NoKeys)(keysOf)
+    val buckets = e.select(col("vec_id"),
+      graft.functions.QuantizeVec.column(col("v")).as("qs"), col("norm"), explode(keys).as("key"))
+    val cands = bucketPairs(buckets, Seq("key"),
         collect_list(struct(
           col("vec_id"), col("qs.q"), col("qs.s"), col("qs.qn"), col("qs.en"), col("norm"))),
         IvfDefaults.MaxBucketSize, dropObs)(

@@ -173,13 +173,26 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ANN brute force: query side broadcast, corpus scanned once, no shuffle of scored rows") {
-    val p = plan(Similarity.annBruteForceTopK(Tables.embeddings(spark, sfDir)))
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      "query set must be broadcast")
-    assert(!p.contains("CartesianProduct"))
-    // the only wide op after scoring is the tiny per-query heap aggregation
-    assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate"),
-      "bounded-heap aggregate missing")
+    // the LSH and IVF paths score their candidates in the same body: one
+    // broadcast of the query rows, and the only shuffle is the tiny
+    // per-query heap aggregation's (no candidate distinct, no rejoin of
+    // the stored vectors)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val emb = Tables.embeddings(spark, sfDir)
+    for ((name, df) <- Seq(
+        "annBruteForceTopK" -> Similarity.annBruteForceTopK(emb),
+        "annLshTopK" -> Similarity.annLshTopK(emb),
+        "annIvfTopK" -> Similarity.annIvfTopK(emb))) {
+      val p = plan(df)
+      val nodes = gatherExecuted(df.queryExecution.executedPlan)
+      assert(nodes.count(_.isInstanceOf[BroadcastExchangeLike]) == 1,
+        s"$name: the query set must be broadcast once:\n$p")
+      assert(nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+        s"$name: the heap aggregate's must be the only shuffle:\n$p")
+      assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), s"$name:\n$p")
+      assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate"),
+        s"$name: bounded-heap aggregate missing:\n$p")
+    }
   }
 
   test("text ops stay inside whole-stage codegen with a pruned scan") {
@@ -196,7 +209,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ANN index math stays fused: one kernel, not per-plane expressions") {
-    // the LSH key generator runs after the stored frame's checkpoint, so
+    // the LSH key array is built after the stored frame's checkpoint, so
     // the kernel sits in the query's own plan
     val lsh = plan(Similarity.annLshTopK(Tables.embeddings(spark, sfDir)))
     assert(lsh.contains("hyperplane_buckets"),

@@ -46,4 +46,20 @@ class QueryProfileSpec extends AnyFunSuite {
       assert(r.constructJobs === ReadJobs + 1, r)
     }
   }
+
+  test("the IVF vector paths build with the table read, the stored frame and one fit draw") {
+    for (q <- Seq("q_ann_ivf_topk", "q_dedup_embedding_ivf")) {
+      val r = once(q)
+      assert(r.constructJobs === ReadJobs + 2, r)
+    }
+  }
+
+  test("the LSH and IVF top-k actions run no more jobs than brute force's") {
+    // all three score their candidates in one broadcast join
+    val brute = once("q_ann_bruteforce_topk")
+    for (q <- Seq("q_ann_lsh_topk", "q_ann_ivf_topk")) {
+      val r = once(q)
+      assert(r.actionJobs <= brute.actionJobs, s"$r\nbrute force: $brute")
+    }
+  }
 }

@@ -102,59 +102,14 @@ class HierFitSpec extends AnyFunSuite {
     // a non-positive count must refuse loudly, not full-collect (every
     // caller passes the count of the frame it hands over)
     assertThrows[IllegalArgumentException](Similarity.fitDraw(e, 16, -1L))
-    // r19 (ADVICE): an nRows that badly UNDERestimates the corpus
-    // (claims 1 row for 500) starts frac at 1.0 — the guard must
-    // recount and rebase rather than full-collect, and the rebased
-    // draw must still be THE draw (same smallest-hash rows)
+    // an nRows that UNDERestimates the corpus (claims 1 row for 500)
+    // starts frac at 1.0: the first draw is a full collect, and the
+    // driver-side sort still returns THE draw (same smallest-hash rows)
     for (t <- Seq(16, 100)) {
       val got = Similarity.fitDraw(e, t, 1L).map(_.toSeq).toSeq
-      assert(got === oldDraw(t), s"rebased draw diverged at target=$t nRows=1")
+      assert(got === oldDraw(t), s"full-collect draw diverged at target=$t nRows=1")
     }
-    // a corpus that truly is draw-sized (realN <= 4x target) keeps the
-    // full-collect path: the hash probe comes back complete, so no
-    // recount and no rebase
     assert(Similarity.fitDraw(e, 500, 1L).map(_.toSeq).toSeq === oldDraw(500))
-  }
-
-  test("the fit draw's truncation probe collects the hash column alone") {
-    // an understated nRows starts the draw at frac = 1.0, where a probe
-    // decides between the full collect and a recount; carrying the
-    // vectors, that probe collected ~4x the sample's vector bytes
-    import org.apache.spark.sql.catalyst.plans.logical.GlobalLimit
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.types.LongType
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val e = Similarity.withNorm(corpus(500, 16, seed = 7L))
-    val collected = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "collect") collected.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    import scala.jdk.CollectionConverters._
-    // the analyzed plan, because the optimizer folds a limit over this
-    // local corpus into a LocalRelation
-    def probes = collected.asScala.filter(_.analyzed.exists(_.isInstanceOf[GlobalLimit]))
-    // truncated (65 of 500 hashes) and complete (500 of 2001) probes
-    for (t <- Seq(16, 500)) {
-      val honest = Similarity.fitDraw(e, t, 500L).map(_.toSeq).toSeq
-      collected.clear()
-      spark.listenerManager.register(listener)
-      val lying = try {
-        val got = Similarity.fitDraw(e, t, 1L).map(_.toSeq).toSeq
-        // listener events arrive asynchronously: wait for the probe's
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (probes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-        got
-      } finally spark.listenerManager.unregister(listener)
-      assert(lying === honest, s"a lying nRows changed the draw at target=$t")
-      assert(probes.nonEmpty, s"no probe collect seen at target=$t")
-      probes.foreach { qe =>
-        val out = qe.executedPlan.output
-        assert(out.map(a => a.name -> a.dataType) == Seq("h" -> LongType),
-          s"the probe collected more than the hash column at target=$t: $out")
-      }
-    }
   }
 
   test("hashCutoff maps fractions onto the unsigned hash line monotonically") {

@@ -132,6 +132,34 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lsh.values.forall(_.nonEmpty))
   }
 
+  test("every ANN operator scores a pair once: planted copies, distinct neighbors, contiguous ranks") {
+    // two exact copies of each query meet it in all 12 LSH tables and in
+    // its own IVF cell; a pair scored once per shared key would fill the
+    // heap with repeats of one neighbor
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    val dim = 8
+    val base = (0L until 200L).map(id => id -> Seq.fill(dim)(rnd.nextDouble() * 2 - 1))
+    val copies = for (q <- 0 until 10; c <- 1 to 2) yield (1000L * c + q) -> base(q)._2
+    val df = (base ++ copies).toDF("vec_id", "embedding")
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        ("annBruteForceTopK", Similarity.annBruteForceTopK(_)),
+        ("annLshTopK", Similarity.annLshTopK(_)),
+        ("annIvfTopK", Similarity.annIvfTopK(_)))) {
+      val rows = op(df).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      assert(rows.map(_._1).toSet == (0L until 10L).toSet, name)
+      for ((q, rs) <- rows.groupBy(_._1)) {
+        val ids = rs.sortBy(_._2).map(_._3).toSeq
+        assert(ids.distinct == ids, s"$name q=$q repeats a neighbor: $ids")
+        assert(rs.map(_._2).sorted.toSeq == (1L to rs.length.toLong), s"$name q=$q ranks")
+        assert(rs.length == 10, s"$name q=$q row count")
+        // the planted copies are found, at cosine 1
+        for (c <- Seq(1000L + q, 2000L + q))
+          assert(rs.exists(r => r._3 == c && math.abs(r._4 - 1.0) < 1e-12), s"$name q=$q misses copy $c")
+      }
+    }
+  }
+
   test("NULL vectors pair with nothing on the scale paths") {
     // r17 review regression gate: a corpus whose first scanned row
     // carries a NULL embedding used to crash the wired IVF path even
