@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: replicates the driver's parquet tables `factor`×
@@ -44,6 +44,16 @@ object ScaleUp {
     // probes only read documents/embeddings, and generating a 1000x
     // lineitem nobody scans costs more wall than the probe itself
     val tableFilter = args.lift(3).map(_.split(",").map(_.trim).toSet)
+    val spark = Sessions.local()
+    try scale(spark, src, out, factor, tableFilter) finally spark.stop()
+  }
+
+  /** Writes the `factor`× copy of `src` into `out` (see the object
+    * doc), each table a directory of part files; `tableFilter` keeps
+    * only the named tables.
+    */
+  def scale(spark: SparkSession, src: String, out: String, factor: Int,
+      tableFilter: Option[Set[String]] = None): Unit = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
 
     // Manifest guard (ADVICE r15): overwrite is per-TABLE, so a subset
@@ -76,7 +86,6 @@ object ScaleUp {
           "is unknowable. Use a fresh outDir or delete them first.")
     }
 
-    val spark = Sessions.local()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val reps = broadcast(spark.range(factor.toLong).select(col("id").as("r")))
@@ -158,6 +167,5 @@ object ScaleUp {
     // trusting a half-written output
     java.nio.file.Files.write(manifestPath,
       java.util.Arrays.asList(s"src=$src", s"factor=$factor"))
-    spark.stop()
   }
 }

@@ -1,17 +1,59 @@
 package graft
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetFooter
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet tables (see TESTDATA.md).
   *
-  * Each table is a single parquet file under the scale-factor dir; reads
-  * are plain `spark.read.parquet` so Catalyst keeps full pushdown/pruning
-  * freedom — callers select narrow columns as early as possible.
+  * Each table is a parquet file, or a directory of part files (a
+  * `graft.ScaleUp` output), under the scale-factor dir. [[table]] states
+  * its schema, `spark.read.schema(s).parquet(p)`, so building a query
+  * runs no Spark job: Spark's own inference runs one single-task job per
+  * read to fetch a footer. The schema comes from one footer, read on the
+  * driver at every call (nothing is cached, so each build sees the file
+  * as it is now) and converted by Spark's own `readSchemaFromFooter`
+  * under the session's conf. Of a directory, that is the file Spark's
+  * non-merging inference reads: of the names its file index keeps,
+  * sorted by path, `_common_metadata`, else `_metadata`, else the first
+  * data file. So a session with `spark.sql.parquet.mergeSchema=true`
+  * does not merge part-file schemas here; every table graft writes
+  * (TESTDATA, `ScaleUp`, graftbench's `Gen`) has one schema across its
+  * files. The read keeps Catalyst's full pushdown/pruning freedom —
+  * callers select narrow columns as early as possible.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A missing path, or a directory with no data file, fails here, by
+    * path, before any plan is built.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = ParquetFooter.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // the file index's leaf listing: hidden names dropped at every level
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(s => ParquetFooter.hidden(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    val files = (try leaves(root) catch {
+      case e: FileNotFoundException =>
+        throw new IllegalArgumentException(s"parquet table not found: $path", e)
+    }).map(_.getPath).sortBy(_.toString)
+    // _common_metadata, else _metadata, else the first data file
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = summaries.flatMap(n => files.find(_.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getName)))
+      .getOrElse(throw new IllegalArgumentException(s"parquet table has no data file: $path"))
+    ParquetFooter.schema(spark, conf, file)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -60,7 +102,11 @@ object Tables {
         .info(s"events: setting $nanosKey=true (required to read a TIMESTAMP(NANOS) generation)")
       spark.conf.set(nanosKey, "true")
     }
-    val raw = table(spark, dir, "events")
+    canonicalTs(table(spark, dir, "events"))
+  }
+
+  /** The `events` adaptation above, applied to a raw `events` read. */
+  private[graft] def canonicalTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(
@@ -74,7 +120,6 @@ object Tables {
         s"events.ts: unsupported physical type $other (expected nanos LONG, " +
           "TIMESTAMP_NTZ, or TIMESTAMP) — testdata generation changed; extend Tables.events")
     }
-  }
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.StructType
 /** Minimal bridge to the `private[sql]` `Dataset.ofRows` constructor so
   * the library can materialize a DataFrame over a custom logical node
   * (`graft.plans.LocalSortHint`, `graft.plans.MtmPass`) or over an RDD of
-  * InternalRows (`internalCreateDataFrame`). This is the ONLY file outside
-  * the `graft` namespace; it contains no logic.
+  * InternalRows (`internalCreateDataFrame`). Like the bridges in
+  * `org.apache.spark.sql.graft`, it contains no logic.
   */
 object GraftInternal {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
