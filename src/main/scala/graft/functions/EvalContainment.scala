@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle index.
   *
   * Why a generator and not the broadcast-join + groupBy it replaces
-  * (`operators.Decontaminate.flaggedExchange`, kept in-tree as the
-  * spec-side reference): every shingle of a training document
-  * originates in that document's ONE input row, so each (train, eval)
+  * (that formulation lives in the test tree as DecontaminateKernelSpec's
+  * reference): every shingle of a training document originates in
+  * that document's ONE input row, so each (train, eval)
   * overlap group is complete inside the scan task — the join's
   * per-hit row materialization and the aggregate's (train, eval) pair
   * exchange (365 MB at sf10, growing with corpus×eval pair density,

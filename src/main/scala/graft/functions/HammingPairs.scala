@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** In-bucket Hamming pair scoring for SimHash banding — the
-  * [[CosinePairs]] pattern on 64-bit fingerprints: from one chunk
+  * [[QuantCosinePairs]] pattern on 64-bit fingerprints: from one chunk
   * bucket's membership `array<struct<doc_id, simhash>>`, emit
   * `(doc_id_a, doc_id_b, hamming)` for every a < b pair with
   * `popcount(xor) <= maxHamming`, as a compiled nested loop pipelined

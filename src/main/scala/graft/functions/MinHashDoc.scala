@@ -27,15 +27,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * explode — rows, not corpus content.
   *
   * Bit-compatibility contract (MinHashDocSpec pins all three against
-  * the aggregate formulation on real tables):
+  * the aggregate formulation on real tables; that formulation's
+  * reference copy lives in the test tree):
   *  - shingles: [[ShingleGenerator.tokenize]] + n-token join on ' ',
   *    per-document distinct by STRING, first occurrence wins — the
   *    `shingles_distinct` stream;
   *  - hashes: `xxhash64(shingle)` exactly ([[XXH64.hashUTF8String]]
   *    with Spark's default seed 42 over the shingle's UTF-8 bytes);
-  *  - mh: min over the same seeded multiply-shift permutation family
-  *    as [[MinHashSig]] (shared [[MinHashSig.coeffs]] — a_i odd ⇒
-  *    bijective), element-wise over the per-doc hash stream;
+  *  - mh: min over the seeded multiply-shift permutation family
+  *    [[MinHashDoc.coeffs]] (a_i odd ⇒ bijective), element-wise over
+  *    the per-doc hash stream — the family the test-tree MinHashSig
+  *    aggregate reads too;
   *  - hs: the hashes sorted ASCENDING, duplicates kept (two distinct
   *    shingles of one doc colliding in 64 bits — the documented
   *    ~(shingles/doc)²/2⁶⁵ class), matching [[SortedLongSetAgg]].
@@ -55,7 +57,7 @@ case class MinHashDoc(
   require(n >= 1, "shingle width must be >= 1")
 
   @transient private lazy val coeffs: (Array[Long], Array[Long]) =
-    MinHashSig.coeffs(perms, seed)
+    MinHashDoc.coeffs(perms, seed)
 
   override def dataType: DataType = StructType(Seq(
     StructField("mh", ArrayType(LongType, containsNull = false), nullable = false),
@@ -86,6 +88,18 @@ case class MinHashDoc(
 }
 
 object MinHashDoc {
+
+  /** The seeded multiply-shift permutation family: all `a` drawn before
+    * all `b`, each `a` odd so a·h + b is a bijection on Z/2⁶⁴. The
+    * test-tree MinHashSig aggregate draws the same family, which
+    * MinHashDocSpec's bit-equality gate depends on.
+    */
+  private[functions] def coeffs(perms: Int, seed: Long): (Array[Long], Array[Long]) = {
+    val rnd = new scala.util.Random(seed)
+    val a = Array.fill(perms)(rnd.nextLong() | 1L) // odd ⇒ bijective
+    val b = Array.fill(perms)(rnd.nextLong())
+    (a, b)
+  }
 
   private val empty = new GenericArrayData(Array.emptyLongArray)
 

@@ -96,8 +96,9 @@ object QuantizeVec {
   * `array<struct<vec_id, q, s, qn, en, norm>>`, emit `(vec_id_a,
   * vec_id_b)` for every a < b pair whose quantized cosine PLUS a
   * per-pair rigorous error bound clears `threshold` — i.e. every pair
-  * the full-precision [[CosinePairs]] would have scored ≥ threshold
-  * survives (zero recall loss, proven below), while the ~quadratic
+  * whose full-precision cosine is ≥ threshold survives (zero recall
+  * loss, proven below; QuantCosineSpec checks it against a
+  * full-precision pair kernel that lives in the test tree), while the ~quadratic
   * in-bucket junk mass dies before any exchange. Survivors rejoin
   * full-precision vectors downstream for the exact cosine, so emitted
   * RESULTS are bit-identical to the unquantized pipeline.

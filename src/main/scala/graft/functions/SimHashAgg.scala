@@ -13,9 +13,8 @@ import org.apache.spark.sql.types._
   * `2·ones_b − n` is positive — EXACTLY the previous formulation of 64
   * `sum(when(bit, 1, -1))` columns + a 64-way bitwiseOR projection, so
   * signatures are bit-identical (the brute-force Hamming parity spec
-  * pins it). Same shape win as [[MinHashSig]]: a 65-long object buffer
-  * and one bit-test-add per bit per row instead of a 65-column
-  * aggregation buffer; merges element-wise ⇒ map-side partial
+  * pins it). A 65-long object buffer and one bit-test-add per bit per
+  * row instead of a 65-column aggregation buffer; merges element-wise ⇒ map-side partial
   * aggregation as usual.
   */
 case class SimHashAgg(

@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `struct<n_ws_tokens, n_subtokens, n_punct, n_stop>` out.
   *
   * Replaces four `regexp_extract_all` passes per row (`\S+` twice,
-  * subtoken alternation, punctuation class, and the EnStop alternation
-  * on lowered text), each of which also materialized its match array
-  * just to take `size`. Semantics are byte-equal to the regexes
+  * subtoken alternation, punctuation class, and the English-stopword
+  * alternation on lowered text), each of which also materialized its
+  * match array just to take `size`. Semantics are byte-equal to the regexes
   * (TextStatsSpec pins it): `\s` is Java's ASCII class, subtokens are
   * maximal letter runs | digit runs | single other codepoints (counted
   * per CODEPOINT, as java.util.regex does — a surrogate pair is one

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{EvalContainment, ShingleGenerator}
+import graft.functions.EvalContainment
 
 /** Eval-set decontamination (SURVEY §2 — LLM-pipeline block): find and
   * remove training documents that contain a benchmark/eval document,
@@ -94,35 +94,6 @@ object Decontaminate {
     corpus.select(
         col("doc_id"),
         EvalContainment.column(col("text"), bc, minContainment))
-      .select("doc_id", "eval_id", "containment")
-  }
-
-  /** The relational formulation the kernel replaced — broadcast join on
-    * the shingle + partial-aggregated pair count — kept in-tree as the
-    * spec-side REFERENCE that DecontaminateKernelSpec's equality gate
-    * replays (the [[graft.functions.MinHashDoc]] precedent). Exact same
-    * math: both inputs carry per-doc set semantics, so a plain count
-    * IS the distinct-intersection size, feeding the identical double
-    * division and floor comparison.
-    */
-  private[graft] def flaggedExchange(
-      corpus: DataFrame,
-      evalDocs: DataFrame,
-      minContainment: Double = 0.5): DataFrame = {
-    require(minContainment > 0.0 && minContainment <= 1.0,
-      s"minContainment must be in (0,1], got $minContainment")
-    val evalInv = Dedup.shingleIndex(evalDocs)
-    val evalSizes = evalInv.groupBy("doc_id").agg(count(lit(1)).as("n_eval"))
-    val evalSide = evalInv.join(evalSizes, "doc_id")
-      .select(col("doc_id").as("eval_id"), col("shingle"), col("n_eval"))
-    corpus.select(
-        col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
-      .join(broadcast(evalSide), "shingle")
-      .groupBy(col("doc_id"), col("eval_id"), col("n_eval"))
-      .agg(count(lit(1)).as("n_common"))
-      .withColumn("containment",
-        col("n_common").cast("double") / col("n_eval").cast("double"))
-      .filter(col("containment") >= minContainment)
       .select("doc_id", "eval_id", "containment")
   }
 

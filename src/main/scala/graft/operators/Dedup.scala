@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shuffle discipline (SURVEY §4): the only wide exchanges move
   * (key, doc_id) pairs — the shingle inverted index, LSH band buckets,
-  * or SimHash chunks — never full document text. Every signature
-  * (MinHash, SimHash) is computed by partial-aggregated object
-  * aggregates over a hashed inverted-index exchange (xxhash64 for
-  * MinHash; RollingHash ∘ Mix64 for SimHash, whose oracle must replay
-  * the hash), not by per-row array lambdas: higher-order functions are
-  * interpreted (CodegenFallback), and Catalyst's project collapsing
-  * re-evaluates an array-producing expression inside every consumer
-  * lambda — measured ~100× slower at equal semantics. All-pairs work
+  * or SimHash chunks — never full document text. Signatures come from
+  * native kernels, not per-row array lambdas: MinHash from the per-row
+  * [[graft.functions.MinHashDoc]] kernel in the scan, SimHash from one
+  * object aggregate over the hashed [[mixedShingleIndex]] exchange
+  * (RollingHash ∘ Mix64, which its oracle must replay). Higher-order
+  * functions are interpreted (CodegenFallback), and Catalyst's project
+  * collapsing re-evaluates an array-producing expression inside every
+  * consumer lambda — measured ~100× slower at equal semantics. All-pairs work
   * exists only in `embeddingNearDupsExact`, the oracle/verify path; the
   * embedding scale paths are [[embeddingNearDupsLsh]] (hyperplane-LSH
   * buckets) and [[embeddingNearDupsIvf]] (IVF cells), both below. The
@@ -74,69 +74,32 @@ object Dedup {
       col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
   }
 
-  /** The signature-space backbone: the same inverted index with the
-    * shingle hashed to 64 bits BEFORE the distinct, so the dedup
-    * exchange (and every downstream join) moves (doc_id, long) instead
-    * of (doc_id, string) — at corpus scale that is the difference
-    * between shuffling the corpus's shingle text and shuffling 16-byte
-    * rows. The approximate operators live in this hashed space: their
-    * signatures are functions of xxhash64(shingle) anyway, and their
-    * verify counts become Jaccard over the hashed shingle space
-    * (collision probability ≈ n²/2⁶⁴ per doc pair — immaterial below
-    * ~10⁸ distinct shingles). SimHash consumes the [[mixedShingleIndex]]
-    * twin; production MinHash computes the same values per ROW
-    * ([[graft.functions.MinHashDoc]], r13) and this index is its
-    * spec-side reference. The exact-string index stays
-    * [[shingleIndex]]; [[ngramJaccardPairs]] hashes the same distinct
-    * shingles with the same xxhash64 inline.
-    */
-  private[graft] def hashedShingleIndex(documents: DataFrame): DataFrame = {
-    documents
-      // set semantics from the generator (r12, as shingleIndex): the
-      // per-row dedup of distinct STRINGS leaves (doc_id, h) distinct
-      // except when two distinct shingles of ONE document collide in
-      // 64 bits — probability ~(shingles/doc)²/2⁶⁵, far inside the
-      // hashed space's documented n²/2⁶⁴ tolerance — so the dedup
-      // aggregate this index used to run after the exchange is gone
-      // (it was a full ObjectHashAggregate pass over the index).
-      .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-      // partition by doc_id BEFORE any per-doc aggregate a consumer
-      // adds: the aggregate then runs just past this exchange with ONE
-      // local buffer per doc, where letting it partial-combine across
-      // scan-order partitions shipped a WIDE partial buffer per doc
-      // per map task — 33× the index bytes at the sf10 falsifier
-      // (357 MB of (doc_id, h) rows became 11.8 GB of signature
-      // partials crossing the exchange). Since r13 production MinHash
-      // does not read this index at all — [[graft.functions
-      // .MinHashDoc]] computes the per-doc signature/set per ROW in
-      // the scan — this remains as the relational REFERENCE
-      // formulation that MinHashDocSpec's bit-equality gate replays.
-      .repartition(col("doc_id"))
-  }
-
-  /** [[hashedShingleIndex]]'s oracle-replayable twin for SimHash:
-    * RollingHash ∘ Mix64 instead of xxhash64. Equal hash quality —
-    * fmix64 is a bijective full-avalanche finalizer, so every one of
-    * the 64 bits SimHash votes on is uniform even though the raw
-    * polynomial hash concentrates its structure in the low bits — but
-    * every step replays exactly in DuckDB (see SparkEntry's
-    * q_dedup_simhash oracle), which is what hash-gates the SimHash
-    * query. MinHash keeps xxhash64: its oracle (the verified exact-
-    * Jaccard pair set) never inspects the hash values.
+  /** SimHash's signature-space index: the distinct (doc_id, shingle)
+    * index of [[shingleIndex]] with each shingle hashed to 64 bits, so
+    * the exchange moves (doc_id, long) rows instead of shingle text.
+    * The hash is RollingHash ∘ Mix64: fmix64 is a bijective
+    * full-avalanche finalizer, so every one of the 64 bits SimHash
+    * votes on is uniform even though the raw polynomial hash
+    * concentrates its structure in the low bits, and every step
+    * replays exactly in DuckDB (see SparkEntry's q_dedup_simhash
+    * oracle), which is what hash-gates the SimHash query.
     */
   private[graft] def mixedShingleIndex(documents: DataFrame): DataFrame = {
     // CpuSpread (r19): same single-task-scan guard as shingleIndex
     CpuSpread.spread(documents)
-      // generator-side set semantics, same rationale and collision
-      // class as [[hashedShingleIndex]] (and the oracle replays
-      // list_distinct before hashing, so both engines see the same
-      // per-doc distinct shingle stream)
+      // set semantics from the generator (r12, as shingleIndex): the
+      // per-row dedup of distinct STRINGS leaves (doc_id, h) distinct
+      // except when two distinct shingles of ONE document collide in
+      // 64 bits — probability ~(shingles/doc)²/2⁶⁵ (and the oracle
+      // replays list_distinct before hashing, so both engines see the
+      // same per-doc distinct shingle stream)
       .select(col("doc_id"), ShingleGenerator.column(col("text"), distinct = true).as("shingle"))
       .select(col("doc_id"), Mix64.column(RollingHash.column(col("shingle"))).as("h"))
-      // same doc_id pre-partition as [[hashedShingleIndex]]: the SimHash
-      // aggregate's 65-long vote buffers stay one-per-doc local instead
-      // of one-per-doc-per-map-task crossing the exchange
+      // partition by doc_id BEFORE the per-doc aggregate: the SimHash
+      // aggregate's 65-long vote buffers then stay one-per-doc local
+      // instead of one-per-doc-per-map-task crossing the exchange (a
+      // wide partial buffer per doc per map task shipped 33× the index
+      // bytes at the sf10 falsifier)
       .repartition(col("doc_id"))
   }
 
@@ -435,8 +398,10 @@ object Dedup {
     // contributes downstream: the fused MinHash signature, the doc's
     // ASCENDING sorted hash-set array (the verify's operand), and its
     // set size ([[graft.functions.MinHashDoc]] — bit-identical to the
-    // hashedShingleIndex → repartition(doc_id) → MinHashSig +
-    // SortedLongSetAgg + count aggregate it replaces, spec-pinned).
+    // hashed shingle index → repartition(doc_id) → MinHash aggregate +
+    // SortedLongSetAgg + count shape it replaces; that shape's
+    // reference copy lives in the test tree, and MinHashDocSpec pins
+    // the equality).
     // Every shingle of a doc is born in the doc's one input row, so
     // the group is complete IN the scan task and that shape's exchange
     // (313 MB of (doc_id, h) at sf10 — a third of the query's shuffle)
@@ -511,8 +476,8 @@ object Dedup {
     * [[graft.functions.SimHashAgg]] aggregate over a hashed inverted
     * index's (doc_id, h) rows — in production wiring
     * [[mixedShingleIndex]] (RollingHash ∘ Mix64, the DuckDB-replayable
-    * hash the q_dedup_simhash oracle depends on; do NOT swap back to
-    * [[hashedShingleIndex]]'s xxhash64, which no oracle can replay).
+    * hash the q_dedup_simhash oracle depends on; do NOT swap in
+    * xxhash64, which no oracle can replay).
     * Bit-identical to the 64-sum-column formulation it replaced, at a
     * 65-long object buffer instead of a 65-column one.
     */

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Engine-agnostic exact summation of doubles — the ONE definition of
   * the quantize-then-sum idiom used by every order-dependent aggregate
-  * (MtmEngine 1e-9 pnl units, Analytics/StreamingJobs 1e-6 price units,
-  * SignalCompression's closed-form cumulative).
+  * (MtmEngine 1e-9 pnl units, Analytics/StreamingJobs 1e-6 price units;
+  * the test tree's closed-form SignalCompression reference uses it too).
   *
   * Why this shape: floor(x·scale + 0.5) is pure IEEE arithmetic and
   * therefore bit-identical in every engine, unlike a double→DECIMAL cast

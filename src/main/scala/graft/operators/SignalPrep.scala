@@ -61,34 +61,31 @@ object SignalPrep {
   /** Exponential moving average — the genuinely ORDER-DEPENDENT
     * indicator no window frame can express (every bar's value depends
     * on the whole prefix): ema₀ = close₀; emaₜ = α·closeₜ + (1−α)·emaₜ₋₁.
-    * Runs in the MTM engine's distributed shape: ONE symbol exchange,
-    * in-partition secondary sort, an O(1)-state iterator per symbol run
-    * — a skewed mega-symbol streams through, never buffers. The
-    * recurrence is evaluated as the identical IEEE double expression on
-    * both the engine and the DuckDB recursive-CTE oracle, so outputs
-    * hash-match bit-for-bit.
+    * Runs in the MTM engine's layout, stated rather than built: a
+    * sorted group per symbol in [[MtmEngine.RunOrder]], so the planner
+    * adds one symbol exchange and the secondary sort, and no exchange
+    * over input already clustered by symbol (a bucketed table). Each
+    * group streams through an O(1)-state iterator — a skewed
+    * mega-symbol never buffers. The recurrence is evaluated as the
+    * identical IEEE double expression on both the engine and the DuckDB
+    * recursive-CTE oracle, so outputs hash-match bit-for-bit.
     */
   def ema(events: DataFrame, alpha: Double = 0.1): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
     val spark = events.sparkSession
     import spark.implicits._
+    val order = MtmEngine.RunOrder
     events
       .select(
         col("user_id").cast("long").as("symbol"),
         unix_micros(col("ts")).as("ts_us"),
         col("event_id").cast("long"),
         col("value").cast("double").as("close"))
-      .repartition(col("symbol"))
-      .sortWithinPartitions("symbol", "ts_us", "event_id")
-      .as[EmaBar]
-      .mapPartitions { it =>
-        var sym = 0L
-        var e = 0.0
-        var first = true
-        it.map { b =>
-          if (first || b.symbol != sym) { sym = b.symbol; e = b.close; first = false }
-          else e = alpha * b.close + (1.0 - alpha) * e
-          EmaPoint(b.symbol, b.ts_us, b.event_id, b.close, e)
+      .groupBy(col(order.head)).as[Long, EmaBar]
+      .flatMapSortedGroups(order.tail.map(col): _*) { (_, bars) =>
+        val b0 = bars.next()
+        bars.scanLeft(EmaPoint(b0.symbol, b0.ts_us, b0.event_id, b0.close, b0.close)) { (prev, b) =>
+          EmaPoint(b.symbol, b.ts_us, b.event_id, b.close, alpha * b.close + (1.0 - alpha) * prev.ema)
         }
       }
       .toDF()

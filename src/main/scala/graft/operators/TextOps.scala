@@ -17,18 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Count of non-overlapping regex matches — same left-to-right scan in
-    * Spark and DuckDB, so counts agree exactly.
-    */
-  private def nMatches(c: Column, pattern: String): Column =
-    size(regexp_extract_all(c, lit(pattern), lit(0))).cast("bigint")
-
-  private val EnStop = "\\b(the|a|and|of|to|is|in|that|it|on)\\b"
   private val EnStopWords = Seq("the", "a", "and", "of", "to", "is", "in", "that", "it", "on")
 
   /** The fused per-row count kernel (ws tokens, subtokens, punct chars,
-    * EnStop hits in one pass — [[graft.functions.TextStats]]). Equal
-    * `statsOf` calls collapse only inside a `Project`, where codegen
+    * English-stopword hits in one pass — [[graft.functions.TextStats]]).
+    * Equal `statsOf` calls collapse only inside a `Project`, where codegen
     * eliminates common subexpressions; a `Filter` evaluates every copy.
     * So a score that gates rows is computed from ONE carried struct
     * ([[qualityFrom]]), as CorpusPipeline's stage 1 does.
@@ -38,8 +31,8 @@ object TextOps {
 
   /** SURVEY #17: whitespace tokens + BPE-ish subtokens (letter runs,
     * digit runs, individual symbol marks). One fused scan; the regex
-    * formulation (the oracle's literal shape) survives as
-    * [[tokenCountRegex]], spec-pinned equal.
+    * formulation (the oracle's literal shape) lives in the test tree as
+    * TextOpsSpec's parity reference.
     */
   def tokenCount(documents: DataFrame): DataFrame =
     documents.select(
@@ -49,16 +42,16 @@ object TextOps {
       statsOf(col("text")).getField("n_subtokens").as("n_subtokens"))
 
   // the score arithmetic over (punct, ws-token, stop-hit) counts — one
-  // copy shared by the fused kernel and the regex twin
-  private def punctRatio(text: Column, nPunct: Column): Column = {
+  // copy shared by the fused kernel and the test tree's regex reference
+  private[graft] def punctRatio(text: Column, nPunct: Column): Column = {
     val nChars = length(text).cast("bigint")
     when(nChars === 0, lit(0.0)).otherwise(nPunct.cast("double") / nChars.cast("double"))
   }
 
-  private def stopRatio(nWs: Column, nStop: Column): Column =
+  private[graft] def stopRatio(nWs: Column, nStop: Column): Column =
     when(nWs === 0, lit(0.0)).otherwise(nStop.cast("double") / nWs.cast("double"))
 
-  private def quality(text: Column, nPunct: Column, nWs: Column, nStop: Column): Column = {
+  private[graft] def quality(text: Column, nPunct: Column, nWs: Column, nStop: Column): Column = {
     val lenScore = least(lit(1.0), length(text).cast("bigint").cast("double") / lit(500.0))
     lit(0.4) * lenScore + lit(0.3) * (lit(1.0) - punctRatio(text, nPunct)) +
       lit(0.3) * least(lit(1.0), stopRatio(nWs, nStop) * lit(5.0))
@@ -86,43 +79,14 @@ object TextOps {
       qualityFrom(col("text"), ts).as("quality_score"))
   }
 
-  // ---- regex formulations: the DuckDB oracles' literal shapes, kept as
-  // parity gates for the fused TextStats kernel (TextStatsSpec) ----
-
-  private[graft] def tokenCountRegex(documents: DataFrame): DataFrame =
-    documents.select(
-      col("doc_id"),
-      length(col("text")).cast("bigint").as("n_chars"),
-      nMatches(col("text"), "\\S+").as("n_ws_tokens"),
-      nMatches(col("text"), "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]").as("n_subtokens"))
-
-  private[graft] def qualityScoreRegex(documents: DataFrame): DataFrame = {
-    val text = col("text")
-    val nPunct = nMatches(text, "[^A-Za-z0-9\\s]")
-    val nWs = nMatches(text, "\\S+")
-    val nStop = nMatches(lower(text), EnStop)
-    documents.select(
-      col("doc_id"),
-      length(text).cast("bigint").as("n_chars"),
-      punctRatio(text, nPunct).as("punct_ratio"),
-      stopRatio(nWs, nStop).as("stop_ratio"),
-      quality(text, nPunct, nWs, nStop).as("quality_score"))
-  }
-
-  /** Per-language stopword regexes (ASCII word-boundary; zh uses common
-    * hanzi particles, which simply never hit on ASCII corpora). The
-    * DuckDB oracle runs THESE; the wired query runs the fused
-    * [[graft.functions.LangStopHits]] single-pass twin (TextOpsSpec pins
-    * them equal on the real corpus).
+  /** Per-language stopwords (ASCII word-boundary; zh uses common hanzi
+    * particles, which simply never hit on ASCII corpora) as word/char
+    * lists for the fused [[graft.functions.LangStopHits]] kernel. The
+    * DuckDB oracle runs the same table as one alternation regex per
+    * language; that formulation lives in the test tree, and TextOpsSpec
+    * pins the two equal on the real corpus.
     */
-  private val LangStops: Seq[(String, String)] = Seq(
-    "de" -> "\\b(der|die|das|und|ist|von|mit|den|ein|eine)\\b",
-    "en" -> "\\b(the|a|and|of|to|is|in|that|it|on)\\b",
-    "es" -> "\\b(el|la|de|que|y|en|un|una|los|las)\\b",
-    "fr" -> "\\b(le|la|de|et|les|des|un|une|du|dans)\\b",
-    "zh" -> "(的|是|不|了|在)")
-
-  /** The same table as word/char lists for the fused kernel. */
+  private val LangNames: Seq[String] = Seq("de", "en", "es", "fr", "zh")
   private val LangStopWords: Seq[Seq[String]] = Seq(
     Seq("der", "die", "das", "und", "ist", "von", "mit", "den", "ein", "eine"),
     Seq("the", "a", "and", "of", "to", "is", "in", "that", "it", "on"),
@@ -142,23 +106,8 @@ object TextOps {
   def langId(documents: DataFrame): DataFrame = {
     val hits = graft.functions.LangStopHits.hits(col("text"), LangStopWords, LangStopChars)
     val mx = array_max(hits)
-    val pred = LangStops.map(_._1).zipWithIndex.foldRight(lit("zh")) { case ((l, i), els) =>
+    val pred = LangNames.zipWithIndex.foldRight(lit("zh")) { case ((l, i), els) =>
       when(hits.getItem(i) === mx, lit(l)).otherwise(els)
-    }
-    documents.select(
-      col("doc_id"),
-      when(mx === 0, lit("und")).otherwise(pred).as("lang_pred"))
-  }
-
-  /** The original 5-regex formulation — the oracle's literal shape, kept
-    * as the parity gate for the fused kernel (TextOpsSpec).
-    */
-  private[graft] def langIdRegex(documents: DataFrame): DataFrame = {
-    val lowered = lower(col("text"))
-    val hits = LangStops.map { case (l, p) => l -> nMatches(lowered, p) }
-    val mx = greatest(hits.map(_._2): _*)
-    val pred = hits.foldRight(lit("zh")) { case ((l, h), els) =>
-      when(h === mx, lit(l)).otherwise(els)
     }
     documents.select(
       col("doc_id"),
@@ -213,7 +162,7 @@ object TextOps {
     * `1 − distinct/total` word-3-grams per doc; a doc too short for any
     * 3-gram scores 0.0. Counts aggregate over the HASHED raw shingle
     * stream (RollingHash ∘ Mix64 — 64-bit collisions immaterial, see
-    * Dedup.hashedShingleIndex), so the per-doc shuffle carries
+    * Dedup.mixedShingleIndex), so the per-doc shuffle carries
     * (doc_id, long), never shingle text; both count and distinct-count
     * are two-phase map-side partials. The left join restores docs with
     * zero 3-grams — a doc_id equi-join against an at-most-one-row-per-
@@ -425,9 +374,10 @@ object TextOps {
 
   /** The shared stats→(ratios, keep) projection over a frame holding
     * `doc_id` and a `gs` struct with the eight GopherStats counts —
-    * both the fused kernel and the regex twin route through it.
+    * both the fused kernel and the test tree's regex reference route
+    * through it.
     */
-  private def gopherProject(withGs: DataFrame): DataFrame = {
+  private[graft] def gopherProject(withGs: DataFrame): DataFrame = {
     val names = gopherRatios(col("gs")).map(_._1)
     withGs.select(col("doc_id") +: gopherRatios(col("gs")).map { case (n, c) => c.as(n) }: _*)
       .withColumn("keep", gopherKeepFrom(names.map(n => n -> col(n)).toMap))
@@ -447,30 +397,4 @@ object TextOps {
   def qualityFilterGopher(documents: DataFrame): DataFrame =
     gopherProject(documents.select(
       col("doc_id"), graft.functions.GopherStats.stats(col("text")).as("gs")))
-
-  /** The oracle's literal regex/split formulation (java.util.regex via
-    * Spark builtins) — the parity gate GopherStatsSpec pins against the
-    * fused kernel.
-    */
-  private[graft] def qualityFilterGopherRegex(documents: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("\\S+"), lit(0))
-    val lines = split(col("text"), "\\n", -1)
-    def countChar(ch: String): Column =
-      length(col("text")) - length(regexp_replace(col("text"), ch, ""))
-    val gs = struct(
-      size(words).cast("bigint").as("n_words"),
-      length(regexp_replace(col("text"), "\\s+", "")).cast("bigint").as("n_word_chars"),
-      size(filter(words, w => w.rlike("[A-Za-z]"))).cast("bigint").as("n_alpha_words"),
-      size(lines).cast("bigint").as("n_lines"),
-      size(filter(lines, l => l.rlike("^[ \\t]*[-*•]"))).cast("bigint").as("n_bullet_lines"),
-      // \z, not $: Java's bare $ also matches before a final \r line
-      // terminator; RE2 (the oracle's engine) does not, and the kernel
-      // pins the RE2 shape (GopherStats scaladoc)
-      size(filter(lines, l => l.rlike("(\\.\\.\\.|…)[ \\t]*\\z"))).cast("bigint").as("n_ellipsis_lines"),
-      (countChar("#") + countChar("…") + nMatches(col("text"), "\\.\\.\\.")).cast("bigint").as("n_symbols"),
-      graft.functions.GopherStats.StopWords
-        .map(w => when(lower(col("text")).rlike("\\b" + w + "\\b"), 1L).otherwise(0L))
-        .reduce(_ + _).as("n_stop_distinct"))
-    gopherProject(documents.select(col("doc_id"), gs.as("gs")))
-  }
 }

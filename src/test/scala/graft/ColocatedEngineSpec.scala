@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.PnlConfig
-import graft.operators.{MtmEngine, MtmRunner, Observed}
+import graft.operators.{MtmEngine, MtmRunner, Observed, SignalPrep}
 import graft.sources.BucketedTables
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine pass's required clustering by symbol is already met, so the
   * planner drops the engine's exchange, for the lazy surfaces and the
   * stored run alike, and the results stay bit-identical to the
-  * shuffled engine.
+  * shuffled engine. The EMA states the same layout, so symbol-bucketed
+  * events drop its exchange too.
   */
 class ColocatedEngineSpec extends AnyFunSuite {
 
@@ -77,6 +78,22 @@ class ColocatedEngineSpec extends AnyFunSuite {
     for ((name, w, g) <- Seq("timeline", "trades", "summary").lazyZip(want).lazyZip(frames(got))) {
       assert(w.nonEmpty && w == bag(g), s"$name differs from the shuffled run")
     }
+  }
+
+  test("ema over symbol-bucketed events plans no exchange and is bit-identical") {
+    val bucketed = Tables.canonicalTs(
+      spark.table(BucketedTables.ensure(spark, sfDir, "events", "user_id")))
+    val colocated = SignalPrep.ema(bucketed)
+    val p = colocated.queryExecution.executedPlan.toString
+    val exchanges = "Exchange".r.findAllIn(p).length
+    assert(exchanges == 0, s"bucketed events should feed the ema with no exchange, saw:\n$p")
+    // every row, doubles by bit pattern
+    def rows(df: DataFrame): Seq[(Long, Long, Long, Long, Long)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)),
+        java.lang.Double.doubleToLongBits(r.getDouble(4)))).sorted
+    val want = rows(SignalPrep.ema(Tables.events(spark, sfDir)))
+    assert(want.nonEmpty && want == rows(colocated))
   }
 
   test("shuffled engine still plans its single exchange (the contrast)") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * every row). `array<double>` out, one pass over a reference-held
   * centroid matrix — same rationale as [[HyperplaneBuckets]]: the
   * per-centroid DotProduct composition inlined the matrix as codegen
-  * literals and re-read the vector per centroid. No operator runs it:
+  * literals and re-read the vector per centroid. Test-tree reference:
   * both IVF operators assign and probe through [[ProbeCells]], and
   * ProbeCellsSpec keeps this kernel as the reference half of the r15
   * `sort_array` composition ProbeCells must reproduce.
@@ -110,10 +110,7 @@ case class CentroidScores(
 }
 
 object CentroidScores {
-  /** The kernel as a Column bound to these centroids — direct expression
-    * construction, no session registry, so Lloyd iterations and
-    * concurrent index builds can never observe each other's matrices.
-    */
+  /** The kernel as a Column bound to these centroids. */
   def scores(v: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graft.ColumnBridge

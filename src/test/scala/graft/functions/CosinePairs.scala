@@ -7,32 +7,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** In-bucket cosine pair scoring as a native streaming generator: from
-  * one LSH bucket's membership array `array<struct<vec_id, v, norm>>`,
-  * emit `(vec_id_a, vec_id_b, cosine)` for every a < b pair whose
-  * cosine clears `threshold` — candidates that fail the verify NEVER
-  * leave the stage.
+/** In-bucket cosine pair scoring at full precision, as a streaming
+  * generator: from one bucket's membership array
+  * `array<struct<vec_id, v, norm>>`, emit `(vec_id_a, vec_id_b, cosine)`
+  * for every a < b pair whose cosine clears `threshold`.
   *
-  * This is the scale-load-bearing half of
-  * [[graft.operators.Dedup.embeddingNearDupsLsh]]: the previous shape
-  * exploded ALL in-bucket pairs (n · targetBucketSize · tables / 2
-  * rows — ~6e9 at the sf10 falsifier, linear in n but with a
-  * pairs-per-vector constant of ~1000) through a distinct exchange and
-  * two vector rejoins; the 10× scale run died on >75 GB of shuffle
-  * spill before any cosine was computed. Here the pair space is a
-  * COMPILED nested loop pipelined inside the aggregate's stage — the
-  * only exchange that grows with the corpus carries the bucketed
-  * vectors themselves (n · tables rows), and only true near-dup pairs
-  * (small by definition) reach the downstream dedup.
+  * Test-tree reference: the embedding dedup operators score their
+  * buckets with [[QuantCosinePairs]]' quantized prefilter, and
+  * QuantCosineSpec checks that every pair this kernel keeps survives it.
   *
   * Parity contract: the dot product is the same ascending-index left
   * fold as [[DotProduct]], and the cosine is the same division
-  * SEQUENCE as Similarity.cosine (`dot / sqrt(na) / sqrt(nb)`), so a
-  * pair scored here is bit-identical to the exact path's cosine — the
-  * same double regardless of which bucket/table emits it (what makes
-  * the cross-table `distinct()` downstream sound) and identical to
-  * [[graft.operators.Dedup.embeddingNearDupsExact]] on shared pairs
-  * (what DedupSpec's precision assertion checks).
+  * sequence as Similarity.cosine (`dot / sqrt(na) / sqrt(nb)`), so a
+  * pair scored here is bit-identical to the exact path's cosine.
   */
 // CodegenFallback: GenerateExec drives generators through eval(); the
 // win is the fused pair loop, not expression codegen

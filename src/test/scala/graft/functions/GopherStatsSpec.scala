@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{Sessions, Tables}
-import graft.operators.TextOps
+import graft.operators.{TextOps, TextOpsRegex}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -97,7 +97,7 @@ class GopherStatsSpec extends AnyFunSuite {
   test("fused qualityFilterGopher equals the regex twin on the planted corpus") {
     val docs = TextOps.withPlantedStructure(Tables.documents(spark, sfDir))
     val fused = rows(TextOps.qualityFilterGopher(docs))
-    val regex = rows(TextOps.qualityFilterGopherRegex(docs))
+    val regex = rows(TextOpsRegex.qualityFilterGopher(docs))
     assert(fused.nonEmpty && fused == regex)
     // the planted corpus must exercise BOTH outcomes of every rule
     val keeps = TextOps.qualityFilterGopher(docs).collect().map(_.getBoolean(8)).toSet

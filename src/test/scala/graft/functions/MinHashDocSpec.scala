@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{Sessions, Tables}
-import graft.operators.Dedup
+import graft.operators.DedupReference
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +26,7 @@ class MinHashDocSpec extends AnyFunSuite {
 
   test("per-row kernel is bit-identical to the aggregate formulation on real docs") {
     val docs = Tables.documents(spark, sfDir)
-    val viaAgg = Dedup.hashedShingleIndex(docs)
+    val viaAgg = DedupReference.hashedShingleIndex(docs)
       .groupBy("doc_id")
       .agg(
         MinHashSig.column(col("h"), perms).as("mh"),
@@ -86,7 +86,7 @@ class MinHashDocSpec extends AnyFunSuite {
       val pad = if (rnd.nextBoolean()) seps(rnd.nextInt(seps.length)) else ""
       (id, pad + body + (if (rnd.nextBoolean()) pad.reverse else ""))
     }.toDF("doc_id", "text")
-    val exp = rows(Dedup.hashedShingleIndex(docs)
+    val exp = rows(DedupReference.hashedShingleIndex(docs)
       .groupBy("doc_id")
       .agg(
         MinHashSig.column(col("h"), perms).as("mh"),

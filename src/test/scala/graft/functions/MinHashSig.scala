@@ -8,21 +8,16 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** The whole MinHash signature as ONE aggregate: for each of `perms`
-  * multiply-shift permutations π_i(h) = a_i·h + b_i (a_i odd ⇒ a true
-  * bijection on Z/2⁶⁴; seeded, so plans are reproducible), the buffer
-  * keeps the per-permutation minimum over the group's shingle hashes —
-  * `array<long>` out, element i = min π_i.
+/** The whole MinHash signature as ONE aggregate over a document's
+  * (doc_id, h) index rows: for each of `perms` multiply-shift
+  * permutations π_i(h) = a_i·h + b_i ([[MinHashDoc.coeffs]]), the
+  * buffer keeps the per-permutation minimum over the group's shingle
+  * hashes — `array<long>` out, element i = min π_i.
   *
-  * Replaces `perms` separate `min(xxhash64(h, i))` aggregate columns:
-  * that shape pays a two-long xxhash (~20 ops) per permutation per row
-  * and carries a 129-column aggregation buffer through partial/final
-  * agg, where this buffer is one long[] updated with a multiply-add-
-  * compare (~3 ops) per permutation — the per-row cost that dominates
-  * LSH signature building over a 100 TB corpus. O(perms) buffer, merges
-  * element-wise ⇒ map-side partial aggregation works as usual. Any
-  * consistent hash family serves MinHash equally (DedupSpec gates
-  * recall against exact Jaccard).
+  * Test-tree reference: production MinHash computes the same signature
+  * per row with the [[MinHashDoc]] kernel, and MinHashDocSpec replays
+  * this aggregate (over [[graft.operators.DedupReference.hashedShingleIndex]])
+  * as the bit-equality gate for it.
   */
 case class MinHashSig(
     child: Expression,
@@ -35,7 +30,7 @@ case class MinHashSig(
   require(perms > 0, "perms must be positive")
 
   @transient private lazy val (as: Array[Long], bs: Array[Long]) =
-    MinHashSig.coeffs(perms, seed)
+    MinHashDoc.coeffs(perms, seed)
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
@@ -97,22 +92,7 @@ case class MinHashSig(
 }
 
 object MinHashSig {
-  /** The seeded multiply-shift permutation family — shared with the
-    * per-row [[MinHashDoc]] kernel so both formulations are the SAME
-    * hash family element-for-element (MinHashDocSpec's bit-equality
-    * gate depends on it). All `a` drawn before all `b`, exactly the
-    * original generation order.
-    */
-  private[functions] def coeffs(perms: Int, seed: Long): (Array[Long], Array[Long]) = {
-    val rnd = new scala.util.Random(seed)
-    val a = Array.fill(perms)(rnd.nextLong() | 1L) // odd ⇒ bijective
-    val b = Array.fill(perms)(rnd.nextLong())
-    (a, b)
-  }
-
-  /** The aggregate as a Column — direct construction, no session
-    * registry (same pattern as the other graft kernels).
-    */
+  /** The aggregate as a Column. */
   def column(h: org.apache.spark.sql.Column, perms: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(

@@ -6,9 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Equality gate for the r14 EvalContainment kernel: the exchange-free
   * probe-in-scan path must produce EXACTLY the relational reference
-  * formulation's output ([[Decontaminate.flaggedExchange]] — broadcast
-  * join + partial-aggregated pair count, kept in-tree for this spec,
-  * the MinHashDoc precedent). Exercised on the real corpus and on
+  * formulation's output ([[DecontaminateReference.flaggedExchange]] —
+  * broadcast join + partial-aggregated pair count). Exercised on the real corpus and on
   * randomized adversarial inputs: multi-byte codepoints adjacent to
   * every `\s` member (the byte-space tokenizer's edge), control chars,
   * separator runs, sub-n docs, dense tiny vocabularies (heavy shingle
@@ -30,7 +29,7 @@ class DecontaminateKernelSpec extends AnyFunSuite {
       t: Double,
       label: String): Unit = {
     val kernel = collect(Decontaminate.flagged(corpus, evalDocs, t))
-    val reference = collect(Decontaminate.flaggedExchange(corpus, evalDocs, t))
+    val reference = collect(DecontaminateReference.flaggedExchange(corpus, evalDocs, t))
     assert(kernel == reference,
       s"$label: kernel missed ${(reference -- kernel).take(5)}, " +
         s"extra ${(kernel -- reference).take(5)}")

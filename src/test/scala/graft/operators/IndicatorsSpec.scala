@@ -3,9 +3,10 @@ package graft.operators
 import graft.{Sessions, Tables}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates for the rolling bar indicators: scalar replay of every column
-  * over the real corpus, and the one-exchange plan shape (all four
-  * indicators share the engine's symbol partitioning).
+/** Gates for the rolling bar indicators and the EMA: scalar replay of
+  * every column over the real corpus, and the one-exchange plan shape
+  * (all four indicators share the engine's symbol partitioning, and the
+  * EMA's sorted groups need no other).
   */
 class IndicatorsSpec extends AnyFunSuite {
 
@@ -57,12 +58,15 @@ class IndicatorsSpec extends AnyFunSuite {
   }
 
   test("all indicators share one symbol exchange") {
-    // string match, not collect(): AQE's adaptive root hides children
-    // from collect until execution, which would make the assert vacuous
-    val plan = SignalPrep.indicators(Tables.events(spark, sfDir), n)
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected one symbol exchange, got $exchanges:\n$plan")
-    assert(!plan.contains("rangepartitioning") && !plan.contains("SinglePartition"))
+    val events = Tables.events(spark, sfDir)
+    for ((name, df) <- Seq("indicators" -> SignalPrep.indicators(events, n),
+        "ema" -> SignalPrep.ema(events))) {
+      // string match, not collect(): AQE's adaptive root hides children
+      // from collect until execution, which would make the assert vacuous
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(exchanges == 1, s"$name: expected one symbol exchange, got $exchanges:\n$plan")
+      assert(!plan.contains("rangepartitioning") && !plan.contains("SinglePartition"), name)
+    }
   }
 }

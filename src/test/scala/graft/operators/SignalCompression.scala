@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * feedback, consecutive duplicate signals are no-ops, so the trade
   * blotter is exactly the B→S pairs of the run-length-compressed signal
   * stream, and the mtm timeline is a range join of bars against those
-  * trades. Pure window/join plans, no per-row JVM state objects. No
-  * query plans through it: it is the Spark twin of the DuckDB oracle's
-  * closed-form blotter, kept as SignalCompressionSpec's independent
-  * cross-check of the MtmEngine state machine.
+  * trades. Pure window/join plans, no per-row JVM state objects.
+  * Test-tree reference: no query plans through it. It is the Spark twin
+  * of the DuckDB oracle's closed-form blotter, and SignalCompressionSpec
+  * uses it as an independent cross-check of the MtmEngine state machine.
   */
 object SignalCompression {
 

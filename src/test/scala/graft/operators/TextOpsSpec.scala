@@ -19,7 +19,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("fused langId equals the regex formulation on the real corpus") {
     val docs = Tables.documents(spark, sfDir)
     val fused = preds(TextOps.langId(docs))
-    val regex = preds(TextOps.langIdRegex(docs))
+    val regex = preds(TextOpsRegex.langId(docs))
     assert(fused.nonEmpty && fused == regex)
     assert(fused.values.toSet.size > 1, "corpus should exercise several languages")
   }
@@ -29,8 +29,8 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("fused tokenCount/qualityScore equal the regex formulations on the real corpus") {
     val docs = Tables.documents(spark, sfDir)
-    assert(rows(TextOps.tokenCount(docs)) == rows(TextOps.tokenCountRegex(docs)))
-    assert(rows(TextOps.qualityScore(docs)) == rows(TextOps.qualityScoreRegex(docs)))
+    assert(rows(TextOps.tokenCount(docs)) == rows(TextOpsRegex.tokenCount(docs)))
+    assert(rows(TextOps.qualityScore(docs)) == rows(TextOpsRegex.qualityScore(docs)))
     assert(rows(TextOps.tokenCount(docs)).nonEmpty)
   }
 
@@ -47,8 +47,8 @@ class TextOpsSpec extends AnyFunSuite {
       8L -> "München straße émigré 北京 的",              // non-ASCII letters are 'other'
       9L -> ("lorem ipsum " * 60).trim                   // > 500 chars: length clamp
     ).toDF("doc_id", "text")
-    assert(rows(TextOps.tokenCount(docs)) == rows(TextOps.tokenCountRegex(docs)))
-    assert(rows(TextOps.qualityScore(docs)) == rows(TextOps.qualityScoreRegex(docs)))
+    assert(rows(TextOps.tokenCount(docs)) == rows(TextOpsRegex.tokenCount(docs)))
+    assert(rows(TextOps.qualityScore(docs)) == rows(TextOpsRegex.qualityScore(docs)))
   }
 
   test("fused kernels equal the regex formulations on 300 random adversarial docs") {
@@ -68,11 +68,11 @@ class TextOpsSpec extends AnyFunSuite {
       (i.toLong, Seq.fill(n)(atoms(rnd.nextInt(atoms.length))).mkString)
     }.toDF("doc_id", "text")
     val fusedLang = preds(TextOps.langId(docs))
-    val regexLang = preds(TextOps.langIdRegex(docs))
+    val regexLang = preds(TextOpsRegex.langId(docs))
     assert(fusedLang == regexLang,
       s"langId diverged: ${(fusedLang.toSet -- regexLang.toSet).take(3)}")
-    assert(rows(TextOps.tokenCount(docs)) == rows(TextOps.tokenCountRegex(docs)))
-    assert(rows(TextOps.qualityScore(docs)) == rows(TextOps.qualityScoreRegex(docs)))
+    assert(rows(TextOps.tokenCount(docs)) == rows(TextOpsRegex.tokenCount(docs)))
+    assert(rows(TextOps.qualityScore(docs)) == rows(TextOpsRegex.qualityScore(docs)))
   }
 
   test("fused langId equals the regex formulation on boundary cases") {
@@ -90,7 +90,7 @@ class TextOpsSpec extends AnyFunSuite {
       10L -> "a a a a und und ist"                       // en 'a' vs de 'und/ist'
     ).toDF("doc_id", "text")
     val fused = preds(TextOps.langId(docs))
-    val regex = preds(TextOps.langIdRegex(docs))
+    val regex = preds(TextOpsRegex.langId(docs))
     assert(fused == regex, s"fused $fused vs regex $regex")
     assert(fused(5L) == "und" && fused(6L) == "und")
     assert(fused(4L) == "zh")
